@@ -1,83 +1,79 @@
 package graft
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+import scala.util.Try
 /** Benchmark main: times every `SparkEntry.queries` entry against
   * `SPARK_GRAFT_SF_DIR` and prints one JSON line.
   *
-  * Measurement protocol (each piece exists because a round's verdict
-  * showed the naive version lied on this container):
+  * Measurement protocol (each piece exists because the naive version
+  * lied on this container):
   *  - sorted-name execution order + noop-sink full evaluation;
   *  - two warmup runs before the first timed query;
-  *  - best-of-2 per query, EXCEPT fast+stable rows, in two tiers
-  *    (VERDICT r14 #8, widened per r15 #7's ≤20-min wall target):
-  *    a query whose committed figure is under 0.3 s and whose first
+  *  - best-of-2 per query, EXCEPT fast+stable rows, in two tiers: a
+  *    query whose committed figure is under 0.3 s and whose first
   *    attempt lands within 2x of it records that single run; a query
-  *    whose committed figure is under 1.5 s and whose first attempt
-  *    lands AT OR UNDER it likewise runs once (ADVICE r16 tightened
-  *    this tier from a ≤1.5x band to ms1 ≤ committed: the old band
-  *    recorded persistent (1.0x, 1.5x] drifts on mid-weight rows
-  *    from one unconfirmed sample — now ANY over-committed first
-  *    attempt on this tier buys the confirmation run). The 0.3 s
-  *    tier keeps its 2x band by design: at sub-300 ms the
-  *    tens-of-ms container jitter swamps anything a second sample
-  *    could certify, and a real 2x regression still exits the band.
-  *    Wall math: median3 committed figures put a typical first
-  *    attempt under the committed value about half the time, so
-  *    roughly half the mid-tier rows keep the exemption; the rest
-  *    pay one confirmation run — the honesty cost of closing the
-  *    in-band drift hole. A genuine regression on an exempted row
-  *    still gets confirmed (best-of-2 resumes), and >2x also
-  *    triggers the end-of-session re-time pair;
-  *  - baseline-commit mode (SPARK_GRAFT_BENCH_PROTOCOL=median3,
-  *    VERDICT r15 #4): rows whose first attempt lands under 3 s run
-  *    THREE attempts and commit the MEDIAN (not the best) — the
-  *    committed figure is then a typical-run value, so a later
-  *    driver best-of-2 rarely beats it by luck and never trails it
-  *    2x by luck, ending the committed-best-of-one-lucky-run phantom
-  *    regressions r14/r15 chased. Rows ≥3 s keep best-of-2 (their
+  *    whose committed figure is under 3 s and whose first attempt
+  *    lands AT OR UNDER it likewise runs once. Committed figures are
+  *    medians of 3, so an at-or-under attempt sits in the lower half of
+  *    the noise distribution — a genuine regression cannot produce it,
+  *    and any over-committed attempt buys the confirmation run. The
+  *    0.3 s tier keeps a 2x band because at sub-300 ms the tens-of-ms
+  *    container jitter swamps anything a second sample could certify,
+  *    and a real 2x regression still exits the band;
+  *  - baseline-commit mode (SPARK_GRAFT_BENCH_PROTOCOL=median3): rows
+  *    whose first attempt lands under 3 s run THREE attempts and commit
+  *    the MEDIAN (not the best) — the committed figure is then a
+  *    typical-run value, so a later best-of-2 rarely beats it by luck
+  *    and never trails it 2x by luck. Rows ≥3 s keep best-of-2 (their
   *    relative noise is small; a third run costs real wall). In this
-  *    mode the fast-path exemption and the re-time pass are OFF
-  *    (this run IS the new reference; no prior figure applies), and
-  *    the JSON carries "protocol":"median3" vs "gate";
+  *    mode no baseline is read, so the exemptions and the re-time pass
+  *    are off (this run IS the new reference), and the JSON carries
+  *    "protocol":"median3" vs "gate";
+  *  - the baseline is the previous `bench_full.json` at the same sf AND
+  *    the same core count ([[baseline]]); any other file is refused
+  *    loudly (stderr + "baseline":"refused: ..." in both outputs),
+  *    never silently read as "no figures";
   *  - self-healing re-time: any row at >2x its committed best gets a
   *    third-attempt pair at session end, disclosed via "retimed" +
   *    "retimed_pre" (the pre-retime figure);
   *  - a fixed reference query timed at start/mid/end (+ once more
   *    after the retime pass) → "noise_index", the box's throughput
   *    swing during this run;
-  *  - wall governance (VERDICT r17 #6): measured r18 gate wall on
-  *    this box = 17:42 sbt-to-sbt at 403 queries (r17: 18:45 at
-  *    402), with 106 single-run exemptions, zero retimes and zero
-  *    >2x rows against the committed median3 baseline. The levers
-  *    that hold the wall as the surface grows: the 3 s at-or-under
-  *    exemption tier (above), per-family fit warms (below — heavy
-  *    training is paid once, so per-row attempts are short), and
-  *    the median3 baseline itself (typical-run committed figures
-  *    make first attempts land at-or-under about half the time,
-  *    which is what feeds the exemption);
-  *  - per-family shared training (VERDICT r16 #8): the deterministic
-  *    ANN fits (IVF centroids, raw/permuted/residual PQ codebooks,
-  *    OPQ permutation) are FitCache-warmed once before the loop,
-  *    timed, disclosed as "ann_family_fit_sec" and INCLUDED in the
-  *    headline total — per-query ANN figures then measure serving,
-  *    not a re-paid training tax (caching is observationally
-  *    invisible: the fits are pure functions of (sf, params)).
+  *  - per-family shared training and engine warms (see `warms`) are
+  *    paid once before the loop, timed, disclosed and INCLUDED in the
+  *    headline total.
   */
 object Bench {
+  private val mapper = new ObjectMapper()
+
+  /** Per-query committed figures (ms) from a previous `bench_full.json`,
+    * or the reason the file cannot serve as this run's baseline: a
+    * figure measured at another sf or core count is not comparable. */
+  def baseline(json: String, sf: String, cpus: Int)
+      : Either[String, Map[String, Long]] =
+    Try(mapper.readTree(json)).toOption.filter(_.isObject) match {
+      case None => Left("not a JSON object")
+      case Some(j) =>
+        val queries = j.path("queries")
+        if (j.path("sf").asText() != sf) Left(s"sf ${j.path("sf")} is not $sf")
+        else if (!j.path("cpus").isInt) Left("no cpus recorded")
+        else if (j.path("cpus").asInt() != cpus)
+          Left(s"cpus ${j.path("cpus")} is not $cpus")
+        else if (!queries.isObject) Left("no queries map")
+        else queries.properties().asScala.find(!_.getValue.isNumber) match {
+          case Some(e) => Left(s"non-numeric figure for ${e.getKey}")
+          case None => Right(queries.properties().asScala.map(e =>
+            e.getKey -> math.round(e.getValue.asDouble() * 1000.0)).toMap)
+        }
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // reference semantics: bad casts -> NULL, not errors (SURVEY §7;
-      // Spark 4 defaults ANSI on)
-      .config("spark.sql.ansi.enabled", "false")
-      // NTZ→TZ normalization in Tables.events is value-preserving only
-      // under UTC; pin it (Verify and the test suite already do)
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val cpus = Session.cpus
+    val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // Force FULL evaluation of every column: a noop-sink write consumes
     // each row end-to-end, so Catalyst cannot prune computed columns or
@@ -85,79 +81,48 @@ object Bench {
     def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
     // warmup: initialize FS/codegen/parquet-footer caches so the first
-    // timed query doesn't absorb one-time session costs. TWO warmup
-    // runs (VERDICT r12 #4): a single run left residual JIT compilation
-    // in the session-start noise probe (noise_ref[0] measured ~1.8x the
-    // mid/end probes on identical code), conflating JIT warmup with
-    // container drift — the index must measure the BOX, not the JIT.
+    // timed query doesn't absorb one-time session costs. TWO runs: a
+    // single run left residual JIT compilation in the session-start
+    // noise probe (~1.8x the mid/end probes on identical code),
+    // conflating JIT warmup with container drift — the index must
+    // measure the BOX, not the JIT.
     SparkEntry.queries.get("q1_agg").foreach { fn =>
       try run(fn) catch { case _: Throwable => () }
       try run(fn) catch { case _: Throwable => () }
     }
-    // Per-query (elapsedMillis, ok). A throwing query is RECORDED as
-    // failed — it must not silently score ~0 s and "improve" the total
-    // (VERDICT r4 defect #1); the driver can cross-check n_failed
-    // against CORRECTNESS.
+    // A throwing query is RECORDED as failed — it must not silently
+    // score ~0 s and "improve" the total; the gate can cross-check
+    // n_failed against CORRECTNESS.
     //
-    // Determinism (VERDICT r5 defect): hash-map iteration order made
-    // round-over-round numbers incomparable — adding queries reshuffled
-    // the order and unchanged queries swung 8x on JIT/GC/state-store
-    // luck. Queries now run in sorted-name order, and each is executed
-    // TWICE with the better time recorded (best-of-2), so the figure
-    // measures the plan, not which query paid the JIT bill.
-    // (name, bestMs, otherMs, ok): BOTH run times are kept — this
-    // container's throughput swings run-to-run (identical code measured
-    // 4-6x apart across rounds), so the full JSON carries the per-query
-    // (best, second) spread to let a reader separate box noise from
-    // real regressions mechanically. The headline figures still use
-    // best-of-2.
-    // Wall-time control (VERDICT r14 #8): the full gate at best-of-2
-    // over 368 queries plus re-times cost ~31 min and grows every
-    // round. Queries that are FAST AND STABLE against the committed
-    // baseline — previous committed best under `fastMs` (0.3 s) and
-    // this run's first attempt within 2x of it — run ONCE; the second
-    // attempt only fires when the first run deviates (so a genuine
-    // regression on a fast query still gets its confirmation run, and
-    // a query with no committed history always gets best-of-2). Fast
-    // queries are exactly the ones whose single-run figure is least
-    // JIT/GC-sensitive after the session warmup, so coverage is equal
-    // and only redundant confirmations of already-stable rows are
-    // dropped.
+    // Queries run in sorted-name order (hash-map order made adding a
+    // query reshuffle the rest, and unchanged queries swung 8x on
+    // JIT/GC/state-store luck), and each is timed TWICE with the better
+    // time recorded, so the figure measures the plan, not which query
+    // paid the JIT bill. BOTH times are kept: this container's
+    // throughput swings run-to-run, so the full JSON carries the
+    // per-query (best, second) spread to let a reader separate box
+    // noise from real regressions mechanically.
     val fastMs = 300L
-    // r18 (VERDICT r17 #6 — wall governance at the grown surface):
-    // the at-or-under exemption tier widens 1.5 s → 3 s, aligning
-    // with the median3 boundary. The honesty argument is the tier's
-    // own: committed figures are MEDIANS of 3, so a first attempt
-    // landing AT OR UNDER the committed median sits in the lower
-    // half of the noise distribution — a genuine regression cannot
-    // produce it, and any over-median attempt still buys the
-    // confirmation run. Expected wall: ~half the 1.5–3 s rows now
-    // record their (confirmed-stable) single run instead of paying a
-    // redundant second, with zero change to what a regression looks
-    // like. The 0.3 s tier keeps its 2x band (jitter swamps a second
-    // sample there); rows ≥ 3 s always run best-of-2.
-    val stableMs = 3000L
-    val median3Ms = 3000L
+    val stableMs = 3000L // also the median3 boundary
     // median3: baseline-commit protocol — see the scaladoc. Gate runs
-    // (the driver) never set this; it is used only when recommitting
-    // bench_full.json as the round's reference figures.
+    // never set this; it is used only when recommitting bench_full.json
+    // as the reference figures.
     val median3 = sys.env.get("SPARK_GRAFT_BENCH_PROTOCOL")
       .contains("median3")
     // Per-query measurement record. `single` is an EXPLICIT flag set
-    // only by the fast-path exemption (ADVICE r15: inferring it from
-    // best == other conflated genuine single runs with best-of-2 rows
-    // whose two attempts tied to the millisecond).
+    // only by the fast-path exemption: inferring it from best == other
+    // would conflate genuine single runs with best-of-2 rows whose two
+    // attempts tied to the millisecond.
     case class R(name: String, best: Long, other: Long, ok: Boolean,
         single: Boolean)
-    // Exemption AUDIT sample (ADVICE r18: the at-or-under tier trusts
-    // the committed median3 baseline; if that baseline goes stale, a
-    // lucky low first attempt on a mildly-regressed heavy-tailed row
-    // can keep landing at-or-under it and never buy a confirmation).
-    // A per-run ~1-in-8 sample of would-be-exempted rows is forced
-    // through best-of-2 anyway; the seed is per-run (nanoTime) so the
-    // audited subset ROTATES across rounds instead of pinning the
-    // same rows forever. Audited rows are disclosed ("audited") and
-    // counted out of "single_run".
+    // Exemption AUDIT sample: the at-or-under tier trusts the committed
+    // baseline; if that goes stale, a lucky low first attempt on a
+    // mildly-regressed heavy-tailed row can keep landing at-or-under it
+    // and never buy a confirmation. A per-run ~1-in-8 sample of
+    // would-be-exempted rows is forced through best-of-2 anyway; the
+    // seed is per-run (nanoTime) so the audited subset ROTATES across
+    // runs instead of pinning the same rows forever. Audited rows are
+    // disclosed ("audited") and counted out of "single_run".
     val auditSeed: Long = System.nanoTime()
     val audited = scala.collection.mutable.ArrayBuffer[String]()
     def auditPick(name: String): Boolean =
@@ -177,112 +142,73 @@ object Bench {
       }
       val (ms1, ok1) = timed()
       if (!ok1) R(name, ms1, ms1, ok = false, single = true)
-      else if (median3 && ms1 < median3Ms) {
+      else if (median3 && ms1 < stableMs) {
         // baseline mode, sub-3s row: commit the MEDIAN of 3 attempts
         val (ms2, ok2) = timed()
         val (ms3, ok3) = timed()
         val sorted = Seq(ms1, ms2, ms3).sorted
         R(name, sorted(1), sorted(2), ok2 && ok3, single = false)
       }
-      else prevBest match {
-        case _ if median3 => // baseline mode, ≥3s row: best-of-2
+      else {
+        // fast + stable, or at-or-under the committed figure
+        val exempt = prevBest.exists(pb =>
+          (pb < fastMs && ms1 <= 2L * pb) || (pb < stableMs && ms1 <= pb))
+        if (exempt && !auditPick(name)) R(name, ms1, ms1, ok = true, single = true)
+        else { // best-of-2 (median3 rows ≥3s take this path too)
+          if (exempt) audited += name
           val (ms2, ok2) = timed()
-          R(name, math.min(ms1, ms2), math.max(ms1, ms2), ok2,
-            single = false)
-        case Some(pb) if pb < fastMs && ms1 <= 2L * pb && !auditPick(name) =>
-          R(name, ms1, ms1, ok = true, single = true) // fast + stable
-        case Some(pb) if pb < stableMs && ms1 <= pb && !auditPick(name) =>
-          R(name, ms1, ms1, ok = true, single = true) // at-or-under confirm
-        case Some(pb) if (pb < fastMs && ms1 <= 2L * pb) ||
-            (pb < stableMs && ms1 <= pb) => // exempt but audit-sampled
-          audited += name
-          val (ms2, ok2) = timed()
-          R(name, math.min(ms1, ms2), math.max(ms1, ms2), ok2,
-            single = false)
-        case _ =>
-          val (ms2, ok2) = timed()
-          R(name, math.min(ms1, ms2), math.max(ms1, ms2), ok2,
-            single = false)
+          R(name, math.min(ms1, ms2), math.max(ms1, ms2), ok2, single = false)
+        }
       }
     }
-    // Noise index (VERDICT r11 #6): the same fixed reference query
-    // (q1_agg, best-of-2) timed at session start / middle / end. The
-    // code is identical at all three points, so the spread measures
-    // the CONTAINER's throughput swing during this run — the
-    // round-over-round comparator divides it out instead of re-timing
-    // by hand. Emitted as the three times plus max/min ratio.
+    // Noise index: the same fixed reference query (q1_agg, best-of-2)
+    // timed at session start / middle / end. The code is identical at
+    // all three points, so the spread measures the CONTAINER's
+    // throughput swing during this run — a run-over-run comparator
+    // divides it out instead of re-timing by hand.
     val refFn = SparkEntry.queries("q1_agg")
     def refTime(): Long = timeOne("q1_agg(ref)", refFn).best
-    // Previous committed per-query bests (same-sf only) — read BEFORE
-    // this run overwrites bench_full.json. Feeds both the fast-query
-    // single-run exemption (timeOne) and the self-healing re-time.
+    // Previous committed per-query bests — read BEFORE this run
+    // overwrites bench_full.json. Feeds both the single-run exemption
+    // (timeOne) and the self-healing re-time.
     val outDir = Paths.get(sys.env.getOrElse("SPARK_GRAFT_OUT_DIR", "."))
     val fullPath = outDir.resolve("bench_full.json").toAbsolutePath
-    val prevBestMs: Map[String, Long] =
-      try {
-        val txt = Files.readString(fullPath)
-        val sfRe = """"sf":"([^"]*)"""".r
-        val sameSf = sfRe.findFirstMatchIn(txt).exists(_.group(1) == sfDir)
-        val i = txt.indexOf("\"queries\":{")
-        if (!sameSf || i < 0) Map.empty
-        else {
-          val body = txt.substring(i + 11, txt.indexOf('}', i))
-          """"([^"]+)":([0-9.]+)""".r.findAllMatchIn(body)
-            .map(m => m.group(1) ->
-              math.round(m.group(2).toDouble * 1000.0)).toMap
-        }
-      } catch { case _: Throwable => Map.empty[String, Long] }
-    // Per-family shared training (VERDICT r16 #8): the ANN eval rows
-    // all consume the same deterministic IVF/PQ/OPQ fits; warm the
-    // FitCache ONCE here, timed, so the per-query figures measure
-    // SERVING and the family's training cost is a single disclosed
-    // number ("ann_family_fit_sec", included in the headline total).
-    val famFitMs: Long = try {
+    val prior: Either[String, Map[String, Long]] =
+      if (median3 || !Files.exists(fullPath)) Right(Map.empty)
+      else Try(Files.readString(fullPath)).toEither.left
+        .map(e => s"unreadable: ${e.getMessage}")
+        .flatMap(baseline(_, sfDir, cpus))
+    prior.left.foreach(r => System.err.println(s"[bench] baseline refused: $r"))
+    val prevBestMs = prior.getOrElse(Map.empty[String, Long])
+    val baselineNote =
+      prior.fold("refused: " + _, m => if (m.isEmpty) "none" else "used")
+    // Per-family shared training and one-time engine warms, each paid
+    // once here, timed, disclosed under its key and INCLUDED in the
+    // headline total — per-query figures then measure serving, not a
+    // re-paid training tax (the fits are pure functions of (sf, params),
+    // so caching is observationally invisible):
+    //  - ann: IVF centroids, raw/permuted/residual PQ codebooks, OPQ;
+    //  - tok: BPE / WordPiece merges, the quantized unigram seed and its
+    //    EM counts (q_bpe_*, q_wordpiece*, q_unigram_*, ...);
+    //  - dedup: the from-scratch recompute cross-check that the three
+    //    maintenance-equivalence rows share;
+    //  - stream: the first streaming query in a JVM absorbs fixed
+    //    engine init into its figure.
+    val warms: Seq[(String, Long)] = Seq[(String, () => Unit)](
+      "ann_family_fit_sec" ->
+        (() => graft.queries.ClusterQueries.warmAnnFits(spark, sfDir)),
+      "tok_family_fit_sec" ->
+        (() => graft.queries.TextQueries.warmTokFits(spark, sfDir)),
+      "dedup_family_fit_sec" ->
+        (() => graft.queries.SimilarityQueries.warmDedupFits(spark, sfDir)),
+      "stream_warm_sec" -> (() => graft.streaming.StreamWarm.ensure(spark)),
+    ).map { case (key, warm) =>
       val t0 = System.nanoTime()
-      graft.queries.ClusterQueries.warmAnnFits(spark, sfDir)
-      (System.nanoTime() - t0) / 1000000L
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] ann family warm FAILED: ${e.getMessage}")
-      0L
-    }
-    // Tokenizer-family shared training (VERDICT r17 #4): BPE /
-    // WordPiece merges, the quantized unigram seed and its EM counts
-    // are deterministic driver-sized fits consumed by several rows
-    // (q_bpe_*, q_wordpiece*, q_unigram_*, q_tokenizer_compare) —
-    // warmed once here, timed, disclosed as "tok_family_fit_sec" and
-    // INCLUDED in the headline total, exactly the ANN-family pattern.
-    val tokFitMs: Long = try {
-      val t0 = System.nanoTime()
-      graft.queries.TextQueries.warmTokFits(spark, sfDir)
-      (System.nanoTime() - t0) / 1000000L
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] tok family warm FAILED: ${e.getMessage}")
-      0L
-    }
-    // Dedup-family shared comparison lane (r19): the three
-    // maintenance-equivalence rows (q_incremental_clusters,
-    // q_stream_incremental_dedup, q_dedup_index_compact) each carry
-    // the IDENTICAL from-scratch recompute cross-check; its verified
-    // pair set is a deterministic driver-sized fit — warmed once,
-    // timed, disclosed, included in the headline total.
-    val dedupFitMs: Long = try {
-      val t0 = System.nanoTime()
-      graft.queries.SimilarityQueries.warmDedupFits(spark, sfDir)
-      (System.nanoTime() - t0) / 1000000L
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] dedup family warm FAILED: ${e.getMessage}")
-      0L
-    }
-    // One-time streaming-engine warm (VERDICT r17 #7): the first
-    // streaming query in a JVM absorbs fixed engine init into its
-    // figure; warmed here instead, timed, disclosed, in the total.
-    val streamWarmMs: Long = try {
-      val t0 = System.nanoTime()
-      graft.streaming.StreamWarm.ensure(spark)
-      (System.nanoTime() - t0) / 1000000L
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] stream warm FAILED: ${e.getMessage}")
-      0L
+      key -> (try { warm(); (System.nanoTime() - t0) / 1000000L }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $key warm FAILED: ${e.getMessage}")
+          0L
+        })
     }
     val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
     val noiseStart = refTime()
@@ -294,21 +220,18 @@ object Bench {
       timeOne(n, f, prevBestMs.get(n)) }
     val noiseEnd = refTime()
     val resultsRaw: Seq[R] = resultsA ++ resultsB
-    // Self-healing re-time (VERDICT r13 "what's wrong"): best-of-2 on a
-    // noisy box still manufactured five phantom >2x "regressions" in
-    // r13 (all disproved by judge re-timing). Any query whose best-of-2
-    // exceeds 2x its PREVIOUS committed best (same-sf only) gets one
-    // end-of-session third-attempt pair; the committed figure takes the
-    // overall best. Each retimed query is listed under "retimed", and
-    // "retimed_pre" carries its PRE-retime best (ADVICE r14: the
-    // one-way downward ratchet is disclosed per-figure, not just
-    // per-name), so a reader can reconstruct what best-of-2 measured
-    // before the extra attempts.
+    // Self-healing re-time: best-of-2 on a noisy box still manufactures
+    // phantom >2x "regressions". Any query whose best-of-2 exceeds 2x
+    // its committed baseline gets one end-of-session third-attempt
+    // pair; the committed figure takes the overall best. Each retimed
+    // query is listed under "retimed", and "retimed_pre" carries its
+    // PRE-retime best, so the one-way downward ratchet is disclosed
+    // per figure and a reader can reconstruct what best-of-2 measured.
     val retimed = scala.collection.mutable.ArrayBuffer[String]()
     val retimedPre = scala.collection.mutable.LinkedHashMap[String, Long]()
     val results: Seq[R] = resultsRaw.map { r =>
         prevBestMs.get(r.name) match {
-          case Some(pb) if !median3 && r.ok && pb > 0 && r.best > 2L * pb =>
+          case Some(pb) if r.ok && pb > 0 && r.best > 2L * pb =>
             retimed += r.name
             retimedPre(r.name) = r.best
             val r2 = timeOne(r.name, SparkEntry.queries(r.name))
@@ -319,46 +242,52 @@ object Bench {
           case _ => r
         }
     }
-    // Post-retime noise probe (ADVICE r14): the retime pass runs after
-    // noiseEnd, so without this fourth probe the noise index would not
-    // bracket the retimed measurements. When nothing was retimed the
-    // fourth probe is OMITTED (ADVICE r15: duplicating noiseEnd made a
-    // copied third probe indistinguishable from a real fourth one) —
-    // noise_ref carries 3 entries on a retime-free run, 4 otherwise.
+    // Post-retime noise probe: the retime pass runs after noiseEnd, so
+    // without a fourth probe the index would not bracket the retimed
+    // measurements. When nothing was retimed the fourth probe is
+    // OMITTED (a copied third probe would be indistinguishable from a
+    // real fourth one) — noise_ref carries 3 entries on a retime-free
+    // run, 4 otherwise.
     val noise =
       if (retimed.nonEmpty) Seq(noiseStart, noiseMid, noiseEnd, refTime())
       else Seq(noiseStart, noiseMid, noiseEnd)
-    val noiseIndex =
-      noise.max.toDouble / math.max(1L, noise.min).toDouble
+    val noiseIndex = java.math.BigDecimal.valueOf(
+      noise.max.toDouble / math.max(1L, noise.min).toDouble)
+      .setScale(3, java.math.RoundingMode.HALF_UP)
     val failed = results.collect { case r if !r.ok => r.name }
-    // Times are kept as integral milliseconds so per-query values,
-    // omitted_sec, and the total agree EXACTLY in decimal (no
-    // round-the-parts-vs-round-the-sum drift), and formatting is
-    // locale-fixed (f"..." would emit a comma decimal under de_DE and
-    // break the driver's JSON parse).
-    def fmt(ms: Long): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(ms / 1000.0))
-    val totalMs = results.map(_.best).sum + famFitMs + tokFitMs +
-      dedupFitMs + streamWarmMs
-    def jsonLine(entries: Seq[(String, Long)], extra: String): String = {
-      val qs = entries.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-        .mkString("{", ",", "}")
-      val fl = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-      s"""{"metric":"total","value":${fmt(totalMs)},"unit":"sec","n_queries":${results.size},"n_failed":${failed.size},"failed":$fl$extra,"queries":$qs,"sf":"$sfDir"}"""
+    // Times are kept as integral milliseconds and written as 3-place
+    // decimals, so per-query values, omitted_sec, and the total agree
+    // EXACTLY in decimal (no round-the-parts-vs-round-the-sum drift).
+    def sec(ms: Long): java.math.BigDecimal = java.math.BigDecimal.valueOf(ms, 3)
+    val totalMs = results.map(_.best).sum + warms.map(_._2).sum
+    def strings(j: ObjectNode, key: String, xs: Iterable[String]): Unit = {
+      val a = j.putArray(key)
+      xs.foreach(x => a.add(x))
+    }
+    def secs(j: ObjectNode, key: String, xs: Iterable[(String, Long)]): Unit = {
+      val o = j.putObject(key)
+      xs.foreach { case (k, ms) => o.put(k, sec(ms)) }
+    }
+    def jsonLine(entries: Seq[(String, Long)])(extra: ObjectNode => Unit): String = {
+      val j = mapper.createObjectNode()
+        .put("metric", "total").put("value", sec(totalMs)).put("unit", "sec")
+        .put("n_queries", results.size).put("n_failed", failed.size)
+      strings(j, "failed", failed)
+      extra(j)
+      secs(j, "queries", entries)
+      j.put("sf", sfDir)
+      mapper.writeValueAsString(j)
     }
     // Full per-query detail -> file (the driver's stdout tail window is
     // ~2.3 KB; a 70+-entry map overflows it and the driver records
-    // parsed:null, as in rounds 1-3). The path is resolved against an
-    // explicit dir (env override) and logged absolute, so a changed JVM
-    // CWD can't orphan the file the stdout line points at.
+    // parsed:null). The path is resolved against an explicit dir (env
+    // override) and logged absolute, so a changed JVM CWD can't orphan
+    // the file the stdout line points at.
     val byTime = results.map(r => (r.name, r.best)).sortBy(-_._2)
-    val spread = results.sortBy(r => -r.other).map { r =>
-      "\"" + r.name + "\":[" + fmt(r.best) + "," + fmt(r.other) + "]"
-    }.mkString(""","spread":{""", ",", "}")
-    // IO-bound queries (VERDICT r11 #5): these pay a real disk write
-    // per run BY DESIGN (the write path must stay on the bench) and
-    // are the noisiest rows — tagged so round-over-round comparison
-    // separates compute-plan time from disk noise.
+    // IO-bound queries: these pay a real disk write per run BY DESIGN
+    // (the write path must stay on the bench) and are the noisiest
+    // rows — tagged so run-over-run comparison separates compute-plan
+    // time from disk noise.
     val ioQueries =
       Seq("q_bucketed_join", "q_shard_write", "q_shard_manifest",
         "q_schema_evolution", "q_txn_commit", "q_ann_index_build",
@@ -366,32 +295,36 @@ object Bench {
         "q_ann_graph_index_query")
         .filter(n => results.exists(_.name == n))
     val ioMs = results.filter(r => ioQueries.contains(r.name)).map(_.best).sum
-    val meta =
-      s""","io_queries":${ioQueries.map("\"" + _ + "\"").mkString("[", ",", "]")}""" +
-      s""","io_sec":${fmt(ioMs)},"compute_sec":${fmt(totalMs - ioMs)}""" +
-      s""","retimed":${retimed.map("\"" + _ + "\"").mkString("[", ",", "]")}""" +
-      s""","retimed_pre":${retimedPre.map { case (k, v) =>
-        "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")}""" +
-      s""","ann_family_fit_sec":${fmt(famFitMs)}""" +
-      s""","tok_family_fit_sec":${fmt(tokFitMs)}""" +
-      s""","dedup_family_fit_sec":${fmt(dedupFitMs)}""" +
-      s""","stream_warm_sec":${fmt(streamWarmMs)}""" +
-      s""","single_run":${results.count(_.single)}""" +
-      s""","audited":${audited.map("\"" + _ + "\"").mkString("[", ",", "]")}""" +
-      s""","protocol":"${if (median3) "median3" else "gate"}"""" +
-      s""","noise_ref":[${noise.map(fmt).mkString(",")}]""" +
-      s""","noise_index":${String.format(java.util.Locale.ROOT, "%.3f",
-        Double.box(noiseIndex))}"""
-    Files.writeString(fullPath, jsonLine(byTime, spread + meta))
+    Files.writeString(fullPath, jsonLine(byTime) { j =>
+      val spread = j.putObject("spread")
+      results.sortBy(r => -r.other).foreach { r =>
+        spread.putArray(r.name).add(sec(r.best)).add(sec(r.other))
+      }
+      strings(j, "io_queries", ioQueries)
+      j.put("io_sec", sec(ioMs)).put("compute_sec", sec(totalMs - ioMs))
+      strings(j, "retimed", retimed)
+      secs(j, "retimed_pre", retimedPre)
+      warms.foreach { case (key, ms) => j.put(key, sec(ms)) }
+      j.put("single_run", results.count(_.single))
+      strings(j, "audited", audited)
+      j.put("protocol", if (median3) "median3" else "gate")
+        .put("cpus", cpus).put("baseline", baselineNote)
+      val ref = j.putArray("noise_ref")
+      noise.foreach(ms => ref.add(sec(ms)))
+      j.put("noise_index", noiseIndex)
+    })
     System.err.println(s"[bench] full per-query JSON: $fullPath")
     // Final stdout line: slowest 40 only, so line + sbt's trailing
     // "[success]" banner both fit inside the driver's tail capture.
     val (kept, omitted) = byTime.splitAt(40)
-    val extra =
-      s""","queries_omitted":${omitted.size},"omitted_sec":${fmt(omitted.map(_._2).sum)},"noise_index":${
-        String.format(java.util.Locale.ROOT, "%.3f", Double.box(noiseIndex))
-      },"retimed":${retimed.map("\"" + _ + "\"").mkString("[", ",", "]")},"full":"$fullPath""""
-    println(jsonLine(kept, extra))
+    println(jsonLine(kept) { j =>
+      j.put("queries_omitted", omitted.size)
+        .put("omitted_sec", sec(omitted.map(_._2).sum))
+        .put("noise_index", noiseIndex)
+      strings(j, "retimed", retimed)
+      j.put("full", fullPath.toString)
+        .put("cpus", cpus).put("baseline", baselineNote)
+    })
     spark.stop()
   }
 }

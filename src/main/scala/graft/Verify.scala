@@ -1,15 +1,16 @@
 package graft
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
   * Wall discipline (VERDICT r17 #1 — the round's correctness artifact
   * came back empty and the prime suspect is the gate's wall):
   *
-  *  - cores default to the BOX, not 4: a local[4] session on the
-  *    32-core container serializes what the contract says runs at
-  *    local[32]; `SPARK_GRAFT_CPUS` still overrides.
+  *  - cores default to the BOX (`Session.cpus`), not 4: a local[4]
+  *    session on the 32-core container serializes what the contract
+  *    says runs at local[32]; `SPARK_GRAFT_CPUS` still overrides.
   *  - queries run CONCURRENTLY on a small pool
   *    (`SPARK_GRAFT_VERIFY_PAR`, default 8): Spark job submission is
   *    thread-safe, each query writes its own output dir, and most of
@@ -59,17 +60,7 @@ object Verify {
         System.err.println(
           "[verify] WARNING: filter matches no queries — nothing will run")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // reference semantics: bad casts -> NULL, not errors (SURVEY §7;
-      // Spark 4 defaults ANSI on)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val t0 = System.nanoTime()
@@ -130,36 +121,23 @@ object Verify {
         .foreach { case (nm, f) => runOne(nm, f) })
     }
     val stillFailed = failures.toArray(Array.empty[String]).sorted
-    Files.writeString(Paths.get(s"$outDir/failed.json"),
-      stillFailed.map("\"" + _ + "\"").mkString("[", ",", "]"))
+    val json = new ObjectMapper()
+    json.writeValue(new java.io.File(s"$outDir/failed.json"), stillFailed)
     // the names this run INTENDED to dump — selfcheck sweeps produced
     // dirs against this list (not just what appeared on disk), so a
     // query that vanishes under the pool fails the gate loudly
-    Files.writeString(Paths.get(s"$outDir/expected.json"),
-      todo.map(t => "\"" + t._1 + "\"").sorted.mkString("[", ",", "]"))
+    json.writeValue(new java.io.File(s"$outDir/expected.json"),
+      todo.map(_._1).sorted.toArray)
     if (stillFailed.nonEmpty)
       System.err.println(
         s"[verify] ${stillFailed.length} queries FAILED after retry: " +
           stillFailed.mkString(", "))
     System.err.println(
       s"[verify] dump wall ${(System.nanoTime() - t0) / 1000000000L} s " +
-        s"(${todo.size} queries, local[$cpus], par=$par, " +
+        s"(${todo.size} queries, local[${Session.cpus}], par=$par, " +
         s"failed=${stillFailed.length})")
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    json.writeValue(new java.io.File(s"$outDir/oracle_sql.json"),
+      SparkEntry.oracleSql.asJava)
     spark.stop()
   }
 }

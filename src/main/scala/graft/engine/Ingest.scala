@@ -1,7 +1,6 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Dynamic header-schema ingestion (SURVEY §2a S1-S3).
   *
@@ -30,18 +29,6 @@ object Ingest {
     val cleaned = raw.columns.map(cleanName)
     if (cleaned.sameElements(raw.columns)) raw else raw.toDF(cleaned: _*)
   }
-
-  /** Header-only read (ref S2 `:26-28`): column names without touching
-    * data rows. The CSV reader resolves the header during schema
-    * resolution — no executor job runs. */
-  def headerColumns(spark: SparkSession, path: String): Seq[String] =
-    readTsv(spark, path).columns.toSeq
-
-  /** The reference's dynamic CREATE TABLE equivalent (ref S3 `:35-64`):
-    * an all-string StructType from a name list, for sources that carry
-    * no header of their own. */
-  def allStringSchema(names: Seq[String]): StructType =
-    StructType(names.map(StructField(_, StringType, nullable = true)))
 
   /** BOM / stray-quote cleanup the reference does with REPLACE on the
     * header string (ref F1 `:35-37`, `:538-540`). */

@@ -2,18 +2,9 @@
 // Run: sbt -batch "runMain graft.tools.Explain q_scan_project q1_agg ..."
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      // reference semantics: bad casts -> NULL, not errors (SURVEY §7;
-      // Spark 4 defaults ANSI on)
-      .config("spark.sql.ansi.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local()
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted

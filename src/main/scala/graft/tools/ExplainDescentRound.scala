@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only plan dump: ONE NN-descent round's pre-checkpoint physical
@@ -9,10 +8,7 @@ import org.apache.spark.sql.functions._
   * Run: sbt "runMain graft.tools.ExplainDescentRound" */
 object ExplainDescentRound {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Session.local()
     spark.sparkContext.setLogLevel("ERROR")
     val e = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
       .select(col("vec_id").as("id"), col("embedding").as("v"),

@@ -1,8 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.{Tables}
+import graft.{Session, Tables}
 import graft.ops.Similarity
 
 /** Scratch dev probe: mean recall@10 of the LSH ANN path at different
@@ -10,12 +9,7 @@ import graft.ops.Similarity
 object LshProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("ERROR")
     val e = Tables.embeddings(spark, sfDir)
     val q = e.filter(col("vec_id") < 5)

@@ -3,32 +3,26 @@ package graft.tools
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
-/** Per-query execution profile for plan iteration (dev tool): wall
-  * time plus listener-derived job/stage/task counts, summed task time
-  * and shuffle bytes — the numbers that separate "slow because of real
-  * compute" from "slow because of orchestration" (guide §1: measure
-  * first; §2.2: count the exchanges). Same session shape as Bench.
+/** Per-query timing and execution profile for plan iteration (dev
+  * tool — the gate-facing figure stays Bench, which runs the whole
+  * surface). Each query runs twice on Bench's discipline (noop sink,
+  * q1_agg warmup): both walls and their best are printed, and the
+  * second run is profiled — listener-derived job/stage/task counts,
+  * summed task time and shuffle bytes, the numbers that separate "slow
+  * because of real compute" from "slow because of orchestration"
+  * (guide §1: measure first; §2.2: count the exchanges).
   *
   * Run: SPARK_GRAFT_SF_DIR=... sbt "runMain graft.tools.ProfileQuery q_a q_b"
   */
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
     // dev-only A/B hook: SPARK_GRAFT_CONF="k=v;k2=v2" extra confs
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').foreach { kv =>
-      val i = kv.indexOf('=')
-      if (i > 0) builder.config(kv.take(i).trim, kv.drop(i + 1).trim)
-    })
-    val spark = builder.getOrCreate()
+    val extra = sys.env.get("SPARK_GRAFT_CONF").toSeq.flatMap(_.split(';'))
+      .map(_.split("=", 2))
+      .collect { case Array(k, v) if k.nonEmpty => k.trim -> v.trim }.toMap
+    val spark = graft.Session.local(extra = extra)
     spark.sparkContext.setLogLevel("ERROR")
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)
@@ -79,22 +73,24 @@ object ProfileQuery {
         }
       }
     })
-    def run(name: String): Unit =
+    def run(name: String): Double = {
+      val t0 = System.nanoTime()
       graft.SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
+      (System.nanoTime() - t0) / 1e9
+    }
     run("q1_agg"); run("q1_agg") // session warmup (JIT + FS caches)
     args.foreach { name =>
       // second run profiled: steady-state, fits/indices warm — the
       // shape Bench's best-of-2 measures
-      run(name)
+      val first = run(name)
       Seq(jobs, stages, tasks).foreach(_.set(0))
       Seq(taskMs, shufR, shufW).foreach(_.set(0L))
       siteAgg.clear()
-      val t0 = System.nanoTime()
-      run(name)
-      val wall = (System.nanoTime() - t0) / 1e9
+      val wall = run(name)
       // listener bus is async; give it a beat to drain
       Thread.sleep(300)
+      println(f"[time] $name%-32s best ${math.min(first, wall)}%6.2f s  (runs: $first%.2f, $wall%.2f)")
       println(f"[profile] $name%-34s wall ${wall}%7.2f s  jobs ${jobs.get()}%4d  stages ${stages.get()}%5d  tasks ${tasks.get()}%6d  taskTime ${taskMs.get() / 1000.0}%8.1f s  shufR ${shufR.get() / 1048576.0}%8.1f MiB  shufW ${shufW.get() / 1048576.0}%8.1f MiB")
       if (byType) {
         import scala.jdk.CollectionConverters._

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.functions.{HashFunctions, ShingleFunctions}
 import graft.ops.{Dedup, Similarity}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-headroom probe: runs the hot operators on synthetic data 1-2
@@ -12,13 +11,7 @@ import org.apache.spark.sql.functions._
   */
 object Stress {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

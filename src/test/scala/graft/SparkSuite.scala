@@ -6,16 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared session per suite (one JVM-wide session in practice —
   * getOrCreate reuses). */
 trait SparkSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-      // reference semantics: bad casts -> NULL, not errors (SURVEY §7;
-      // Spark 4 defaults ANSI on)
-      .config("spark.sql.ansi.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local(4)
 
   def fixture(name: String): String =
     getClass.getResource(s"/fixtures/$name").getPath
