@@ -19,24 +19,19 @@ object Assemble {
     * both sides shuffle-partition on the composite key once; AQE
     * handles skew (many rows per school-date only under data errors).
     */
-  def joinClaims(lunch: DataFrame, breakfast: DataFrame,
-      schoolCol: String = "school name",
-      dateCol: String = "claim date",
-      districtCol: String = "district id",
-      joinType: String = "inner"): DataFrame = {
+  def joinClaims(lunch: DataFrame, breakfast: DataFrame): DataFrame = {
+    val keys = Seq("school name", "claim date", "__jk_district")
     val l = lunch.withColumn("__jk_district",
-      Derive.zeroPad(col(s"`$districtCol`"), 6))
+      Derive.zeroPad(col("`district id`"), 6))
     val b0 = breakfast.withColumn("__jk_district",
-      Derive.zeroPad(col(s"`$districtCol`"), 6))
+      Derive.zeroPad(col("`district id`"), 6))
     // Disambiguate overlapping non-key columns: suffix the breakfast side
     // (the reference's SELECT a.*, b.* keeps both copies; parquet needs
     // unique names).
-    val overlap = (l.columns.toSet intersect b0.columns.toSet) --
-      Set(schoolCol, dateCol, "__jk_district")
+    val overlap = (l.columns.toSet intersect b0.columns.toSet) -- keys
     val b = overlap.foldLeft(b0)((df, c) =>
       df.withColumnRenamed(c, s"${c}_b"))
-    l.join(b, Seq(schoolCol, dateCol, "__jk_district"), joinType)
-      .drop("__jk_district")
+    l.join(b, keys, "inner").drop("__jk_district")
   }
 
   /** Final DISTINCT wide table (ref `:1079`). */

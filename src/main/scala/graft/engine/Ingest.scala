@@ -33,5 +33,5 @@ object Ingest {
   /** BOM / stray-quote cleanup the reference does with REPLACE on the
     * header string (ref F1 `:35-37`, `:538-540`). */
   def cleanName(raw: String): String =
-    raw.replace("﻿", "").replace("\"", "").trim
+    raw.replace("\uFEFF", "").replace("\"", "").trim
 }

@@ -23,15 +23,15 @@ object Pipeline {
       ncesPath: Option[String] = None, // A4; loaded+cleaned, unjoined (ref :650-654)
       state: String = "WI")
 
-  /** Ingest one raw file and apply its dictionary plan (E1+E2). */
-  def ingestAndClean(spark: SparkSession, path: String,
-      dict1: DataFrame, dict2: DataFrame): DataFrame =
-    ingestAndCleanWith(spark, path, Dictionary.collectDicts(dict1, dict2))
+  /** Both dictionaries of a run, loaded and collected ONCE — every
+    * file's plan is then driver-local and costs no Spark jobs. */
+  private def loadDicts(spark: SparkSession, cfg: Config)
+      : Dictionary.DictRows =
+    Dictionary.collectDicts(Dictionary.load(spark, cfg.dict1Path),
+      Dictionary.load(spark, cfg.dict2Path))
 
-  /** Same, against already-collected dictionaries — multi-file runs
-    * collect each dictionary ONCE, then planning is driver-local and
-    * costs no Spark jobs per file. */
-  private def ingestAndCleanWith(spark: SparkSession, path: String,
+  /** Ingest one raw file and apply its dictionary plan (E1+E2). */
+  private def ingestAndClean(spark: SparkSession, path: String,
       dicts: Dictionary.DictRows): DataFrame = {
     val raw = Ingest.readTsv(spark, path)
     CleanPipeline.clean(raw, Dictionary.planLocal(raw.columns.toSeq, dicts))
@@ -43,11 +43,7 @@ object Pipeline {
     * it, so it is exposed separately instead of cleaned-and-discarded
     * inside the pipeline. */
   def cleanedNces(spark: SparkSession, cfg: Config): Option[DataFrame] =
-    cfg.ncesPath.map { p =>
-      val dict1 = Dictionary.load(spark, cfg.dict1Path)
-      val dict2 = Dictionary.load(spark, cfg.dict2Path)
-      ingestAndClean(spark, p, dict1, dict2)
-    }
+    cfg.ncesPath.map(ingestAndClean(spark, _, loadDicts(spark, cfg)))
 
   /** The *intended* NCES-ID pipeline (DIVERGENCES.md #3 demonstration):
     * the reference documents that "NCES ID" should be fetched from the
@@ -59,11 +55,9 @@ object Pipeline {
     * schools the NCES file lacks. The NCES school list is a small
     * dimension (one row per school in a state) → broadcast join. */
   def runWithNcesJoin(spark: SparkSession, cfg: Config): DataFrame = {
-    val dicts = Dictionary.collectDicts(
-      Dictionary.load(spark, cfg.dict1Path),
-      Dictionary.load(spark, cfg.dict2Path))
+    val dicts = loadDicts(spark, cfg)
     val base = runWithDicts(spark, cfg, dicts)
-    cfg.ncesPath.map(ingestAndCleanWith(spark, _, dicts)) match {
+    cfg.ncesPath.map(ingestAndClean(spark, _, dicts)) match {
       case None => base
       case Some(nces) =>
         val n = nces.select(col("`school name`").as("__nces_school"),
@@ -79,15 +73,13 @@ object Pipeline {
   /** Full run → the reference's "Final 64 column table" analog
     * (ref `:1044-1089`). */
   def run(spark: SparkSession, cfg: Config): DataFrame =
-    runWithDicts(spark, cfg, Dictionary.collectDicts(
-      Dictionary.load(spark, cfg.dict1Path),
-      Dictionary.load(spark, cfg.dict2Path)))
+    runWithDicts(spark, cfg, loadDicts(spark, cfg))
 
   private def runWithDicts(spark: SparkSession, cfg: Config,
       dicts: Dictionary.DictRows): DataFrame = {
 
-    val breakfast0 = ingestAndCleanWith(spark, cfg.breakfastPath, dicts)
-    val lunch0 = ingestAndCleanWith(spark, cfg.lunchPath, dicts)
+    val breakfast0 = ingestAndClean(spark, cfg.breakfastPath, dicts)
+    val lunch0 = ingestAndClean(spark, cfg.lunchPath, dicts)
 
     // E3 step 1-2: conditional columns on each side (ref :800-825).
     val lunch = lunch0

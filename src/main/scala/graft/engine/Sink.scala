@@ -9,17 +9,17 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   */
 object Sink {
 
-  /** Write a partitioned parquet table. `partitionCols` become
+  /** Write (overwrite) a partitioned parquet table. `partitionCols` become
     * directory-level partitions (partition pruning on read);
     * `sortCols` order rows within each file (min/max page stats make
     * range predicates cheap). */
   def writePartitioned(df: DataFrame, path: String,
-      partitionCols: Seq[String], sortCols: Seq[String] = Seq.empty,
-      mode: SaveMode = SaveMode.Overwrite): Unit = {
+      partitionCols: Seq[String], sortCols: Seq[String] = Seq.empty)
+      : Unit = {
     val sorted =
       if (sortCols.isEmpty) df
       else df.sortWithinPartitions(sortCols.map(c => df(s"`$c`")): _*)
-    val writer = sorted.write.mode(mode)
+    val writer = sorted.write.mode(SaveMode.Overwrite)
     (if (partitionCols.nonEmpty)
       writer.partitionBy(partitionCols: _*) else writer)
       .parquet(path)
@@ -28,7 +28,7 @@ object Sink {
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
-  /** Write a bucketed table: rows hash-partitioned into `buckets` files
+  /** Overwrite a bucketed table: rows hash-partitioned into `buckets` files
     * per partition by `bucketCol`, sorted within. Joins/aggregations on
     * the bucket column between co-bucketed tables skip the shuffle
     * entirely — the 100 TB answer for repeated joins on the same key
@@ -36,8 +36,8 @@ object Sink {
     * bucketing metadata lives in the table catalog, so this writes via
     * saveAsTable. */
   def writeBucketed(df: DataFrame, table: String, bucketCol: String,
-      buckets: Int, mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.mode(mode)
+      buckets: Int): Unit =
+    df.write.mode(SaveMode.Overwrite)
       .bucketBy(buckets, bucketCol)
       .sortBy(bucketCol)
       .format("parquet")

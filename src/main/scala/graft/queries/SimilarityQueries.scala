@@ -2966,7 +2966,7 @@ ORDER BY id_a, id_b"""
       .union(gk.select(col("dst").as("node"), col("src").as("nbr")))
       .distinct().localCheckpoint(true)
 
-  /** SQL twin of [[beamSearchSeen]]: the `qs / seen0 / f0 / hop`
+  /** SQL twin of [[beamWalk]]: the `qs / seen0 / f0 / hop`
     * CTE chain — assumes CTEs `e` (id, v) and `ug` (node, nbr) are
     * already defined; `entrySql` is the entry-node expression (a
     * literal for the pinned-scaffold query, `(SELECT node FROM
@@ -3064,298 +3064,147 @@ ORDER BY id_a, id_b"""
         ORDER BY query_id"""
   }
 
-  /** The X307 greedy walk itself: beam-expand `qs` = (qid, qv, qn)
-    * over adjacency `ug` from `entry`, returning the scored visited
-    * set (qid, node, cos) — shared by the scaffold eval, the X315
-    * served-index eval and the recall-curve graph lane. */
-  private[queries] def beamSearchSeen(e: org.apache.spark.sql.DataFrame,
-      ug: org.apache.spark.sql.DataFrame,
-      qs: org.apache.spark.sql.DataFrame, entry: Long,
-      beam: Int, hops: Int): org.apache.spark.sql.DataFrame =
-    beamSearchSeenEntries(e, ug, qs, Seq(entry), beam, hops)
+  /** Walk key of a scored frame: (lane, qid) when it carries a `lane`
+    * column, else (qid) — an unlaned walk plans with no lane at all. */
+  private def walkKeys(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    if (df.columns.contains("lane")) Seq("lane", "qid") else Seq("qid")
 
-  /** [[beamSearchSeen]] generalized to an entry SET (X325 — VERDICT
-    * r17 #5: at 100× corpus the graph diameter grows and a fixed-hop
-    * walk from ONE hub decays; seeding the beam from s spread entry
-    * points recovers coverage at +{s−1} extra seed scores, the
-    * cheap alternative to an HNSW coarse layer). seen0 = all entries
-    * scored per query; the hop loop is unchanged. */
-  private[queries] def beamSearchSeenEntries(
-      e: org.apache.spark.sql.DataFrame,
-      ug: org.apache.spark.sql.DataFrame,
-      qs: org.apache.spark.sql.DataFrame, entries: Seq[Long],
-      beam: Int, hops: Int): org.apache.spark.sql.DataFrame =
-    beamSearchSeenSeeds(e, ug, qs,
-      qs.select(col("qid"),
-        explode(array(entries.map(lit(_)): _*)).as("node")),
-      beam, hops)
-
-  /** [[beamSearchSeenEntries]] generalized to PER-QUERY seeds (X328 —
-    * the layered lane: each query's coarse-walk exit seeds its OWN
-    * layer-0 beam, so the seed set is a (qid, node) frame, not one
-    * shared entry list). Self-seeds are filtered exactly as entry
-    * scoring always did. */
-  private[queries] def beamSearchSeenSeeds(
-      e: org.apache.spark.sql.DataFrame,
-      ug: org.apache.spark.sql.DataFrame,
-      qs: org.apache.spark.sql.DataFrame,
-      seeds: org.apache.spark.sql.DataFrame,
-      beam: Int, hops: Int): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val corpus = e.select(col("id").as("node"), col("v").as("cv"),
-      col("nrm").as("cn"))
-    def scoreQ(df: org.apache.spark.sql.DataFrame) =
-      df.join(qs.select("qid", "qv", "qn"), "qid").join(corpus, "node")
-        .select(col("qid"), col("node"),
-          Similarity.cosineWithNorms(col("qv"), col("cv"),
-            col("qn"), col("cn")).as("cos"))
-    var seen = scoreQ(seeds.select("qid", "node")
-        .filter(col("node") =!= col("qid")))
-      .localCheckpoint(true)
-    var frontier = seen.select("qid", "node")
-    val wq = Window.partitionBy("qid").orderBy(col("cos").desc, col("node"))
-    for (_ <- 1 to hops) {
-      val cand = frontier.join(ug, "node")
-        .select(col("qid"), col("nbr").as("node"))
-        .filter(col("node") =!= col("qid")).distinct()
-      val fresh = cand.join(seen.select("qid", "node"),
-        Seq("qid", "node"), "left_anti")
-      seen = seen.unionByName(scoreQ(fresh)).localCheckpoint(true)
-      frontier = seen.withColumn("rn", row_number().over(wq))
-        .filter(col("rn") <= beam).select("qid", "node")
-    }
-    seen
+  /** Rows ranked `rn` ≤ `n` per walk key by (cos DESC, node) — the
+    * frontier, seed and top-k cut of every walk, with the tie-break
+    * [[beamWalkSql]] replays. */
+  private def topByScore(seen: org.apache.spark.sql.DataFrame,
+      n: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(walkKeys(seen).map(col): _*)
+      .orderBy(col("cos").desc, col("node"))
+    seen.withColumn("rn", row_number().over(w)).filter(col("rn") <= n)
   }
 
-  /** MULTI-LANE beam walk (r19 optimization — guide §2.4/§2.6: the
-    * curve/compare rows ran one hop LOOP per lane, so a 4-lane row
-    * paid 4×hops rounds of per-hop exchanges and an eager checkpoint
-    * job each — 224 driver jobs for q_ann_beam_curve at sf0.1, almost
-    * all orchestration. Lanes are independent per (lane, qid) by
-    * construction — every join, distinct, anti-join and window below
-    * is (lane, qid)-local — so advancing ALL lanes inside ONE hop
-    * loop computes bit-identical per-lane visited sets while paying
-    * each hop's fixed costs once. At cluster scale the same fusion
-    * turns L·hops barrier stages into hops stages over L× the rows —
-    * strictly fewer, larger exchanges, the §2.2 shape.)
+  /** The walk's scorer: ((lane,) qid, node) rows → ((lane,) qid, node,
+    * cos) against the query vectors `qs` = (qid, qv, qn). Seeded
+    * callers build [[beamWalk]]'s `seen0` with it (self seeds
+    * dropped first). */
+  private[queries] def beamScore(e: org.apache.spark.sql.DataFrame,
+      qs: org.apache.spark.sql.DataFrame,
+      rows: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val corpus = e.select(col("id").as("node"), col("v").as("cv"),
+      col("nrm").as("cn"))
+    rows.join(qs.select("qid", "qv", "qn"), "qid").join(corpus, "node")
+      .select(walkKeys(rows).map(col) ++ Seq(col("node"),
+        Similarity.cosineWithNorms(col("qv"), col("cv"),
+          col("qn"), col("cn")).as("cos")): _*)
+  }
+
+  /** `seen0` of a walk from one shared `entry` node: the entry scored
+    * for every query in `qs` (a query that IS the entry gets no seed). */
+  private def entrySeen(e: org.apache.spark.sql.DataFrame,
+      qs: org.apache.spark.sql.DataFrame,
+      entry: Long): org.apache.spark.sql.DataFrame =
+    beamScore(e, qs,
+      qs.select(col("qid"), explode(array(lit(entry))).as("node"))
+        .filter(col("node") =!= col("qid")))
+
+  /** The X307 greedy graph walk — the one hop loop behind every graph
+    * serve row. From the scored visited set `seen0`, each hop expands
+    * the frontier over adjacency `ug`, scores only UNSEEN candidates
+    * (the anti-join against `seen` mirrors HNSW's visited set, so
+    * rescoring is zero) and re-fronts to the top-beam of the
+    * accumulated set. Returns the scored visited set, which only
+    * grows — the superset property the filtered and layered rows'
+    * per-query recall dominance rests on.
     *
-    * `seeds` = (lane, qid, node); per-lane beam from `beamOf`;
-    * per-lane hop count from `hopsOf` (a lane stops expanding after
-    * its own hop budget — its rows simply drop out of the frontier).
-    * If `ug` carries a `lane` column the expansion joins on
-    * (lane, node) — per-lane adjacency (the layered row's coarse vs
-    * fine graphs); otherwise all lanes share `ug` (node, nbr).
-    * Returns (lane, qid, node, cos). */
-  private[queries] def beamSearchSeenLanes(
-      e: org.apache.spark.sql.DataFrame,
-      ug: org.apache.spark.sql.DataFrame,
-      qs: org.apache.spark.sql.DataFrame,
-      seeds: org.apache.spark.sql.DataFrame,
-      beamOf: Map[Int, Int],
-      hopsOf: Map[Int, Int]): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val corpus = e.select(col("id").as("node"), col("v").as("cv"),
-      col("nrm").as("cn"))
-    def scoreQ(df: org.apache.spark.sql.DataFrame) =
-      df.join(qs.select("qid", "qv", "qn"), "qid").join(corpus, "node")
-        .select(col("lane"), col("qid"), col("node"),
-          Similarity.cosineWithNorms(col("qv"), col("cv"),
-            col("qn"), col("cn")).as("cos"))
-    val lanedUg = ug.columns.contains("lane")
-    val ugKeys = if (lanedUg) Seq("lane", "node") else Seq("node")
-    val beamCol = beamOf.foldLeft(lit(0)) { case (acc, (l, b)) =>
-      when(col("lane") === l, lit(b)).otherwise(acc) }
-    val wq = Window.partitionBy("lane", "qid")
-      .orderBy(col("cos").desc, col("node"))
-    var seen = scoreQ(seeds.select("lane", "qid", "node")
-        .filter(col("node") =!= col("qid")))
-      .localCheckpoint(true)
-    var frontier = seen.select("lane", "qid", "node")
-    val maxHops = hopsOf.values.max
-    for (t <- 1 to maxHops) {
-      val active = hopsOf.collect { case (l, h) if h >= t => l }.toSeq
-      val fActive = frontier.filter(col("lane").isin(active: _*))
-      val cand = fActive.join(ug, ugKeys)
-        .select(col("lane"), col("qid"), col("nbr").as("node"))
-        .filter(col("node") =!= col("qid")).distinct()
-      val fresh = cand.join(seen.select("lane", "qid", "node"),
-        Seq("lane", "qid", "node"), "left_anti")
-      seen = seen.unionByName(scoreQ(fresh)).localCheckpoint(true)
-      frontier = seen.withColumn("rn", row_number().over(wq))
-        .filter(col("rn") <= beamCol).select("lane", "qid", "node")
-    }
-    seen
-  }
-
-  /** MULTI-LANE [[beamContinue]] (r19 — same fusion as
-    * [[beamSearchSeenLanes]] for walks CONTINUED from pre-scored
-    * visited sets: the layered row's two continuation lanes shared
-    * one base walk but each paid its own 3-hop loop). `seen0` =
-    * (lane, qid, node, cos), `frontier0` = (lane, qid, node);
-    * identical per-lane results to running [[beamContinue]] per
-    * lane. */
-  private[queries] def beamContinueLanes(
-      e: org.apache.spark.sql.DataFrame,
+    *  - Lanes: keyed (lane, qid) when `seen0` has a `lane` column, else
+    *    (qid). Every join, distinct, anti-join and window is key-local,
+    *    so ONE loop advancing L lanes computes bit-identical per-lane
+    *    sets while paying each hop's exchanges and checkpoint once
+    *    (r19: q_ann_beam_curve 224 → ~70 driver jobs).
+    *  - `beam` / `hops`: per-lane budgets (an unlaned walk passes one
+    *    entry); a lane whose hops are spent drops out of the frontier.
+    *  - `ug` with a `lane` column is per-lane adjacency (the layered
+    *    row's coarse vs fine graphs); otherwise all lanes share it.
+    *  - `frontier0`: the first frontier, default all of `seen0` (a
+    *    seeded walk). Continuing with frontier0 = top-beam(seen0) IS
+    *    the same walk run for more hops; the layered lane passes each
+    *    query's coarse-walk exits instead.
+    *  - `returnable` (node): re-front only over these nodes (X327
+    *    filtered serving). The walk still routes through failing
+    *    nodes — they stay in `seen` and their neighbors stay reachable,
+    *    the connectivity ACORN keeps by predicate-agnostic traversal —
+    *    while beam slots go only to nodes that can be RETURNED. */
+  private[queries] def beamWalk(e: org.apache.spark.sql.DataFrame,
       ug: org.apache.spark.sql.DataFrame,
       qs: org.apache.spark.sql.DataFrame,
       seen0: org.apache.spark.sql.DataFrame,
-      frontier0: org.apache.spark.sql.DataFrame,
-      beam: Int, hops: Int): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val corpus = e.select(col("id").as("node"), col("v").as("cv"),
-      col("nrm").as("cn"))
-    def scoreQ(df: org.apache.spark.sql.DataFrame) =
-      df.join(qs.select("qid", "qv", "qn"), "qid").join(corpus, "node")
-        .select(col("lane"), col("qid"), col("node"),
-          Similarity.cosineWithNorms(col("qv"), col("cv"),
-            col("qn"), col("cn")).as("cos"))
-    val wq = Window.partitionBy("lane", "qid")
-      .orderBy(col("cos").desc, col("node"))
-    var seen = seen0.localCheckpoint(true)
-    var frontier = frontier0.select("lane", "qid", "node")
-    for (_ <- 1 to hops) {
-      val cand = frontier.join(ug, "node")
-        .select(col("lane"), col("qid"), col("nbr").as("node"))
-        .filter(col("node") =!= col("qid")).distinct()
-      val fresh = cand.join(seen.select("lane", "qid", "node"),
-        Seq("lane", "qid", "node"), "left_anti")
-      seen = seen.unionByName(scoreQ(fresh)).localCheckpoint(true)
-      frontier = seen.withColumn("rn", row_number().over(wq))
-        .filter(col("rn") <= beam).select("lane", "qid", "node")
-    }
-    seen
-  }
-
-  /** CONTINUE a beam walk from an already-scored visited set (X328):
-    * `frontier0` seeds the first expansion (the layered lane passes
-    * the coarse walk's per-query exits; the control lane passes the
-    * prior walk's own top beam), every later frontier is the
-    * top-`beam` of the accumulated set — exactly the standard hop
-    * loop, so continuing with frontier0 = top-beam(seen0) IS the
-    * same walk run for more hops. `seen` only grows, which is the
-    * superset property the layered lane's per-query recall dominance
-    * rests on. */
-  private[queries] def beamContinue(e: org.apache.spark.sql.DataFrame,
-      ug: org.apache.spark.sql.DataFrame,
-      qs: org.apache.spark.sql.DataFrame,
-      seen0: org.apache.spark.sql.DataFrame,
-      frontier0: org.apache.spark.sql.DataFrame,
-      beam: Int, hops: Int): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val corpus = e.select(col("id").as("node"), col("v").as("cv"),
-      col("nrm").as("cn"))
-    def scoreQ(df: org.apache.spark.sql.DataFrame) =
-      df.join(qs.select("qid", "qv", "qn"), "qid").join(corpus, "node")
-        .select(col("qid"), col("node"),
-          Similarity.cosineWithNorms(col("qv"), col("cv"),
-            col("qn"), col("cn")).as("cos"))
-    val wq = Window.partitionBy("qid").orderBy(col("cos").desc, col("node"))
-    var seen = seen0.localCheckpoint(true)
-    var frontier = frontier0
-    for (_ <- 1 to hops) {
-      val cand = frontier.join(ug, "node")
-        .select(col("qid"), col("nbr").as("node"))
-        .filter(col("node") =!= col("qid")).distinct()
-      val fresh = cand.join(seen.select("qid", "node"),
-        Seq("qid", "node"), "left_anti")
-      seen = seen.unionByName(scoreQ(fresh)).localCheckpoint(true)
-      frontier = seen.withColumn("rn", row_number().over(wq))
-        .filter(col("rn") <= beam).select("qid", "node")
-    }
-    seen
-  }
-
-  /** Passing-frontier beam EXTENSION (X327 — the filtered-serving
-    * device): from an already-scored visited set `seen0`, run `hops`
-    * further expansion rounds whose frontier is the top-`beam`
-    * PASSING nodes of the accumulated set — the walk keeps routing
-    * through failing nodes (they stay in `seen` and their neighbors
-    * stay reachable: the connectivity ACORN preserves by
-    * predicate-agnostic traversal) while the extension beam spends
-    * its slots only on nodes that can actually be RETURNED. The
-    * result set is seen0 ∪ extension — a SUPERSET of the unfiltered
-    * walk's visited set, which is what makes the filtered lane's
-    * recall structurally ≥ the post-filtered baseline (top-k over a
-    * candidate superset can only gain true-top-k members; Round19Spec
-    * pins it). Cost is bounded: ≤ beam·k extra scored candidates per
-    * hop, corpus-independent like the base walk. */
-  private[queries] def filteredBeamExtend(e: org.apache.spark.sql.DataFrame,
-      ug: org.apache.spark.sql.DataFrame,
-      qs: org.apache.spark.sql.DataFrame,
-      seen0: org.apache.spark.sql.DataFrame, beam: Int, hops: Int,
-      passIds: org.apache.spark.sql.DataFrame)
+      beam: Map[Int, Int], hops: Map[Int, Int],
+      frontier0: Option[org.apache.spark.sql.DataFrame] = None,
+      returnable: Option[org.apache.spark.sql.DataFrame] = None)
       : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val corpus = e.select(col("id").as("node"), col("v").as("cv"),
-      col("nrm").as("cn"))
-    def scoreQ(df: org.apache.spark.sql.DataFrame) =
-      df.join(qs.select("qid", "qv", "qn"), "qid").join(corpus, "node")
-        .select(col("qid"), col("node"),
-          Similarity.cosineWithNorms(col("qv"), col("cv"),
-            col("qn"), col("cn")).as("cos"))
-    val wq = Window.partitionBy("qid").orderBy(col("cos").desc, col("node"))
+    val keys = walkKeys(seen0)
+    val keyNode = (keys :+ "node").map(col)
+    val ugKeys = if (ug.columns.contains("lane")) Seq("lane", "node")
+      else Seq("node")
+    val beamCol =
+      if (beam.values.toSet.size == 1) lit(beam.values.head)
+      else beam.foldLeft(lit(0)) { case (acc, (l, b)) =>
+        when(col("lane") === l, lit(b)).otherwise(acc) }
     var seen = seen0.localCheckpoint(true)
-    for (_ <- 1 to hops) {
-      val frontier = seen.join(passIds, Seq("node"), "left_semi")
-        .withColumn("rn", row_number().over(wq))
-        .filter(col("rn") <= beam).select("qid", "node")
-      val cand = frontier.join(ug, "node")
-        .select(col("qid"), col("nbr").as("node"))
+    var frontier = frontier0.getOrElse(seen).select(keyNode: _*)
+    for (t <- 1 to hops.values.max) {
+      val live = hops.collect { case (l, h) if h >= t => l }.toSeq
+      val cand = (if (live.size == hops.size) frontier
+          else frontier.filter(col("lane").isin(live: _*)))
+        .join(ug, ugKeys)
+        .select(keys.map(col) :+ col("nbr").as("node"): _*)
         .filter(col("node") =!= col("qid")).distinct()
-      val fresh = cand.join(seen.select("qid", "node"),
-        Seq("qid", "node"), "left_anti")
-      seen = seen.unionByName(scoreQ(fresh)).localCheckpoint(true)
+      val fresh = cand.join(seen.select(keyNode: _*), keys :+ "node",
+        "left_anti")
+      seen = seen.unionByName(beamScore(e, qs, fresh)).localCheckpoint(true)
+      frontier = topByScore(returnable.fold(seen)(
+          seen.join(_, Seq("node"), "left_semi")), beamCol)
+        .select(keyNode: _*)
     }
     seen
   }
 
-  /** Top-k ranking readout of a beam search — (query_id, neighbor_id,
-    * rank), the lane shape the X291 recall curve consumes. */
-  private[queries] def beamSearchRanks(e: org.apache.spark.sql.DataFrame,
-      ug: org.apache.spark.sql.DataFrame,
-      qs: org.apache.spark.sql.DataFrame, entry: Long,
-      beam: Int, hops: Int, k: Int): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val wq = Window.partitionBy("qid").orderBy(col("cos").desc, col("node"))
-    beamSearchSeen(e, ug, qs, entry, beam, hops)
-      .withColumn("rank", row_number().over(wq).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("qid").as("query_id"), col("node").as("neighbor_id"),
-        col("rank"))
-  }
-
-  /** The X307 greedy beam search device over adjacency `ug`, with the
-    * brute-force recall readout — (query_id, n_scored, hits, recall)
-    * for query nodes id ∈ [q0, q1). */
-  private[queries] def beamSearchEval(e: org.apache.spark.sql.DataFrame,
-      ug: org.apache.spark.sql.DataFrame, q0: Long, q1: Long,
-      beam: Int, hops: Int, k: Int, entry: Long = 0L,
-      entries: Seq[Long] = Seq.empty)
+  /** Recall readout of scored visited sets for query ids [q0, q1):
+    * ((lane,) query_id, n_scored, hits, recall), per walk key — top-k
+    * by score against the brute-force top-k (one truth pass shared by
+    * every lane), n_scored the exact visited-set size. */
+  private[queries] def beamReadout(e: org.apache.spark.sql.DataFrame,
+      seen: org.apache.spark.sql.DataFrame, q0: Long, q1: Long, k: Int)
       : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val eIdVec = e.select(col("id").as("vec_id"), col("v").as("embedding"))
-    val qs = e.filter(col("id") >= q0 && col("id") < q1)
-      .select(col("id").as("qid"), col("v").as("qv"),
-        col("nrm").as("qn"))
-    val entrySet = if (entries.nonEmpty) entries else Seq(entry)
-    val seen = beamSearchSeenEntries(e, ug, qs, entrySet, beam, hops)
-    val wq = Window.partitionBy("qid").orderBy(col("cos").desc, col("node"))
-    val res = seen.withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= k).select("qid", "node")
-    val truth = Similarity.bruteForceTopK(eIdVec,
+    val keys = walkKeys(seen)
+    val truth = Similarity.bruteForceTopK(
+        e.select(col("id").as("vec_id"), col("v").as("embedding")),
         e.filter(col("id") >= q0 && col("id") < q1)
           .select(col("id").as("vec_id"), col("v").as("embedding")),
         "vec_id", "embedding", "vec_id", "embedding", k = k)
       .select(col("query_id").as("qid"), col("neighbor_id").as("node"))
-    val ns = seen.groupBy("qid").agg(count(lit(1)).as("n_scored"))
-    val hits = res.join(truth, Seq("qid", "node")).groupBy("qid")
-      .agg(count(lit(1)).as("h"))
-    ns.join(hits, Seq("qid"), "left")
-      .select(col("qid").as("query_id"), col("n_scored"),
-        coalesce(col("h"), lit(0L)).as("hits"),
+    val res = topByScore(seen, lit(k)).select((keys :+ "node").map(col): _*)
+    val ns = seen.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("n_scored"))
+    val hits = res.join(truth, Seq("qid", "node"))
+      .groupBy(keys.map(col): _*).agg(count(lit(1)).as("h"))
+    ns.join(hits, keys, "left")
+      .select(keys.init.map(col) ++ Seq(col("qid").as("query_id"),
+        col("n_scored"), coalesce(col("h"), lit(0L)).as("hits"),
         (coalesce(col("h"), lit(0L)).cast("double") / lit(k.toDouble))
-          .as("recall"))
-      .orderBy("query_id")
+          .as("recall")): _*)
+  }
+
+  /** The X307 greedy beam search device over adjacency `ug` from
+    * `entry`, with the brute-force recall readout — (query_id,
+    * n_scored, hits, recall) for query nodes id ∈ [q0, q1). */
+  private[queries] def beamSearchEval(e: org.apache.spark.sql.DataFrame,
+      ug: org.apache.spark.sql.DataFrame, q0: Long, q1: Long,
+      beam: Int, hops: Int, k: Int, entry: Long = 0L)
+      : org.apache.spark.sql.DataFrame = {
+    val qs = e.filter(col("id") >= q0 && col("id") < q1)
+      .select(col("id").as("qid"), col("v").as("qv"),
+        col("nrm").as("qn"))
+    val seen = beamWalk(e, ug, qs, entrySeen(e, qs, entry),
+      beam = Map(0 -> beam), hops = Map(0 -> hops))
+    beamReadout(e, seen, q0, q1, k).orderBy("query_id")
   }
 
   /** The X313 MRNG keep-set over an exact-graph edge frame (body
@@ -3582,11 +3431,9 @@ ORDER BY id_a, id_b"""
               ORDER BY beam, query_id""")
     },
     (s, d) => {
-      // r19: ONE lane-batched hop loop for all four beams + ONE shared
-      // brute-force truth (each per-beam beamSearchEval re-ran the
-      // identical truth BNLJ) — per-lane rows bit-identical, 224
-      // driver jobs -> ~70 (see beamSearchSeenLanes).
-      import org.apache.spark.sql.expressions.Window
+      // ONE lane-batched walk for all four beams + ONE shared
+      // brute-force truth — per-lane rows bit-identical to four
+      // single-lane walks (see beamWalk).
       val beams = Seq(2, 4, 8, 16)
       val dir = annGraphDir(d)
       val e = simEmbFrame(s, d)
@@ -3600,29 +3447,12 @@ ORDER BY id_a, id_b"""
           explode(array(beams.map(b => lit(b)): _*)).as("lane"),
           lit(entry).as("node"))
         .select("lane", "qid", "node")
-      val seen = beamSearchSeenLanes(e, ug, qs, seedRows,
-        beamOf = beams.map(b => b -> b).toMap,
-        hopsOf = beams.map(b => b -> 5).toMap)
-      val wq = Window.partitionBy("lane", "qid")
-        .orderBy(col("cos").desc, col("node"))
-      val res = seen.withColumn("rn", row_number().over(wq))
-        .filter(col("rn") <= 10).select("lane", "qid", "node")
-      val truth = Similarity.bruteForceTopK(
-          e.select(col("id").as("vec_id"), col("v").as("embedding")),
-          e.filter(col("id") >= 100L && col("id") < 120L)
-            .select(col("id").as("vec_id"), col("v").as("embedding")),
-          "vec_id", "embedding", "vec_id", "embedding", k = 10)
-        .select(col("query_id").as("qid"), col("neighbor_id").as("node"))
-      val ns = seen.groupBy("lane", "qid")
-        .agg(count(lit(1)).as("n_scored"))
-      val hits = res.join(truth, Seq("qid", "node"))
-        .groupBy("lane", "qid").agg(count(lit(1)).as("h"))
-      ns.join(hits, Seq("lane", "qid"), "left")
-        .select(col("lane").as("beam"), col("qid").as("query_id"),
-          col("n_scored"), coalesce(col("h"), lit(0L)).as("hits"),
-          (coalesce(col("h"), lit(0L)).cast("double") / lit(10.0))
-            .as("recall"))
-        .orderBy("beam", "query_id")
+      val seen = beamWalk(e, ug, qs,
+        beamScore(e, qs, seedRows.filter(col("node") =!= col("qid"))),
+        beam = beams.map(b => b -> b).toMap,
+        hops = beams.map(b => b -> 5).toMap)
+      beamReadout(e, seen, 100L, 120L, k = 10)
+        .withColumnRenamed("lane", "beam").orderBy("beam", "query_id")
     })
 
   /** MULTI-ENTRY beam search over the committed graph index (X325 —
@@ -3715,10 +3545,8 @@ ORDER BY id_a, id_b"""
       val hubs = edges.groupBy("src").agg(count(lit(1)).as("deg"))
         .orderBy(col("deg").desc, col("src").asc)
         .select("src").limit(4).collect().map(_.getLong(0)).toSeq
-      // r19: both entry-set lanes advance in ONE hop loop and share
-      // ONE brute-force truth (bit-identical per lane — see
-      // beamSearchSeenLanes; the per-lane beamSearchEval form re-ran
-      // the identical truth BNLJ and its own 5-hop loop per lane).
+      // r19: both entry-set lanes advance in ONE walk and share ONE
+      // brute-force truth (bit-identical per lane — see beamWalk).
       val sizes = Seq(1, 4)
       val qs = e.filter(col("id") >= 100L && col("id") < 120L)
         .select(col("id").as("qid"), col("v").as("qv"),
@@ -3727,29 +3555,11 @@ ORDER BY id_a, id_b"""
         qs.select(lit(sN).as("lane"), col("qid"),
           explode(array(hubs.take(sN).map(lit(_)): _*)).as("node"))
       }.reduce(_ unionByName _)
-      val seen = beamSearchSeenLanes(e, ug, qs, seedRows,
-        beamOf = sizes.map(_ -> 8).toMap,
-        hopsOf = sizes.map(_ -> 5).toMap)
-      val wq = org.apache.spark.sql.expressions.Window
-        .partitionBy("lane", "qid")
-        .orderBy(col("cos").desc, col("node"))
-      val res = seen.withColumn("rn", row_number().over(wq))
-        .filter(col("rn") <= 10).select("lane", "qid", "node")
-      val truth = Similarity.bruteForceTopK(
-          e.select(col("id").as("vec_id"), col("v").as("embedding")),
-          e.filter(col("id") >= 100L && col("id") < 120L)
-            .select(col("id").as("vec_id"), col("v").as("embedding")),
-          "vec_id", "embedding", "vec_id", "embedding", k = 10)
-        .select(col("query_id").as("qid"), col("neighbor_id").as("node"))
-      val ns = seen.groupBy("lane", "qid")
-        .agg(count(lit(1)).as("n_scored"))
-      val hits = res.join(truth, Seq("qid", "node"))
-        .groupBy("lane", "qid").agg(count(lit(1)).as("h"))
-      ns.join(hits, Seq("lane", "qid"), "left")
-        .select(col("lane").as("n_entries"), col("qid").as("query_id"),
-          col("n_scored"), coalesce(col("h"), lit(0L)).as("hits"),
-          (coalesce(col("h"), lit(0L)).cast("double") / lit(10.0))
-            .as("recall"))
+      val seen = beamWalk(e, ug, qs,
+        beamScore(e, qs, seedRows.filter(col("node") =!= col("qid"))),
+        beam = sizes.map(_ -> 8).toMap, hops = sizes.map(_ -> 5).toMap)
+      beamReadout(e, seen, 100L, 120L, k = 10)
+        .withColumnRenamed("lane", "n_entries")
         .orderBy("n_entries", "query_id")
     })
 
@@ -3765,10 +3575,10 @@ ORDER BY id_a, id_b"""
     *  - `dual` — filter-aware serving: the SAME unfiltered walk
     *    (predicate-agnostic traversal keeps routing through failing
     *    nodes — the connectivity argument of ACORN, Patel et al.
-    *    SIGMOD 2024) PLUS a passing-frontier extension
-    *    ([[filteredBeamExtend]]): `hops` further rounds whose beam
-    *    spends slots only on RETURNABLE nodes, ≤ beam·k extra scores
-    *    per hop.
+    *    SIGMOD 2024) PLUS a passing-frontier extension ([[beamWalk]]
+    *    with `returnable`): `hops` further rounds whose beam spends
+    *    slots only on RETURNABLE nodes, ≤ beam·k extra scores per
+    *    hop.
     *
     * The dual lane's visited set is a SUPERSET of post's by
     * construction, so its recall vs the filtered ground truth is ≥
@@ -3876,10 +3686,16 @@ ORDER BY id_a, id_b"""
           col("nrm").as("qn"))
       val pass = Tables.embeddings(s, d).filter(col("label") < 3)
         .select(col("vec_id").as("node")).localCheckpoint(true)
-      val seenW = beamSearchSeen(e, ug, qs, entry, beam = 8, hops = 5)
-        .localCheckpoint(true) // shared by both lanes + the extension
-      val seenD = filteredBeamExtend(e, ug, qs, seenW, beam = 8,
-        hops = 5, pass)
+      // the unfiltered walk, shared by both lanes + the extension
+      val seenW = beamWalk(e, ug, qs, entrySeen(e, qs, entry),
+        beam = Map(0 -> 8), hops = Map(0 -> 5))
+      // passing-frontier extension: 5 more hops re-fronted over
+      // passing nodes only, starting from seenW's passing top beam
+      val seenD = beamWalk(e, ug, qs, seenW,
+        beam = Map(0 -> 8), hops = Map(0 -> 5),
+        frontier0 = Some(topByScore(seenW.join(pass, Seq("node"),
+          "left_semi"), lit(8)).select("qid", "node")),
+        returnable = Some(pass))
       // exact top-10 over the PASSING corpus (declared BNLJ truth)
       val truth = Similarity.bruteForceTopK(
           e.join(pass.withColumnRenamed("node", "id"), Seq("id"),
@@ -3931,7 +3747,7 @@ ORDER BY id_a, id_b"""
     *
     *  - `multi4` — the X325 s=4 hub walk (the flat baseline);
     *  - `multi4ext` — the SAME walk continued 3 more hops
-    *    ([[beamContinue]] from its own top beam): the control that
+    *    ([[beamWalk]] from its own top beam): the control that
     *    prices what plain extra exploration buys;
     *  - `layered` — the multi4 walk UNION the coarse walk (beam 4,
     *    3 hops over the coarse graph — cost bounded by the COARSE
@@ -4064,7 +3880,6 @@ ORDER BY id_a, id_b"""
               ORDER BY variant, query_id""")
     },
     (s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val dir = annGraphDir(d)
       val e = simEmbFrame(s, d)
       graft.ops.AnnGraph.ensureBuilt(e, dir)
@@ -4072,31 +3887,29 @@ ORDER BY id_a, id_b"""
       val ug = symmetrized(edges)
       // coarse layer: rank-remapped mod-8 sample, own committed dir
       val dirC = annGraphDir(d) + "_coarse"
-      val eC = Tables.embeddings(s, d).filter(col("vec_id") % 8 === 0)
-        .select((col("vec_id") / lit(8)).cast("long").as("id"),
-          col("embedding").as("v"),
-          Similarity.norm(col("embedding")).as("nrm"))
-        .localCheckpoint(true)
       if (!graft.ops.Shard.hasCommittedTables(s, dirC,
           graft.ops.AnnGraph.tableNames))
-        graft.ops.AnnGraph.build(eC, dirC, k = 8, rounds = 3)
+        graft.ops.AnnGraph.build(
+          Tables.embeddings(s, d).filter(col("vec_id") % 8 === 0)
+            .select((col("vec_id") / lit(8)).cast("long").as("id"),
+              col("embedding").as("v"),
+              Similarity.norm(col("embedding")).as("nrm"))
+            .localCheckpoint(true),
+          dirC, k = 8, rounds = 3)
       val (cEdges, cEntryRank) = graft.ops.AnnGraph.load(s, dirC)
       val cug = symmetrized(cEdges.select((col("src") * 8).as("src"),
         (col("dst") * 8).as("dst")))
       val qs = e.filter(col("id") >= 100 && col("id") < 120)
         .select(col("id").as("qid"), col("v").as("qv"),
           col("nrm").as("qn"))
-      val wq = Window.partitionBy("qid")
-        .orderBy(col("cos").desc, col("node"))
       val hubs = edges.groupBy("src").agg(count(lit(1)).as("deg"))
         .orderBy(col("deg").desc, col("src").asc)
         .select("src").limit(4).collect().map(_.getLong(0)).toSeq
       // r19: the coarse walk (lane 0: cug, beam 4, 3 hops) and the m4
-      // hub walk (lane 1: ug, beam 8, 5 hops) advance in ONE hop loop
-      // over lane-keyed adjacency; the two continuation lanes likewise
-      // share one loop; the three readouts share one window/agg pass.
-      // Per-lane rows bit-identical (beamSearchSeenLanes scaladoc);
-      // 167 driver jobs -> ~70 at sf0.1.
+      // hub walk (lane 1: ug, beam 8, 5 hops) advance in ONE walk over
+      // lane-keyed adjacency; the two continuation lanes likewise share
+      // one walk; the three readouts share one pass. Per-lane rows
+      // bit-identical (see beamWalk); 167 driver jobs -> ~70 at sf0.1.
       val ugLaned = cug.select(lit(0).as("lane"), col("node"), col("nbr"))
         .unionByName(ug.select(lit(1).as("lane"), col("node"),
           col("nbr")))
@@ -4105,57 +3918,31 @@ ORDER BY id_a, id_b"""
             lit(cEntryRank * 8).as("node"))
           .unionByName(qs.select(lit(1).as("lane"), col("qid"),
             explode(array(hubs.map(lit(_)): _*)).as("node")))
-      val walk = beamSearchSeenLanes(e, ugLaned, qs, seedRows,
-        beamOf = Map(0 -> 4, 1 -> 8), hopsOf = Map(0 -> 3, 1 -> 5))
-      val cSeen = walk.filter(col("lane") === 0)
-        .select("qid", "node", "cos")
-      val m4Seen = walk.filter(col("lane") === 1)
-        .select("qid", "node", "cos")
-      val seeds = cSeen.withColumn("rn", row_number().over(wq))
-        .filter(col("rn") <= 4).select("qid", "node")
-      val m4Top = m4Seen.withColumn("rn", row_number().over(wq))
-        .filter(col("rn") <= 8).select("qid", "node")
-      val cont = beamContinueLanes(e, ug, qs,
-        m4Seen.select(lit(0).as("lane"), col("qid"), col("node"),
-            col("cos"))
-          .unionByName(m4Seen.unionByName(cSeen).distinct()
-            .select(lit(1).as("lane"), col("qid"), col("node"),
-              col("cos"))),
-        m4Top.select(lit(0).as("lane"), col("qid"), col("node"))
-          .unionByName(seeds.select(lit(1).as("lane"), col("qid"),
-            col("node"))),
-        beam = 8, hops = 3)
-      val extSeen = cont.filter(col("lane") === 0)
-        .select("qid", "node", "cos")
-      val laySeen = cont.filter(col("lane") === 1)
-        .select("qid", "node", "cos")
-      val truth = Similarity.bruteForceTopK(
-          e.select(col("id").as("vec_id"), col("v").as("embedding")),
-          e.filter(col("id") >= 100 && col("id") < 120)
-            .select(col("id").as("vec_id"), col("v").as("embedding")),
-          "vec_id", "embedding", "vec_id", "embedding", k = 10)
-        .select(col("query_id").as("qid"), col("neighbor_id").as("node"))
-        .localCheckpoint(true)
-      val tagged = laySeen.select(lit("layered").as("variant"),
-          col("qid"), col("node"), col("cos"))
-        .unionByName(m4Seen.select(lit("multi4").as("variant"),
-          col("qid"), col("node"), col("cos")))
-        .unionByName(extSeen.select(lit("multi4ext").as("variant"),
-          col("qid"), col("node"), col("cos")))
-      val wv = Window.partitionBy("variant", "qid")
-        .orderBy(col("cos").desc, col("node"))
-      val res = tagged.withColumn("rn", row_number().over(wv))
-        .filter(col("rn") <= 10).select("variant", "qid", "node")
-      val ns = tagged.groupBy("variant", "qid")
-        .agg(count(lit(1)).as("n_scored"))
-      val hits = res.join(truth, Seq("qid", "node"))
-        .groupBy("variant", "qid").agg(count(lit(1)).as("h"))
-      ns.join(hits, Seq("variant", "qid"), "left")
-        .select(col("variant"), col("qid").as("query_id"),
-          col("n_scored"), coalesce(col("h"), lit(0L)).as("hits"),
-          (coalesce(col("h"), lit(0L)).cast("double") / lit(10.0))
-            .as("recall"))
-        .orderBy("variant", "query_id")
+      val walk = beamWalk(e, ugLaned, qs,
+        beamScore(e, qs, seedRows.filter(col("node") =!= col("qid"))),
+        beam = Map(0 -> 4, 1 -> 8), hops = Map(0 -> 3, 1 -> 5))
+      def lane(df: org.apache.spark.sql.DataFrame, l: Int) =
+        df.filter(col("lane") === l).select("qid", "node", "cos")
+      def tag(df: org.apache.spark.sql.DataFrame, l: Any) =
+        df.select(lit(l).as("lane"), col("qid"), col("node"), col("cos"))
+      val (cSeen, m4Seen) = (lane(walk, 0), lane(walk, 1))
+      // continuations: multi4ext from m4's own top beam (lane 0),
+      // layered from m4 ∪ coarse with each query's top-4 coarse exits
+      // as the first frontier (lane 1)
+      val cont = beamWalk(e, ug, qs,
+        tag(m4Seen, 0)
+          .unionByName(tag(m4Seen.unionByName(cSeen).distinct(), 1)),
+        beam = Map(0 -> 8, 1 -> 8), hops = Map(0 -> 3, 1 -> 3),
+        frontier0 = Some(
+          topByScore(m4Seen, lit(8)).select(lit(0).as("lane"), col("qid"),
+            col("node"))
+          .unionByName(topByScore(cSeen, lit(4)).select(lit(1).as("lane"),
+            col("qid"), col("node")))))
+      beamReadout(e, tag(lane(cont, 1), "layered")
+          .unionByName(tag(m4Seen, "multi4"))
+          .unionByName(tag(lane(cont, 0), "multi4ext")),
+          100L, 120L, k = 10)
+        .withColumnRenamed("lane", "variant").orderBy("variant", "query_id")
     })
 
   /** Navigable-graph index DELTA-INGEST (X321 — the corpus-growth
@@ -4303,8 +4090,10 @@ ORDER BY id_a, id_b"""
     val qs = e.filter(col("id") < qMax)
       .select(col("id").as("qid"), col("v").as("qv"),
         col("nrm").as("qn"))
-    beamSearchRanks(e, symmetrized(edges), qs, entry, beam = 8,
-      hops = 5, k = k)
+    val seen = beamWalk(e, symmetrized(edges), qs, entrySeen(e, qs, entry),
+      beam = Map(0 -> 8), hops = Map(0 -> 5))
+    topByScore(seen, lit(k)).select(col("qid").as("query_id"),
+      col("node").as("neighbor_id"), col("rn").cast("long").as("rank"))
   }
 
   val all: Seq[QueryDef] = Seq(dedupExact, dedupExactStrict, dedupNearExact, ppmiSvd,

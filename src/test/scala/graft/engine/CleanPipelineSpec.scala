@@ -35,7 +35,7 @@ class CleanPipelineSpec extends SparkSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-bom")
     val f = dir.resolve("bom.txt")
     java.nio.file.Files.write(f,
-      "﻿\"AGENCY_CODE\"\tName\nA1\tfoo\n".getBytes("UTF-8"))
+      "\uFEFF\"AGENCY_CODE\"\tName\nA1\tfoo\n".getBytes("UTF-8"))
     val df = Ingest.readTsv(spark, f.toString)
     assert(df.columns.toSeq === Seq("AGENCY_CODE", "Name"))
     assert(df.collect().head.getString(0) === "A1")
