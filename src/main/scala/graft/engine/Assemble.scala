@@ -3,7 +3,7 @@ package graft.engine
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Final wide-table assembly (SURVEY §3 E3, ref `:846-856`, `:1079-1089`).
+/** Final wide-table assembly (SURVEY §3 E3, ref `:846-856`).
   *
   * The reference joins the lunch and breakfast claim files on
   * (school name, claim date, zero-padded district id), computing the
@@ -27,13 +27,11 @@ object Assemble {
       Derive.zeroPad(col("`district id`"), 6))
     // Disambiguate overlapping non-key columns: suffix the breakfast side
     // (the reference's SELECT a.*, b.* keeps both copies; parquet needs
-    // unique names).
+    // unique names). One projection renames them all: a rename per column
+    // would re-analyze a growing plan once per overlap.
     val overlap = (l.columns.toSet intersect b0.columns.toSet) -- keys
-    val b = overlap.foldLeft(b0)((df, c) =>
-      df.withColumnRenamed(c, s"${c}_b"))
+    val b = b0.toDF(b0.columns.map(c =>
+      if (overlap(c)) s"${c}_b" else c): _*)
     l.join(b, keys, "inner").drop("__jk_district")
   }
-
-  /** Final DISTINCT wide table (ref `:1079`). */
-  def finalTable(joined: DataFrame): DataFrame = joined.distinct()
 }

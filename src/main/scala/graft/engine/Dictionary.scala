@@ -1,5 +1,7 @@
 package graft.engine
 
+import java.util.Locale
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,20 +26,29 @@ final case class CleanPlan(drops: Seq[String], renames: Map[String, String]) {
   def apply(inputColumns: Seq[String]): Seq[(String, String)] =
     inputColumns.filterNot(drops.contains)
       .map(c => c -> renames.getOrElse(c, c))
+
+  /** Apply the plan to `df`: drop + rename in a single projection.
+    *
+    * The reference's two WHILE loops (ref `:143-270`) — N× `ALTER TABLE
+    * DROP COLUMN` and N single-column projections re-joined by a
+    * surrogate `row_num` — exist only because T-SQL tables are mutable
+    * in place. An immutable DataFrame is never split, so both collapse
+    * to this one select, which Catalyst folds into the scan
+    * (ColumnPruning): zero extra jobs, zero shuffles. */
+  def select(df: DataFrame): DataFrame =
+    df.select(apply(df.columns.toSeq).map { case (raw, cleanName) =>
+      col(s"`$raw`").as(cleanName)
+    }: _*)
 }
 
 object Dictionary {
   final val NotUsed = "NOT USED"
 
-  /** Load a dictionary template TSV (FIXTURES.md A1: raw_data_column,
-    * raw_data_column_name, equivalent_clean_data_name, notes). */
-  def load(spark: SparkSession, path: String): DataFrame =
-    Ingest.readTsv(spark, path)
-
   /** The clean-name lookup (ref `:99-107`): one row per input column,
     * clean name coalesced across both templates. Input columns become a
     * local DataFrame (ref reads sys.columns, `:79-87`); dictionary sides
-    * are broadcast.
+    * are broadcast. This is the T-SQL-faithful catalog-scan form;
+    * pipelines plan with `planLocal`, which DictionarySpec pins equal.
     *
     * Matching is case-insensitive like T-SQL's default collation — a
     * header `School Name` matches a dictionary row `school name` in
@@ -61,61 +72,22 @@ object Dictionary {
       .distinct()
   }
 
-  /** Instruction derivation (ref `:126-130` drops, `:172-191` renames).
-    * Runs on the driver over the collected lookup — schema-width-sized,
-    * never data-sized. */
-  def plan(lookupDf: DataFrame): CleanPlan = {
-    val rows = lookupDf.collect().map { r =>
+  /** `instructions` over the collected `lookup` rows. */
+  def plan(lookupDf: DataFrame): CleanPlan =
+    instructions(lookupDf.collect().toSeq.map { r =>
       (r.getString(0), Option(r.getString(1)))
-    }
+    })
+
+  /** Instruction derivation (ref `:126-130` drops, `:172-191` renames)
+    * from (raw column, coalesced clean name) lookup rows, deduplicated
+    * as the lookup's DISTINCT does. Runs on the driver —
+    * schema-width-sized, never data-sized. */
+  def instructions(lookupRows: Seq[(String, Option[String])]): CleanPlan = {
+    val rows = lookupRows.distinct
     val drops = rows.collect {
       case (raw, clean) if clean.forall(_.contains(NotUsed)) => raw
-    }
+    }.distinct
     // 1:1 detection: clean names appearing exactly once (ref :175-178)
-    val usable = rows.collect {
-      case (raw, Some(clean)) if !clean.contains(NotUsed) => raw -> clean
-    }
-    val counts = usable.groupBy(_._2).view.mapValues(_.length).toMap
-    val renames = usable.collect {
-      case (raw, clean) if counts(clean) == 1 && raw != clean => raw -> clean
-    }.toMap
-    CleanPlan(drops.toSeq, renames)
-  }
-
-  /** Both dictionaries collected to the driver: (raw lower → list of
-    * clean names). Dictionary templates are schema-width metadata (tens
-    * of rows), so this is two tiny scan jobs — after which planning any
-    * number of files costs zero Spark jobs. */
-  final case class DictRows(d1: Map[String, Seq[String]],
-      d2: Map[String, Seq[String]])
-
-  def collectDicts(dict1: DataFrame, dict2: DataFrame): DictRows = {
-    def toMap(df: DataFrame): Map[String, Seq[String]] =
-      df.select(col("raw_data_column_name"),
-          col("equivalent_clean_data_name"))
-        .collect()
-        .groupBy(r => Option(r.getString(0)).getOrElse("").toLowerCase)
-        .view.mapValues(_.map(r => r.getString(1)).toSeq).toMap
-    DictRows(toMap(dict1), toMap(dict2))
-  }
-
-  /** Driver-side equivalent of `lookup` → `plan`: per input column,
-    * every (d1 match × d2 match) combination contributes
-    * coalesce(clean1, clean2), then distinct — exactly the LEFT JOIN ×2
-    * + DISTINCT semantics of the DataFrame path (which remains the
-    * S7/J4 catalog-scan demonstration; DictionarySpec pins the two
-    * paths equal). */
-  def planLocal(columns: Seq[String], dicts: DictRows): CleanPlan = {
-    val rows: Seq[(String, Option[String])] = columns.flatMap { c =>
-      val k = c.toLowerCase
-      val m1 = dicts.d1.getOrElse(k, Seq(null))
-      val m2 = dicts.d2.getOrElse(k, Seq(null))
-      for (c1 <- m1; c2 <- m2)
-        yield c -> Option(if (c1 != null) c1 else c2)
-    }.distinct
-    val drops = rows.collect {
-      case (raw, clean) if clean.forall(_.contains(NotUsed)) => raw
-    }.distinct
     val usable = rows.collect {
       case (raw, Some(clean)) if !clean.contains(NotUsed) => raw -> clean
     }
@@ -126,9 +98,35 @@ object Dictionary {
     CleanPlan(drops, renames)
   }
 
-  /** Convenience: columns → plan in one step (driver-side matching;
-    * the DataFrame `lookup` stays as the catalog-scan operator). */
-  def planFor(spark: SparkSession, columns: Seq[String],
-      dict1: DataFrame, dict2: DataFrame): CleanPlan =
-    planLocal(columns, collectDicts(dict1, dict2))
+  /** Both dictionaries collected to the driver: (raw lower → list of
+    * clean names). Dictionary templates are schema-width metadata (tens
+    * of rows), so this is two tiny scan jobs — after which planning any
+    * number of files costs zero Spark jobs. Keys are lower-cased under
+    * `Locale.ROOT`, as Spark's `lower` does for ASCII (`lookup`). */
+  final case class DictRows(d1: Map[String, Seq[String]],
+      d2: Map[String, Seq[String]])
+
+  def collectDicts(dict1: DataFrame, dict2: DataFrame): DictRows = {
+    def toMap(df: DataFrame): Map[String, Seq[String]] =
+      df.select(col("raw_data_column_name"),
+          col("equivalent_clean_data_name"))
+        .collect()
+        .groupBy(r =>
+          Option(r.getString(0)).getOrElse("").toLowerCase(Locale.ROOT))
+        .view.mapValues(_.map(r => r.getString(1)).toSeq).toMap
+    DictRows(toMap(dict1), toMap(dict2))
+  }
+
+  /** Driver-side equivalent of `lookup` → `plan`: per input column,
+    * every (d1 match × d2 match) combination contributes
+    * coalesce(clean1, clean2) — exactly the LEFT JOIN ×2 + DISTINCT
+    * rows of the DataFrame path, fed to the same `instructions`. */
+  def planLocal(columns: Seq[String], dicts: DictRows): CleanPlan =
+    instructions(columns.flatMap { c =>
+      val k = c.toLowerCase(Locale.ROOT)
+      val m1 = dicts.d1.getOrElse(k, Seq(null))
+      val m2 = dicts.d2.getOrElse(k, Seq(null))
+      for (c1 <- m1; c2 <- m2)
+        yield c -> Option(if (c1 != null) c1 else c2)
+    })
 }

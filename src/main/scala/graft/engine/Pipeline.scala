@@ -27,14 +27,14 @@ object Pipeline {
     * file's plan is then driver-local and costs no Spark jobs. */
   private def loadDicts(spark: SparkSession, cfg: Config)
       : Dictionary.DictRows =
-    Dictionary.collectDicts(Dictionary.load(spark, cfg.dict1Path),
-      Dictionary.load(spark, cfg.dict2Path))
+    Dictionary.collectDicts(Ingest.readTsv(spark, cfg.dict1Path),
+      Ingest.readTsv(spark, cfg.dict2Path))
 
   /** Ingest one raw file and apply its dictionary plan (E1+E2). */
   private def ingestAndClean(spark: SparkSession, path: String,
       dicts: Dictionary.DictRows): DataFrame = {
     val raw = Ingest.readTsv(spark, path)
-    CleanPipeline.clean(raw, Dictionary.planLocal(raw.columns.toSeq, dicts))
+    Dictionary.planLocal(raw.columns.toSeq, dicts).select(raw)
   }
 
   /** The cleaned NCES file for callers that DO want to join it — the
@@ -124,7 +124,8 @@ object Pipeline {
         Derive.frAdp(col("`FR Breakfast Meals`"),
           col("`Operating Days-Breakfast Only`"), col("`Operating Days`")))
 
-    // E3 steps 3-5: three-part-key join + DISTINCT (ref :846-856, :1079).
-    Assemble.finalTable(Assemble.joinClaims(lunch, breakfast))
+    // E3 steps 3-5: three-part-key join + the final DISTINCT wide table
+    // (ref :846-856, :1079).
+    Assemble.joinClaims(lunch, breakfast).distinct()
   }
 }

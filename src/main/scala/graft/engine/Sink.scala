@@ -27,19 +27,4 @@ object Sink {
 
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
-
-  /** Overwrite a bucketed table: rows hash-partitioned into `buckets` files
-    * per partition by `bucketCol`, sorted within. Joins/aggregations on
-    * the bucket column between co-bucketed tables skip the shuffle
-    * entirely — the 100 TB answer for repeated joins on the same key
-    * (e.g. the claims three-part key, pre-normalized). Catalog-backed:
-    * bucketing metadata lives in the table catalog, so this writes via
-    * saveAsTable. */
-  def writeBucketed(df: DataFrame, table: String, bucketCol: String,
-      buckets: Int): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, bucketCol)
-      .sortBy(bucketCol)
-      .format("parquet")
-      .saveAsTable(table)
 }

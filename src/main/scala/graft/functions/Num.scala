@@ -23,6 +23,14 @@ object Num {
     floor(c * p + 0.5) / p
   }
 
+  /** The same quantizer for a driver-side double. `math.pow(10, s)` is
+    * exact for every power of ten a double holds exactly, so this is
+    * bit-identical to the literal `floor(x * 1e6 + 0.5) / 1e6`. */
+  def qround(x: Double, scale: Int): Double = {
+    val p = math.pow(10, scale)
+    math.floor(x * p + 0.5) / p
+  }
+
   /** The oracle-side SQL for qround, kept adjacent so both sides stay
     * in sync. */
   def qroundSql(expr: String, scale: Int): String = {

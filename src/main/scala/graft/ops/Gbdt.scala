@@ -30,7 +30,6 @@ object Gbdt {
     * values vl/vr (already unscaled — caller applies the shrinkage). */
   final case class Stump(j: Int, bin: Int, vl: Double, vr: Double)
 
-  private def q6(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
 
   /** Split search on the collected histogram rows (j, bin, count,
     * residual-sum): sequential per-feature prefixes in bin order,
@@ -52,7 +51,8 @@ object Gbdt {
         .map { case (bin, nlK, slK) =>
           val gain = slK * slK / nlK + (st - slK) * (st - slK) /
             (nt - nlK) - st * st / nt
-          (gain, j, bin, q6(slK / nlK), q6((st - slK) / (nt - nlK)))
+          (gain, j, bin, Num.qround(slK / nlK, 6),
+            Num.qround((st - slK) / (nt - nlK), 6))
         }
     }
     require(cands.nonEmpty, "Gbdt.bestSplit: no valid split")
@@ -65,7 +65,7 @@ object Gbdt {
     * (f0, stumps) — the model as driver literals. */
   def fit(binned: DataFrame, yCol: String, nFeats: Int, iters: Int,
       nu: Double): (Double, Seq[Stump]) = {
-    val f0 = q6(binned.agg(avg(yCol)).head().getDouble(0))
+    val f0 = Num.qround(binned.agg(avg(yCol)).head().getDouble(0), 6)
     var pred: Column = lit(f0)
     val stumps = Seq.newBuilder[Stump]
     var m = 0

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{ArrayFunctions, VecAggregates}
+import graft.functions.{ArrayFunctions, Num, VecAggregates}
 
 /** FULL-CORPUS distributed spherical k-means by fixed-round Lloyd
   * iteration (X212) — the scale sibling of [[Similarity.fitIvf]]:
@@ -29,7 +29,6 @@ import graft.functions.{ArrayFunctions, VecAggregates}
   * Empty clusters keep their previous centroid (the fitIvf rule). */
 object Lloyd {
 
-  private def q6(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
 
   /** Left-fold L2 normalization — same accumulation order as the
     * oracle's `list_reduce(list_transform(v, x -> x*x), (a,b) -> a+b)`
@@ -61,7 +60,8 @@ object Lloyd {
         r.getInt(0) -> (r.getLong(1), r.getSeq[Double](2).toArray)).toMap
       cents = Array.tabulate(k) { c =>
         byC.get(c) match {
-          case Some((n, sum)) if n > 0 => finish(sum.map(x => q6(x / n)))
+          case Some((n, sum)) if n > 0 =>
+            finish(sum.map(x => Num.qround(x / n, 6)))
           case _ => cents(c)
         }
       }
@@ -161,7 +161,7 @@ object Lloyd {
           .toMap
         Array.tabulate(k) { c =>
           byC.get(c) match {
-            case Some((n, sum)) if n > 0 => sum.map(x => q6(x / n))
+            case Some((n, sum)) if n > 0 => sum.map(x => Num.qround(x / n, 6))
             case _ => cents(i)(c)
           }
         }

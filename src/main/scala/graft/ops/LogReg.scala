@@ -29,7 +29,6 @@ import graft.functions.Num
   * (the X139 device). */
 object LogReg {
 
-  private def q6(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
 
   /** X45's hashed unigram+bigram bag-of-words as a DENSE bucket-share
     * vector, standardized: raw feature j = k·count_j/n_features (an
@@ -89,8 +88,8 @@ object LogReg {
       .head()
     val nD = mrow.getLong(0).toDouble
     require(nD > 0, "LogReg.standardized: empty input")
-    val mu = mrow.getSeq[Double](1).map(s => q6(s / nD)).toArray
-    val ex2 = mrow.getSeq[Double](2).map(s => q6(s / nD)).toArray
+    val mu = mrow.getSeq[Double](1).map(s => Num.qround(s / nD, 6)).toArray
+    val ex2 = mrow.getSeq[Double](2).map(s => Num.qround(s / nD, 6)).toArray
     val sd = Array.tabulate(k) { j =>
       val v = ex2(j) - mu(j) * mu(j)
       if (v > 0.0) math.sqrt(v) else 0.0
@@ -134,7 +133,7 @@ object LogReg {
           .vecAxpy(col(xsCol), resid, dims))
         .head().getSeq[Double](0)
       w = Array.tabulate(dims) { j =>
-        q6(w(j) - lr * q6(g(j) / nD))
+        Num.qround(w(j) - lr * Num.qround(g(j) / nD, 6), 6)
       }
       t += 1
     }
@@ -168,7 +167,7 @@ object LogReg {
       val g = row.getSeq[Double](0)
       losses += row.getDouble(1)
       w = Array.tabulate(dims) { j =>
-        q6(w(j) - lr * q6(g(j) / nD))
+        Num.qround(w(j) - lr * Num.qround(g(j) / nD, 6), 6)
       }
       t += 1
     }
@@ -211,7 +210,7 @@ object LogReg {
         val g = row.getSeq[Double](2 * i)
         losses(i) += row.getDouble(2 * i + 1)
         ws(i) = Array.tabulate(dims) { j =>
-          q6(ws(i)(j) - lrs(i) * q6(g(j) / nD))
+          Num.qround(ws(i)(j) - lrs(i) * Num.qround(g(j) / nD, 6), 6)
         }
       }
       t += 1

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.Num
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -30,16 +31,8 @@ object Pca {
       v1: Array[Double], lambda1: Double,
       v2: Array[Double], lambda2: Double)
 
-  private def q6(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
-
-  /** The Rayleigh–Ritz lanes quantize at 1e-12, not 1e-6: their
-    * intermediate magnitudes (h12² + (l1−h11)² ≈ 1e-5) would lose
-    * 10% to a 1e-6 floor — 1e-12 still sits 5 decades above the
-    * ~1e-17 fold-order ulp drift it exists to kill. */
-  private def q12(x: Double): Double = math.floor(x * 1e12 + 0.5) / 1e12
-
   private def matvec(c: Array[Array[Double]], vv: Array[Double],
-      dims: Int, q: Double => Double = q6): Array[Double] =
+      dims: Int, q: Double => Double = Num.qround(_, 6)): Array[Double] =
     Array.tabulate(dims) { i =>
       var s = 0.0
       var j = 0
@@ -75,8 +68,8 @@ object Pca {
         var d = 0.0
         var i = 0
         while (i < dims) { d += u(i) * o(i); i += 1 }
-        val dq = q6(d)
-        Array.tabulate(dims)(i => q6(u(i) - dq * o(i)))
+        val dq = Num.qround(d, 6)
+        Array.tabulate(dims)(i => Num.qround(u(i) - dq * o(i), 6))
     }
     var t = 0
     while (t < iters) {
@@ -84,16 +77,16 @@ object Pca {
       var s2 = 0.0
       var i = 0
       while (i < dims) { s2 += u(i) * u(i); i += 1 }
-      val nm = math.sqrt(q6(s2))
+      val nm = math.sqrt(Num.qround(s2, 6))
       if (nm == 0.0) return (v, 0.0)
-      v = u.map(x => q6(x / nm))
+      v = u.map(x => Num.qround(x / nm, 6))
       t += 1
     }
     val u = matvec(v)
     var l = 0.0
     var i = 0
     while (i < dims) { l += v(i) * u(i); i += 1 }
-    (v, q6(l))
+    (v, Num.qround(l, 6))
   }
 
   /** Top-2 eigenpairs of an arbitrary symmetric driver matrix by the
@@ -115,7 +108,7 @@ object Pca {
     var l2 = 0.0
     var i = 0
     while (i < dims) { l2 += p2(i) * u2(i); i += 1 }
-    (p1, l1, p2, q6(l2))
+    (p1, l1, p2, Num.qround(l2, 6))
   }
 
   /** One moment pass + driver eigen-solve. `dims` must be the
@@ -134,9 +127,9 @@ object Pca {
     val sx = row.getSeq[Double](1).toArray
     val sxx = row.getSeq[Double](2).toArray
     val nD = n.toDouble
-    val mu = sx.map(s => q6(s / nD))
+    val mu = sx.map(s => Num.qround(s / nD, 6))
     val c1 = Array.tabulate(dims, dims)((i, j) =>
-      q6(sxx(i * dims + j) / nD) - mu(i) * mu(j))
+      Num.qround(sxx(i * dims + j) / nD, 6) - mu(i) * mu(j))
     val (p1, dl) = powerIter(c1, dims, iters)
     val c2 = Array.tabulate(dims, dims)((i, j) =>
       c1(i)(j) - dl * p1(i) * p1(j))
@@ -146,27 +139,30 @@ object Pca {
     // leaves p1 short of the top eigenvector — the 2×2 eigen-solve
     // H = [p1 p2]ᵀ C [p1 p2] re-extracts the variance-optimal
     // ordered basis OF THE SUBSPACE, so λ1 ≥ λ2 by construction.
-    // Every lane quantized (q12 — see above) in the exact order the
-    // oracle replays.
-    val w1 = matvec(c1, p1, dims, q12)
-    val w2 = matvec(c1, p2, dims, q12)
-    val h11 = dotq(p1, w1, q12)
-    val h12 = dotq(p2, w1, q12)
-    val h22 = dotq(p2, w2, q12)
-    val disc = q12(math.sqrt(q12(
-      (h11 - h22) * (h11 - h22) + 4.0 * h12 * h12)))
-    val l1 = q12((h11 + h22 + disc) / 2.0)
-    val l2 = q12((h11 + h22 - disc) / 2.0)
+    // Every lane quantized in the exact order the oracle replays, at
+    // 1e-12, not 1e-6: the intermediate magnitudes (h12² + (l1−h11)²
+    // ≈ 1e-5) would lose 10% to a 1e-6 floor — 1e-12 still sits 5
+    // decades above the ~1e-17 fold-order ulp drift it exists to kill.
+    val w1 = matvec(c1, p1, dims, Num.qround(_, 12))
+    val w2 = matvec(c1, p2, dims, Num.qround(_, 12))
+    val h11 = dotq(p1, w1, Num.qround(_, 12))
+    val h12 = dotq(p2, w1, Num.qround(_, 12))
+    val h22 = dotq(p2, w2, Num.qround(_, 12))
+    val disc = Num.qround(math.sqrt(Num.qround(
+      (h11 - h22) * (h11 - h22) + 4.0 * h12 * h12, 12)), 12)
+    val l1 = Num.qround((h11 + h22 + disc) / 2.0, 12)
+    val l2 = Num.qround((h11 + h22 - disc) / 2.0, 12)
     val (v1, v2) =
       if (h12 == 0.0) {
-        // the q12 lane makes this branch condition replay identically
+        // the 1e-12 lane makes this branch condition replay identically
         if (h11 >= h22) (p1, p2) else (p2, p1)
       } else {
-        val nrm = math.sqrt(q12(h12 * h12 + (l1 - h11) * (l1 - h11)))
-        val al = q12(h12 / nrm)
-        val be = q12((l1 - h11) / nrm)
-        (Array.tabulate(dims)(i => q6(al * p1(i) + be * p2(i))),
-          Array.tabulate(dims)(i => q6(be * p1(i) - al * p2(i))))
+        val nrm =
+          math.sqrt(Num.qround(h12 * h12 + (l1 - h11) * (l1 - h11), 12))
+        val al = Num.qround(h12 / nrm, 12)
+        val be = Num.qround((l1 - h11) / nrm, 12)
+        (Array.tabulate(dims)(i => Num.qround(al * p1(i) + be * p2(i), 6)),
+          Array.tabulate(dims)(i => Num.qround(be * p1(i) - al * p2(i), 6)))
       }
     Model(n, mu, v1, l1, v2, l2)
   }

@@ -2707,7 +2707,6 @@ $name AS (
     },
     (s, d) => {
       val probs = Seq(0.2, 0.4, 0.6, 0.8)
-      def q6(x: Double) = math.floor(x * 1e6 + 0.5) / 1e6
       val base = Tables.orders(s, d)
         .groupBy(col("o_custkey").as("custkey"))
         .agg(max(unix_micros(col("o_orderdate").cast("timestamp"))).as("r_us"),
@@ -2717,7 +2716,8 @@ $name AS (
       val pArr = array(probs.map(lit(_)): _*)
       val fRow = base.agg(percentile(col("r_us"), pArr),
         percentile(col("f"), pArr), percentile(col("m"), pArr)).head()
-      val fences = (0 until 3).map(j => fRow.getSeq[Double](j).map(q6))
+      val fences = (0 until 3).map(j =>
+        fRow.getSeq[Double](j).map(Num.qround(_, 6)))
       def score(c: org.apache.spark.sql.Column, fen: Seq[Double]) =
         fen.foldLeft(lit(1)) { (acc, v) =>
           acc + when(c > v, 1).otherwise(0)

@@ -433,10 +433,9 @@ corpusp AS MATERIALIZED (
     val n = row.getLong(0).toDouble
     val sx = row.getSeq[Double](1)
     val sxx = row.getSeq[Double](2)
-    def q6(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
     val vr = Array.tabulate(64) { d0 =>
-      val mu = q6(sx(d0) / n)
-      q6(sxx(d0) / n) - mu * mu
+      val mu = Num.qround(sx(d0) / n, 6)
+      Num.qround(sxx(d0) / n, 6) - mu * mu
     }
     val ranked = (0 until 64).sortBy(d0 => (-vr(d0), d0))
     val order = new Array[Int](64)

@@ -406,9 +406,8 @@ object CurationQueries {
         .zipWithIndex
         .map { case ((g, n, w, base, _), i) =>
           (g, n,
-            // same qround(6) as the oracle: floor(x·1e6 + 0.5)/1e6
-            math.floor(n.toDouble / sumn * 1e6 + 0.5) / 1e6,
-            math.floor(w.toDouble / sumw * 1e6 + 0.5) / 1e6,
+            Num.qround(n.toDouble / sumn, 6),
+            Num.qround(w.toDouble / sumw, 6),
             if (i < leftover) base + 1 else base)
         }
         .sortBy(_._1)
@@ -492,7 +491,7 @@ object CurationQueries {
         .sortBy { case (src, _, _, _, _, rem) => (-rem, src) }
         .zipWithIndex
         .map { case ((src, n, sigma, _, base, _), i) =>
-          (src, n, math.floor(sigma * 1e6 + 0.5) / 1e6,
+          (src, n, Num.qround(sigma, 6),
             if (i < leftover) base + 1 else base)
         }
         .sortBy(_._1)

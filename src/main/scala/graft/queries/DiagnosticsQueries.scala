@@ -688,7 +688,7 @@ object DiagnosticsQueries {
         .agg(percentile(col("value"),
           array(PsiFences.map(lit(_)): _*)).as("f"))
         .head().getSeq[Double](0)
-        .map(x => math.floor(x * 1e6 + 0.5) / 1e6) // driver-side qround
+        .map(Num.qround(_, 6))
       val band = fences.foldLeft(lit(0)) { (acc, fv) =>
         acc + when(col("value") > fv, 1).otherwise(0)
       }
@@ -3510,7 +3510,7 @@ object DiagnosticsQueries {
       val fences = es.agg(percentile(col("e"),
           array((1 to 4).map(i => lit(i / 5.0)): _*)))
         .head().getSeq[Double](0)
-        .map(x => math.floor(x * 1e6 + 0.5) / 1e6)
+        .map(Num.qround(_, 6))
       val stratum = fences.foldLeft(lit(1)) { (acc, f) =>
         acc + when(col("e") > f, 1).otherwise(0)
       }.cast("long")
@@ -3527,16 +3527,15 @@ object DiagnosticsQueries {
         r.getLong(2), r.getDouble(3), r.getDouble(4)))
       val (tn1, tn0) = (rows.map(_._2).sum, rows.map(_._3).sum)
       val tn = tn1 + tn0
-      def q6d(x: Double) = math.floor(x * 1e6 + 0.5) / 1e6
       // a one-sided stratum (n1 = 0 or n0 = 0) has a NULL diff in the
       // oracle, whose SUM skips it — skip here identically
       val defined = rows.filter(r => r._2 > 0 && r._3 > 0)
       def diffOf(r: (Long, Long, Long, Double, Double)): Double =
         r._4 / r._2.toDouble - r._5 / r._3.toDouble
-      val ate = q6d(defined.map(r =>
-        (r._2 + r._3).toDouble / tn.toDouble * diffOf(r)).sum)
-      val att = q6d(defined.map(r =>
-        r._2.toDouble / tn1.toDouble * diffOf(r)).sum)
+      val ate = Num.qround(defined.map(r =>
+        (r._2 + r._3).toDouble / tn.toDouble * diffOf(r)).sum, 6)
+      val att = Num.qround(defined.map(r =>
+        r._2.toDouble / tn1.toDouble * diffOf(r)).sum, 6)
       val nvRow = es.agg(
         Num.qround(sum(when(col("y") === 1.0, col("y_out"))
           .otherwise(0.0)), 6),
@@ -4299,7 +4298,6 @@ object DiagnosticsQueries {
              ORDER BY p_1.state""")
     },
     (s, d) => {
-      def q6(x: Double) = math.floor(x * 1e6 + 0.5) / 1e6
       val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
       // bounded |types|^2 transition matrix -> driver metadata (X109)
       val pairs = Tables.events(s, d)
@@ -4321,10 +4319,10 @@ object DiagnosticsQueries {
       for (_ <- 1 to 5) {
         p = states.map { st =>
           st -> (if (st == "purchase") 1.0
-          else q6(pairs.filter(_._1 == st).map { case (_, b, n) =>
+          else Num.qround(pairs.filter(_._1 == st).map { case (_, b, n) =>
             (n.toDouble / nFrom(st).toDouble) *
               (if (b == "purchase") 1.0 else p.getOrElse(b, 0.0))
-          }.sum))
+          }.sum, 6))
         }.toMap
         hist += p
       }

@@ -1145,14 +1145,13 @@ object EventQueries {
         .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
       val v = m.map { case (mask, n, c) =>
         mask -> c.toDouble / n.toDouble }.toMap.withDefaultValue(0.0)
-      def q6(x: Double) = math.floor(x * 1e6 + 0.5) / 1e6
       val wBySize = Map(0 -> 6.0, 1 -> 2.0, 2 -> 2.0, 3 -> 6.0)
       val rows = ShapleyBits.map { case (t, bit) =>
-        val phi = q6((0 until 16).filter(s0 => (s0 & bit) == 0).map {
+        val phi = Num.qround((0 until 16).filter(s0 => (s0 & bit) == 0).map {
           s0 =>
             (wBySize(Integer.bitCount(s0)) / 24.0) *
               (v(s0 + bit) - v(s0))
-        }.sum)
+        }.sum, 6)
         val nTouch = m.collect { case (mk, n, _) if (mk & bit) > 0 => n }
           .sum
         val cTouch = m.collect { case (mk, _, c) if (mk & bit) > 0 => c }

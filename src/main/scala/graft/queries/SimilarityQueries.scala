@@ -1661,14 +1661,13 @@ ORDER BY id_a, id_b"""
             FROM d, st ORDER BY vec_id""")
     },
     (s, d) => {
-      def q6(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
       val emb = Tables.embeddings(s, d)
       val cq: Seq[Double] = emb
         .select(posexplode(col("embedding")).as(Seq("dim", "v")))
         .groupBy("dim")
         .agg(sum(col("v").cast("double")).as("sv"), count(lit(1)).as("n"))
         .collect().sortBy(_.getInt(0))
-        .map(r => q6(r.getDouble(1) / r.getLong(2))).toSeq
+        .map(r => Num.qround(r.getDouble(1) / r.getLong(2), 6)).toSeq
       val diffSq = zip_with(col("embedding"), lit(cq.toArray),
         (x, c) => (x.cast("double") - c) * (x.cast("double") - c))
       val dist = sqrt(aggregate(diffSq, lit(0.0), (a, x) => a + x))
@@ -1677,8 +1676,8 @@ ORDER BY id_a, id_b"""
         .agg(sum("dist"), count(lit(1)), sum(col("dist") * col("dist")))
         .head
       val n = st.getLong(1).toDouble
-      val mu = q6(st.getDouble(0) / n)
-      val m2 = q6(st.getDouble(2) / n)
+      val mu = Num.qround(st.getDouble(0) / n, 6)
+      val m2 = Num.qround(st.getDouble(2) / n, 6)
       val sigma = math.sqrt(m2 - mu * mu)
       dd.select(col("vec_id"), col("dist"),
           ((col("dist") - mu) / sigma).as("z"),
@@ -2460,21 +2459,20 @@ ORDER BY id_a, id_b"""
         fwdMap((i0 + 1, j0 + 1)) + fwdMap((j0 + 1, i0 + 1)))
       val marg = Array.tabulate(PpmiV)(i0 => csym(i0).sum)
       val nTot = marg.sum
-      def q6(x: Double) = math.floor(x * 1e6 + 0.5) / 1e6
       val pmM = Array.tabulate(PpmiV, PpmiV) { (i0, j0) =>
         val c = csym(i0)(j0)
         if (c > 0)
-          math.max(0.0, q6(math.log(
+          math.max(0.0, Num.qround(math.log(
             (nTot.toDouble * c.toDouble) /
-              (marg(i0).toDouble * marg(j0).toDouble))))
+              (marg(i0).toDouble * marg(j0).toDouble)), 6))
         else 0.0
       }
       val (v1, l1, v2, l2) =
         graft.ops.Pca.eigen2(pmM, PpmiV, PpmiIters)
       def scale(l: Double) = if (l > 0.0) math.sqrt(l) else 0.0
       val rows = vocab.map { case (t, cnt, i) =>
-        (t, i.toLong, cnt, q6(v1(i - 1) * scale(l1)),
-          q6(v2(i - 1) * scale(l2)), l1, l2)
+        (t, i.toLong, cnt, Num.qround(v1(i - 1) * scale(l1), 6),
+          Num.qround(v2(i - 1) * scale(l2), 6), l1, l2)
       }.toSeq
       import s.implicits._
       rows.toDF("token", "rnk", "cnt", "e1", "e2",

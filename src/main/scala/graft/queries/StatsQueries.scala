@@ -982,33 +982,32 @@ object StatsQueries {
       // bounded actions: stratum total, population total + margins
       val sTot = cells.agg(sum("n")).head().getLong(0)
       val pTot = ev.count()
-      def q6(x: Double) = math.floor(x * 1e6 + 0.5) / 1e6
       val rowT = ev.groupBy(col("event_type").as("typ"))
         .agg(count(lit(1)).as("c")).collect()
         .map(r => r.getString(0) ->
-          q6(r.getLong(1).toDouble / pTot * sTot)).toMap
+          Num.qround(r.getLong(1).toDouble / pTot * sTot, 6)).toMap
       val colT = ev.groupBy(dpCol.as("dp"))
         .agg(count(lit(1)).as("c")).collect()
         .map(r => r.getLong(0) ->
-          q6(r.getLong(1).toDouble / pTot * sTot)).toMap
+          Num.qround(r.getLong(1).toDouble / pTot * sTot, 6)).toMap
       // 6 pinned IPF rounds on the <=20-cell driver table
       var m = cells.collect()
         .map(r => ((r.getString(0), r.getLong(1)), r.getLong(2),
           r.getLong(2).toDouble))
       for (_ <- 1 to IpfRounds) {
         val rs = m.groupBy(_._1._1)
-          .map { case (k, cs) => k -> q6(cs.map(_._3).sum) }
+          .map { case (k, cs) => k -> Num.qround(cs.map(_._3).sum, 6) }
         m = m.map { case (k, n0, v) =>
           val sK = rs(k._1)
-          (k, n0, q6(v * (rowT(k._1) / (if (sK == 0.0) Double.NaN
-            else sK))))
+          (k, n0, Num.qround(v * (rowT(k._1) / (if (sK == 0.0) Double.NaN
+            else sK)), 6))
         }
         val csm = m.groupBy(_._1._2)
-          .map { case (k, cs) => k -> q6(cs.map(_._3).sum) }
+          .map { case (k, cs) => k -> Num.qround(cs.map(_._3).sum, 6) }
         m = m.map { case (k, n0, v) =>
           val sK = csm(k._2)
-          (k, n0, q6(v * (colT(k._2) / (if (sK == 0.0) Double.NaN
-            else sK))))
+          (k, n0, Num.qround(v * (colT(k._2) / (if (sK == 0.0) Double.NaN
+            else sK)), 6))
         }
       }
       val raked = m.map { case ((typ, dp), n0, v) => (typ, dp, n0, v) }
@@ -1232,7 +1231,6 @@ object StatsQueries {
              ORDER BY gd_round""")
     },
     (s, d) => {
-      def q6(x: Double) = math.floor(x * 1e6 + 0.5) / 1e6
       val feats = Tables.events(s, d)
         .select((col("value") / 500.0).as("y"),
           (hour(col("ts")).cast("double") / 24.0).as("x"))
@@ -1248,14 +1246,14 @@ object StatsQueries {
         val row = feats.agg(count(lit(1)), sum(dCol),
           sum(dCol * col("x")), sum(lossCol)).head()
         val n = row.getLong(0).toDouble
-        out += ((r, w0, w1, q6(row.getDouble(3) / n)))
-        val g0 = q6(row.getDouble(1) / n)
-        val g1 = q6(row.getDouble(2) / n)
-        w0 = q6(w0 - 1.0 * g0)
-        w1 = q6(w1 - 1.0 * g1)
+        out += ((r, w0, w1, Num.qround(row.getDouble(3) / n, 6)))
+        val g0 = Num.qround(row.getDouble(1) / n, 6)
+        val g1 = Num.qround(row.getDouble(2) / n, 6)
+        w0 = Num.qround(w0 - 1.0 * g0, 6)
+        w1 = Num.qround(w1 - 1.0 * g1, 6)
       }
       val fin = feats.agg(count(lit(1)), sum(lossCol)).head()
-      out += ((5, w0, w1, q6(fin.getDouble(1) / fin.getLong(0))))
+      out += ((5, w0, w1, Num.qround(fin.getDouble(1) / fin.getLong(0), 6)))
       import s.implicits._
       out.toSeq.toDF("gd_round", "w0", "w1", "loss")
         .orderBy("gd_round")
@@ -1435,7 +1433,6 @@ object StatsQueries {
              ORDER BY em_round""")
     },
     (s, d) => {
-      def q6d(x: Double) = math.floor(x * 1e6 + 0.5) / 1e6
       val TwoPi = 6.283185307179586
       val base = Tables.documents(s, d)
         .select((col("n_chars").cast("double") / 1000.0).as("x"))
@@ -1468,13 +1465,13 @@ object StatsQueries {
           row.getDouble(1), row.getDouble(2), row.getDouble(3),
           row.getDouble(4), row.getDouble(5))
         out += ((r, mu1, mu2, s21, s22, pi1, ll))
-        mu1 = q6d(srx1 / sr1)
-        mu2 = q6d(srx2 / (n - sr1))
-        s21 = math.max(q6d(srxx1 / sr1 - (srx1 / sr1) * (srx1 / sr1)),
+        mu1 = Num.qround(srx1 / sr1, 6)
+        mu2 = Num.qround(srx2 / (n - sr1), 6)
+        s21 = math.max(Num.qround(srxx1 / sr1 - (srx1 / sr1) * (srx1 / sr1), 6),
           0.0001)
-        s22 = math.max(q6d(srxx2 / (n - sr1) -
-          (srx2 / (n - sr1)) * (srx2 / (n - sr1))), 0.0001)
-        pi1 = q6d(sr1 / n)
+        s22 = math.max(Num.qround(srxx2 / (n - sr1) -
+          (srx2 / (n - sr1)) * (srx2 / (n - sr1)), 6), 0.0001)
+        pi1 = Num.qround(sr1 / n, 6)
       }
       val fin = base.agg(Num.qround(sum(log(mixCol)) / n, 6)).head()
       out += ((5, mu1, mu2, s21, s22, pi1, fin.getDouble(0)))
@@ -1545,7 +1542,6 @@ object StatsQueries {
         .head()
       val (n, sTot, sxx, k, a) = (tRow.getLong(0), tRow.getLong(1),
         tRow.getLong(2), tRow.getLong(3), tRow.getDouble(4))
-      def q6(x: Double) = math.floor(x * 1e6 + 0.5) / 1e6
       val ssb = a - sTot.toDouble * sTot.toDouble / n.toDouble
       val ssw = sxx.toDouble - a
       val fStat = (ssb / (k - 1).toDouble) / (ssw / (n - k).toDouble)
@@ -1553,9 +1549,9 @@ object StatsQueries {
           (col("s_g").cast("double") / col("n_g").cast("double"))
             .as("mean_g"),
           lit(k).as("k"), lit(n).as("n"),
-          lit(q6(ssb)).as("ssb"), lit(q6(ssw)).as("ssw"),
-          lit(q6(fStat)).as("f_stat"),
-          lit(q6(ssb / (ssb + ssw))).as("eta2"))
+          lit(Num.qround(ssb, 6)).as("ssb"), lit(Num.qround(ssw, 6)).as("ssw"),
+          lit(Num.qround(fStat, 6)).as("f_stat"),
+          lit(Num.qround(ssb / (ssb + ssw), 6)).as("eta2"))
         .orderBy("source")
     })
 
@@ -1708,7 +1704,6 @@ object StatsQueries {
             ORDER BY comparison"""
     },
     (s, d) => {
-      def q6(x: Double) = math.floor(x * 1e6 + 0.5) / 1e6
       val ev = Tables.embeddings(s, d).select(col("vec_id"),
         col("embedding").cast("array<double>").as("v"),
         conv(substring(md5(concat(lit("energy:"),
@@ -1730,8 +1725,8 @@ object StatsQueries {
           acc + (x - y) * (x - y)
         })
       def eab(a: Array[Array[Double]], b: Array[Array[Double]]) =
-        q6(a.flatMap(x => b.map(y => dist(x, y))).sum /
-          (a.length.toDouble * b.length))
+        Num.qround(a.flatMap(x => b.map(y => dist(x, y))).sum /
+          (a.length.toDouble * b.length), 6)
       val (exy0, exx, eyy0) = (eab(sa, sb0), eab(sa, sa), eab(sb0, sb0))
       val (exys, eyys) = (eab(sa, sbs), eab(sbs, sbs))
       import s.implicits._

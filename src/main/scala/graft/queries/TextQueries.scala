@@ -852,7 +852,7 @@ wpw$k AS MATERIALIZED (
       import s.implicits._
       merges
         .map { case (k, l, r, cnt, sc) =>
-          (k, l, r, cnt, math.floor(sc * 1e6 + 0.5) / 1e6) }
+          (k, l, r, cnt, Num.qround(sc, 6)) }
         .toDF("merge_rank", "left_sym", "right_sym", "pair_count",
           "score")
         .orderBy("merge_rank")
@@ -1606,7 +1606,6 @@ v$x$r AS MATERIALIZED (
     },
     (s, d) => {
       import graft.ops.UnigramLm
-      def q6(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
       val words = UnigramLm.wordTable(Tables.documents(s, d)).persist()
       try {
         val seed = UnigramLm.seedVocab(words)
@@ -1616,7 +1615,7 @@ v$x$r AS MATERIALIZED (
         import s.implicits._
         seed.map { case (pc, c) =>
           val pf = probs(pc)
-          (pc, pc.length, c, p0(pc), pf, q6(math.log(pf)))
+          (pc, pc.length, c, p0(pc), pf, Num.qround(math.log(pf), 6))
         }.toDF("piece", "piece_len", "n_raw", "p_init", "p_final",
           "logp").orderBy("piece")
       } finally words.unpersist()
@@ -1890,7 +1889,6 @@ tt$x AS (SELECT CAST(SUM(freq) AS BIGINT) AS t FROM words$x)"""
     },
     (s, d) => {
       import graft.ops.UnigramLm
-      def q6(x: Double) = math.floor(x * 1e6 + 0.5) / 1e6
       val bucket = pmod(conv(substring(md5(concat(lit("scale:"),
         col("doc_id").cast("string"))), 1, 8), 16, 10).cast("long"),
         lit(8L))
@@ -1936,12 +1934,12 @@ tt$x AS (SELECT CAST(SUM(freq) AS BIGINT) AS t FROM words$x)"""
         } finally words.unpersist()
       }
       val out = rows.zipWithIndex.map { case ((cfg, t, cov, oov, snll), i) =>
-        val xent = q6(snll / cov.toDouble)
+        val xent = Num.qround(snll / cov.toDouble, 6)
         val slope = if (i == 0) None else {
           val (_, tp, covp, _, snllp) = rows(i - 1)
-          val xp = q6(snllp / covp.toDouble)
-          Some(q6((math.log(xent) - math.log(xp)) /
-            (math.log(t.toDouble) - math.log(tp.toDouble))))
+          val xp = Num.qround(snllp / covp.toDouble, 6)
+          Some(Num.qround((math.log(xent) - math.log(xp)) /
+            (math.log(t.toDouble) - math.log(tp.toDouble)), 6))
         }
         (cfg, t, cov, oov, snll, xent, slope)
       }
@@ -3426,7 +3424,6 @@ tt$x AS (SELECT CAST(SUM(freq) AS BIGINT) AS t FROM words$x)"""
     },
     (s, d) => {
       import s.implicits._
-      def q6(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
       val toks = filter(split(col("text"), "\\s+"), t => length(t) > 0)
       val top = Tables.documents(s, d)
         .select(explode(toks).as("token"))
@@ -3436,8 +3433,8 @@ tt$x AS (SELECT CAST(SUM(freq) AS BIGINT) AS t FROM words$x)"""
       require(top.length == ZipfK,
         s"q_zipf_fit needs a vocabulary of >= $ZipfK tokens")
       val lanes = top.zipWithIndex.map { case ((t, f), i) =>
-        (i + 1L, t, f, q6(math.log((i + 1).toDouble)),
-          q6(math.log(f.toDouble)))
+        (i + 1L, t, f, Num.qround(math.log((i + 1).toDouble), 6),
+          Num.qround(math.log(f.toDouble), 6))
       }
       // explicit left-to-right folds in rank order — the same chains
       // the oracle builds, so the slope is bit-determined pre-qround
@@ -3446,7 +3443,7 @@ tt$x AS (SELECT CAST(SUM(freq) AS BIGINT) AS t FROM words$x)"""
       val sxy = lanes.map(l => l._4 * l._5).reduceLeft(_ + _)
       val sxx = lanes.map(l => l._4 * l._4).reduceLeft(_ + _)
       val k = ZipfK.toDouble
-      val slope = q6((k * sxy - sx * sy) / (k * sxx - sx * sx))
+      val slope = Num.qround((k * sxy - sx * sy) / (k * sxx - sx * sx), 6)
       lanes.toSeq.map { case (r, t, f, lnr, lnf) =>
         (r, t, f, lnr, lnf, slope)
       }.toDF("rank", "token", "freq", "ln_rank", "ln_freq", "slope")
@@ -3817,7 +3814,7 @@ tt$x AS (SELECT CAST(SUM(freq) AS BIGINT) AS t FROM words$x)"""
       val fences = s0
         .agg(percentile(col("s"), array(IsoFences.map(lit(_)): _*)))
         .head().getSeq[Double](0)
-        .map(x => math.floor(x * 1e6 + 0.5) / 1e6)
+        .map(Num.qround(_, 6))
       val band = fences.foldLeft(lit(0)) { (acc, fv) =>
         acc + when(col("s") > fv, 1).otherwise(0)
       }
@@ -3957,7 +3954,7 @@ tt$x AS (SELECT CAST(SUM(freq) AS BIGINT) AS t FROM words$x)"""
       val fences = hc.agg(percentile(col("margin"),
           array((1 to 9).map(i => lit(i / 10.0)): _*)))
         .head().getSeq[Double](0)
-        .map(x => math.floor(x * 1e6 + 0.5) / 1e6)
+        .map(Num.qround(_, 6))
       val bin = fences.foldLeft(lit(0)) { (acc, f) =>
         acc + when(col("margin") > f, 1).otherwise(0)
       }
@@ -4164,7 +4161,6 @@ tt$x AS (SELECT CAST(SUM(freq) AS BIGINT) AS t FROM words$x)"""
              ORDER BY gd_round""")
     },
     (s, d) => {
-      def q6(x: Double) = math.floor(x * 1e6 + 0.5) / 1e6
       val toks = Text.tokens(col("text"))
       val sw = filter(toks, t =>
         lower(t).isin(Text.DefaultStopwords: _*))
@@ -4186,14 +4182,14 @@ tt$x AS (SELECT CAST(SUM(freq) AS BIGINT) AS t FROM words$x)"""
         val row = base.agg(count(lit(1)), sum((pCol - col("y")) * col("s")),
           sum(pCol - col("y")), sum(lossCol)).head()
         val n = row.getLong(0).toDouble
-        out += ((r, a, b, q6(row.getDouble(3) / n)))
-        val ga = q6(row.getDouble(1) / n)
-        val gb = q6(row.getDouble(2) / n)
-        a = q6(a - 4.0 * ga)
-        b = q6(b - 4.0 * gb)
+        out += ((r, a, b, Num.qround(row.getDouble(3) / n, 6)))
+        val ga = Num.qround(row.getDouble(1) / n, 6)
+        val gb = Num.qround(row.getDouble(2) / n, 6)
+        a = Num.qround(a - 4.0 * ga, 6)
+        b = Num.qround(b - 4.0 * gb, 6)
       }
       val fin = base.agg(count(lit(1)), sum(lossCol)).head()
-      out += ((5, a, b, q6(fin.getDouble(1) / fin.getLong(0))))
+      out += ((5, a, b, Num.qround(fin.getDouble(1) / fin.getLong(0), 6)))
       import s.implicits._
       out.toSeq.toDF("gd_round", "a", "b", "loss").orderBy("gd_round")
     })

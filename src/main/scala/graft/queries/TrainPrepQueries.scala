@@ -402,9 +402,8 @@ object TrainPrepQueries {
         percentile(col("x3"), array(GbdtProbs.map(lit(_)): _*)),
         percentile(col("x4"), array(GbdtProbs.map(lit(_)): _*)))
         .head()
-      def q6(x: Double) = math.floor(x * 1e6 + 0.5) / 1e6
       val fences = (0 until 4).map(j =>
-        fRow.getSeq[Double](j).map(q6))
+        fRow.getSeq[Double](j).map(Num.qround(_, 6)))
       def binOf(j: Int) = fences(j - 1).foldLeft(lit(0)) { (acc, f) =>
         acc + when(col(s"x$j") > f, 1).otherwise(0)
       }

@@ -329,7 +329,7 @@ object Stress {
       // noop write: every surviving column is materialized end to end,
       // so the measurement covers analysis + codegen + evaluation of
       // the full-width projection (count() would prune it away)
-      graft.engine.CleanPipeline.clean(wideDf, widePlan)
+      widePlan.select(wideDf)
         .write.format("noop").mode("overwrite").save()
       s"kept=${widePlan(wideCols).size}"
     }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.engine.{CleanPipeline, CleanPlan, Dictionary, Qa}
+import graft.engine.{CleanPlan, Dictionary, Qa}
 import graft.functions.Text
 import graft.ops.{Dedup, Similarity}
 import org.apache.spark.sql.functions._
@@ -57,7 +57,7 @@ class EdgeCaseSpec extends SparkSuite {
   test("clean plan on a schema with no dictionary matches drops everything") {
     val plan = CleanPlan(drops = Seq("a", "b"), renames = Map.empty)
     val df = Seq(("x", "y")).toDF("a", "b")
-    val out = CleanPipeline.clean(df, plan)
+    val out = plan.select(df)
     assert(out.columns.isEmpty)
     assert(out.count() === 1) // zero-column rows still count (ref CTAS would too)
   }
@@ -66,8 +66,8 @@ class EdgeCaseSpec extends SparkSuite {
     val emptyDict = Seq.empty[(String, String, String)]
       .toDF("raw_data_column", "raw_data_column_name",
         "equivalent_clean_data_name")
-    val plan = Dictionary.planFor(spark, Seq("c1", "c2"),
-      emptyDict, emptyDict)
+    val plan = Dictionary.planLocal(Seq("c1", "c2"),
+      Dictionary.collectDicts(emptyDict, emptyDict))
     assert(plan.drops.toSet === Set("c1", "c2"))
     assert(plan.renames.isEmpty)
   }

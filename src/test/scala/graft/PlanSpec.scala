@@ -182,23 +182,19 @@ class PlanSpec extends SparkSuite {
     // A Window with an empty partition spec funnels every row through
     // ONE task — the scale defect class that shipped in r6's
     // q_token_budget (since rewritten onto ops.PrefixSum). Gate it so
-    // it can't ship again. Sole exception: q_row_number is the
-    // reference-faithful global ROW_NUMBER (ref `:163`), a documented
-    // fidelity/scale pair whose scale-safe twin is
-    // CleanPipeline.scalableRowKey (SURVEY §2e).
+    // it can't ship again. No exception: q_row_number (W1) partitions
+    // by order key, and the reference's global surrogate key (ref
+    // `:163`) only re-stitches per-column tables that an immutable
+    // DataFrame never splits, so the engine has none (DIVERGENCES #9).
     import org.apache.spark.sql.execution.window.WindowExec
-    val faithfulByDesign = Set("q_row_number")
     val failures = SparkEntry.defs.flatMap { q =>
-      if (faithfulByDesign(q.name)) None
-      else {
-        val sp = SparkEntry.queries(q.name)(spark, Sf0001)
-          .queryExecution.sparkPlan
-        val bad = sp.collect {
-          case w: WindowExec if w.partitionSpec.isEmpty => w
-        }
-        if (bad.isEmpty) None
-        else Some(s"${q.name}: ${bad.size} partition-less Window node(s)")
+      val sp = SparkEntry.queries(q.name)(spark, Sf0001)
+        .queryExecution.sparkPlan
+      val bad = sp.collect {
+        case w: WindowExec if w.partitionSpec.isEmpty => w
       }
+      if (bad.isEmpty) None
+      else Some(s"${q.name}: ${bad.size} partition-less Window node(s)")
     }
     assert(failures.isEmpty,
       s"single-partition windows planned:\n${failures.mkString("\n")}")

@@ -14,8 +14,8 @@ class DictionarySpec extends SparkSuite {
     val d1 = dict(Seq(("c1", "keep_me", "Kept"),
       ("c2", "drop_marked", "NOT USED - x")))
     val d2 = dict(Seq(("c3", "other", "Other")))
-    val plan = Dictionary.planFor(spark,
-      Seq("keep_me", "drop_marked", "unmatched"), d1, d2)
+    val plan = Dictionary.planLocal(Seq("keep_me", "drop_marked", "unmatched"),
+      Dictionary.collectDicts(d1, d2))
     assert(plan.drops.toSet === Set("drop_marked", "unmatched"))
     assert(plan.renames === Map("keep_me" -> "Kept"))
   }
@@ -24,7 +24,8 @@ class DictionarySpec extends SparkSuite {
     val d1 = dict(Seq(("c1", "a", "Same"), ("c2", "b", "Same"),
       ("c3", "c", "Unique")))
     val d2 = dict(Seq.empty)
-    val plan = Dictionary.planFor(spark, Seq("a", "b", "c"), d1, d2)
+    val plan = Dictionary.planLocal(Seq("a", "b", "c"),
+      Dictionary.collectDicts(d1, d2))
     assert(plan.drops.isEmpty)
     assert(plan.renames === Map("c" -> "Unique"))
     assert(plan(Seq("a", "b", "c")) ===
@@ -34,7 +35,8 @@ class DictionarySpec extends SparkSuite {
   test("lookup matches case-insensitively like T-SQL collation") {
     val d1 = dict(Seq(("c1", "school name", "Clean School Name")))
     val d2 = dict(Seq.empty)
-    val plan = Dictionary.planFor(spark, Seq("School NAME"), d1, d2)
+    val plan = Dictionary.planLocal(Seq("School NAME"),
+      Dictionary.collectDicts(d1, d2))
     assert(plan.drops.isEmpty)
     assert(plan.renames === Map("School NAME" -> "Clean School Name"))
   }
@@ -70,6 +72,28 @@ class DictionarySpec extends SparkSuite {
     }
   }
 
+  test("planLocal lower-cases locale-independently (tr_TR: I is not ı)") {
+    // Under a Turkish default locale, String.toLowerCase maps ASCII `I`
+    // to dotless `ı`, so `School ID` would miss the row `school id`
+    // that Spark's `lower()` (the lookup path) matches.
+    val d1 = dict(Seq(("c1", "school id", "School ID Clean")))
+    val d2 = dict(Seq.empty)
+    val cols = Seq("School ID", "NAME")
+    val viaDf = Dictionary.plan(Dictionary.lookup(spark, cols, d1, d2))
+    assert(viaDf.renames === Map("School ID" -> "School ID Clean"))
+    val dicts = Dictionary.DictRows(
+      d1 = Map("school id" -> Seq("School ID Clean")), d2 = Map.empty)
+    val saved = java.util.Locale.getDefault
+    val viaLocal =
+      try {
+        java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr-TR"))
+        Dictionary.planLocal(cols, dicts)
+      } finally java.util.Locale.setDefault(saved)
+    assert(viaLocal.drops === Seq("NAME"))
+    assert(viaLocal.renames === viaDf.renames)
+    assert(viaLocal(cols) === Seq("School ID" -> "School ID Clean"))
+  }
+
   test("property: kept = matched ∧ ¬NOT-USED, renamed iff clean name 1:1") {
     for (seed <- 0 until 30) {
       val rnd = new scala.util.Random(seed)
@@ -85,7 +109,8 @@ class DictionarySpec extends SparkSuite {
           case 4 => Some((c, c, "shared"))
         }
       }
-      val plan = Dictionary.planFor(spark, cols, dict(entries), dict(Seq.empty))
+      val plan = Dictionary.planLocal(cols,
+        Dictionary.collectDicts(dict(entries), dict(Seq.empty)))
       val byRaw = entries.map(e => e._2 -> e._3).toMap
       val cleanCounts = entries.groupBy(_._3).view.mapValues(_.size).toMap
       val expectKept = cols.filter(c =>

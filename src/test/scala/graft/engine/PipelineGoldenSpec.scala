@@ -30,6 +30,49 @@ class PipelineGoldenSpec extends SparkSuite {
     assert(cols.contains("Agency Code"))
   }
 
+  /** The wide table's column order: the join keys, the lunch side (its
+    * cleaned file order, then the derived columns in the order the
+    * pipeline adds them), then the breakfast side likewise, with every
+    * non-key name it shares with the lunch side suffixed `_b`. */
+  private def wideColumns(lunchFile: Seq[String], breakfastFile: Seq[String]) =
+    Seq("school name", "claim date") ++ lunchFile ++ Seq(
+      "School Type-Original", "FR Lunch Meals", "FR Lunch ADP", "Unique ID",
+      "NCES ID", "School_Year", "Target Area", "FR Enrollment",
+      "FR Enrollment Percentage", "School Level-Standardized",
+      "School Type-Standardized") ++ breakfastFile ++ Seq(
+      "TRADITIONAL_MODEL", "MID_MORNING_MODEL", "CLASSROOM_MODEL",
+      "REDUCED_PRICE_MODEL", "GRAB_N_GO_MODEL", "FREE_MODEL",
+      "Breakfast Meals-Free", "Breakfast Meals-Reduced",
+      "Breakfast Meals-Free and Reduced", "Operating Days-Breakfast Only",
+      "Operating Days_b", "Breakfast Delivery Model from State Agency-Original",
+      "FR Breakfast Meals", "FR Breakfast ADP")
+
+  private val lunchMeasures = Seq("Lunch Meals-Free", "Lunch Meals-Reduced",
+    "Lunch Meals-Free and Reduced", "Lunch Meals-Paid",
+    "Operating Days-Lunch Only", "Operating Days", "Enrollment-Free",
+    "Enrollment-Reduced", "Enrollment-Free and Reduced", "Enrollment-Total",
+    "School Year")
+
+  test("WI wide table: full ordered column list") {
+    assert(result.columns.toSeq === wideColumns(
+      Seq("Agency Code", "district id", "School ID", "PUBLIC", "SCHOOL TYPE",
+        "School Level-Original", "CEP (Y/N)") ++ lunchMeasures,
+      Seq("Agency Code_b", "district id_b", "School ID_b")))
+  }
+
+  test("MN wide table: full ordered column list (raw columns reordered)") {
+    val mn = Pipeline.run(spark, Pipeline.Config(
+      dict1Path = fixture("data_dictionary_template_1.txt"),
+      dict2Path = fixture("data_dictionary_template_2.txt"),
+      breakfastPath = fixture("MN_2017_2018_SBP_MEAL_PARTICIPATION.txt"),
+      lunchPath = fixture("MN_2017_2018_NSLP_MEAL_PARTICIPATION.txt"),
+      state = "MN"))
+    assert(mn.columns.toSeq === wideColumns(
+      Seq("Agency Code", "School ID", "district id", "PUBLIC", "SCHOOL TYPE",
+        "CEP (Y/N)", "School Level-Original") ++ lunchMeasures,
+      Seq("Agency Code_b", "district id_b", "School ID_b")))
+  }
+
   test("derived measures: split sum + specific days (Alpha)") {
     val a = rows("Alpha School")
     assert(a.getAs[Double]("FR Lunch Meals") === 120.0)

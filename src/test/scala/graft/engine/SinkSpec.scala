@@ -1,7 +1,7 @@
 package graft.engine
 
 import graft.{SparkSuite, Tables}
-import graft.ops.Skew
+import graft.ops.{Layout, Skew}
 import org.apache.spark.sql.functions._
 
 class SinkSpec extends SparkSuite {
@@ -27,10 +27,11 @@ class SinkSpec extends SparkSuite {
   test("co-bucketed tables join without a shuffle") {
     val orders = Tables.orders(spark, Sf0001)
     val li = Tables.lineitem(spark, Sf0001)
-    Sink.writeBucketed(orders, "b_orders", "o_orderkey", buckets = 8)
-    Sink.writeBucketed(
+    val dir = java.nio.file.Files.createTempDirectory("graft-bucketed").toString
+    Layout.bucketed(orders, "b_orders", dir, "o_orderkey", buckets = 8)
+    Layout.bucketed(
       li.withColumnRenamed("l_orderkey", "o_orderkey"),
-      "b_lineitem", "o_orderkey", buckets = 8)
+      "b_lineitem", dir, "o_orderkey", buckets = 8)
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
