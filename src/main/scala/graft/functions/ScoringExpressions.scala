@@ -7,59 +7,32 @@ import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types.{DataType, DoubleType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Fused hashed-bag-of-ngrams margin kernel for the linear-classifier
-  * scoring scan (ops.Scoring): Σ_f w[bucket(f)] over the document's
-  * unigrams + bigrams, in ONE pass over the UTF-8 bytes — no token
-  * array, no n-gram string array, no per-feature Column machinery.
+/** Fused hashed-bag-of-ngrams kernels for the linear-classifier
+  * scoring scan and its training side (ops.Scoring): Σ_f w[bucket(f)]
+  * over the document's unigrams + bigrams (plus the token count), or
+  * the bucket sequence itself, in ONE pass over the UTF-8 bytes — no
+  * token array, no n-gram string array, no per-feature Column
+  * machinery.
   *
   * The composed formulation (transform over concat(tokens, bigrams)
   * with an md5 + element_at per feature) allocates two string arrays
   * and one concat'd feature string per feature per row; at 1M docs ×
   * ~120 features that is ~10⁸ short-lived allocations per scan. The
-  * kernel reuses one thread-local MessageDigest and one scratch
-  * buffer, walks the byte array once for unigrams and once for
-  * bigrams, and folds weights in EXACTLY the composed order (unigrams
-  * left-to-right, then bigrams left-to-right, from 0.0) — so it is
-  * bit-identical to the composed version (ScoringSpec pins ===, not
-  * approximate) and to the SQL oracle's derivation.
+  * kernels reuse one thread-local MessageDigest and one scratch
+  * buffer, walk the byte array once for unigrams and once for
+  * bigrams, and fold weights in EXACTLY the composed order (unigrams
+  * left-to-right, then bigrams left-to-right, from 0.0) — so margins
+  * are bit-identical to the composed version (ScoringSpec pins ===,
+  * not approximate) and to the SQL oracle's derivation.
   *
   * Bucketing matches [[graft.ops.Scoring.featureBucket]]: md5 of
   * "<salt><feature>" (bigram = "tok1 tok2"), first 4 digest bytes as
-  * a big-endian unsigned 32-bit int, mod `weights.length`. Tokens are
+  * a big-endian unsigned 32-bit int, mod the bucket count. Tokens are
   * maximal runs of non-whitespace bytes (Java `\s` over ASCII:
   * tab, LF, VT, FF, CR, space — multi-byte UTF-8 never collides with
   * these, so byte-level splitting is exact for any input).
   */
-case class HashedBagMargin(child: Expression, weights: Seq[Double],
-    salt: String) extends UnaryExpression {
-
-  require(weights.nonEmpty, "weights must be non-empty")
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "hashed_bag_margin"
-  override def nullable: Boolean = true
-
-  @transient private lazy val wArr: Array[Double] = weights.toArray
-  @transient private lazy val saltBytes: Array[Byte] =
-    salt.getBytes("UTF-8")
-
-  override def nullSafeEval(input: Any): Any =
-    HashedBagMargin.compute(input.asInstanceOf[UTF8String], wArr, saltBytes)
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode = {
-    val w = ctx.addReferenceObj("hbmWeights", wArr,
-      "double[]")
-    val s = ctx.addReferenceObj("hbmSalt", saltBytes, "byte[]")
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.HashedBagMargin.compute($c, $w, $s);""")
-  }
-
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
-object HashedBagMargin {
+object HashedBag {
 
   private val digest = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
@@ -136,38 +109,11 @@ object HashedBagMargin {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  /** Static kernel called from generated code. */
-  def compute(s: UTF8String, w: Array[Double],
-      salt: Array[Byte]): Double = {
-    val bytes = s.getBytes
-    val md = digest.get()
-    val (spans, nTok) = tokenSpans(bytes)
-    var acc = 0.0
-    // unigrams, left to right
-    var t = 0
-    while (t < nTok) {
-      acc += w(bucketOf(md, salt, bytes,
-        spans(t * 2), spans(t * 2 + 1), -1, -1, w.length))
-      t += 1
-    }
-    // bigrams, left to right
-    t = 0
-    while (t < nTok - 1) {
-      acc += w(bucketOf(md, salt, bytes,
-        spans(t * 2), spans(t * 2 + 1),
-        spans(t * 2 + 2), spans(t * 2 + 3), w.length))
-      t += 1
-    }
-    acc
-  }
-
-  /** Fused stats variant: [margin, nTok] from ONE walk — the scoring
+  /** Margin kernel: [margin, nTok] from ONE walk — the scoring
     * projection needs both the margin and the feature count
     * (= 2·nTok − 1 for nTok ≥ 1), and computing the count via a
     * composed tokens+bigrams size() re-tokenizes the document and
-    * materializes every bigram string per row. The margin fold is the
-    * byte-for-byte same loop as [[compute]], so margins stay
-    * bit-identical to the spec-pinned kernel. */
+    * materializes every bigram string per row. */
   def computeStats(s: UTF8String, w: Array[Double],
       salt: Array[Byte]): org.apache.spark.sql.catalyst.util.GenericArrayData = {
     val bytes = s.getBytes
@@ -192,12 +138,11 @@ object HashedBagMargin {
   }
 }
 
-/** The bucket SEQUENCE twin of [[HashedBagMargin]] for the training
-  * side: emits the per-feature bucket ids (unigrams then bigrams, in
-  * order) as array<int>, so feature counting is explode + groupBy over
-  * ints — same one-pass byte walk, no feature-string materialization.
-  * Bit-compatible with [[graft.ops.Scoring.featureBucket]] by the same
-  * argument as the margin kernel. */
+/** The bucket SEQUENCE kernel for the training side (see
+  * [[HashedBag]]): emits the per-feature bucket ids (unigrams then
+  * bigrams, in order) as array<int>, so feature counting is explode +
+  * groupBy over ints — same one-pass byte walk, no feature-string
+  * materialization. */
 case class HashedBagBuckets(child: Expression, buckets: Int,
     salt: String) extends UnaryExpression {
 
@@ -213,14 +158,14 @@ case class HashedBagBuckets(child: Expression, buckets: Int,
     salt.getBytes("UTF-8")
 
   override def nullSafeEval(input: Any): Any =
-    HashedBagMargin.computeBuckets(
+    HashedBag.computeBuckets(
       input.asInstanceOf[UTF8String], buckets, saltBytes)
 
   override protected def doGenCode(ctx: CodegenContext,
       ev: ExprCode): ExprCode = {
     val s = ctx.addReferenceObj("hbbSalt", saltBytes, "byte[]")
     nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.HashedBagMargin.computeBuckets(
+      ${ev.value} = graft.functions.HashedBag.computeBuckets(
         $c, $buckets, $s);""")
   }
 
@@ -228,8 +173,9 @@ case class HashedBagBuckets(child: Expression, buckets: Int,
     copy(child = c)
 }
 
-/** array<double> [margin, token count] twin of [[HashedBagMargin]] —
-  * one walk serves both outputs of the scoring projection. */
+/** array<double> [margin, token count] of the hashed bag (see
+  * [[HashedBag]]) — one walk serves both outputs of the scoring
+  * projection. */
 case class HashedBagStats(child: Expression, weights: Seq[Double],
     salt: String) extends UnaryExpression {
 
@@ -245,7 +191,7 @@ case class HashedBagStats(child: Expression, weights: Seq[Double],
     salt.getBytes("UTF-8")
 
   override def nullSafeEval(input: Any): Any =
-    HashedBagMargin.computeStats(
+    HashedBag.computeStats(
       input.asInstanceOf[UTF8String], wArr, saltBytes)
 
   override protected def doGenCode(ctx: CodegenContext,
@@ -253,7 +199,7 @@ case class HashedBagStats(child: Expression, weights: Seq[Double],
     val w = ctx.addReferenceObj("hbsWeights", wArr, "double[]")
     val s = ctx.addReferenceObj("hbsSalt", saltBytes, "byte[]")
     nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.HashedBagMargin.computeStats($c, $w, $s);""")
+      ${ev.value} = graft.functions.HashedBag.computeStats($c, $w, $s);""")
   }
 
   override protected def withNewChildInternal(c: Expression): Expression =
@@ -261,14 +207,9 @@ case class HashedBagStats(child: Expression, weights: Seq[Double],
 }
 
 object ScoringFunctions {
-  /** Fused margin Σ w[bucket(f)] over unigrams+bigrams of `c` (see
-    * [[HashedBagMargin]]); `weights` is the dense per-bucket vector. */
-  def hashedBagMargin(c: Column, weights: Seq[Double],
-      salt: String): Column =
-    ColumnBridge.column(
-      HashedBagMargin(ColumnBridge.expression(c), weights, salt))
-
-  /** [margin, token count] in one walk (see [[HashedBagStats]]). */
+  /** [margin, token count] in one walk (see [[HashedBagStats]]):
+    * margin = Σ w[bucket(f)] over the unigrams+bigrams of `c`;
+    * `weights` is the dense per-bucket vector. */
   def hashedBagStats(c: Column, weights: Seq[Double],
       salt: String): Column =
     ColumnBridge.column(

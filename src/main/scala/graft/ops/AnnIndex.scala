@@ -18,8 +18,8 @@ import org.apache.spark.sql.functions._
   *
   * Training is byte-identical to the inline X292 path: the SAME
   * [[Similarity.fitIvf]] (deterministic 2048-row sample, 5 spherical
-  * Lloyd rounds) and the SAME per-subspace [[Lloyd.fitL2]] (k = 4,
-  * 2 rounds) — AnnIndexSpec pins build-once rankings ≡ train-inline
+  * Lloyd rounds) and the SAME [[Lloyd.fitL2]] (one lane per subspace,
+  * k = 4, 2 rounds) — AnnIndexSpec pins build-once rankings ≡ train-inline
   * rankings, and the q_ann_index_* oracles replay both trainings in
   * SQL (predicting the committed artifacts from first principles).
   *
@@ -82,10 +82,10 @@ object AnnIndex {
           col("embedding").cast("array<double>").as("v"),
           index.assignExpr(col("embedding")).as("list_id"))
         .localCheckpoint(true) // read by all 4 subspace fits
-      // r20: all 4 subspace fits advance in lock-step — one exploded
+      // all 4 subspace lanes advance in lock-step — one exploded
       // aggregate per round instead of a job per (subspace, round);
-      // codebooks bit-identical per subspace (LloydSpec)
-      val books = Lloyd.fitL2Multi(frame,
+      // codebooks bit-identical to 1-lane fits (LloydSpec)
+      val books = Lloyd.fitL2(frame,
         (0 until Subs).map(sub => slice(col("v"), 16 * sub + 1, 16)),
         "vec_id", k = 4, dim = 16, iters = 2)
       (index.centroids, books)

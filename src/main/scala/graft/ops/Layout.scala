@@ -121,6 +121,13 @@ object Layout {
     * and feeds the equivalence test against this one. */
   def hilbertKeyed(df: DataFrame, xb: Column, yb: Column, bits: Int,
       out: String): DataFrame = {
+    // the staging columns are overwritten and dropped: a caller column
+    // of the same name would silently vanish
+    val staging = Seq("__hx", "__hy", "__rx", "__ry", "__xf", "__yf")
+    require(!staging.contains(out) &&
+      !staging.exists(df.columns.contains),
+      s"hilbertKeyed: `$out` and the input columns must avoid " +
+        staging.mkString(", "))
     var cur = df.withColumn("__hx", xb).withColumn("__hy", yb)
       .withColumn(out, lit(0L))
     var s = 1L << (bits - 1)

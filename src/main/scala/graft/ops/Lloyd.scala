@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{ArrayFunctions, Num, VecAggregates}
@@ -38,31 +38,53 @@ object Lloyd {
     if (n == 0) v else v.map(_ / n)
   }
 
-  /** The shared Lloyd round body (VERDICT r13 #7 — `fit` and `fitL2`
-    * previously carried near-identical copies): `iters` rounds where
-    * each round is ONE map-side-combining groupBy(assign).agg(count,
-    * vecSum) pass collecting ≤ k rows, means are qround(6) per
-    * dimension, empty clusters keep their previous centroid, and
-    * `finish` post-processes each new centroid (L2-normalize for the
-    * spherical lane, identity for plain L2). */
-  private def rounds(frame: DataFrame, sumVec: Column, k: Int, dim: Int,
-      iters: Int, init: Array[Array[Double]],
-      assign: Array[Array[Double]] => Column,
-      finish: Array[Double] => Array[Double]): Array[Array[Double]] = {
-    var cents = init
+  /** The one Lloyd round loop, over one or more independent lanes
+    * (vector expressions, array<double>) fit in lock-step: ONE init
+    * collect of the k lowest-id rows serves every lane, then each of
+    * `iters` rounds is ONE exploded (lane, assign)-keyed
+    * map-side-combining count + vecSum aggregate collecting ≤ lanes·k
+    * rows. Per (lane, c) group the buffers see the same values in the
+    * same partition-local order whatever lanes ride along, means are
+    * qround(6) per dimension, empty clusters keep their previous
+    * centroid, and `finish` post-processes each centroid, the initial
+    * ones included (L2-normalize for the spherical fit, identity for
+    * plain L2). */
+  private def rounds(corpus: DataFrame, vecs: Seq[Column], idCol: String,
+      k: Int, dim: Int, iters: Int,
+      assign: (Column, Array[Array[Double]]) => Column,
+      finish: Array[Double] => Array[Double])
+      : IndexedSeq[Array[Array[Double]]] = {
+    val m = vecs.length
+    require(m > 0, "Lloyd: no vector lanes")
+    val frame = corpus.select(col(idCol).as("__id") +:
+      vecs.zipWithIndex.map { case (v, i) => v.as(s"__v$i") }: _*)
+    val initRows = frame.orderBy(col("__id")).limit(k).collect()
+    require(initRows.length == k, s"corpus has < $k vectors")
+    var cents = (0 until m).map { i =>
+      initRows.map(r => finish(r.getSeq[Double](i + 1).toArray))
+    }
     for (_ <- 0 until iters) {
-      val rows = frame
-        .groupBy(assign(cents).as("c"))
+      val exploded = frame.select(explode(array((0 until m).map { i =>
+        struct(lit(i).as("lane"),
+          assign(col(s"__v$i"), cents(i)).as("c"),
+          col(s"__v$i").as("v"))
+      }: _*)).as("e"))
+      val rows = exploded
+        .groupBy(col("e.lane").as("lane"), col("e.c").as("c"))
         .agg(count(lit(1)).as("n"),
-          VecAggregates.vecSum(sumVec, dim).as("s"))
-        .collect() // ≤ k rows: bounded driver metadata
-      val byC = rows.map(r =>
-        r.getInt(0) -> (r.getLong(1), r.getSeq[Double](2).toArray)).toMap
-      cents = Array.tabulate(k) { c =>
-        byC.get(c) match {
-          case Some((n, sum)) if n > 0 =>
-            finish(sum.map(x => Num.qround(x / n, 6)))
-          case _ => cents(c)
+          VecAggregates.vecSum(col("e.v"), dim).as("s"))
+        .collect() // ≤ m·k rows: bounded driver metadata
+      val byLane = rows.groupBy(_.getInt(0))
+      cents = (0 until m).map { i =>
+        val byC = byLane.getOrElse(i, Array.empty[Row])
+          .map(r => r.getInt(1) -> (r.getLong(2), r.getSeq[Double](3).toArray))
+          .toMap
+        Array.tabulate(k) { c =>
+          byC.get(c) match {
+            case Some((n, sum)) if n > 0 =>
+              finish(sum.map(x => Num.qround(x / n, 6)))
+            case _ => cents(i)(c)
+          }
         }
       }
     }
@@ -73,16 +95,9 @@ object Lloyd {
     * L2-normalized centroid matrix (k × dim). `vecCol` may be
     * array<float> — widened exactly to double on both engines. */
   def fit(corpus: DataFrame, vecCol: String, idCol: String,
-      k: Int, dim: Int, iters: Int): Array[Array[Double]] = {
-    val init = corpus.orderBy(col(idCol)).limit(k)
-      .select(col(vecCol).cast("array<double>")).collect()
-      .map(_.getSeq[Double](0).toArray)
-    require(init.length == k, s"corpus has < $k vectors")
-    rounds(corpus, col(vecCol).cast("array<double>"), k, dim, iters,
-      init.map(normalize),
-      cents => ArrayFunctions.nearestCentroid(col(vecCol), cents),
-      normalize)
-  }
+      k: Int, dim: Int, iters: Int): Array[Array[Double]] =
+    rounds(corpus, Seq(col(vecCol).cast("array<double>")), idCol, k, dim,
+      iters, ArrayFunctions.nearestCentroid, normalize).head
 
   /** ||v − c||² as a 0.0-init sequential zip-fold — identical
     * accumulation to the oracle's list_reduce(list_transform(...))
@@ -103,70 +118,14 @@ object Lloyd {
     (array_position(dists, array_min(dists)) - 1).cast("int")
   }
 
-  /** Plain-L2 (non-spherical) fixed-round Lloyd over an arbitrary
-    * vector EXPRESSION — the product-quantization subspace fit
-    * (X236): same one-aggregated-pass-per-round / qround(6)-mean
-    * shape as [[fit]], but argmin Euclidean distance and NO
-    * normalization (PQ codebooks are means, not directions). `vec`
-    * must already be array<double>. */
-  def fitL2(corpus: DataFrame, vec: Column, idCol: String,
-      k: Int, dim: Int, iters: Int): Array[Array[Double]] = {
-    val frame = corpus.select(col(idCol).as("__id"), vec.as("__v"))
-    val init = frame.orderBy(col("__id")).limit(k)
-      .select(col("__v")).collect()
-      .map(_.getSeq[Double](0).toArray)
-    require(init.length == k, s"corpus has < $k vectors")
-    rounds(frame, col("__v"), k, dim, iters, init,
-      cents => assignL2(col("__v"), cents), identity)
-  }
-
-  /** [[fitL2]] over SEVERAL vector expressions in lock-step (r20 —
-    * VERDICT r19 #4: the M=4 PQ subspace fits each paid their own
-    * init collect plus one aggregate job per round; 4 × (1 + 2) jobs
-    * per codebook family). The subspaces are independent, but every
-    * round of every subspace scans the same rows — so ONE init
-    * collect serves all M, and each round is ONE exploded (sub,
-    * assign)-keyed aggregate collecting ≤ M·k bounded rows: iters+1
-    * jobs instead of M·(iters+1). Per (sub, c) group the count/vecSum
-    * buffers are fed the same values in the same partition-local
-    * order as a solo [[fitL2]] run, means are q6'd identically, and
-    * empty clusters keep their previous centroid — LloydSpec pins
-    * per-subspace equality with [[fitL2]]. */
-  def fitL2Multi(corpus: DataFrame, vecs: Seq[Column], idCol: String,
-      k: Int, dim: Int, iters: Int): IndexedSeq[Array[Array[Double]]] = {
-    val m = vecs.length
-    require(m > 0, "fitL2Multi: no subspaces")
-    val frame = corpus.select(col(idCol).as("__id") +:
-      vecs.zipWithIndex.map { case (v, i) => v.as(s"__v$i") }: _*)
-    val initRows = frame.orderBy(col("__id")).limit(k).collect()
-    require(initRows.length == k, s"corpus has < $k vectors")
-    var cents: IndexedSeq[Array[Array[Double]]] = (0 until m).map { i =>
-      initRows.map(_.getSeq[Double](i + 1).toArray).toArray
-    }.toIndexedSeq
-    for (_ <- 0 until iters) {
-      val exploded = frame.select(explode(array((0 until m).map { i =>
-        struct(lit(i).as("sub"),
-          assignL2(col(s"__v$i"), cents(i)).as("c"),
-          col(s"__v$i").as("v"))
-      }: _*)).as("e"))
-      val rows = exploded
-        .groupBy(col("e.sub").as("sub"), col("e.c").as("c"))
-        .agg(count(lit(1)).as("n"),
-          VecAggregates.vecSum(col("e.v"), dim).as("s"))
-        .collect() // ≤ m·k rows: bounded driver metadata
-      val bySub = rows.groupBy(_.getInt(0))
-      cents = (0 until m).map { i =>
-        val byC = bySub.getOrElse(i, Array.empty[org.apache.spark.sql.Row])
-          .map(r => r.getInt(1) -> (r.getLong(2), r.getSeq[Double](3).toArray))
-          .toMap
-        Array.tabulate(k) { c =>
-          byC.get(c) match {
-            case Some((n, sum)) if n > 0 => sum.map(x => Num.qround(x / n, 6))
-            case _ => cents(i)(c)
-          }
-        }
-      }.toIndexedSeq
-    }
-    cents
-  }
+  /** Plain-L2 (non-spherical) fixed-round Lloyd over one or more
+    * vector EXPRESSIONS fit in lock-step — the product-quantization
+    * subspace fit (X236, one lane per subspace): same
+    * one-aggregated-pass-per-round / qround(6)-mean shape as [[fit]],
+    * but argmin Euclidean distance and NO normalization (PQ codebooks
+    * are means, not directions). Each `vecs` entry must already be
+    * array<double>; returns one k × dim codebook per entry. */
+  def fitL2(corpus: DataFrame, vecs: Seq[Column], idCol: String,
+      k: Int, dim: Int, iters: Int): IndexedSeq[Array[Array[Double]]] =
+    rounds(corpus, vecs, idCol, k, dim, iters, assignL2, identity)
 }

@@ -114,82 +114,27 @@ object LogReg {
     lit(1.0) / (lit(1.0) + exp(-z))
   }
 
-  /** `iters` rounds of η-step batch GD on log-loss from w⁰ = 0.
-    * `feats` must carry `xsCol: array<double>` of length `dims`
-    * (bias folded in as a constant-1 feature by the caller) and
-    * `yCol` ∈ {0.0, 1.0}. One bounded count action + one
-    * dims-double aggregate action per round. */
-  def fit(feats: DataFrame, xsCol: String, yCol: String, dims: Int,
-      iters: Int, lr: Double): Array[Double] = {
-    val n = feats.count()
-    require(n > 0, "LogReg.fit: empty input")
-    val nD = n.toDouble
-    var w = new Array[Double](dims)
-    var t = 0
-    while (t < iters) {
-      val resid = sigmoid(col(xsCol), w) - col(yCol)
-      val g = feats
-        .agg(graft.functions.VecAggregates
-          .vecAxpy(col(xsCol), resid, dims))
-        .head().getSeq[Double](0)
-      w = Array.tabulate(dims) { j =>
-        Num.qround(w(j) - lr * Num.qround(g(j) / nD, 6), 6)
-      }
-      t += 1
-    }
-    w
-  }
-
-  /** [[fit]] with the learning curve: each round's aggregate carries
-    * ONE extra qround(6) log-loss lane alongside the gradient vector
-    * (same pass, same per-row sigmoid — zero additional scans), so
-    * the loss of the weights ENTERING round t comes free.
-    * p clamps to (1e-12, 1−1e-12) before the ln lanes, identically
-    * to the oracle. Returns (finalWeights, losses(1..iters)). */
-  def fitCurve(feats: DataFrame, xsCol: String, yCol: String,
-      dims: Int, iters: Int, lr: Double)
-      : (Array[Double], Seq[Double]) = {
-    val n = feats.count()
-    require(n > 0, "LogReg.fitCurve: empty input")
-    val nD = n.toDouble
-    var w = new Array[Double](dims)
-    val losses = Seq.newBuilder[Double]
-    var t = 0
-    while (t < iters) {
-      val p = sigmoid(col(xsCol), w)
-      val pc = least(greatest(p, lit(1e-12)), lit(1.0) - lit(1e-12))
-      val resid = p - col(yCol)
-      val row = feats.agg(
-        graft.functions.VecAggregates.vecAxpy(col(xsCol), resid, dims),
-        Num.qround(-avg(col(yCol) * log(pc) +
-          (lit(1.0) - col(yCol)) * log(lit(1.0) - pc)), 6))
-        .head()
-      val g = row.getSeq[Double](0)
-      losses += row.getDouble(1)
-      w = Array.tabulate(dims) { j =>
-        Num.qround(w(j) - lr * Num.qround(g(j) / nD, 6), 6)
-      }
-      t += 1
-    }
-    (w, losses.result())
-  }
-
-  /** [[fitCurve]] over SEVERAL learning rates in lock-step (r20 —
-    * VERDICT r19 #3: the chains are independent, but each round of
-    * each chain was its own aggregate job, so 3 chains × 16 rounds
-    * = 48 sequential passes over the cached features). Round t of
-    * every chain reads the same rows, so ONE multi-aggregate pass
-    * computes all chains' gradient vectors and loss lanes together —
-    * iters passes instead of iters·|lrs|. Each chain's aggregate
-    * lanes are its own buffers fed the same per-row values in the
-    * same order as a solo run, and the driver-side update arithmetic
-    * is untouched, so weights and losses are bit-identical to
-    * [[fitCurve]] per rate (LogRegSpec pins the equality). */
-  def fitCurves(feats: DataFrame, xsCol: String, yCol: String,
+  /** `iters` rounds of η-step batch GD on log-loss from w⁰ = 0, one
+    * chain per learning rate in `lrs`, run in lock-step. `feats` must
+    * carry `xsCol: array<double>` of length `dims` (bias folded in as
+    * a constant-1 feature by the caller) and `yCol` ∈ {0.0, 1.0}.
+    *
+    * Round t of every chain reads the same rows, so ONE aggregate
+    * pass per round carries each chain's dims-double gradient lane
+    * plus a qround(6) log-loss lane (same per-row sigmoid — the loss
+    * of the weights ENTERING round t comes free): one bounded count
+    * action + `iters` aggregate actions in all, whatever |lrs|. Each
+    * chain's lanes are its own buffers fed the same per-row values in
+    * the same order as a 1-rate run, so a chain's weights and losses
+    * do not depend on which other rates ride along (LogRegSpec pins
+    * it). p clamps to (1e-12, 1−1e-12) before the ln lanes,
+    * identically to the oracle. Returns (finalWeights,
+    * losses(1..iters)) per rate. */
+  def fit(feats: DataFrame, xsCol: String, yCol: String,
       dims: Int, iters: Int, lrs: Seq[Double])
       : Seq[(Array[Double], Seq[Double])] = {
     val n = feats.count()
-    require(n > 0, "LogReg.fitCurves: empty input")
+    require(n > 0, "LogReg.fit: empty input")
     val nD = n.toDouble
     val m = lrs.length
     val ws = Array.fill(m)(new Array[Double](dims))

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.functions.Num
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** PageRank power iteration over an edge list — the domain-graph
@@ -42,8 +42,8 @@ object PageRank {
     *   from the uniform start 1/N. */
   def run(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int, damping: Double): DataFrame =
-    iterate(edges, srcCol, dstCol, iters, damping,
-      (nodes, n) => nodes.select(col("v"), lit(1.0 / n).as("pr")))
+    iterate(edges, srcCol, dstCol, iters, damping, uniform(damping,
+      (nodes, n) => nodes.select(col("v"), lit(1.0 / n).as("pr"))))
 
   /** Warm-started power iteration (the incremental/delta-PageRank
     * entry, X176): ranks start from `init` (v, pr) — typically the
@@ -58,54 +58,12 @@ object PageRank {
     * start is a preconditioner, not a correctness input). */
   def runFrom(edges: DataFrame, srcCol: String, dstCol: String,
       init: DataFrame, iters: Int, damping: Double): DataFrame =
-    iterate(edges, srcCol, dstCol, iters, damping,
+    iterate(edges, srcCol, dstCol, iters, damping, uniform(damping,
       (nodes, n) => nodes
         .join(init.select(col("v"), col("pr").as("__init")),
           Seq("v"), "left")
         .select(col("v"),
-          coalesce(col("__init"), lit(1.0 / n)).as("pr")))
-
-  private def iterate(edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int, damping: Double,
-      start: (DataFrame, Double) => DataFrame): DataFrame = {
-    require(iters >= 1 && damping > 0 && damping < 1)
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    // nodes and degreed edges are consumed every round — materialize
-    // once; both are fixed-width rows, never document text
-    val nodes = e0.select(col("src").as("v"))
-      .union(e0.select(col("dst").as("v"))).distinct()
-      .localCheckpoint(true)
-    val deg = e0.groupBy(col("src").as("v"))
-      .agg(count(lit(1)).as("deg"))
-    val e = e0.join(deg.select(col("v").as("src"), col("deg")), "src")
-      .localCheckpoint(true)
-    // node count: ONE bounded 1-row driver action at plan build; the
-    // float discipline below divides by this exact double, matching
-    // the oracle's `… / nn.n` on the same IEEE value
-    val n = nodes.count().toDouble
-    var r = start(nodes, n).localCheckpoint(true)
-    for (_ <- 1 to iters) {
-      // dangling mass: 1-row aggregate off the checkpointed rank state,
-      // qround(6)'d so both engines damp with the identical double;
-      // broadcast to every node on a constant key (hash join, 1 row)
-      val dm = r.join(deg, Seq("v"), "left_anti")
-        .agg(Num.qround(coalesce(sum("pr"), lit(0.0)), 6).as("dm"))
-        .withColumn("__k", lit(0))
-      val contrib = e.join(r, e("src") === r("v"))
-        .select(e("dst").as("v"),
-          (col("pr") / col("deg").cast("double")).as("c"))
-        .groupBy("v").agg(sum("c").as("c"))
-      r = nodes.withColumn("__k", lit(0))
-        .join(broadcast(dm), "__k")
-        .join(contrib, Seq("v"), "left")
-        .select(col("v"), Num.qround(
-          lit(1.0 - damping) / lit(n) + lit(damping) *
-            (coalesce(col("c"), lit(0.0)) + col("dm") / lit(n)),
-          6).as("pr"))
-        .localCheckpoint(true)
-    }
-    r
-  }
+          coalesce(col("__init"), lit(1.0 / n)).as("pr"))))
 
   /** Personalized (seeded) PageRank — teleport mass restricted to a
     * seed set (Haveliwala 2002's topic-sensitive PageRank; the
@@ -113,7 +71,7 @@ object PageRank {
     * rank every crawled domain by its link proximity to a curated
     * whitelist instead of by global authority).
     *
-    * Same round shape and float discipline as [[run]]; the only
+    * Same round loop and float discipline as [[run]]; the only
     * change is the teleport vector: p(v) = 1/|S| for seeds, 0
     * otherwise, used for BOTH the restart term and the dangling-mass
     * redistribution, and as the start state r0 = p. Non-seed sink
@@ -127,9 +85,56 @@ object PageRank {
     *   node ids (rows not present in the graph are ignored).
     * @return (v, pv, pr): node, its teleport weight, its rank. */
   def runSeeded(edges: DataFrame, srcCol: String, dstCol: String,
-      seeds: DataFrame, iters: Int, damping: Double): DataFrame = {
+      seeds: DataFrame, iters: Int, damping: Double): DataFrame =
+    iterate(edges, srcCol, dstCol, iters, damping, { nodes =>
+      val seedSet = seeds.toDF("v").distinct()
+      // graph-member seeds only; |S| is one bounded driver action over
+      // the curated seed list (the same device as run's node count)
+      val s = nodes.join(broadcast(seedSet), Seq("v"), "left_semi")
+        .localCheckpoint(true)
+      val ns = s.count().toDouble
+      require(ns > 0, "runSeeded: no seed appears in the graph")
+      // teleport vector: exact doubles (1/|S| or 0) — no qround needed
+      val p = nodes.join(broadcast(s.withColumn("__is", lit(1))),
+          Seq("v"), "left")
+        .select(col("v"),
+          when(col("__is").isNotNull, lit(1.0 / ns))
+            .otherwise(lit(0.0)).as("pv"))
+        .localCheckpoint(true)
+      Teleport(p, p.select(col("v"), col("pv").as("pr")),
+        lit(1.0 - damping) * col("pv"), col("dm") * col("pv"))
+    })
+
+  /** What a variant feeds the shared round loop: the per-node `base`
+    * frame every round re-emits (its columns pass through next to
+    * `pr`), the start ranks `r0` (v, pr), and the two per-node terms
+    * over `base`'s columns — the `restart` mass and the share of the
+    * dangling mass `dm` a node receives. */
+  private case class Teleport(base: DataFrame, r0: DataFrame,
+      restart: Column, dangling: Column)
+
+  /** Global PageRank's teleport: every node, restart (1−d)/N and
+    * dangling share dm/N; ranks start from `start(nodes, N)`. */
+  private def uniform(damping: Double,
+      start: (DataFrame, Double) => DataFrame)(nodes: DataFrame): Teleport = {
+    // node count: ONE bounded 1-row driver action at plan build; the
+    // float discipline divides by this exact double, matching the
+    // oracle's `… / nn.n` on the same IEEE value
+    val n = nodes.count().toDouble
+    Teleport(nodes, start(nodes, n),
+      lit(1.0 - damping) / lit(n), col("dm") / lit(n))
+  }
+
+  /** The one power-iteration loop: pr ← restart + d·(Σ in-contrib +
+    * dangling), qround(6) per round, over the `teleport` built from
+    * the graph's node list. */
+  private def iterate(edges: DataFrame, srcCol: String, dstCol: String,
+      iters: Int, damping: Double,
+      teleport: DataFrame => Teleport): DataFrame = {
     require(iters >= 1 && damping > 0 && damping < 1)
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    // nodes and degreed edges are consumed every round — materialize
+    // once; both are fixed-width rows, never document text
     val nodes = e0.select(col("src").as("v"))
       .union(e0.select(col("dst").as("v"))).distinct()
       .localCheckpoint(true)
@@ -137,24 +142,12 @@ object PageRank {
       .agg(count(lit(1)).as("deg"))
     val e = e0.join(deg.select(col("v").as("src"), col("deg")), "src")
       .localCheckpoint(true)
-    val seedSet = seeds.toDF("v").distinct()
-    // graph-member seeds only; |S| is one bounded driver action over
-    // the curated seed list (the same device as run's node count)
-    val s = nodes.join(broadcast(seedSet), Seq("v"), "left_semi")
-      .localCheckpoint(true)
-    val ns = s.count().toDouble
-    require(ns > 0, "runSeeded: no seed appears in the graph")
-    // teleport vector: exact doubles (1/|S| or 0) — no qround needed
-    val p = nodes.join(broadcast(s.withColumn("__is", lit(1))),
-        Seq("v"), "left")
-      .select(col("v"),
-        when(col("__is").isNotNull, lit(1.0 / ns))
-          .otherwise(lit(0.0)).as("pv"))
-      .localCheckpoint(true)
-    var r = p.select(col("v"), col("pv").as("pr")).localCheckpoint(true)
+    val t = teleport(nodes)
+    var r = t.r0.localCheckpoint(true)
     for (_ <- 1 to iters) {
-      // same in-plan dangling-mass broadcast as [[run]] — one job per
-      // superstep, no driver round-trip
+      // dangling mass: 1-row aggregate off the checkpointed rank state,
+      // qround(6)'d so both engines damp with the identical double;
+      // broadcast to every node on a constant key (hash join, 1 row)
       val dm = r.join(deg, Seq("v"), "left_anti")
         .agg(Num.qround(coalesce(sum("pr"), lit(0.0)), 6).as("dm"))
         .withColumn("__k", lit(0))
@@ -162,13 +155,13 @@ object PageRank {
         .select(e("dst").as("v"),
           (col("pr") / col("deg").cast("double")).as("c"))
         .groupBy("v").agg(sum("c").as("c"))
-      r = p.withColumn("__k", lit(0))
+      r = t.base.withColumn("__k", lit(0))
         .join(broadcast(dm), "__k")
         .join(contrib, Seq("v"), "left")
-        .select(col("v"), col("pv"), Num.qround(
-          lit(1.0 - damping) * col("pv") + lit(damping) *
-            (coalesce(col("c"), lit(0.0)) + col("dm") * col("pv")),
-          6).as("pr"))
+        .select(t.base.columns.map(col) :+ Num.qround(
+          t.restart + lit(damping) *
+            (coalesce(col("c"), lit(0.0)) + t.dangling),
+          6).as("pr"): _*)
         .localCheckpoint(true)
     }
     r

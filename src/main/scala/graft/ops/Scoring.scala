@@ -336,24 +336,11 @@ object Scoring {
     }.toMap
   }
 
-  /** Shuffle-free margin: because Σ_b w[b]·x[b] = Σ_f w[bucket(f)],
-    * the margin folds directly over the document's feature sequence —
-    * a pure per-row expression (model inlined as a literal map), no
-    * explode, no groupBy. This is the SCORING path; [[featureCounts]]
-    * + [[marginsUnder]] remain the training shape (counts are what the
-    * fit needs) and the cross-check (ScoringSpec pins inline ≡
-    * counted to float-fold tolerance; both sides qround before use).
-    */
-  def inlineMargin(textCol: Column, buckets: Int,
-      w: Map[Long, Double]): Column =
-    graft.functions.ScoringFunctions.hashedBagMargin(textCol,
-      Array.tabulate(buckets)(b => w.getOrElse(b.toLong, 0.0)).toSeq, "qc:")
-
-  /** The composed Column formulation of [[inlineMargin]] — two string
-    * arrays + one md5 Column per feature per row. Kept as the
-    * cross-check the fused kernel is pinned against (ScoringSpec
-    * asserts bit-identical margins); the kernel is ~10⁸ fewer
-    * allocations per 1M-doc scan. Note the DENSE array literal, not a
+  /** The composed Column formulation of [[inlineStats]]'s margin
+    * (element 1) — two string arrays + one md5 Column per feature per
+    * row. Kept as the cross-check the fused kernel is pinned against
+    * (ScoringSpec asserts bit-identical margins); the kernel is ~10⁸
+    * fewer allocations per 1M-doc scan. Note the DENSE array literal, not a
     * map literal: element_at on a map literal scans all entries per
     * lookup (O(buckets) per feature — measured 3× slower end-to-end at
     * 1M docs); on an array it is an O(1) index. */
@@ -367,18 +354,24 @@ object Scoring {
       lit(0.0), (a, x) => a + x)
   }
 
-  /** Feature count for [[inlineMargin]] outputs (size of the
-    * unigram+bigram sequence). */
+  /** Feature count of the unigram+bigram sequence [[inlineStats]]
+    * folds. */
   def inlineFeatureCount(textCol: Column): Column =
     size(concat(Text.tokens(textCol), Text.wordNgramsAll(textCol, 2)))
       .cast("long")
 
-  /** [raw margin, token count] as one fused walk — the scoring scan
-    * needs both, and the composed [[inlineFeatureCount]] would
-    * re-tokenize the document and materialize every bigram string per
-    * row just to take a length (the feature count is 2·nTok − 1 for
-    * nTok ≥ 1). Margins are bit-identical to [[inlineMargin]] (same
-    * fold loop; ScoringSpec pins it). */
+  /** Shuffle-free [raw margin, token count] as one fused walk: because
+    * Σ_b w[b]·x[b] = Σ_f w[bucket(f)], the margin folds directly over
+    * the document's feature sequence — a pure per-row expression
+    * (model inlined as a dense literal), no explode, no groupBy. This
+    * is the SCORING path; [[featureCounts]] + [[marginsUnder]] remain
+    * the training shape (counts are what the fit needs) and the
+    * cross-check (ScoringSpec pins inline ≡ counted to float-fold
+    * tolerance; both sides qround before use). The scoring scan needs
+    * the token count too, and the composed [[inlineFeatureCount]]
+    * would re-tokenize the document and materialize every bigram
+    * string per row just to take a length (the feature count is
+    * 2·nTok − 1 for nTok ≥ 1). */
   def inlineStats(textCol: Column, buckets: Int,
       w: Map[Long, Double]): Column =
     graft.functions.ScoringFunctions.hashedBagStats(textCol,
@@ -391,7 +384,7 @@ object Scoring {
     val wc: Column =
       if (w.isEmpty) lit(0.0)
       else {
-        // dense array literal — O(1) per lookup (see inlineMargin)
+        // dense array literal — O(1) per lookup (see inlineMarginComposed)
         val maxB = w.keys.max.toInt + 1
         val dense = lit(Array.tabulate(maxB)(b => w.getOrElse(b.toLong, 0.0)))
         coalesce(

@@ -142,11 +142,7 @@ object Similarity {
       .select(col(vecCol)).collect()
       .map(r => vecDoubles(r, 0))
     require(sample.length >= nlist, s"sample ${sample.length} < nlist $nlist")
-    def normalize(v: Array[Double]): Array[Double] = {
-      val n = math.sqrt(v.map(x => x * x).sum)
-      if (n == 0) v else v.map(_ / n)
-    }
-    var cents = sample.take(nlist).map(normalize)
+    var cents = sample.take(nlist).map(Lloyd.normalize)
     for (_ <- 0 until iters) {
       val assigned = sample.groupBy { v =>
         cents.indices.maxBy(c => cents(c).zip(v)
@@ -157,7 +153,7 @@ object Similarity {
           case Some(vs) =>
             val dim = vs.head.length
             val mean = Array.tabulate(dim)(i => vs.map(_(i)).sum / vs.length)
-            normalize(mean)
+            Lloyd.normalize(mean)
           case None => cents(c) // empty list keeps its centroid
         }
       }.toArray

@@ -223,7 +223,7 @@ cents_${i + 1} AS (
           i -> ($a[i] - $b[i]) * ($a[i] - $b[i])), (x, y) -> x + y)"""
 
   /** One plain-L2 Lloyd round over subspace `s` in SQL, mirroring
-    * [[Lloyd.fitL2]]: first-min assignment (dist ASC, c ASC),
+    * one lane of [[Lloyd.fitL2]]: first-min assignment (dist ASC, c ASC),
     * qround(6) per-dim means, NO normalization, empty codes keep
     * their centroid. */
   private def pqIterSql(s: Int, i: Int): String = pqIterSqlX(s, i, "")
@@ -648,12 +648,12 @@ corpusp AS MATERIALIZED (
       .localCheckpoint(true)
 
   /** Fit the M=4 x 16-dim PQ codebooks (k=4, 2 pinned L2 Lloyd
-    * rounds each) — [[Lloyd.fitL2]] per subspace slice. */
+    * rounds each) — [[Lloyd.fitL2]] with one lane per subspace slice:
+    * one exploded aggregate per round across all 4 lanes, codebooks
+    * bit-identical to 1-lane fits (LloydSpec). */
   private def pqFit(frame: org.apache.spark.sql.DataFrame)
       : IndexedSeq[Array[Array[Double]]] =
-    // r20: one exploded aggregate per round across all 4 subspaces
-    // (Lloyd.fitL2Multi) — codebooks bit-identical per subspace
-    Lloyd.fitL2Multi(frame,
+    Lloyd.fitL2(frame,
       pqSubs.map(sub => slice(col("v"), 16 * sub + 1, 16)),
       "vec_id", k = 4, dim = 16, iters = 2)
 
@@ -820,8 +820,8 @@ corpusp AS MATERIALIZED (
         col("embedding").cast("array<double>").as("v"),
         index.assignExpr(col("embedding")).as("list_id"))
       .localCheckpoint(true)
-    // same codebooks as the raw-PQ lane: fitL2 reads only (vec_id, v)
-    // and this frame's v is the identical raw cast
+    // same codebooks as the raw-PQ lane: Lloyd.fitL2 reads only
+    // (vec_id, v) and this frame's v is the identical raw cast
     val cents = pqFitRawCached(s, d)
     val codesw = pqCodesW(frame, cents, passthrough = Seq("list_id"))
     val qRows = pqQueryRows(frame)

@@ -3503,7 +3503,8 @@ object DiagnosticsQueries {
         .localCheckpoint(true)
       val feats = graft.ops.LogReg.standardized(raw, 6)
         .localCheckpoint(true) // 8 GD rounds + scoring read it
-      val w = graft.ops.LogReg.fit(feats, "xs", "y", 7, PsIters, 1.0)
+      val w = graft.ops.LogReg.fit(feats, "xs", "y", 7, PsIters, Seq(1.0))
+        .head._1
       val es = feats.select(col("doc_id"), col("y"), col("y_out"),
           Num.qround(graft.ops.LogReg.sigmoid(col("xs"), w), 6).as("e"))
         .localCheckpoint(true) // fences action + stratum aggregate

@@ -3678,7 +3678,7 @@ tt$x AS (SELECT CAST(SUM(freq) AS BIGINT) AS t FROM words$x)"""
         .hashedStdFeatures(Tables.documents(s, d), LrK)
         .localCheckpoint(true) // 18 passes (moments + 16 rounds + score)
       val w = graft.ops.LogReg.fit(feats, "xs", "y", LrDims,
-        LrIters, LrRate)
+        LrIters, Seq(LrRate)).head._1
       graft.ops.LogReg.score(feats, "doc_id", "xs", "y", w)
         .orderBy("doc_id")
     })
@@ -3854,7 +3854,7 @@ tt$x AS (SELECT CAST(SUM(freq) AS BIGINT) AS t FROM words$x)"""
     * emitted EVERY round). The loss lane rides the SAME
     * map-side-combining aggregate as the gradient (one extra qround(6)
     * double per round — zero additional scans; see
-    * [[graft.ops.LogReg.fitCurve]]), and the three chains share one
+    * [[graft.ops.LogReg.fit]]), and the three chains share one
     * standardized-feature pass. The readout is the elbow table: η=4
     * oscillates, η=1 converges fastest, η=0.25 undertrains — the
     * shape a tuner acts on. */
@@ -3881,10 +3881,10 @@ tt$x AS (SELECT CAST(SUM(freq) AS BIGINT) AS t FROM words$x)"""
       val feats = graft.ops.LogReg
         .hashedStdFeatures(Tables.documents(s, d), LrK)
         .localCheckpoint(true) // 16 fused multi-chain rounds read it
-      // r20: the 3 chains advance in lock-step — ONE multi-aggregate
-      // pass per round instead of a pass per (chain, round); weights
-      // and losses bit-identical per chain (LogRegSpec)
-      val fitted = graft.ops.LogReg.fitCurves(
+      // the 3 chains advance in lock-step — ONE multi-aggregate pass
+      // per round instead of a pass per (chain, round); weights and
+      // losses bit-identical per chain (LogRegSpec)
+      val fitted = graft.ops.LogReg.fit(
         feats, "xs", "y", LrDims, LrIters, CurveRates.map(_._1))
       val rows = CurveRates.zip(fitted).flatMap {
         case ((lr, _), (_, losses)) =>

@@ -164,8 +164,8 @@ object Stress {
       val train = docs.filter(col("id") % 10 <= 1)
       val ft = graft.ops.Scoring.featureCounts(train, "id", col("text"), 1024)
       val m = graft.ops.Scoring.trainNaiveBayes(ft, labels, "id")
-      docs.select(graft.ops.Scoring
-          .inlineMargin(col("text"), 1024, m.w).as("margin"))
+      docs.select(element_at(graft.ops.Scoring
+          .inlineStats(col("text"), 1024, m.w), 1).as("margin"))
         .filter(col("margin") > 0).count()
     }
 

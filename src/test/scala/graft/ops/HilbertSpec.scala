@@ -42,6 +42,18 @@ class HilbertSpec extends SparkSuite {
     assert(viaStaged === viaColumn)
   }
 
+  test("hilbertKeyed rejects input columns that collide with its " +
+      "staging columns instead of silently dropping them") {
+    val grid = Seq((1L, 2L, 7L)).toDF("x", "y", "__hx")
+    assertThrows[IllegalArgumentException] {
+      Layout.hilbertKeyed(grid, col("x"), col("y"), 4, "d")
+    }
+    assertThrows[IllegalArgumentException] {
+      Layout.hilbertKeyed(grid.drop("__hx"), col("x"), col("y"), 4,
+        "__ry")
+    }
+  }
+
   test("q_hilbert_stats: buckets partition the events table; extents " +
       "bound their rows") {
     val rows = graft.SparkEntry.queries("q_hilbert_stats")(spark, Sf0001)

@@ -21,7 +21,8 @@ class LogRegSpec extends SparkSuite {
       (4L, 0.0, Seq(1.0, -2.0, 1.0)),
       (5L, 0.0, Seq(1.0, -0.5, 0.75)))
     val df = rows.toDF("doc_id", "y", "xs").repartition(3)
-    val got = LogReg.fit(df, "xs", "y", dims = 3, iters = 6, lr = 1.0)
+    val got = LogReg.fit(df, "xs", "y", dims = 3, iters = 6,
+      lrs = Seq(1.0)).head._1
     // driver replay with the identical qround(6) lanes
     def q6(x: Double) = math.floor(x * 1e6 + 0.5) / 1e6
     var w = Array(0.0, 0.0, 0.0)
@@ -51,11 +52,13 @@ class LogRegSpec extends SparkSuite {
         y * math.log(pc) + (1 - y) * math.log(1 - pc)
       }.sum / n
     val losses = (0 to 16 by 4).map { t =>
-      loss(LogReg.fit(feats, "xs", "y", dims = 129, iters = t, lr = 1.0))
+      loss(LogReg.fit(feats, "xs", "y", dims = 129, iters = t,
+        lrs = Seq(1.0)).head._1)
     }
     assert(losses.sliding(2).forall { case Seq(a, b) => b < a },
       s"loss not descending: $losses")
-    val w = LogReg.fit(feats, "xs", "y", dims = 129, iters = 16, lr = 1.0)
+    val w = LogReg.fit(feats, "xs", "y", dims = 129, iters = 16,
+      lrs = Seq(1.0)).head._1
     val scored = LogReg.score(feats, "doc_id", "xs", "y", w)
     val agg = scored.agg(
       avg(when(col("pred") === col("label"), 1.0).otherwise(0.0)),
@@ -67,32 +70,30 @@ class LogRegSpec extends SparkSuite {
       s"accuracy $acc does not beat majority $majority")
   }
 
-  test("fitCurve: loss lane rides the gradient pass — round-1 loss " +
+  test("fit: loss lane rides the gradient pass — round-1 loss " +
       "is ln 2 and the curve descends at a conservative rate") {
     val docs = graft.Tables.documents(spark, Sf0001)
     val feats = LogReg.hashedStdFeatures(docs, k = 128)
       .localCheckpoint(true)
-    val (w, losses) = LogReg.fitCurve(feats, "xs", "y", 129,
-      iters = 6, lr = 0.25)
+    val Seq((_, losses)) = LogReg.fit(feats, "xs", "y", 129,
+      iters = 6, lrs = Seq(0.25))
     // w0 = 0 -> p = 0.5 everywhere -> loss = ln 2 (qround 6)
     assert(losses.head === math.floor(math.log(2.0) * 1e6 + 0.5) / 1e6)
     assert(losses.sliding(2).forall { case Seq(a, b) => b < a },
       s"curve not descending at lr=0.25: $losses")
-    // the final weights equal a plain fit of the same rounds
-    assert(w.toSeq === LogReg.fit(feats, "xs", "y", 129, 6, 0.25).toSeq)
   }
 
-  test("fitCurves: fused multi-rate rounds ≡ solo fitCurve per rate " +
+  test("fit: a 3-rate run ≡ each rate as a 1-rate run " +
       "(weights and losses exactly equal)") {
     val docs = graft.Tables.documents(spark, Sf0001)
     val feats = LogReg.hashedStdFeatures(docs, k = 128)
       .localCheckpoint(true)
     val lrs = Seq(0.25, 1.0, 4.0)
-    val fused = LogReg.fitCurves(feats, "xs", "y", 129,
+    val fused = LogReg.fit(feats, "xs", "y", 129,
       iters = 4, lrs = lrs)
     lrs.zip(fused).foreach { case (lr, (wF, lossF)) =>
-      val (wS, lossS) = LogReg.fitCurve(feats, "xs", "y", 129,
-        iters = 4, lr = lr)
+      val Seq((wS, lossS)) = LogReg.fit(feats, "xs", "y", 129,
+        iters = 4, lrs = Seq(lr))
       assert(wF.toSeq === wS.toSeq, s"weights differ at lr=$lr")
       assert(lossF === lossS, s"losses differ at lr=$lr")
     }

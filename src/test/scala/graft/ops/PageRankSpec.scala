@@ -83,4 +83,45 @@ class PageRankSpec extends SparkSuite {
       seeded(Seq((1L, 2L)), Seq(99L)) // no seed in graph
     }
   }
+
+  // ------------------------------------------- exact-value pins
+
+  // two small graphs: g1 has a sink (4), g2 a hub (5) with an extra
+  // leaf edge; the literals are the qround(6) ranks of the pinned
+  // rounds, so any change to the round arithmetic shows here
+  private val g1 = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L), (3L, 4L))
+  private val g2 = Seq((1L, 5L), (2L, 5L), (3L, 5L), (4L, 5L), (5L, 1L),
+    (2L, 3L))
+
+  private def pin(df: org.apache.spark.sql.DataFrame, prCol: Int) =
+    df.collect().map(r => r.getLong(0) -> r.getDouble(prCol)).toMap
+
+  test("run: exact ranks on a graph with a sink and on a hub graph") {
+    assert(pin(PageRank.run(g1.toDF("src", "dst"), "src", "dst", 5,
+      0.85), 1) === Map(1L -> 0.237025, 2L -> 0.184253, 3L -> 0.341697,
+      4L -> 0.237025))
+    assert(pin(PageRank.run(g2.toDF("src", "dst"), "src", "dst", 5,
+      0.85), 1) === Map(1L -> 0.346921, 2L -> 0.03, 3L -> 0.04275,
+      4L -> 0.03, 5L -> 0.55033))
+  }
+
+  test("runFrom: exact ranks from a warm start with a vanished node") {
+    val init = Seq((1L, 0.5), (2L, 0.25), (9L, 0.25)).toDF("v", "pr")
+    assert(pin(PageRank.runFrom(g1.toDF("src", "dst"), "src", "dst",
+      init, 3, 0.85), 1) === Map(1L -> 0.279709, 2L -> 0.227779,
+      3L -> 0.366336, 4L -> 0.279709))
+    assert(pin(PageRank.runFrom(g2.toDF("src", "dst"), "src", "dst",
+      init, 3, 0.85), 1) === Map(1L -> 0.330954, 2L -> 0.03,
+      3L -> 0.04275, 4L -> 0.03, 5L -> 0.781241))
+  }
+
+  test("runSeeded: exact ranks with seeds {1, 3}") {
+    val seeds = Seq(1L, 3L).toDF("v")
+    assert(pin(PageRank.runSeeded(g1.toDF("src", "dst"), "src", "dst",
+      seeds, 5, 0.85), 2) === Map(1L -> 0.30957, 2L -> 0.131567,
+      3L -> 0.388049, 4L -> 0.170813))
+    assert(pin(PageRank.runSeeded(g2.toDF("src", "dst"), "src", "dst",
+      seeds, 5, 0.85), 2) === Map(1L -> 0.261676, 2L -> 0.0,
+      3L -> 0.075, 4L -> 0.0, 5L -> 0.663324))
+  }
 }

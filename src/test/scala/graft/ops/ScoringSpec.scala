@@ -71,7 +71,7 @@ class ScoringSpec extends SparkSuite {
         .withColumn("id", monotonically_increasing_id())
     val w = (0L until 64L).map(b => b -> (b * 0.25 - 8.0)).toMap
     val kernel = edge.select(col("id"),
-        Scoring.inlineMargin(col("text"), 64, w).as("m"))
+        element_at(Scoring.inlineStats(col("text"), 64, w), 1).as("m"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val composed = edge.select(col("id"),
         Scoring.inlineMarginComposed(col("text"), 64, w).as("m"))
@@ -151,7 +151,7 @@ class ScoringSpec extends SparkSuite {
     }
   }
 
-  test("inlineMargin ≡ counted margins (scoring-path equivalence)") {
+  test("inlineStats margin ≡ counted margins (scoring-path equivalence)") {
     val docs = Tables.documents(spark, Sf0001)
     val labels = docs.select(col("doc_id"),
       when(col("lang") === "en", 1.0).otherwise(0.0).as("y"))
@@ -161,7 +161,8 @@ class ScoringSpec extends SparkSuite {
       .select("doc_id", "margin", "n_feats").collect()
       .map(r => r.getLong(0) -> (r.getDouble(1), r.getLong(2))).toMap
     val inline = docs.select(col("doc_id"),
-        Scoring.inlineMargin(col("text"), 1024, m.w).as("margin"),
+        element_at(Scoring.inlineStats(col("text"), 1024, m.w), 1)
+          .as("margin"),
         Scoring.inlineFeatureCount(col("text")).as("n_feats"))
       .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getLong(2)))
       .toMap

@@ -39,10 +39,9 @@ class OpqSpec extends SparkSuite {
   /** Total PQ reconstruction error of `frame` under the standard
     * 4×16-dim / k=4 / 2-round budget (the q_pq_recall fit). */
   private def pqMse(frame: DataFrame): Double = {
-    val books = (0 until 4).map { sub =>
-      Lloyd.fitL2(frame, slice(col("v"), 16 * sub + 1, 16), "vec_id",
-        k = 4, dim = 16, iters = 2)
-    }
+    val books = Lloyd.fitL2(frame,
+      (0 until 4).map(sub => slice(col("v"), 16 * sub + 1, 16)), "vec_id",
+      k = 4, dim = 16, iters = 2)
     val err = (0 until 4).map { sub =>
       val sl = slice(col("v"), 16 * sub + 1, 16)
       array_min(array(books(sub).map(c => Lloyd.sqDist(sl, c)): _*))
