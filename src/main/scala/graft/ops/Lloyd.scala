@@ -58,10 +58,15 @@ object Lloyd {
     require(m > 0, "Lloyd: no vector lanes")
     val frame = corpus.select(col(idCol).as("__id") +:
       vecs.zipWithIndex.map { case (v, i) => v.as(s"__v$i") }: _*)
-    val initRows = frame.orderBy(col("__id")).limit(k).collect()
-    require(initRows.length == k, s"corpus has < $k vectors")
+    // k + 1 rows in the same one job: a tie at the k-th id would make
+    // the init depend on which tied row the sort happens to keep
+    val initRows = frame.orderBy(col("__id")).limit(k + 1).collect()
+    require(initRows.length >= k, s"corpus has < $k vectors")
+    require(initRows.map(_.get(0)).distinct.length == initRows.length,
+      s"Lloyd: duplicate $idCol among the ${k + 1} lowest ids — " +
+        "the init needs a unique id column")
     var cents = (0 until m).map { i =>
-      initRows.map(r => finish(r.getSeq[Double](i + 1).toArray))
+      initRows.take(k).map(r => finish(r.getSeq[Double](i + 1).toArray))
     }
     for (_ <- 0 until iters) {
       val exploded = frame.select(explode(array((0 until m).map { i =>

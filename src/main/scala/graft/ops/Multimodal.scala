@@ -260,7 +260,27 @@ object Multimodal {
     * allowed in the header). Returns None for anything that isn't a
     * well-formed P6 payload — callers fall back to the stub, so a
     * corrupt blob degrades instead of failing the task. */
-  private[ops] def decodePpm(bytes: Array[Byte]): Option[DecodedImage] = {
+  private[ops] def decodePpm(bytes: Array[Byte]): Option[DecodedImage] =
+    ppmRaster(bytes).map { case (w, h, maxval, pixelStart) =>
+      var (r, g, b) = (0L, 0L, 0L)
+      var p = pixelStart
+      val end = pixelStart + w * h * 3
+      while (p < end) {
+        r += bytes(p) & 0xFF
+        g += bytes(p + 1) & 0xFF
+        b += bytes(p + 2) & 0xFF
+        p += 3
+      }
+      val n = (w.toLong * h * maxval).toDouble
+      DecodedImage(w, h, r / n, g / n, b / n)
+    }
+
+  /** The one P6 header walk, shared by [[decodePpm]] and
+    * [[PerceptualHash]]'s gray decoder: `(width, height, maxval,
+    * raster offset)` of a well-formed P6 payload whose raster holds at
+    * least width·height RGB triples, else None. */
+  private[ops] def ppmRaster(
+      bytes: Array[Byte]): Option[(Int, Int, Int, Int)] = {
     if (bytes.length < 2 || bytes(0) != 'P' || bytes(1) != '6') return None
     var i = 2
     def skipWsAndComments(): Unit = {
@@ -293,19 +313,7 @@ object Multimodal {
         bytes(i) == '\t' || bytes(i) == '\r')
       pixelStart = i + 1
       if bytes.length - pixelStart >= w.toLong * h * 3
-    } yield {
-      var (r, g, b) = (0L, 0L, 0L)
-      var p = pixelStart
-      val end = pixelStart + w * h * 3
-      while (p < end) {
-        r += bytes(p) & 0xFF
-        g += bytes(p + 1) & 0xFF
-        b += bytes(p + 2) & 0xFF
-        p += 3
-      }
-      val n = (w.toLong * h * maxval).toDouble
-      DecodedImage(w, h, r / n, g / n, b / n)
-    }
+    } yield (w, h, maxval, pixelStart)
   }
 
   /** REAL decode kernel for PNG and JPEG via the JDK's

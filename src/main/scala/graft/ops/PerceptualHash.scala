@@ -27,7 +27,7 @@ package graft.ops
 object PerceptualHash {
 
   /** Decode to integer grayscale: P6 walked byte-level (netpbm spec,
-    * same header grammar as [[Multimodal.decodePpm]]), PNG/JPEG via
+    * the header walk [[Multimodal.ppmRaster]]), PNG/JPEG via
     * the JDK's ImageIO behind a magic-byte sniff. None for anything
     * malformed — a corrupt blob degrades instead of failing the task. */
   private[ops] def decodeGray(
@@ -45,39 +45,8 @@ object PerceptualHash {
     (299 * r + 587 * g + 114 * b) / 1000
 
   private def decodeGrayPpm(
-      bytes: Array[Byte]): Option[(Int, Int, Array[Int])] = {
-    var i = 2
-    def skipWsAndComments(): Unit = {
-      var go = true
-      while (go && i < bytes.length) {
-        val b = bytes(i)
-        if (b == ' ' || b == '\t' || b == '\n' || b == '\r') i += 1
-        else if (b == '#') {
-          while (i < bytes.length && bytes(i) != '\n') i += 1
-        } else go = false
-      }
-    }
-    def readInt(): Option[Int] = {
-      skipWsAndComments()
-      val start = i
-      var v = 0L
-      while (i < bytes.length && bytes(i) >= '0' && bytes(i) <= '9') {
-        v = v * 10 + (bytes(i) - '0')
-        if (v > Int.MaxValue) return None
-        i += 1
-      }
-      if (i == start) None else Some(v.toInt)
-    }
-    for {
-      w <- readInt()
-      h <- readInt()
-      maxval <- readInt()
-      if w > 0 && h > 0 && maxval > 0 && maxval <= 255
-      if i < bytes.length && (bytes(i) == '\n' || bytes(i) == ' ' ||
-        bytes(i) == '\t' || bytes(i) == '\r')
-      pixelStart = i + 1
-      if bytes.length - pixelStart >= w.toLong * h * 3
-    } yield {
+      bytes: Array[Byte]): Option[(Int, Int, Array[Int])] =
+    Multimodal.ppmRaster(bytes).map { case (w, h, _, pixelStart) =>
       val out = new Array[Int](w * h)
       var p = pixelStart
       var j = 0
@@ -88,7 +57,6 @@ object PerceptualHash {
       }
       (w, h, out)
     }
-  }
 
   private def decodeGrayImageIO(
       bytes: Array[Byte]): Option[(Int, Int, Array[Int])] =

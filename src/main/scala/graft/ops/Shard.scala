@@ -1,6 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -42,80 +45,28 @@ object Shard {
     * order. */
   def writeSharded(df: DataFrame, keyCol: String, n: Int, dir: String,
       salt: String = "shard:", orderSalt: String = "ord:"): Unit =
+    shardOrdered(df, keyCol, n, salt, orderSalt)
+      .write.mode("overwrite").partitionBy("shard").parquet(dir)
+
+  private def shardOrdered(df: DataFrame, keyCol: String, n: Int,
+      salt: String, orderSalt: String): DataFrame =
     assign(df, keyCol, n, salt)
       .repartition(col("shard"))
       .sortWithinPartitions(col("shard"), orderKey(col(keyCol), orderSalt))
-      .write.mode("overwrite").partitionBy("shard").parquet(dir)
 
-  /** Atomic manifest-committed variant of [[writeSharded]] (X293 —
-    * the single-manifest-swap commit protocol at the core of the
-    * lakehouse formats, reduced to one table; completes the story
-    * next to q_time_travel / q_schema_evolution). Protocol:
-    *
-    *  1. shard files land under an opaque commit prefix
-    *     `dir/data/<commitId>/shard=K/` — a crash here leaves
-    *     unreferenced files, never a readable half-table;
-    *  2. ONE manifest JSON naming every committed file (sorted paths,
-    *     per-file shard + byte size) is written to a dot-temp name and
-    *     fsynced (hsync — durable before the swap);
-    *  3. the manifest is atomically renamed to `dir/manifest.json`
-    *     (FileContext OVERWRITE rename — the one atomic primitive the
-    *     protocol needs from the filesystem).
-    *
-    * Readers ([[readViaManifest]]) resolve file paths EXCLUSIVELY
-    * through the manifest, so partial writes, abandoned commits and
-    * in-flight temp manifests are invisible by construction
-    * (ShardSpec simulates each). At 100 TB the manifest stays
-    * O(n_shards) — file listing never rescans the data directory on
-    * read, and old commits remain on disk for time-travel/GC exactly
-    * as in the table formats. */
+  /** Atomic manifest-committed variant of [[writeSharded]] (X293): the
+    * same shard-ordered frame committed as the one table `shards`,
+    * partitioned by `shard`, through [[writeTablesAtomic]]. Files land
+    * under `dir/data/<commitId>/shards/shard=K/`; [[readViaManifest]]
+    * reads them back with that table dir as parquet basePath, so the
+    * `shard` column is recovered. Protocol, single-use commit ids and
+    * invisibility of torn writes are [[publish]]'s. */
   def writeShardedAtomic(df: DataFrame, keyCol: String, n: Int,
       dir: String, commitId: String, salt: String = "shard:",
-      orderSalt: String = "ord:"): Unit = {
-    import org.apache.hadoop.fs.{FileContext, Options, Path}
-    val conf = df.sparkSession.sparkContext.hadoopConfiguration
-    val dataPath = new Path(s"$dir/data/$commitId")
-    val fs = dataPath.getFileSystem(conf)
-    // Commit ids are SINGLE-USE (ADVICE r15): re-writing an existing
-    // commit prefix under mode-overwrite would delete files the
-    // currently-committed manifest may still reference — a reader in
-    // that window would see exactly the torn half-table the protocol
-    // promises is impossible. Callers that re-run (bench best-of-2,
-    // selfcheck) take a fresh [[newCommitId]] per invocation and GC.
-    require(!fs.exists(dataPath),
-      s"commit '$commitId' already exists under $dir — commit ids are " +
-        "single-use; pass Shard.newCommitId() per invocation")
-    assign(df, keyCol, n, salt)
-      .repartition(col("shard"))
-      .sortWithinPartitions(col("shard"),
-        orderKey(col(keyCol), orderSalt))
-      .write.mode("overwrite").partitionBy("shard")
-      .parquet(dataPath.toString)
-    // enumerate the commit's files; sorted paths keep the manifest
-    // bytes deterministic for a given file layout
-    val files = fs.listStatus(dataPath)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("shard="))
-      .flatMap { d =>
-        val sh = d.getPath.getName.stripPrefix("shard=").toInt
-        fs.listStatus(d.getPath)
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .map(f => (s"data/$commitId/${d.getPath.getName}/" +
-            f.getPath.getName, sh, f.getLen))
-      }.sortBy(_._1)
-    val manifest = files.map { case (p, sh, len) =>
-      s"""{"path":"$p","shard":$sh,"bytes":$len}"""
-    }.mkString(
-      s"""{"commit":"$commitId","n_shards":$n,"files":[""", ",", "]}")
-    val tmp = new Path(s"$dir/.manifest.json.$commitId.tmp")
-    val out = fs.create(tmp, true)
-    try {
-      out.write(manifest.getBytes("UTF-8"))
-      out.hsync() // durable BEFORE it becomes visible
-    } finally out.close()
-    val fc = FileContext.getFileContext(tmp.toUri, conf)
-    fc.rename(tmp, new Path(s"$dir/manifest.json"),
-      Options.Rename.OVERWRITE)
-  }
+      orderSalt: String = "ord:"): Unit =
+    writeTablesAtomic(
+      Seq("shards" -> shardOrdered(df, keyCol, n, salt, orderSalt)),
+      dir, commitId, partitionBy = Map("shards" -> "shard"))
 
   private val commitCounter = new java.util.concurrent.atomic.AtomicLong()
 
@@ -140,9 +91,7 @@ object Shard {
     * under SEVERAL commit prefixes (base + each delta segment), and
     * every one of them must survive GC — only prefixes no manifest
     * path points into are deleted. */
-  def gcOldCommits(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
-    import org.apache.hadoop.fs.Path
+  def gcOldCommits(spark: SparkSession, dir: String): Unit = {
     val dataDir = new Path(s"$dir/data")
     val fs = dataDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(dataDir)) {
@@ -156,341 +105,264 @@ object Shard {
   /** Every `data/<prefix>/` the current committed manifest's file
     * paths point into — the GC keep-set (≥ 1 for a plain commit,
     * one per segment for an append chain). */
-  def livePrefixes(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Set[String] =
-    """"path":"data/([^/"]+)/""".r
-      .findAllMatchIn(readManifestText(spark, dir))
-      .map(_.group(1)).toSet
+  def livePrefixes(spark: SparkSession, dir: String): Set[String] =
+    committed(spark, dir).files
+      .map(_.path.stripPrefix("data/").takeWhile(_ != '/')).toSet
 
-  private def readManifestText(spark: org.apache.spark.sql.SparkSession,
-      dir: String): String = {
-    import org.apache.hadoop.fs.Path
-    val mPath = new Path(s"$dir/manifest.json")
-    val fs = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val len = fs.getFileStatus(mPath).getLen.toInt
-    val buf = new Array[Byte](len)
-    val in = fs.open(mPath)
-    try in.readFully(0, buf) finally in.close()
-    new String(buf, "UTF-8")
-  }
-
-  /** The current committed manifest of `dir` as (commitId, entries) —
-    * entries are (relative path, shard). */
-  def readManifest(spark: org.apache.spark.sql.SparkSession,
-      dir: String): (String, Seq[(String, Int)]) = {
-    import org.apache.hadoop.fs.Path
-    val mPath = new Path(s"$dir/manifest.json")
-    val fs = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val len = fs.getFileStatus(mPath).getLen.toInt
-    val buf = new Array[Byte](len)
-    val in = fs.open(mPath)
-    try in.readFully(0, buf) finally in.close()
-    val txt = new String(buf, "UTF-8")
-    val commit = """"commit":"([^"]+)"""".r
-      .findFirstMatchIn(txt).map(_.group(1))
-      .getOrElse(sys.error(s"malformed manifest at $mPath"))
-    val entries = """\{"path":"([^"]+)","shard":(\d+)""".r
-      .findAllMatchIn(txt)
-      .map(m => (m.group(1), m.group(2).toInt)).toSeq
-    (commit, entries)
-  }
-
-  /** Read ONLY the files the committed manifest names (never a
-    * directory listing — the atomicity contract lives here). The
-    * commit's data prefix is the parquet basePath, so the `shard=K`
+  /** Read ONLY the `shards` files the committed manifest names (never
+    * a directory listing — the atomicity contract lives here). The
+    * commit's `shards` dir is the parquet basePath, so the `shard=K`
     * partition column is recovered. */
-  def readViaManifest(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    val (commit, entries) = readManifest(spark, dir)
-    require(entries.nonEmpty, s"manifest at $dir names no files")
-    spark.read.option("basePath", s"$dir/data/$commit")
-      .parquet(entries.map { case (p, _) => s"$dir/$p" }: _*)
+  def readViaManifest(spark: SparkSession, dir: String): DataFrame = {
+    val (commit, paths) = tablePaths(spark, dir, "shards")
+    spark.read.option("basePath", s"$dir/data/$commit/shards")
+      .parquet(paths: _*)
   }
 
   /** Multi-table atomic commit (X299 — the two-table TRANSACTION a
     * curation pipeline needs when a corpus and its audit sidecar must
     * agree: documents + dedup verdicts, codes + codebooks, committed
     * by ONE manifest swap so readers see either BOTH new tables or
-    * BOTH old ones, never a new corpus with stale verdicts). Extends
-    * [[writeShardedAtomic]]'s protocol from one table to a table SET:
-    *
-    *  1. every table's files land under
-    *     `dir/data/<commitId>/<table>/…` — each table keeps whatever
-    *     layout its writer produced (partitioned, sharded, single
-    *     file): the manifest is file-granular, so any layout commits
-    *     atomically;
-    *  2. ONE manifest naming every (table, path, bytes) triple is
-    *     fsynced to a dot-temp name;
-    *  3. the manifest atomically renames over `dir/manifest.json`.
-    *
-    * A crash after table 1's files but before table 2's (or before
-    * the swap) leaves only unreferenced files — [[readTableViaManifest]]
-    * still resolves the PREVIOUS commit's consistent pair. Commit ids
-    * are single-use exactly as in [[writeShardedAtomic]]. At 100 TB
-    * the manifest stays O(total files) metadata and readers never
-    * list the data directory. */
+    * BOTH old ones, never a new corpus with stale verdicts). Every
+    * table is written fresh under `dir/data/<commitId>/<table>/`;
+    * `partitionBy` optionally lays a table out as Hive-style
+    * `<col>=<v>/` dirs, the granularity [[replaceTablePartitionsAtomic]]
+    * swaps at. The manifest stays file-granular either way; readers
+    * resolve leaf files whose parent dir is their base path, so the
+    * partition column is NOT re-inferred on read (it is derivable from
+    * the data by the writer's contract). Refuses an empty or
+    * duplicate table set. */
   def writeTablesAtomic(tables: Seq[(String, DataFrame)], dir: String,
       commitId: String, partitionBy: Map[String, String] = Map.empty)
       : Unit = {
-    import org.apache.hadoop.fs.{FileContext, Options, Path}
     require(tables.nonEmpty, "writeTablesAtomic: no tables")
     require(tables.map(_._1).distinct.size == tables.size,
       "writeTablesAtomic: duplicate table names")
     val spark = tables.head._2.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dataPath = new Path(s"$dir/data/$commitId")
-    val fs = dataPath.getFileSystem(conf)
-    require(!fs.exists(dataPath),
-      s"commit '$commitId' already exists under $dir — commit ids are " +
-        "single-use; pass Shard.newCommitId() per invocation")
-    tables.foreach { case (name, df) =>
-      // optional layout: `<table>/<col>=<v>/…` Hive-style partition
-      // dirs, the granularity [[replaceTablePartitionsAtomic]] swaps
-      // at. The manifest stays file-granular either way; readers
-      // resolve leaf files whose parent dir is their base path, so
-      // the partition column is NOT re-inferred on read (it is
-      // derivable from the data by the writer's contract).
-      partitionBy.get(name) match {
-        case Some(c) => df.write.partitionBy(c).parquet(s"$dataPath/$name")
-        case None => df.write.parquet(s"$dataPath/$name")
-      }
-    }
-    // enumerate committed files per table; sorted (table, path) keeps
-    // the manifest bytes deterministic for a given file layout
-    val files = tables.flatMap { case (name, _) =>
-      val tPath = new Path(s"$dataPath/$name")
-      val it = fs.listFiles(tPath, true)
-      val buf = Seq.newBuilder[(String, String, Long)]
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.isFile && st.getPath.getName.endsWith(".parquet")) {
-          val rel = st.getPath.toString
-            .stripPrefix(fs.makeQualified(new Path(dir)).toString)
-            .stripPrefix("/")
-          buf += ((name, rel, st.getLen))
-        }
-      }
-      buf.result()
-    }.sortBy(e => (e._1, e._2))
-    swapTablesManifest(spark, dir, commitId, tables.map(_._1), files)
-  }
-
-  /** Build + fsync + atomically swap a multi-table manifest naming
-    * `files` = (table, relative path, bytes) — the shared tail of
-    * [[writeTablesAtomic]] and [[appendTablesAtomic]]. */
-  private def swapTablesManifest(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      commitId: String, tableNames: Seq[String],
-      files: Seq[(String, String, Long)]): Unit = {
-    import org.apache.hadoop.fs.{FileContext, Options, Path}
-    val conf = spark.sparkContext.hadoopConfiguration
-    val manifest = files.map { case (t, p, len) =>
-      s"""{"table":"$t","path":"$p","bytes":$len}"""
-    }.mkString(
-      s"""{"commit":"$commitId","tables":[${tableNames.map(t =>
-        "\"" + t + "\"").mkString(",")}],"files":[""", ",", "]}")
-    val tmp = new Path(s"$dir/.manifest.json.$commitId.tmp")
-    val fs = tmp.getFileSystem(conf)
-    val out = fs.create(tmp, true)
-    try {
-      out.write(manifest.getBytes("UTF-8"))
-      out.hsync() // durable BEFORE it becomes visible
-    } finally out.close()
-    val fc = FileContext.getFileContext(tmp.toUri, conf)
-    fc.rename(tmp, new Path(s"$dir/manifest.json"),
-      Options.Rename.OVERWRITE)
+    val fs = openCommit(spark, dir, commitId)
+    publish(spark, dir, commitId, tables.map(_._1),
+      writeFiles(fs, dir, commitId, tables, partitionBy))
   }
 
   /** APPEND-commit (X317 — the segment discipline the table formats
     * use for ingest): write ONLY `newTables`' rows as fresh files
-    * under `dir/data/<commitId>/`, then swap ONE manifest naming the
-    * new files PLUS every file of the current commit. Readers flip
-    * atomically from the old table set to old ∪ appended; the
-    * existing data — however large — is never rewritten, which is
-    * the property that makes a 100 TB delta-ingest O(delta), not
-    * O(corpus). Repeated appends accumulate segment prefixes (all
-    * kept live by [[gcOldCommits]]'s file-derived keep-set) until a
-    * compaction rewrites the table under a single prefix. */
+    * under `dir/data/<commitId>/`, and publish them PLUS every file of
+    * the current manifest, carried by reference. The existing data —
+    * however large — is never rewritten, which makes a 100 TB
+    * delta-ingest O(delta), not O(corpus). Repeated appends accumulate
+    * segment prefixes (all kept live by [[gcOldCommits]]'s
+    * file-derived keep-set) until a compaction rewrites the table
+    * under a single prefix.
+    *
+    * `rewriteTables` (X326 — the dedup index's mixed commit): small
+    * state tables REWRITTEN in the same swap — their fresh files
+    * replace every file the current manifest names for them, so
+    * readers can never pair an appended segment with a stale state
+    * table. Refuses an empty `newTables`, a table both appended and
+    * rewritten, and a `dir` with no committed base. */
   def appendTablesAtomic(newTables: Seq[(String, DataFrame)],
       dir: String, commitId: String,
       rewriteTables: Seq[(String, DataFrame)] = Seq.empty): Unit = {
-    // `rewriteTables` (X326 — the dedup index's mixed commit): small
-    // state tables REWRITTEN in the same swap — their fresh files
-    // replace every file the current manifest names for them, while
-    // `newTables`' files APPEND next to their carried segments. One
-    // manifest publishes both, so readers can never pair an appended
-    // segment with a stale state table (clusters must agree with the
-    // band segments that produced them).
-    import org.apache.hadoop.fs.Path
     require(newTables.nonEmpty, "appendTablesAtomic: no tables")
     require(newTables.map(_._1).intersect(rewriteTables.map(_._1)).isEmpty,
       "appendTablesAtomic: a table cannot both append and rewrite")
     val spark = newTables.head._2.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dataPath = new Path(s"$dir/data/$commitId")
-    val fs = dataPath.getFileSystem(conf)
-    require(!fs.exists(dataPath),
-      s"commit '$commitId' already exists under $dir — commit ids are " +
-        "single-use; pass Shard.newCommitId() per invocation")
-    // carried files: everything the CURRENT manifest names (with
-    // bytes — the manifest is the only listing the protocol trusts)
-    val carried =
-      """\{"table":"([^"]+)","path":"([^"]+)","bytes":(\d+)\}""".r
-        .findAllMatchIn(readManifestText(spark, dir))
-        .map(m => (m.group(1), m.group(2), m.group(3).toLong)).toSeq
-        .filterNot { case (t, _, _) => rewriteTables.exists(_._1 == t) }
+    val fs = openCommit(spark, dir, commitId)
+    val carried = committed(spark, dir).files
+      .filterNot(f => rewriteTables.exists(_._1 == f.table))
     require(carried.nonEmpty, s"append against $dir: no committed base")
-    (newTables ++ rewriteTables).foreach { case (name, df) =>
-      df.write.parquet(s"$dataPath/$name")
-    }
-    val fresh = (newTables ++ rewriteTables).flatMap { case (name, _) =>
-      val it = fs.listFiles(new Path(s"$dataPath/$name"), true)
-      val buf = Seq.newBuilder[(String, String, Long)]
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.isFile && st.getPath.getName.endsWith(".parquet")) {
-          val rel = st.getPath.toString
-            .stripPrefix(fs.makeQualified(new Path(dir)).toString)
-            .stripPrefix("/")
-          buf += ((name, rel, st.getLen))
-        }
-      }
-      buf.result()
-    }
-    val names = (carried.map(_._1) ++ newTables.map(_._1) ++
-      rewriteTables.map(_._1)).distinct
-    swapTablesManifest(spark, dir, commitId, names,
-      (carried ++ fresh).sortBy(e => (e._1, e._2)))
+    val written = newTables ++ rewriteTables
+    publish(spark, dir, commitId,
+      (carried.map(_.table) ++ written.map(_._1)).distinct,
+      carried ++ writeFiles(fs, dir, commitId, written, Map.empty))
   }
 
   /** PARTITION-REPLACE commit (X324 — the delta-publish discipline a
     * partitioned corpus-sized table needs when an update touches a
-    * BOUNDED set of its partitions: write fresh files ONLY for the
+    * BOUNDED set of its partitions): write fresh files ONLY for the
     * replaced partitions under `dir/data/<commitId>/<table>/<part>/`,
     * carry every untouched partition's files from the current
     * manifest BY REFERENCE, fully rewrite the (small) `rewriteTables`,
-    * and swap ONE manifest. Readers flip atomically from the old
-    * table to (untouched-old ∪ replaced-new); untouched data —
-    * however large — is never rewritten, which is what makes a
-    * 100 TB index delta O(touched), not O(corpus), in publish I/O
-    * (the X317 append twin, for in-place list repair instead of
-    * pure append). The table must have been committed with
-    * `partitionBy` so its manifest paths carry `<col>=<v>/`
-    * components; `replacedParts` are those dir names (e.g. "pt=3").
+    * and publish. Untouched data — however large — is never
+    * rewritten, which makes a 100 TB index delta O(touched), not
+    * O(corpus), in publish I/O (the X317 append twin, for in-place
+    * list repair instead of pure append). The table must have been
+    * committed with `partitionBy` so its manifest paths carry
+    * `<col>=<v>/` components; `replacedParts` are those dir names
+    * (e.g. "pt=3").
     *
-    * Contract: `newRows` must contain exactly the rows of the
-    * replaced partitions (it is written `partitionBy(partCol)`, and
-    * a row outside `replacedParts` would silently commit a partition
-    * dir the carry-filter also kept — so the writer enumerates the
-    * written dirs and REFUSES a commit whose fresh partition set is
-    * not exactly `replacedParts`). Old commits stay on disk for
-    * time-travel; [[gcOldCommits]]' file-derived keep-set keeps every
-    * carried prefix live. */
+    * Refusals: no committed base; a committed file of `table` with no
+    * `partCol=` dir; and a written partition set other than exactly
+    * `replacedParts` (`newRows` is written `partitionBy(partCol)`, and
+    * a row outside `replacedParts` would otherwise commit a partition
+    * dir the carry also kept). [[gcOldCommits]]' file-derived keep-set
+    * keeps every carried prefix live. */
   def replaceTablePartitionsAtomic(dir: String, commitId: String,
       table: String, newRows: DataFrame, partCol: String,
       replacedParts: Set[String],
       rewriteTables: Seq[(String, DataFrame)]): Unit = {
-    import org.apache.hadoop.fs.Path
     val spark = newRows.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dataPath = new Path(s"$dir/data/$commitId")
-    val fs = dataPath.getFileSystem(conf)
-    require(!fs.exists(dataPath),
-      s"commit '$commitId' already exists under $dir — commit ids are " +
-        "single-use; pass Shard.newCommitId() per invocation")
-    val carried =
-      """\{"table":"([^"]+)","path":"([^"]+)","bytes":(\d+)\}""".r
-        .findAllMatchIn(readManifestText(spark, dir))
-        .map(m => (m.group(1), m.group(2), m.group(3).toLong)).toSeq
+    val fs = openCommit(spark, dir, commitId)
+    val carried = committed(spark, dir).files
     require(carried.nonEmpty, s"replace against $dir: no committed base")
     def partOf(rel: String): Option[String] =
       s"/($partCol=[^/]+)/".r.findFirstMatchIn(rel).map(_.group(1))
     val keptOld = carried.filter {
-      case (t, p, _) if t == table =>
-        val pt = partOf(p)
+      case f if f.table == table =>
+        val pt = partOf(f.path)
         require(pt.nonEmpty,
-          s"replace: committed $table file '$p' has no $partCol= dir — " +
-            "the table was not committed partitionBy'd")
+          s"replace: committed $table file '${f.path}' has no $partCol= " +
+            "dir — the table was not committed partitionBy'd")
         !replacedParts.contains(pt.get)
-      case (t, _, _) => !rewriteTables.exists(_._1 == t)
+      case f => !rewriteTables.exists(_._1 == f.table)
     }
-    newRows.write.partitionBy(partCol).parquet(s"$dataPath/$table")
-    rewriteTables.foreach { case (name, df) =>
-      df.write.parquet(s"$dataPath/$name")
-    }
-    val fresh = (Seq(table) ++ rewriteTables.map(_._1)).flatMap { name =>
-      val it = fs.listFiles(new Path(s"$dataPath/$name"), true)
-      val buf = Seq.newBuilder[(String, String, Long)]
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.isFile && st.getPath.getName.endsWith(".parquet")) {
-          val rel = st.getPath.toString
-            .stripPrefix(fs.makeQualified(new Path(dir)).toString)
-            .stripPrefix("/")
-          buf += ((name, rel, st.getLen))
-        }
-      }
-      buf.result()
-    }
-    val freshParts = fresh.collect {
-      case (t, p, _) if t == table => partOf(p) }.flatten.toSet
+    val written = (table -> newRows) +: rewriteTables
+    val fresh = writeFiles(fs, dir, commitId, written,
+      Map(table -> partCol))
+    val freshParts = fresh.filter(_.table == table)
+      .flatMap(f => partOf(f.path)).toSet
     require(freshParts == replacedParts,
       s"replace: written partitions $freshParts != declared " +
         s"$replacedParts — newRows must hold exactly the replaced " +
         "partitions' rows")
-    val names = (keptOld.map(_._1) ++ Seq(table) ++
-      rewriteTables.map(_._1)).distinct
-    swapTablesManifest(spark, dir, commitId, names,
-      (keptOld ++ fresh).sortBy(e => (e._1, e._2)))
+    publish(spark, dir, commitId,
+      (keptOld.map(_.table) ++ written.map(_._1)).distinct,
+      keptOld ++ fresh)
   }
 
-  /** The current committed multi-table manifest of `dir` as
-    * (commitId, entries) — entries are (table, relative path). */
-  def readTablesManifest(spark: org.apache.spark.sql.SparkSession,
+  /** The current committed manifest of `dir` as (commitId, entries) —
+    * entries are (table, relative path). */
+  def readTablesManifest(spark: SparkSession,
       dir: String): (String, Seq[(String, String)]) = {
-    import org.apache.hadoop.fs.Path
-    val mPath = new Path(s"$dir/manifest.json")
-    val fs = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val len = fs.getFileStatus(mPath).getLen.toInt
-    val buf = new Array[Byte](len)
-    val in = fs.open(mPath)
-    try in.readFully(0, buf) finally in.close()
-    val txt = new String(buf, "UTF-8")
-    val commit = """"commit":"([^"]+)"""".r
-      .findFirstMatchIn(txt).map(_.group(1))
-      .getOrElse(sys.error(s"malformed manifest at $mPath"))
-    val entries = """\{"table":"([^"]+)","path":"([^"]+)"""".r
-      .findAllMatchIn(txt)
-      .map(m => (m.group(1), m.group(2))).toSeq
-    (commit, entries)
+    val m = committed(spark, dir)
+    (m.commit, m.files.map(f => (f.table, f.path)))
   }
 
   /** Read ONE table of the committed transaction — exclusively the
     * files the manifest names for it (the atomicity contract: a table
     * whose sibling's write crashed is invisible because the manifest
     * swap never happened). */
-  def readTableViaManifest(spark: org.apache.spark.sql.SparkSession,
-      dir: String, table: String): DataFrame = {
-    val (_, entries) = readTablesManifest(spark, dir)
-    val paths = entries.collect { case (t, p) if t == table => s"$dir/$p" }
-    require(paths.nonEmpty,
-      s"manifest at $dir names no files for table '$table'")
-    spark.read.parquet(paths: _*)
-  }
+  def readTableViaManifest(spark: SparkSession, dir: String,
+      table: String): DataFrame =
+    spark.read.parquet(tablePaths(spark, dir, table)._2: _*)
 
   /** True iff `dir` carries a committed manifest naming every table in
     * `tables` — the build-once guard a serve-path calls before
     * deciding whether to (re)build. */
-  def hasCommittedTables(spark: org.apache.spark.sql.SparkSession,
-      dir: String, tables: Seq[String]): Boolean = {
-    import org.apache.hadoop.fs.Path
+  def hasCommittedTables(spark: SparkSession, dir: String,
+      tables: Seq[String]): Boolean = {
     val mPath = new Path(s"$dir/manifest.json")
     val fs = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(mPath) && {
-      val (_, entries) = readTablesManifest(spark, dir)
-      val present = entries.map(_._1).toSet
-      tables.forall(present.contains)
+    fs.exists(mPath) &&
+      tables.toSet.subsetOf(committed(spark, dir).files.map(_.table).toSet)
+  }
+
+  /** One committed file: its table, its path relative to the table
+    * set's dir, and its byte size. */
+  private case class ManifestFile(table: String, path: String, bytes: Long)
+
+  /** The one manifest format: `{"commit","tables","files":[{"table",
+    * "path","bytes"}]}`, written and read only through [[json]]. */
+  private case class Manifest(commit: String, tables: Seq[String],
+      files: Seq[ManifestFile])
+
+  private val json = JsonMapper.builder().addModule(DefaultScalaModule).build()
+
+  private def committed(spark: SparkSession, dir: String): Manifest = {
+    val mPath = new Path(s"$dir/manifest.json")
+    val in = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .open(mPath)
+    try json.readValue(in: java.io.InputStream, classOf[Manifest])
+    finally in.close()
+  }
+
+  /** (commit, `dir`-rooted paths) of `table`'s committed files. */
+  private def tablePaths(spark: SparkSession, dir: String,
+      table: String): (String, Seq[String]) = {
+    val m = committed(spark, dir)
+    val paths = m.files.collect {
+      case f if f.table == table => s"$dir/${f.path}" }
+    require(paths.nonEmpty,
+      s"manifest at $dir names no files for table '$table'")
+    (m.commit, paths)
+  }
+
+  /** Commit ids are SINGLE-USE (ADVICE r15): re-writing an existing
+    * commit prefix would delete files the currently-committed manifest
+    * may still reference — a reader in that window would see exactly
+    * the torn half-table the protocol promises is impossible. Callers
+    * that re-run (bench best-of-2, selfcheck) take a fresh
+    * [[newCommitId]] per invocation and GC. Returns the commit's
+    * filesystem. */
+  private def openCommit(spark: SparkSession, dir: String,
+      commitId: String): FileSystem = {
+    val dataPath = new Path(s"$dir/data/$commitId")
+    val fs = dataPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(!fs.exists(dataPath),
+      s"commit '$commitId' already exists under $dir — commit ids are " +
+        "single-use; pass Shard.newCommitId() per invocation")
+    fs
+  }
+
+  /** Write each table under `dir/data/<commitId>/<table>/` (Hive-style
+    * `partitionBy` dirs where given) and list the parquet files it left
+    * there as manifest entries. */
+  private def writeFiles(fs: FileSystem, dir: String, commitId: String,
+      tables: Seq[(String, DataFrame)], partitionBy: Map[String, String])
+      : Seq[ManifestFile] = {
+    val root = fs.makeQualified(new Path(dir)).toString
+    tables.flatMap { case (name, df) =>
+      val tPath = s"$dir/data/$commitId/$name"
+      partitionBy.get(name).fold(df.write)(df.write.partitionBy(_))
+        .parquet(tPath)
+      val it = fs.listFiles(new Path(tPath), true)
+      val buf = Seq.newBuilder[ManifestFile]
+      while (it.hasNext) {
+        val st = it.next()
+        if (st.isFile && st.getPath.getName.endsWith(".parquet"))
+          buf += ManifestFile(name,
+            st.getPath.toString.stripPrefix(root).stripPrefix("/"),
+            st.getLen)
+      }
+      buf.result()
     }
+  }
+
+  /** The one publish step of every commit — the single-manifest-swap
+    * protocol at the core of the lakehouse formats:
+    *
+    *  1. the commit's files have landed under an opaque prefix
+    *     `dir/data/<commitId>/<table>/` — a crash before step 3 leaves
+    *     unreferenced files, never a readable half-table;
+    *  2. ONE manifest naming every (table, path, bytes) entry, the
+    *     commit's fresh files plus any carried by reference (sorted by
+    *     table then path, so the bytes are deterministic for a given
+    *     layout), is written to a dot-temp name and fsynced (hsync —
+    *     durable before the swap);
+    *  3. the manifest is atomically renamed to `dir/manifest.json`
+    *     (FileContext OVERWRITE rename — the one atomic primitive the
+    *     protocol needs from the filesystem).
+    *
+    * Readers resolve file paths EXCLUSIVELY through the manifest, so
+    * partial writes, abandoned commits and in-flight temp manifests
+    * are invisible by construction (ShardSpec, TxnSpec simulate each),
+    * and a table set's readers see either every new table or every
+    * old one. At 100 TB the manifest stays O(files) metadata, reads
+    * never list the data directory, and old commits remain on disk
+    * for time-travel/GC exactly as in the table formats. */
+  private def publish(spark: SparkSession, dir: String, commitId: String,
+      tables: Seq[String], files: Seq[ManifestFile]): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val bytes = json.writeValueAsBytes(Manifest(commitId, tables,
+      files.sortBy(f => (f.table, f.path))))
+    val tmp = new Path(s"$dir/.manifest.json.$commitId.tmp")
+    val out = tmp.getFileSystem(conf).create(tmp, true)
+    try {
+      out.write(bytes)
+      out.hsync() // durable BEFORE it becomes visible
+    } finally out.close()
+    FileContext.getFileContext(tmp.toUri, conf).rename(tmp,
+      new Path(s"$dir/manifest.json"), Options.Rename.OVERWRITE)
   }
 
   /** Deterministic epoch shuffle (X257 — the global training-order

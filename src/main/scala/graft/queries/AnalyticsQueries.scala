@@ -3,6 +3,7 @@ package graft.queries
 import graft.{QueryDef, Tables}
 import graft.functions.Num
 import graft.ops.{Multimodal, Similarity, Warc}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -315,25 +316,30 @@ cents_${i + 1} AS MATERIALIZED (
       val lsh = Similarity.lshTopK(e, q, "vec_id", "embedding",
           "vec_id", "embedding", k = 10, planes = 6, maxFlips = 2)
         .select("query_id", "neighbor_id")
-      // denominator = per-query ground-truth size (== k when the corpus
-      // has >= k neighbors; smaller on tiny corpora — recall stays honest
-      // instead of silently understating against a literal k)
-      val truthCounts = truth.groupBy("query_id")
-        .agg(count(lit(1)).as("d"))
-      def recallOf(method: String, approx: org.apache.spark.sql.DataFrame) = {
-        val hits = truth.join(approx, Seq("query_id", "neighbor_id"))
-          .groupBy("query_id").agg(count(lit(1)).as("n"))
-        q.select(col("vec_id").as("query_id"))
-          .join(truthCounts, Seq("query_id"))
-          .join(hits, Seq("query_id"), "left")
-          .select(lit(method).as("method"), col("query_id"),
-            coalesce(col("n"), lit(0L)).as("n_hits"),
-            (coalesce(col("n"), lit(0L)).cast("double") /
-              col("d").cast("double")).as("recall"))
-      }
-      recallOf("ivf", ivf).unionAll(recallOf("lsh", lsh))
+      recallRows(lit("ivf").as("method"), q, truth, ivf)
+        .unionAll(recallRows(lit("lsh").as("method"), q, truth, lsh))
         .orderBy("method", "query_id")
     })
+
+  /** The one recall@k readout: `lane`, `query_id`, `n_hits` (approx ∩
+    * truth) and `recall` for every query in `q` (`vec_id`). The
+    * denominator is the per-query ground-truth size (== k when the
+    * corpus has >= k neighbors; smaller on tiny corpora — recall stays
+    * honest instead of silently understating against a literal k). */
+  private def recallRows(lane: Column, q: DataFrame, truth: DataFrame,
+      approx: DataFrame): DataFrame = {
+    val truthCounts = truth.groupBy("query_id")
+      .agg(count(lit(1)).as("d"))
+    val hits = truth.join(approx, Seq("query_id", "neighbor_id"))
+      .groupBy("query_id").agg(count(lit(1)).as("n"))
+    q.select(col("vec_id").as("query_id"))
+      .join(truthCounts, Seq("query_id"))
+      .join(hits, Seq("query_id"), "left")
+      .select(lane, col("query_id"),
+        coalesce(col("n"), lit(0L)).as("n_hits"),
+        (coalesce(col("n"), lit(0L)).cast("double") /
+          col("d").cast("double")).as("recall"))
+  }
 
   /** IVF+PQ composed ANN (X292 — Jegou et al. 2011 §IVFADC, the
     * FAISS billion-vector layout: a coarse IVF quantizer prunes the
@@ -778,24 +784,13 @@ cents_${i + 1} AS MATERIALIZED (
       val truth = Similarity.bruteForceTopK(e, q,
           "vec_id", "embedding", "vec_id", "embedding", k = 10)
         .select("query_id", "neighbor_id")
-      val truthCounts = truth.groupBy("query_id")
-        .agg(count(lit(1)).as("d"))
       val index = ClusterQueries.ivf16Cached(s, d)
-      def laneOf(n: Int) = {
-        val approx = Similarity.ivfTopK(e, q, "vec_id", "embedding",
-            "vec_id", "embedding", k = 10, index, nprobe = n)
-          .select("query_id", "neighbor_id")
-        val hits = truth.join(approx, Seq("query_id", "neighbor_id"))
-          .groupBy("query_id").agg(count(lit(1)).as("n"))
-        q.select(col("vec_id").as("query_id"))
-          .join(truthCounts, Seq("query_id"))
-          .join(hits, Seq("query_id"), "left")
-          .select(lit(n).as("nprobe"), col("query_id"),
-            coalesce(col("n"), lit(0L)).as("n_hits"),
-            (coalesce(col("n"), lit(0L)).cast("double") /
-              col("d").cast("double")).as("recall"))
-      }
-      Seq(1, 2, 4, 8).map(laneOf).reduce(_.unionAll(_))
+      Seq(1, 2, 4, 8).map { n =>
+        recallRows(lit(n).as("nprobe"), q, truth,
+          Similarity.ivfTopK(e, q, "vec_id", "embedding",
+              "vec_id", "embedding", k = 10, index, nprobe = n)
+            .select("query_id", "neighbor_id"))
+      }.reduce(_.unionAll(_))
         .orderBy("nprobe", "query_id")
     })
 
@@ -834,17 +829,7 @@ cents_${i + 1} AS MATERIALIZED (
       val i8 = Similarity.int8TopK(e, q, "vec_id", "embedding",
           "vec_id", "embedding", k = 10)
         .select("query_id", "neighbor_id")
-      val truthCounts = truth.groupBy("query_id")
-        .agg(count(lit(1)).as("d"))
-      val hits = truth.join(i8, Seq("query_id", "neighbor_id"))
-        .groupBy("query_id").agg(count(lit(1)).as("n"))
-      q.select(col("vec_id").as("query_id"))
-        .join(truthCounts, Seq("query_id"))
-        .join(hits, Seq("query_id"), "left")
-        .select(lit("int8").as("method"), col("query_id"),
-          coalesce(col("n"), lit(0L)).as("n_hits"),
-          (coalesce(col("n"), lit(0L)).cast("double") /
-            col("d").cast("double")).as("recall"))
+      recallRows(lit("int8").as("method"), q, truth, i8)
         .orderBy("query_id")
     })
 

@@ -51,4 +51,17 @@ class LloydSpec extends SparkSuite {
       Seq(0.16000261230887305, 0.731440513411991, 0.6628679652796169),
       Seq(0.9138115486202572, 0.4061384660534476, 0.0)))
   }
+
+  test("fit: duplicate ids among the init rows are rejected, not " +
+      "broken silently") {
+    import spark.implicits._
+    val frame = Seq(
+      (0L, Seq(1.0, 0.0, 0.0)), (0L, Seq(0.0, 1.0, 0.0)),
+      (1L, Seq(0.0, 0.0, 1.0)), (2L, Seq(0.5, 0.5, 0.0)))
+      .toDF("id", "v")
+    val ex = intercept[IllegalArgumentException] {
+      Lloyd.fit(frame, "v", "id", k = 2, dim = 3, iters = 1)
+    }
+    assert(ex.getMessage.contains("duplicate id"))
+  }
 }

@@ -41,6 +41,10 @@ class MultimodalSpec extends SparkSuite {
       Array[Byte](-1, 0, 0, 0, -1, 0)
     val got = Multimodal.decodePpm(bytes).get
     assert(got === Multimodal.DecodedImage(2, 1, 0.5, 0.5, 0.0))
+    // the same header walk feeds the gray decoder: 299·255/1000 and
+    // 587·255/1000, integer-truncated
+    val gray = PerceptualHash.decodeGray(bytes).get
+    assert((gray._1, gray._2, gray._3.toSeq) === ((2, 1, Seq(76, 149))))
   }
 
   test("decodePpm: corrupt payloads degrade to None, never throw") {
@@ -52,6 +56,7 @@ class MultimodalSpec extends SparkSuite {
       "P6\n2 1\n65535\n".getBytes("ISO-8859-1"),       // 2-byte samples
       "P6 garbage".getBytes("ISO-8859-1"))
     bad.foreach(b => assert(Multimodal.decodePpm(b).isEmpty))
+    bad.foreach(b => assert(PerceptualHash.decodeGray(b).isEmpty))
   }
 
   test("decodeWav: golden clip decodes to exact rate, length, amplitude") {

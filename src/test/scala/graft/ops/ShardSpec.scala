@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.{SparkSuite, Tables}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 class ShardSpec extends SparkSuite {
 
@@ -103,9 +104,9 @@ class ShardSpec extends SparkSuite {
       assert(readIds() === expectedAll)
       assert(new java.io.File(s"$dir/data/c0").exists(),
         "old commit files should remain for time-travel/GC")
-      val (commit, entries) = Shard.readManifest(spark, dir)
+      val (commit, entries) = Shard.readTablesManifest(spark, dir)
       assert(commit === "c2")
-      assert(entries.forall(_._1.startsWith("data/c2/")))
+      assert(entries.forall(_._2.startsWith("data/c2/")))
 
       // COMMIT-ID REUSE is refused (ADVICE r15): overwriting data/c2
       // would delete files manifest.json still references — the torn
@@ -124,6 +125,37 @@ class ShardSpec extends SparkSuite {
       val dataDirs = new java.io.File(s"$dir/data").listFiles().map(_.getName)
       assert(dataDirs.toSet === Set(c3), s"GC left: ${dataDirs.toSeq}")
       assert(readIds() === expectedOld)
+    } finally {
+      org.apache.commons.io.FileUtils
+        .deleteDirectory(new java.io.File(dir))
+    }
+  }
+
+  test("writeShardedAtomic: one table 'shards' in the multi-table " +
+      "manifest, naming exactly the commit's parquet files") {
+    val docs = Tables.documents(spark, Sf0001)
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-manifest-shards").toString
+    try {
+      Shard.writeShardedAtomic(docs, "doc_id", 8, dir, commitId = "s0")
+      val onDisk = org.apache.commons.io.FileUtils
+        .listFiles(new java.io.File(s"$dir/data/s0"), Array("parquet"), true)
+        .asScala.toSeq
+        .map(f => f.getPath.stripPrefix(s"$dir/") -> f.length()).sorted
+      assert(onDisk.nonEmpty)
+      assert(onDisk.forall(_._1.startsWith("data/s0/shards/shard=")))
+      val (commit, entries) = Shard.readTablesManifest(spark, dir)
+      assert(commit === "s0")
+      assert(entries === onDisk.map(f => "shards" -> f._1))
+      assert(Shard.hasCommittedTables(spark, dir, Seq("shards")))
+      assert(!Shard.hasCommittedTables(spark, dir, Seq("shards", "docs")))
+      // the multi-table format, compact, fields in writer order
+      val text = java.nio.file.Files.readString(
+        java.nio.file.Paths.get(s"$dir/manifest.json"))
+      assert(text === onDisk.map { case (p, len) =>
+        s"""{"table":"shards","path":"$p","bytes":$len}"""
+      }.mkString("""{"commit":"s0","tables":["shards"],"files":[""", ",",
+        "]}"))
     } finally {
       org.apache.commons.io.FileUtils
         .deleteDirectory(new java.io.File(dir))
