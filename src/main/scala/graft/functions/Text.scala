@@ -45,11 +45,6 @@ object Text {
     * engines (DuckDB md5 matches), used for near-exact dedup. */
   def fingerprintMd5(text: Column): Column = md5(normalized(text))
 
-  /** Rolling-hash fingerprint (winnowing-style): minimum shingle hash —
-    * a single 64-bit document sketch. */
-  def fingerprintMin(text: Column, k: Int): Column =
-    array_min(hashed(wordShingles(text, k)))
-
   // ---- quality scoring ----
 
   /** Ratio of punctuation chars to total chars (0 for empty). */

@@ -46,7 +46,7 @@ object Packing {
     * flags documents that straddle the bin's end under the concat-
     * and-chunk cut. Window partitions are (stream, bin) — real keys
     * that shrink as the budget does, so no partition-less window ever
-    * appears (the PlanSpec gate). */
+    * appears (the QueriesSpec plan sweep). */
   def packSegments(df: DataFrame, textCol: String, streamCol: String,
       orderCol: String, budget: Long): DataFrame = {
     val seg = Window.partitionBy(col(streamCol), col("bin"))

@@ -238,7 +238,7 @@ object Similarity {
     * codes (ASC, neighbor-id tie-break — Hamming ties are COMMON at
     * 64 bits, so the tie-break is load-bearing for determinism).
     * Same broadcast-query full-scan contract as [[int8TopK]] —
-    * declared BNLJ-by-design in PlanSpec; the scale path buckets by
+    * declared BNLJ-by-design in QueriesSpec; the scale path buckets by
     * code prefix exactly like LSH. */
   def binaryTopK(corpus: DataFrame, queries: DataFrame,
       corpusId: String, corpusVec: String,

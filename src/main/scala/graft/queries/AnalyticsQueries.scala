@@ -2523,7 +2523,7 @@ cents_${i + 1} AS MATERIALIZED (
     * and X236's PQ (codebook axis)). Slices are zero-copy prefix
     * `slice()` lanes; cosine per level is the same X7 raw-ranked
     * device (bit-identical element-wise folds, id ties); the
-    * brute-force scans are declared BNLJ (PlanSpec bnljByDesign,
+    * brute-force scans are declared BNLJ (QueriesSpec bnljByDesign,
     * the X74 eval contract). recall exact-integer ratio. */
   val matryoshka = QueryDef(
     "q_matryoshka", {

@@ -259,7 +259,7 @@ ${x}pc_${s}_${i + 1} AS MATERIALIZED (
     * ADC join is code-table equi-joins (the 4×4 tables are driver
     * literals, bit-identical on both engines because the fold order
     * is pinned); the one declared-BNLJ lane is the exact ground truth
-    * (PlanSpec bnljByDesign, the X74 eval discipline). recall@10
+    * (QueriesSpec bnljByDesign, the X74 eval discipline). recall@10
     * exact-integer ratio. */
   // PQ training/encode/ADC-table SQL fragments, shared verbatim by
   // q_pq_recall and q_ann_ivfpq (the composed index must quantize with

@@ -529,6 +529,29 @@ object GraphQueries {
 
   // --------------------------- X102 ranking agreement (Spearman's ρ)
 
+  /** PageRank and HITS-authority rankings of the domain graph, the
+    * shared prelude of the three rank-comparison rows: `(v, rPr)` and
+    * `(v, rAuth)`, ranked (score DESC, v) by the X75 two-pass
+    * [[graft.ops.PrefixSum]] device — no global window. */
+  private def prHitsRanks(s: org.apache.spark.sql.SparkSession, d: String,
+      rPr: String, rAuth: String)
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    val edges = domainEdges(s, d)
+    // r20 (guide §2.6): the two iterative kernels are independent —
+    // overlap their per-round driver actions on two threads
+    val (pr, ht) = graft.ops.Par.two(
+      graft.ops.PageRank.run(edges, "src", "dst",
+        CurationQueries.PrIters, CurationQueries.PrDamping),
+      graft.ops.Hits.run(edges, "src", "dst", HitsRounds))
+    def rank(df: org.apache.spark.sql.DataFrame, score: String,
+        out: String) =
+      graft.ops.PrefixSum.runningTotalDesc(
+          df.withColumn("__one", lit(1L)), "__one", score, "v", out)
+        .select(col("v"), col(out))
+    (rank(pr.select(col("v"), col("pr")), "pr", rPr),
+      rank(ht.select(col("v"), col("auth")), "auth", rAuth))
+  }
+
   /** Spearman rank agreement between PageRank and HITS authority
     * (X102 — the X74 eval discipline applied to the graph rankings:
     * before swapping one centrality for a cheaper one, measure how
@@ -564,21 +587,9 @@ object GraphQueries {
                        CAST(COUNT(*) AS DOUBLE) - 1.0)) AS rho
             FROM dd"""),
     (s, d) => {
-      val edges = domainEdges(s, d)
-      // r20 (guide §2.6): the two iterative kernels are independent —
-      // overlap their per-round driver actions on two threads
-      val (pr, ht) = graft.ops.Par.two(
-        graft.ops.PageRank.run(edges, "src", "dst",
-          CurationQueries.PrIters, CurationQueries.PrDamping),
-        graft.ops.Hits.run(edges, "src", "dst", HitsRounds))
-      def rank(df: org.apache.spark.sql.DataFrame, score: String) =
-        graft.ops.PrefixSum.runningTotalDesc(
-            df.withColumn("__one", lit(1L)), "__one", score, "v", "r")
-          .select(col("v"), col("r"))
-      val rp = rank(pr.select(col("v"), col("pr")), "pr")
-      val ra = rank(ht.select(col("v"), col("auth")), "auth")
+      val (rp, ra) = prHitsRanks(s, d, "r", "r2")
       val n = col("n_nodes").cast("double")
-      rp.join(ra.withColumnRenamed("r", "r2"), "v")
+      rp.join(ra, "v")
         .select((col("r") - col("r2")).as("d"))
         .agg(count(lit(1)).as("n_nodes"),
           sum(col("d") * col("d")).as("sum_d2"))
@@ -620,19 +631,7 @@ object GraphQueries {
                      AS BIGINT) AS fused_rank
             FROM f ORDER BY fused_rank"""),
     (s, d) => {
-      val edges = domainEdges(s, d)
-      // r20 (guide §2.6): independent kernels overlap on two threads
-      val (pr, ht) = graft.ops.Par.two(
-        graft.ops.PageRank.run(edges, "src", "dst",
-          CurationQueries.PrIters, CurationQueries.PrDamping),
-        graft.ops.Hits.run(edges, "src", "dst", HitsRounds))
-      def rank(df: org.apache.spark.sql.DataFrame, score: String,
-          out: String) =
-        graft.ops.PrefixSum.runningTotalDesc(
-            df.withColumn("__one", lit(1L)), "__one", score, "v", out)
-          .select(col("v"), col(out))
-      val rp = rank(pr.select(col("v"), col("pr")), "pr", "r_pr")
-      val ra = rank(ht.select(col("v"), col("auth")), "auth", "r_auth")
+      val (rp, ra) = prHitsRanks(s, d, "r_pr", "r_auth")
       val f = rp.join(ra, "v")
         .select(col("v"), col("r_pr"), col("r_auth"),
           (lit(1.0) / (lit(60.0) + col("r_pr").cast("double")) +
@@ -707,20 +706,8 @@ object GraphQueries {
     },
     (s, d) => {
       val P = 0.9
-      val edges = domainEdges(s, d)
-      // r20 (guide §2.6): independent kernels overlap on two threads
-      val (pr, ht) = graft.ops.Par.two(
-        graft.ops.PageRank.run(edges, "src", "dst",
-          CurationQueries.PrIters, CurationQueries.PrDamping),
-        graft.ops.Hits.run(edges, "src", "dst", HitsRounds))
-      def rank(df: org.apache.spark.sql.DataFrame, score: String,
-          out: String) =
-        graft.ops.PrefixSum.runningTotalDesc(
-            df.withColumn("__one", lit(1L)), "__one", score, "v", out)
-          .select(col("v"), col(out))
-      val rp = rank(pr.select(col("v"), col("pr")), "pr", "r_pr")
-        .localCheckpoint(true) // count action + the rank join
-      val ra = rank(ht.select(col("v"), col("auth")), "auth", "r_auth")
+      val (rp0, ra) = prHitsRanks(s, d, "r_pr", "r_auth")
+      val rp = rp0.localCheckpoint(true) // count action + the rank join
       val n = rp.count() // bounded action: list length
       val dep = s.range(1, n + 1).select(col("id").as("d"))
         .withColumn("t",

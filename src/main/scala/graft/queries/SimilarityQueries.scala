@@ -3340,7 +3340,7 @@ ORDER BY id_a, id_b"""
     * the 20-query slice), so the scan-fraction-vs-recall trade of the
     * SERVED graph reads next to q_knn_graph_search's exact-scaffold
     * row. The oracle replays build + walk end to end; the truth lane
-    * is the declared 20-query brute force (PlanSpec bnljByDesign).
+    * is the declared 20-query brute force (QueriesSpec bnljByDesign).
     * Serving cost is ~1 + beam·k·hops scored candidates regardless
     * of corpus size — the sf1 probe reads this row's ratio. */
   val annGraphIndexQuery = QueryDef(
@@ -3374,7 +3374,7 @@ ORDER BY id_a, id_b"""
     * exact (the IvfPqSpec occupancy identity's graph twin). The
     * oracle replays build + all four walks in ONE statement
     * (prefixed CTE chains); truth is the shared 20-query brute-force
-    * lane (declared, PlanSpec bnljByDesign). Round17Spec pins the
+    * lane (declared, QueriesSpec bnljByDesign). Round17Spec pins the
     * measured trade: widening the beam buys recall with scan, and
     * the curve's endpoints bracket the q_ann_graph_index_query
     * operating point. */
@@ -3584,7 +3584,7 @@ ORDER BY id_a, id_b"""
     * min(k, |truth ∩ visited|), monotone in the visited set —
     * Round19Spec pins both the superset and the recall dominance).
     * Truth is the exact top-k over the PASSING corpus for the
-    * 20-query slice (declared brute force, PlanSpec bnljByDesign —
+    * 20-query slice (declared brute force, QueriesSpec bnljByDesign —
     * the X74 discipline). n_scored is the exact per-lane visited
     * volume, so the recall-vs-scan price of filter-awareness reads
     * directly off the result. Serving cost stays ~beam·k·hops scored

@@ -3225,7 +3225,7 @@ tt$x AS (SELECT CAST(SUM(freq) AS BIGINT) AS t FROM words$x)"""
     * with map-side combine; the doc-count total is the constant-key
     * 1-row broadcast; the df join is a vocab-keyed equi-join (too big
     * to broadcast at corpus scale); top-k per doc is a PARTITIONED
-    * row_number window (PlanSpec-legal). Counts are integers; the one
+    * row_number window (plan-sweep-legal). Counts are integers; the one
     * ln is qround(6)'d (X63 transcendental discipline) and the
     * tf·idf product is elementwise-exact, so scores hash raw. */
   val tfidfKeywords = QueryDef(

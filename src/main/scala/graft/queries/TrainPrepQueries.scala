@@ -108,7 +108,7 @@ object TrainPrepQueries {
     * q_pack_bins): within each (source, bin), documents are numbered
     * (segment_id) and straddlers flagged (truncated). Windows
     * partition by REAL keys that shrink with the budget — no
-    * partition-less window (the PlanSpec gate). */
+    * partition-less window (the QueriesSpec plan sweep). */
   val packSegments = QueryDef(
     "q_pack_segments",
     Some(s"""WITH p AS (

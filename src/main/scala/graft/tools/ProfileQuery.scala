@@ -3,6 +3,7 @@ package graft.tools
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.graftshim.Bus.drain
 
 /** Per-query timing and execution profile for plan iteration (dev
   * tool — the gate-facing figure stays Bench, which runs the whole
@@ -84,12 +85,12 @@ object ProfileQuery {
       // second run profiled: steady-state, fits/indices warm — the
       // shape Bench's best-of-2 measures
       val first = run(name)
+      drain(spark.sparkContext)
       Seq(jobs, stages, tasks).foreach(_.set(0))
       Seq(taskMs, shufR, shufW).foreach(_.set(0L))
       siteAgg.clear()
       val wall = run(name)
-      // listener bus is async; give it a beat to drain
-      Thread.sleep(300)
+      drain(spark.sparkContext)
       println(f"[time] $name%-32s best ${math.min(first, wall)}%6.2f s  (runs: $first%.2f, $wall%.2f)")
       println(f"[profile] $name%-34s wall ${wall}%7.2f s  jobs ${jobs.get()}%4d  stages ${stages.get()}%5d  tasks ${tasks.get()}%6d  taskTime ${taskMs.get() / 1000.0}%8.1f s  shufR ${shufR.get() / 1048576.0}%8.1f MiB  shufW ${shufW.get() / 1048576.0}%8.1f MiB")
       if (byType) {

@@ -3,6 +3,7 @@ package graft.tools
 import graft.functions.{HashFunctions, ShingleFunctions}
 import graft.ops.{Dedup, Similarity}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Bus.drain
 
 /** Scale-headroom probe: runs the hot operators on synthetic data 1-2
   * orders of magnitude past sf0.1 to verify the shuffle/partition
@@ -89,12 +90,12 @@ object Stress {
         }
       })
     def timeShuffle(name: String)(f: => Any): Unit = if (enabled(name)) {
-      Thread.sleep(300)
+      drain(spark.sparkContext)
       val s0 = shuffleW.get
       val t0 = System.nanoTime()
       val r = f
       val secs = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(700) // let straggler task-end events drain
+      drain(spark.sparkContext)
       val gb = (shuffleW.get - s0) / 1e9
       println(f"$name%-40s $secs%8.2f s  (shuffle $gb%.2f GB written) ($r)")
     }

@@ -9,8 +9,6 @@ import org.apache.spark.sql.functions._
 class AlsSpec extends SparkSuite {
   import spark.implicits._
 
-  private def q6(x: Double) = math.floor(x * 1e6 + 0.5) / 1e6
-
   test("solve: matches the driver closed form on one entity") {
     // one user, two rated items with factors (1, .2) and (1, -.1)
     val j = Seq(

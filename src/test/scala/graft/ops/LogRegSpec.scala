@@ -24,7 +24,6 @@ class LogRegSpec extends SparkSuite {
     val got = LogReg.fit(df, "xs", "y", dims = 3, iters = 6,
       lrs = Seq(1.0)).head._1
     // driver replay with the identical qround(6) lanes
-    def q6(x: Double) = math.floor(x * 1e6 + 0.5) / 1e6
     var w = Array(0.0, 0.0, 0.0)
     for (_ <- 1 to 6) {
       val g = Array.fill(3)(0.0)

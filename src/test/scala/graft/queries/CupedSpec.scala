@@ -32,7 +32,6 @@ class CupedSpec extends SparkSuite {
   }
 
   test("theta and the raw uplift match a driver recompute") {
-    def q6(v: Double) = math.floor(v * 1e6 + 0.5) / 1e6
     val n = users.length.toDouble
     val mx = q6(users.map(_._2).sum / n)
     val my = q6(users.map(_._3).sum / n)

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{SparkEntry, SparkSuite}
+import graft.SparkSuite
 import graft.ops.Concentration
 import org.apache.spark.sql.functions._
 
@@ -8,9 +8,6 @@ import org.apache.spark.sql.functions._
   * statistics must MEAN what they claim (hand-checked closed forms on
   * synthetic rows, plus semantic invariants at sf0.001). */
 class DiagnosticsSpec extends SparkSuite {
-
-  private def run(name: String) =
-    SparkEntry.queries(name)(spark, Sf0001)
 
   test("Concentration.giniByGroup: uniform magnitudes give gini 0") {
     import spark.implicits._
@@ -36,7 +33,7 @@ class DiagnosticsSpec extends SparkSuite {
   }
 
   test("q_engagement_gini: bounded and consistent with event totals") {
-    val rows = run("q_engagement_gini").collect()
+    val rows = query("q_engagement_gini").collect()
     assert(rows.nonEmpty)
     val total = rows.map(_.getLong(2)).sum
     val nEvents = spark.read.parquet(s"$Sf0001/events.parquet").count()
@@ -48,7 +45,7 @@ class DiagnosticsSpec extends SparkSuite {
   }
 
   test("q_mad_outliers: fences and counts are coherent") {
-    val rows = run("q_mad_outliers").collect()
+    val rows = query("q_mad_outliers").collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getLong(1) > 0)                      // n_docs
@@ -60,7 +57,7 @@ class DiagnosticsSpec extends SparkSuite {
   }
 
   test("q_trimmed_mean: trimmed/winsorized land inside the fences") {
-    val rows = run("q_trimmed_mean").collect()
+    val rows = query("q_trimmed_mean").collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (lo, hi) = (r.getDouble(1), r.getDouble(2))
@@ -75,7 +72,7 @@ class DiagnosticsSpec extends SparkSuite {
   }
 
   test("q_benford: shares partition the order population") {
-    val rows = run("q_benford").collect()
+    val rows = query("q_benford").collect()
     assert(rows.map(_.getInt(0)).toSet.subsetOf((1 to 9).toSet))
     val nOrders = spark.read.parquet(s"$Sf0001/orders.parquet")
       .filter(col("o_totalprice") >= 1).count()
@@ -88,7 +85,7 @@ class DiagnosticsSpec extends SparkSuite {
   }
 
   test("q_annotator_kappa: chance-corrected identity holds") {
-    val r = run("q_annotator_kappa").head()
+    val r = query("q_annotator_kappa").head()
     val (po, pe, k) = (r.getDouble(2), r.getDouble(3), r.getDouble(4))
     assert(po >= 0.0 && po <= 1.0)
     assert(pe > 0.0 && pe < 1.0)
@@ -99,7 +96,7 @@ class DiagnosticsSpec extends SparkSuite {
   }
 
   test("q_ewma_chart: head of each series equals its first observation") {
-    val rows = run("q_ewma_chart").collect()
+    val rows = query("q_ewma_chart").collect()
     assert(rows.nonEmpty)
     val firstByType = rows.groupBy(_.getString(0))
       .map { case (_, rs) => rs.minBy(_.getDate(1).getTime) }
@@ -115,7 +112,7 @@ class DiagnosticsSpec extends SparkSuite {
   }
 
   test("q_ks_test: D rows are true ECDF gaps and respect the critical band") {
-    val rows = run("q_ks_test").collect()
+    val rows = query("q_ks_test").collect()
     assert(rows.nonEmpty && rows.length <= 20)
     val (nA, nB) = (rows.head.getLong(6), rows.head.getLong(7))
     val crit = rows.head.getDouble(8)
@@ -135,7 +132,7 @@ class DiagnosticsSpec extends SparkSuite {
   }
 
   test("q_psi_drift: nonnegative-ish and small on a stationary stream") {
-    val rows = run("q_psi_drift").collect()
+    val rows = query("q_psi_drift").collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getLong(1) > 0 && r.getLong(2) > 0)
@@ -151,7 +148,7 @@ class DiagnosticsSpec extends SparkSuite {
   }
 
   test("q_markov_transitions: rows of the matrix are distributions") {
-    val rows = run("q_markov_transitions").collect()
+    val rows = query("q_markov_transitions").collect()
     assert(rows.nonEmpty)
     val byFrom = rows.groupBy(_.getString(0))
     byFrom.foreach { case (from, rs) =>
@@ -163,7 +160,7 @@ class DiagnosticsSpec extends SparkSuite {
   }
 
   test("q_burstiness: B is the (σ−μ)/(σ+μ) of its own μ/σ columns") {
-    val rows = run("q_burstiness").collect()
+    val rows = query("q_burstiness").collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getLong(1) > 0)
@@ -181,17 +178,17 @@ class DiagnosticsSpec extends SparkSuite {
   }
 
   test("q_stream_transitions equals the batch matrix row for row") {
-    val batch = run("q_markov_transitions").collect()
+    val batch = query("q_markov_transitions").collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2),
         r.getLong(3), r.getDouble(4)))
-    val stream = run("q_stream_transitions").collect()
+    val stream = query("q_stream_transitions").collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2),
         r.getLong(3), r.getDouble(4)))
     assert(stream.toSeq === batch.toSeq)
   }
 
   test("q_ooo_depth: shares partition the stream, depth is banded") {
-    val rows = run("q_ooo_depth").collect()
+    val rows = query("q_ooo_depth").collect()
     assert(rows.nonEmpty)
     // the block-16 dressing must actually produce late rows
     assert(rows.length > 1, "histogram collapsed to one band")
@@ -205,7 +202,7 @@ class DiagnosticsSpec extends SparkSuite {
   }
 
   test("q_top_paths: step counts match the path strings") {
-    val rows = run("q_top_paths").collect()
+    val rows = query("q_top_paths").collect()
     assert(rows.nonEmpty && rows.length <= 20)
     rows.foreach { r =>
       val path = r.getString(0)
@@ -219,7 +216,7 @@ class DiagnosticsSpec extends SparkSuite {
   }
 
   test("q_silhouette: bounded scores over the full embedding set") {
-    val rows = run("q_silhouette").collect()
+    val rows = query("q_silhouette").collect()
     assert(rows.nonEmpty)
     val nVecs = spark.read.parquet(s"$Sf0001/embeddings.parquet").count()
     assert(rows.map(_.getLong(1)).sum === nVecs)
@@ -233,7 +230,7 @@ class DiagnosticsSpec extends SparkSuite {
   }
 
   test("q_ri_audit: this corpus's keys are fully referenced (the contract)") {
-    val rows = run("q_ri_audit").collect()
+    val rows = query("q_ri_audit").collect()
     assert(rows.length === 5)
     rows.foreach { r =>
       assert(r.getLong(1) > 0, s"${r.getString(0)} empty child")
@@ -245,7 +242,7 @@ class DiagnosticsSpec extends SparkSuite {
   }
 
   test("q_islands: island multiset re-covers every event") {
-    val rows = run("q_islands").collect()
+    val rows = query("q_islands").collect()
     assert(rows.nonEmpty)
     val nEvents = spark.read.parquet(s"$Sf0001/events.parquet").count()
     // Σ (run_len × n_islands) over the profile = total events
@@ -254,7 +251,7 @@ class DiagnosticsSpec extends SparkSuite {
   }
 
   test("q_funnel_latency: legs are ordered and compose") {
-    val rows = run("q_funnel_latency").collect()
+    val rows = query("q_funnel_latency").collect()
     assert(rows.length === 3)
     val byLeg = rows.map(r => r.getString(0) ->
       (r.getLong(1), r.getDouble(2), r.getDouble(3), r.getDouble(4))).toMap
@@ -272,7 +269,7 @@ class DiagnosticsSpec extends SparkSuite {
   }
 
   test("q_recency_score: decay weights are sane and ranking is strict") {
-    val rows = run("q_recency_score").collect()
+    val rows = query("q_recency_score").collect()
     assert(rows.nonEmpty && rows.length <= 20)
     rows.foreach(r => assert(r.getLong(1) > 0))
     val scores = rows.map(_.getDouble(2))
@@ -280,7 +277,7 @@ class DiagnosticsSpec extends SparkSuite {
   }
 
   test("q_ab_test: pooled z identity and cohort exhaustiveness") {
-    val r = run("q_ab_test").head()
+    val r = query("q_ab_test").head()
     val (na, ca, nb, cb) = (r.getLong(0), r.getLong(1), r.getLong(3),
       r.getLong(4))
     assert(ca <= na && cb <= nb)
@@ -302,7 +299,7 @@ class DiagnosticsSpec extends SparkSuite {
   }
 
   test("q_followed_by: support bounded by antecedent cohort") {
-    val rows = run("q_followed_by").collect()
+    val rows = query("q_followed_by").collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getLong(2) <= r.getLong(3),
@@ -316,7 +313,7 @@ class DiagnosticsSpec extends SparkSuite {
   }
 
   test("q_corr_matrix: correlations are bounded") {
-    val r = run("q_corr_matrix").head()
+    val r = query("q_corr_matrix").head()
     (0 until 6).foreach { i =>
       val c = r.getDouble(i)
       assert(c >= -1.0 && c <= 1.0, s"col $i: $c")
@@ -324,7 +321,7 @@ class DiagnosticsSpec extends SparkSuite {
   }
 
   test("q_pareto_coverage: thresholds are monotone and exact") {
-    val r = run("q_pareto_coverage").head()
+    val r = query("q_pareto_coverage").head()
     val (nUsers, nEvents) = (r.getLong(0), r.getLong(1))
     val (n50, n80, n95) = (r.getLong(2), r.getLong(3), r.getLong(4))
     assert(n50 <= n80 && n80 <= n95 && n95 <= nUsers)
@@ -341,7 +338,7 @@ class DiagnosticsSpec extends SparkSuite {
   }
 
   test("q_window_ranks: relative ranks behave per definition") {
-    val rows = run("q_window_ranks").collect()
+    val rows = query("q_window_ranks").collect()
     assert(rows.nonEmpty)
     val byPart = rows.groupBy(_.getString(0))
     byPart.foreach { case (prio, rs) =>
@@ -360,7 +357,7 @@ class DiagnosticsSpec extends SparkSuite {
   }
 
   test("q_cdc_compact: one current row per key, latest version wins") {
-    val rows = run("q_cdc_compact").collect()
+    val rows = query("q_cdc_compact").collect()
     val nUsers = spark.read.parquet(s"$Sf0001/events.parquet")
       .select("user_id").distinct().count()
     assert(rows.length === nUsers)
@@ -380,7 +377,7 @@ class DiagnosticsSpec extends SparkSuite {
   }
 
   test("q_kmv_union: merged sketch estimate is within contract") {
-    val rows = run("q_kmv_union").collect()
+    val rows = query("q_kmv_union").collect()
     assert(rows.map(_.getString(0)).contains("<union>"))
     rows.foreach { r =>
       assert(r.getBoolean(3),
@@ -394,7 +391,7 @@ class DiagnosticsSpec extends SparkSuite {
   }
 
   test("q_html_extract: every document round-trips through the markup") {
-    val rows = run("q_html_extract").collect()
+    val rows = query("q_html_extract").collect()
     val nDocs = spark.read.parquet(s"$Sf0001/documents.parquet").count()
     assert(rows.length === nDocs)
     rows.foreach { r =>
@@ -404,7 +401,7 @@ class DiagnosticsSpec extends SparkSuite {
   }
 
   test("q_coverage_at_k: monotone in k, exact at the tail") {
-    val rows = run("q_coverage_at_k").collect().sortBy(_.getInt(0))
+    val rows = query("q_coverage_at_k").collect().sortBy(_.getInt(0))
     assert(rows.length === 3)
     val covs = rows.map(_.getDouble(4))
     assert(covs.toSeq === covs.sorted.toSeq)
@@ -417,7 +414,7 @@ class DiagnosticsSpec extends SparkSuite {
   }
 
   test("q_interval_union: dwell time between single-interval and sum bounds") {
-    val rows = run("q_interval_union").collect()
+    val rows = query("q_interval_union").collect()
     assert(rows.nonEmpty)
     val perUser = graft.Tables.events(spark, Sf0001)
       .groupBy("user_id").agg(count(lit(1)).as("n"))
@@ -434,7 +431,7 @@ class DiagnosticsSpec extends SparkSuite {
   }
 
   test("q_setjoin_prefix: pairs are genuine near-dups above threshold") {
-    val rows = run("q_setjoin_prefix").collect()
+    val rows = query("q_setjoin_prefix").collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (inter, sa, sb) = (r.getLong(2), r.getLong(3), r.getLong(4))
@@ -447,7 +444,7 @@ class DiagnosticsSpec extends SparkSuite {
   }
 
   test("q_graph_shape: bounded whole-graph statistics") {
-    val r = SparkEntry.queries("q_graph_shape")(spark, Sf0001).head()
+    val r = query("q_graph_shape").head()
     assert(r.getLong(0) > 0)
     assert(r.getLong(1) <= r.getLong(0))
     val rec = r.getDouble(2)
@@ -457,7 +454,7 @@ class DiagnosticsSpec extends SparkSuite {
   }
 
   test("q_welch_ttest: t recomputes from its own moments") {
-    val r = run("q_welch_ttest").head()
+    val r = query("q_welch_ttest").head()
     val (na, ma, va) = (r.getLong(0), r.getDouble(1), r.getDouble(2))
     val (nb, mb, vb) = (r.getLong(3), r.getDouble(4), r.getDouble(5))
     assert(na > 1 && nb > 1)
@@ -475,7 +472,7 @@ class DiagnosticsSpec extends SparkSuite {
   }
 
   test("q_item_cosine: cosine is a true cosine over the rating vectors") {
-    val rows = run("q_item_cosine").collect()
+    val rows = query("q_item_cosine").collect()
     assert(rows.length === 10) // 5 choose 2 pairs
     rows.foreach { r =>
       assert(r.getString(0) < r.getString(1))
@@ -486,7 +483,7 @@ class DiagnosticsSpec extends SparkSuite {
   }
 
   test("q_lsh_dedup_eval: grading identities hold") {
-    val r = run("q_lsh_dedup_eval").head()
+    val r = query("q_lsh_dedup_eval").head()
     val (nL, nE, nH) = (r.getLong(0), r.getLong(1), r.getLong(2))
     assert(nH <= nL && nH <= nE)
     assert(nL > 0 && nE > 0)
@@ -495,7 +492,7 @@ class DiagnosticsSpec extends SparkSuite {
   }
 
   test("q_kaplan_meier: survival is a proper decreasing step function") {
-    val rows = run("q_kaplan_meier").collect().sortBy(_.getLong(0))
+    val rows = query("q_kaplan_meier").collect().sortBy(_.getLong(0))
     assert(rows.nonEmpty)
     val nUsers = graft.Tables.events(spark, Sf0001)
       .select("user_id").distinct().count()
@@ -516,7 +513,7 @@ class DiagnosticsSpec extends SparkSuite {
   }
 
   test("q_mutual_info: MI recomputes from its own cells and is ≥ 0-ish") {
-    val rows = run("q_mutual_info").collect()
+    val rows = query("q_mutual_info").collect()
     assert(rows.nonEmpty)
     val total = rows.map(_.getLong(2)).sum
     val mi = rows.head.getDouble(4)
@@ -533,7 +530,7 @@ class DiagnosticsSpec extends SparkSuite {
     // within_tol flag come from the same collected rows (ADVICE r11 —
     // the second run only re-launched the AvailableNow job to re-read
     // a column already present in the first collect)
-    val rows = run("q_stream_kmv").collect()
+    val rows = query("q_stream_kmv").collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (exact, est) = (r.getLong(1), r.getDouble(2))
@@ -549,7 +546,7 @@ class DiagnosticsSpec extends SparkSuite {
     // one run; both the quantile pins and the outlier recount read the
     // same collected rows (same single-collect discipline as
     // q_stream_kmv above)
-    val rows = run("q_boxplot").collect()
+    val rows = query("q_boxplot").collect()
     val got = rows
       .map(r => r.getString(0) ->
         ((r.getDouble(2), r.getDouble(3), r.getDouble(4)))).toMap
@@ -575,7 +572,7 @@ class DiagnosticsSpec extends SparkSuite {
   }
 
   test("q_seasonal_dow: flag fires exactly per its own ratio") {
-    val rows = run("q_seasonal_dow").collect()
+    val rows = query("q_seasonal_dow").collect()
     assert(rows.nonEmpty)
     val nEvents = graft.Tables.events(spark, Sf0001).count()
     assert(rows.map(_.getLong(3)).sum === nEvents)
@@ -588,7 +585,7 @@ class DiagnosticsSpec extends SparkSuite {
   }
 
   test("q_quantile_normalize: the mapped value is the true pooled quantile") {
-    val rows = run("q_quantile_normalize").collect()
+    val rows = query("q_quantile_normalize").collect()
     val docs = spark.read.parquet(s"$Sf0001/documents.parquet")
       .select("n_chars").collect().map(_.getLong(0)).sorted
     val n = docs.length
@@ -610,7 +607,7 @@ class DiagnosticsSpec extends SparkSuite {
   }
 
   test("q_balanced_sample: k per class, deterministically drawn") {
-    val rows = run("q_balanced_sample").collect()
+    val rows = query("q_balanced_sample").collect()
     val byLang = rows.groupBy(_.getString(0))
     val langSizes = spark.read.parquet(s"$Sf0001/documents.parquet")
       .groupBy("lang").count()
@@ -627,7 +624,7 @@ class DiagnosticsSpec extends SparkSuite {
   }
 
   test("q_heaps_law: growth curve is monotone and β is sublinear-ish") {
-    val rows = run("q_heaps_law").collect().sortBy(_.getInt(0))
+    val rows = query("q_heaps_law").collect().sortBy(_.getInt(0))
     assert(rows.length === 10)
     val toks = rows.map(_.getLong(2))
     val vocab = rows.map(_.getLong(3))

@@ -1,17 +1,14 @@
 package graft.queries
 
-import graft.{SparkEntry, SparkSuite}
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
 /** Contracts of the round-10 measurement/analysis queries beyond the
   * oracle hash: the metrics they emit must MEAN what they claim. */
 class EvalQueriesSpec extends SparkSuite {
 
-  private def run(name: String) =
-    SparkEntry.queries(name)(spark, Sf0001)
-
   test("q_countmin_freq: one-sided guarantee and εN error bound") {
-    val rows = run("q_countmin_freq").collect()
+    val rows = query("q_countmin_freq").collect()
     val nUsers = graft.Tables.events(spark, Sf0001)
       .select("user_id").distinct().count()
     assert(rows.length === math.min(20L, nUsers))
@@ -35,7 +32,7 @@ class EvalQueriesSpec extends SparkSuite {
   }
 
   test("q_quantile_sketch: estimates track exact quantiles") {
-    val est = run("q_quantile_sketch").collect()
+    val est = query("q_quantile_sketch").collect()
       .map(r => r.getDouble(0) -> r.getDouble(1)).toMap
     val exact = spark.read
       .parquet(s"$Sf0001/lineitem.parquet")
@@ -55,7 +52,7 @@ class EvalQueriesSpec extends SparkSuite {
   }
 
   test("q_script_id: planted script runs dominate as designed") {
-    val rows = run("q_script_id").collect()
+    val rows = query("q_script_id").collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val id = r.getLong(0)
@@ -77,7 +74,7 @@ class EvalQueriesSpec extends SparkSuite {
   }
 
   test("q_classifier_eval: metric identities and learnable signal") {
-    val r = run("q_classifier_eval").head()
+    val r = query("q_classifier_eval").head()
     val (nPos, nNeg) = (r.getLong(0), r.getLong(1))
     val (tp, fp, fn) = (r.getLong(2), r.getLong(3), r.getLong(4))
     val auc = r.getDouble(5)
@@ -90,7 +87,7 @@ class EvalQueriesSpec extends SparkSuite {
   }
 
   test("q_temperature_mix: α<1 upweights the low-resource pool") {
-    val rows = run("q_temperature_mix").collect()
+    val rows = query("q_temperature_mix").collect()
       .map(r => r.getString(0) ->
         (r.getDouble(2), r.getDouble(3), r.getLong(4))).toMap
     val (rawLow, shareLow, _) = rows("low")
@@ -102,7 +99,7 @@ class EvalQueriesSpec extends SparkSuite {
   }
 
   test("q_curation_audit: reason encodes the first failing policy") {
-    val rows = run("q_curation_audit").collect()
+    val rows = query("q_curation_audit").collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (cont, qok, dup) =
@@ -122,7 +119,7 @@ class EvalQueriesSpec extends SparkSuite {
   }
 
   test("q_robots_eval: group scoping and longest-match semantics") {
-    val rows = run("q_robots_eval").collect()
+    val rows = query("q_robots_eval").collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val src = r.getString(1)
@@ -153,7 +150,7 @@ class EvalQueriesSpec extends SparkSuite {
   }
 
   test("q_bitext_mine: margin gate and per-source uniqueness") {
-    val rows = run("q_bitext_mine").collect()
+    val rows = query("q_bitext_mine").collect()
     assert(rows.nonEmpty)
     // one best candidate per source id; sides respect the parity split
     val ids = rows.map(_.getLong(0))
@@ -170,13 +167,13 @@ class EvalQueriesSpec extends SparkSuite {
   }
 
   test("q_neyman_alloc: exhaustive quotas, nonnegative sigma") {
-    val rows = run("q_neyman_alloc").collect()
+    val rows = query("q_neyman_alloc").collect()
     assert(rows.map(_.getLong(3)).sum === 100L)
     rows.foreach(r => assert(r.getDouble(2) >= 0.0, r))
   }
 
   test("q_dedup_yield: the histogram accounts for every document") {
-    val rows = run("q_dedup_yield").collect()
+    val rows = query("q_dedup_yield").collect()
     val nDocs = spark.read.parquet(s"$Sf0001/documents.parquet").count()
     assert(rows.map(_.getLong(2)).sum === nDocs)
     rows.foreach { r =>
@@ -186,10 +183,10 @@ class EvalQueriesSpec extends SparkSuite {
   }
 
   test("q_classifier_calibration: accounting and sigmoid monotonicity") {
-    val rows = run("q_classifier_calibration").collect()
+    val rows = query("q_classifier_calibration").collect()
     assert(rows.nonEmpty)
     // buckets partition the classifier's scoring frame
-    val nScored = run("q_hash_classifier").count()
+    val nScored = query("q_hash_classifier").count()
     assert(rows.map(_.getLong(1)).sum === nScored)
     rows.foreach { r =>
       assert(r.getLong(2) <= r.getLong(1), r)
@@ -203,7 +200,7 @@ class EvalQueriesSpec extends SparkSuite {
   }
 
   test("q_langid_eval: shares sum to 1 within every labeled language") {
-    val rows = run("q_langid_eval").collect()
+    val rows = query("q_langid_eval").collect()
     rows.groupBy(_.getString(0)).foreach { case (lang, rs) =>
       val total = rs.map(_.getDouble(3)).sum
       assert(math.abs(total - 1.0) < 1e-9, s"$lang -> $total")
@@ -211,7 +208,7 @@ class EvalQueriesSpec extends SparkSuite {
   }
 
   test("q_ann_recall: recall bounded, exact baseline would be 1.0") {
-    val rows = run("q_ann_recall").collect()
+    val rows = query("q_ann_recall").collect()
     assert(rows.length === 10) // 2 methods × 5 queries
     rows.foreach { r =>
       val (hits, rec) = (r.getLong(2), r.getDouble(3))

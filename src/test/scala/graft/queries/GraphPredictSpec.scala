@@ -23,7 +23,6 @@ class GraphPredictSpec extends SparkSuite {
       .toSet
     val nb = und.flatMap { case (a, b) => Seq(a -> b, b -> a) }
       .groupBy(_._1).map { case (v, s) => v -> s.map(_._2) }
-    def q6(x: Double) = math.floor(x * 1e6 + 0.5) / 1e6
     val want = (for {
       a <- nb.keys; b <- nb.keys
       if a < b && !und.contains((a, b))

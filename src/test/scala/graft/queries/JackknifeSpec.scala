@@ -10,7 +10,6 @@ class JackknifeSpec extends SparkSuite {
     .collect()
 
   test("leave-one-out ratios and se match a driver recompute") {
-    def q6(v: Double) = math.floor(v * 1e6 + 0.5) / 1e6
     val xs = out.map(_.getAs[Long]("n_docs"))
     val ys = out.map(_.getAs[Long]("n_en"))
     val (tx, ty, g) = (xs.sum, ys.sum, out.length)

@@ -11,7 +11,6 @@ class PropensitySpec extends SparkSuite {
     .fn(spark, Sf0001).collect().sortBy(_.getAs[Long]("stratum"))
 
   test("ate/att recompute from the per-stratum cells") {
-    def q6(x: Double) = math.floor(x * 1e6 + 0.5) / 1e6
     val cells = rows.map(r => (r.getAs[Long]("n1"),
       r.getAs[Long]("n0"),
       Option(r.getAs[Any]("diff")).map(_.asInstanceOf[Double])))

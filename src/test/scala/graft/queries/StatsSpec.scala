@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{SparkEntry, SparkSuite}
+import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
 /** Contracts of the X169–X174 statistical monitors beyond the oracle
@@ -9,11 +9,8 @@ import org.apache.spark.sql.functions._
   * range invariants at sf0.001). */
 class StatsSpec extends SparkSuite {
 
-  private def run(name: String) =
-    SparkEntry.queries(name)(spark, Sf0001)
-
   test("q_js_divergence: total recomputes from contributions, 0 ≤ JS ≤ 1") {
-    val rows = run("q_js_divergence").collect()
+    val rows = query("q_js_divergence").collect()
     assert(rows.nonEmpty)
     val js = rows.head.getDouble(6)
     assert(rows.forall(_.getDouble(6) === js))
@@ -27,7 +24,7 @@ class StatsSpec extends SparkSuite {
 
   test("q_cramers_v: chi2 recomputes from cells, V in [0,1], " +
       "marginal identity holds") {
-    val rows = run("q_cramers_v").collect()
+    val rows = query("q_cramers_v").collect()
     assert(rows.nonEmpty)
     val chi2 = rows.head.getDouble(5)
     assert(rows.forall(_.getDouble(5) === chi2))
@@ -42,7 +39,7 @@ class StatsSpec extends SparkSuite {
 
   test("q_ols_trend: slope/intercept reproduce the normal equations " +
       "on the query's own daily series") {
-    val rows = run("q_ols_trend").collect()
+    val rows = query("q_ols_trend").collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (n, sx, sy) = (r.getLong(1), r.getLong(2), r.getLong(3))
@@ -56,7 +53,7 @@ class StatsSpec extends SparkSuite {
   }
 
   test("q_lexical_diversity: identities and ranges") {
-    val rows = run("q_lexical_diversity").collect()
+    val rows = query("q_lexical_diversity").collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (nTok, nTyp, nHap) = (r.getLong(1), r.getLong(2), r.getLong(3))
@@ -74,7 +71,7 @@ class StatsSpec extends SparkSuite {
   }
 
   test("q_cusum_change: D_t lane is exact and the flag marks max |D|") {
-    val rows = run("q_cusum_change").collect()
+    val rows = query("q_cusum_change").collect()
     assert(rows.nonEmpty)
     val total = rows.map(_.getLong(1)).sum
     val nDays = rows.length.toLong
@@ -91,7 +88,7 @@ class StatsSpec extends SparkSuite {
   }
 
   test("q_mase_eval: MASE is the ratio of its own printed numerators") {
-    val rows = run("q_mase_eval").collect()
+    val rows = query("q_mase_eval").collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (smape, maeEval, naiveMae) =

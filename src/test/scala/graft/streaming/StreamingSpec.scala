@@ -9,6 +9,19 @@ import org.apache.spark.sql.functions._
   * Structured Streaming). */
 class StreamingSpec extends SparkSuite {
 
+  /** Append one micro-batch of (event_id, user_id, event_type, ts_us)
+    * rows to a drop folder, in the events schema (ts in nanos, like the
+    * testdata). */
+  private def appendEvents(dir: java.nio.file.Path,
+      rows: Seq[(Long, Long, String, Long)]): Unit = {
+    import spark.implicits._
+    rows.toDF("event_id", "user_id", "event_type", "ts_us")
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        lit(1.0).as("value"), lit("{}").as("props"),
+        (col("ts_us") * 1000).as("ts"))
+      .coalesce(1).write.mode("append").parquet(dir.toString)
+  }
+
   /** File streams need a directory: stage the single events.parquet
     * into a temp drop-folder, as a real ingest pipeline would. */
   lazy val eventsDir: String = {
@@ -110,11 +123,7 @@ class StreamingSpec extends SparkSuite {
     // 2-hour watermark -> must be excluded from its window's count)
     val dir = java.nio.file.Files.createTempDirectory("graft-late")
     def writeBatch(name: String, rows: Seq[(Long, String, Long)]): Unit =
-      rows.toDF("event_id", "event_type", "ts_us")
-        .select(col("event_id"), lit(1L).as("user_id"), col("event_type"),
-          lit(1.0).as("value"), lit("{}").as("props"),
-          (col("ts_us") * 1000).as("ts")) // nanos, like the testdata
-        .coalesce(1).write.mode("append").parquet(dir.toString)
+      appendEvents(dir, rows.map { case (id, t, ts) => (id, 1L, t, ts) })
     val t0 = java.sql.Timestamp.valueOf("2024-06-01 12:00:00").getTime * 1000L
     val hour = 3600L * 1000000L
 
@@ -154,12 +163,7 @@ class StreamingSpec extends SparkSuite {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-evict")
     def writeBatch(rows: Seq[(Long, Long)]): Unit =
-      rows.toDF("event_id", "ts_us")
-        .select(col("event_id"), lit(1L).as("user_id"),
-          lit("click").as("event_type"), lit(1.0).as("value"),
-          lit("{}").as("props"),
-          (col("ts_us") * 1000).as("ts")) // nanos, like the testdata
-        .coalesce(1).write.mode("append").parquet(dir.toString)
+      appendEvents(dir, rows.map { case (id, ts) => (id, 1L, "click", ts) })
     val t0 = java.sql.Timestamp.valueOf("2024-06-01 00:00:00").getTime * 1000L
     val hour = 3600L * 1000000L
     writeBatch(Seq((0L, t0)))
@@ -189,17 +193,11 @@ class StreamingSpec extends SparkSuite {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-funnel")
-    def writeBatch(rows: Seq[(Long, Long, String, Long)]): Unit =
-      rows.toDF("event_id", "user_id", "event_type", "ts_us")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          lit(1.0).as("value"), lit("{}").as("props"),
-          (col("ts_us") * 1000).as("ts"))
-        .coalesce(1).write.mode("append").parquet(dir.toString)
     val t0 = java.sql.Timestamp.valueOf("2024-06-01 00:00:00").getTime * 1000L
     // user 1: view in batch 1, click+purchase in batch 2 (state must
     // survive the batch boundary); user 2: click BEFORE any view —
     // the click must not advance the funnel
-    writeBatch(Seq((1L, 1L, "view", t0), (2L, 2L, "click", t0)))
+    appendEvents(dir, Seq((1L, 1L, "view", t0), (2L, 2L, "click", t0)))
     val q = EventStream.funnelStream(
         EventStream.readEvents(spark, dir.toString),
         Seq("view", "click", "purchase"))
@@ -207,7 +205,7 @@ class StreamingSpec extends SparkSuite {
       .outputMode("append").start()
     try {
       q.processAllAvailable()
-      writeBatch(Seq((3L, 1L, "click", t0 + 1000L),
+      appendEvents(dir, Seq((3L, 1L, "click", t0 + 1000L),
         (4L, 1L, "purchase", t0 + 2000L),
         (5L, 2L, "view", t0 + 1000L)))
       q.processAllAvailable()
@@ -271,11 +269,7 @@ class StreamingSpec extends SparkSuite {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-swin")
     def writeBatch(rows: Seq[(Long, Long)]): Unit =
-      rows.toDF("event_id", "ts_us")
-        .select(col("event_id"), lit(1L).as("user_id"),
-          lit("click").as("event_type"), lit(1.0).as("value"),
-          lit("{}").as("props"), (col("ts_us") * 1000).as("ts"))
-        .coalesce(1).write.mode("append").parquet(dir.toString)
+      appendEvents(dir, rows.map { case (id, ts) => (id, 1L, "click", ts) })
     val t0 = java.sql.Timestamp.valueOf("2024-06-01 00:00:00")
       .getTime * 1000L
     val min30 = 1800L * 1000000L
@@ -309,17 +303,11 @@ class StreamingSpec extends SparkSuite {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-fjoin")
-    def writeBatch(rows: Seq[(Long, Long, String, Long)]): Unit =
-      rows.toDF("event_id", "user_id", "event_type", "ts_us")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          lit(1.0).as("value"), lit("{}").as("props"),
-          (col("ts_us") * 1000).as("ts"))
-        .coalesce(1).write.mode("append").parquet(dir.toString)
     val t0 = java.sql.Timestamp.valueOf("2024-06-01 00:00:00").getTime * 1000L
     val min = 60L * 1000000L
     // click 1 matches purchase 100; purchase 101 (user 3) never
     // matches — its null verdict waits for wm > its OWN event time
-    writeBatch(Seq((1L, 1L, "click", t0), (100L, 1L, "purchase",
+    appendEvents(dir, Seq((1L, 1L, "click", t0), (100L, 1L, "purchase",
       t0 + 10 * min), (101L, 3L, "purchase", t0 + 5 * min)))
     val ev = EventStream.readEvents(spark, dir.toString)
     val joined = EventStream.intervalJoinFullStream(
@@ -338,9 +326,9 @@ class StreamingSpec extends SparkSuite {
       assert(rightNulls() === Set.empty[Long])
       // advance both sides to t0+6h, then one more batch so eviction
       // runs WITH the advanced watermark (t0+4h > purchase 101's time)
-      writeBatch(Seq((3L, 7L, "click", t0 + 360 * min),
+      appendEvents(dir, Seq((3L, 7L, "click", t0 + 360 * min),
         (102L, 6L, "purchase", t0 + 360 * min)))
-      writeBatch(Seq((4L, 7L, "click", t0 + 361 * min),
+      appendEvents(dir, Seq((4L, 7L, "click", t0 + 361 * min),
         (103L, 6L, "purchase", t0 + 361 * min)))
       q.processAllAvailable()
       // purchase 101 null-emitted exactly once; matched purchase 100
@@ -361,18 +349,12 @@ class StreamingSpec extends SparkSuite {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-ojoin")
-    def writeBatch(rows: Seq[(Long, Long, String, Long)]): Unit =
-      rows.toDF("event_id", "user_id", "event_type", "ts_us")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          lit(1.0).as("value"), lit("{}").as("props"),
-          (col("ts_us") * 1000).as("ts")) // nanos, like the testdata
-        .coalesce(1).write.mode("append").parquet(dir.toString)
     val t0 = java.sql.Timestamp.valueOf("2024-06-01 00:00:00").getTime * 1000L
     val min = 60L * 1000000L
     // batch 1: click 1 matches purchase 100 (+10 min); click 2 never
     // matches — its null verdict must NOT appear until the watermark
     // proves it final
-    writeBatch(Seq((1L, 1L, "click", t0), (2L, 2L, "click", t0),
+    appendEvents(dir, Seq((1L, 1L, "click", t0), (2L, 2L, "click", t0),
       (100L, 1L, "purchase", t0 + 10 * min)))
     val ev = EventStream.readEvents(spark, dir.toString)
     val joined = EventStream.intervalJoinOuterStream(
@@ -395,13 +377,13 @@ class StreamingSpec extends SparkSuite {
       // watermark is the min of the two sides) → watermark t0+4h at
       // the next batch; click 2's horizon t0+60min is now provably
       // matchless
-      writeBatch(Seq((3L, 7L, "click", t0 + 360 * min),
+      appendEvents(dir, Seq((3L, 7L, "click", t0 + 360 * min),
         (101L, 6L, "purchase", t0 + 360 * min)))
       q.processAllAvailable()
       // batch 3 (same event times — no further watermark motion)
       // guarantees a batch runs WITH the advanced watermark, which is
       // when eviction emits
-      writeBatch(Seq((4L, 7L, "click", t0 + 361 * min),
+      appendEvents(dir, Seq((4L, 7L, "click", t0 + 361 * min),
         (102L, 6L, "purchase", t0 + 361 * min)))
       q.processAllAvailable()
       // click 2 null-emitted exactly once; clicks 3/4 (newer than
