@@ -4,27 +4,23 @@
 Reads every TEST-*.xml in the report directory (default
 target/test-reports, which `sbt test` / `sbt "testOnly ..."` writes),
 prints one line per suite (slowest first) with its test count and
-seconds, then the total, then the N slowest tests.
+seconds, then the total, then the SLOWEST slowest tests.
 
-Run: python3 tools/suite_times.py [REPORT_DIR] [--slowest N]
+Run: python3 tools/suite_times.py [REPORT_DIR]
 """
-import argparse
 import glob
 import os
 import sys
 import xml.etree.ElementTree as ET
 
+SLOWEST = 10
+
 
 def main():
-    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("report_dir", nargs="?", default="target/test-reports")
-    ap.add_argument("--slowest", type=int, default=10, metavar="N",
-                    help="how many of the slowest tests to list (default 10)")
-    args = ap.parse_args()
-
-    paths = sorted(glob.glob(os.path.join(args.report_dir, "TEST-*.xml")))
+    report_dir = sys.argv[1] if len(sys.argv) > 1 else "target/test-reports"
+    paths = sorted(glob.glob(os.path.join(report_dir, "TEST-*.xml")))
     if not paths:
-        sys.exit(f"no TEST-*.xml under {args.report_dir}")
+        sys.exit(f"no TEST-*.xml under {report_dir}")
 
     suites, cases = [], []
     for path in paths:
@@ -41,8 +37,8 @@ def main():
     print(f"{'total':<{width}}  {sum(s[1] for s in suites):>5}  "
           f"{sum(s[2] for s in suites):>8.1f}")
 
-    print(f"\n{args.slowest} slowest tests")
-    for secs, suite, test in sorted(cases, key=lambda c: -c[0])[:args.slowest]:
+    print(f"\n{SLOWEST} slowest tests")
+    for secs, suite, test in sorted(cases, key=lambda c: -c[0])[:SLOWEST]:
         print(f"{secs:>8.1f}  {suite} :: {test}")
 
 
