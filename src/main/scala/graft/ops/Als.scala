@@ -18,8 +18,8 @@ import graft.functions.Num
   * so any engine replaying the same rounds from the same
   * deterministic item start ((key%7−3)/10 — exact rationals, never
   * random) lands on bit-identical factors. det ≥ λ² > 0 by
-  * A ⪰ 0, so no divide-by-zero lane exists. Factor tables are
-  * localCheckpoint'ed per half-round (the PageRank round device) —
+  * A ⪰ 0, so no divide-by-zero lane exists. The rounds run on
+  * [[Rounds]]; factor tables are localCheckpoint'ed per half-round —
   * entity-count-sized, never ratings-sized. */
 object Als {
 
@@ -64,20 +64,17 @@ object Als {
     // ~0.5 s (profiled 2.9 → 3.5 s wall). The device only pays off
     // where factors are too big to broadcast (SMJ per round); at that
     // scale re-introduce the two pre-partitioned checkpoints.
-    var vF = initFactors(items, itemCol).localCheckpoint(true)
-    var uF: DataFrame = null
-    var t = 0
-    while (t < iters) {
-      uF = solve(
-        ratings.join(vF, itemCol)
-          .select(col(userCol), col("r"), col("f1"), col("f2")),
-        userCol, lambda).localCheckpoint(true)
-      vF = solve(
-        ratings.join(uF, userCol)
-          .select(col(itemCol), col("r"), col("f1"), col("f2")),
-        itemCol, lambda).localCheckpoint(true)
-      t += 1
+    val v0 = initFactors(items, itemCol).localCheckpoint(true)
+    Rounds.iterate("als", (null: DataFrame, v0), iters) {
+      case ((_, vF), _) =>
+        val uF = solve(
+          ratings.join(vF, itemCol)
+            .select(col(userCol), col("r"), col("f1"), col("f2")),
+          userCol, lambda).localCheckpoint(true)
+        ((uF, solve(
+          ratings.join(uF, userCol)
+            .select(col(itemCol), col("r"), col("f1"), col("f2")),
+          itemCol, lambda).localCheckpoint(true)), false)
     }
-    (uF, vF)
   }
 }

@@ -115,13 +115,11 @@ object AnnGraph {
     * (src, dst, cos) — factored so Round17Spec can pin
     * [[descendFlagged]] ≡ this on an identical init. */
   def descendFrom(e: DataFrame, g0: DataFrame, k: Int,
-      rounds: Int): DataFrame = {
-    var g = g0
-    for (_ <- 1 to rounds)
-      g = descendRound(e, g, k)
-        .localCheckpoint(true) // lineage cut per descent round
-    g
-  }
+      rounds: Int): DataFrame =
+    // the object, not the `Rounds` round-count constant above
+    graft.ops.Rounds.iterate("descend", g0, rounds) { (g, _) =>
+      (descendRound(e, g, k).localCheckpoint(true), false)
+    }
 
   /** ONE full-rescoring descent round over `g` — the pre-checkpoint
     * frame (factored so tools can dump the round's physical plan;
@@ -198,9 +196,10 @@ object AnnGraph {
       .orderBy(col("cos").desc, col("src"))
     val wFwd = Window.partitionBy("src")
       .orderBy(col("cos").desc, col("dst"))
-    var g = init.localCheckpoint(true)
-    var touchedAcc: DataFrame = null
-    for (_ <- 1 to rounds) {
+    val start = (init.localCheckpoint(true), Option.empty[DataFrame])
+    val (g, touchedAcc) = graft.ops.Rounds.iterate("descend flagged",
+        start, rounds) { (state, _) =>
+      val (g, touchedAcc) = state
       // FRESH-ADJACENT restriction (r18 — the O(delta) completion of
       // the flag rule): every per-round pass below runs only over
       // nodes that can possibly be affected, with BIT-IDENTICAL
@@ -256,9 +255,8 @@ object AnnGraph {
       // BOTH endpoints' lists receive the mirrored pair
       val touchedSrcs = cand.select("src")
         .union(cand.select(col("dst").as("src"))).distinct()
-      touchedAcc =
-        if (touchedAcc == null) touchedSrcs
-        else touchedAcc.union(touchedSrcs)
+      val touchedNext =
+        Some(touchedAcc.fold(touchedSrcs)(_.union(touchedSrcs)))
       val prev = g.select("src", "dst", "cos")
       val prevTouched = prev.join(touchedSrcs, Seq("src"), "left_semi")
       val prevRest = prev.join(touchedSrcs, Seq("src"), "left_anti")
@@ -285,14 +283,12 @@ object AnnGraph {
         .select(col("src"), col("dst"), col("cos"),
           (!col("old")).as("fresh"))
       // untouched srcs: list unchanged, nothing fresh by construction
-      g = prevRest.withColumn("fresh", lit(false))
+      ((prevRest.withColumn("fresh", lit(false))
         .unionByName(freshTouched)
-        .localCheckpoint(true) // lineage cut per warm round
+        .localCheckpoint(true), touchedNext), false)
     }
-    val touched =
-      if (touchedAcc == null)
-        g.sparkSession.range(0).select(col("id").as("src"))
-      else touchedAcc.distinct()
+    val touched = touchedAcc.fold(
+      g.sparkSession.range(0).select(col("id").as("src")))(_.distinct())
     (g.select("src", "dst", "cos"), touched)
   }
 

@@ -15,9 +15,9 @@ import org.apache.spark.sql.functions._
   * distance state to the edge list on src (shuffle keyed by src),
   * min-aggregate candidate distances by dst (second keyed shuffle),
   * merge with the previous state by per-node MIN. All rows are
-  * fixed-width (node, int) pairs; each round's state is
-  * `localCheckpoint`ed (consumed twice — relax join and merge — so
-  * unchecked lineage grows exponentially in `maxHops`). A
+  * fixed-width (node, int) pairs. The rounds run on [[Rounds]]; each
+  * round's state is `localCheckpoint`ed because the relax join and
+  * the merge both consume it. A
   * production variant would relax only the previous round's FRONTIER
   * (rows whose distance just changed); with bounded `maxHops` the
   * full-state relax keeps every round a single deterministic job and
@@ -43,16 +43,16 @@ object Bfs {
       .union(e.select(col("dst").as("v"))).distinct()
       .localCheckpoint(true)
     // graph-member seeds only; curated metadata -> broadcastable
-    var dist = nodes
+    val seeded = nodes
       .join(broadcast(seeds.toDF("v").distinct()), Seq("v"), "left_semi")
       .select(col("v"), lit(0).as("dist"))
       .localCheckpoint(true)
-    for (_ <- 1 to maxHops) {
+    val dist = Rounds.iterate("bfs", seeded, maxHops) { (dist, _) =>
       val relaxed = e.join(dist, e("src") === dist("v"))
         .select(e("dst").as("v"), (col("dist") + 1).as("dist"))
-      dist = dist.union(relaxed)
+      (dist.union(relaxed)
         .groupBy("v").agg(min("dist").as("dist"))
-        .localCheckpoint(true)
+        .localCheckpoint(true), false)
     }
     nodes.join(dist, Seq("v"), "left")
   }

@@ -15,11 +15,10 @@ import org.apache.spark.sql.functions._
   * iterated frontier expansion — state is (u, v, d) "u reaches v at
   * shortest distance d", each round joins the frontier through the
   * edge list and anti-joins the seen set, all shuffles keyed on
-  * fixed-width node-id pairs. The same per-round discipline as
-  * [[PageRank]]: every round's state is `localCheckpoint`ed (frontier
-  * and seen are each consumed twice per round — unchecked lineage
-  * grows exponentially in radius), and an empty frontier short-
-  * circuits the loop (one bounded `isEmpty` probe per round).
+  * fixed-width node-id pairs. The rounds run on [[Rounds]]: every
+  * round's state is `localCheckpoint`ed (frontier and seen are each
+  * consumed twice per round), and an empty frontier is the fixpoint
+  * that ends the loop (one bounded `isEmpty` probe per round).
   *
   * Scale honesty: exact pair state is O(V · avg-ball-size) — fine for
   * domain graphs (10⁷–10⁸ nodes, small radius), which is exactly the
@@ -53,21 +52,19 @@ object Centrality {
     // (u, v, d): u reaches v at shortest distance d. Frontier holds
     // only the pairs first reached in the latest round, so each round
     // expands |frontier| rows, not |seen|.
-    var seen = nodes.select(col("v").as("u"), col("v"), lit(0).as("d"))
+    val self = nodes.select(col("v").as("u"), col("v"), lit(0).as("d"))
       .localCheckpoint(true)
-    var frontier = seen
-    var r = 1
-    var done = false
-    while (r <= radius && !done) {
-      val cand = frontier.join(e, frontier("v") === e("src"))
-        .select(col("u"), col("dst").as("v")).distinct()
-      frontier = cand
-        .join(seen.select(col("u"), col("v")), Seq("u", "v"), "left_anti")
-        .select(col("u"), col("v"), lit(r).as("d"))
-        .localCheckpoint(true)
-      if (frontier.isEmpty) done = true // bounded probe: ball saturated
-      else seen = seen.union(frontier).localCheckpoint(true)
-      r += 1
+    val (seen, _) = Rounds.iterate("harmonic", (self, self), radius) {
+      case ((seen, frontier), r) =>
+        val cand = frontier.join(e, frontier("v") === e("src"))
+          .select(col("u"), col("dst").as("v")).distinct()
+        val next = cand
+          .join(seen.select(col("u"), col("v")), Seq("u", "v"), "left_anti")
+          .select(col("u"), col("v"), lit(r).as("d"))
+          .localCheckpoint(true)
+        // bounded probe: an empty frontier means every ball saturated
+        if (next.isEmpty) ((seen, next), true)
+        else ((seen.union(next).localCheckpoint(true), next), false)
     }
     val h = seen.filter(col("d") > 0)
       .groupBy(col("v").as("node"))
@@ -112,10 +109,10 @@ object Centrality {
         md5(concat(lit("hb:"), col("v").cast("string"))), 1, 15), 16, 10)
       .cast("long")
     // (v, sketch, est, h): B_0 = {v}, so est_0 = 1 exactly
-    var state = nodes.select(col("v"), array(nodeHash).as("sketch"),
+    val ball0 = nodes.select(col("v"), array(nodeHash).as("sketch"),
         lit(1.0).as("est"), lit(0.0).as("h"))
       .localCheckpoint(true)
-    for (r <- 1 to radius) {
+    val state = Rounds.iterate("hyperball", ball0, radius) { (state, r) =>
       // est/h ride the node's OWN state rows into the union aggregation
       // (neighbor rows carry null; each v has exactly one state row, so
       // max() recovers its prev est/h exactly) — one grouped shuffle per
@@ -130,7 +127,7 @@ object Centrality {
         .select(col("dst").as("v"), col("sketch"),
           lit(null).cast("double").as("est"),
           lit(null).cast("double").as("h"))
-      state = own.union(fromNeighbors)
+      (own.union(fromNeighbors)
         .select(col("v"), explode(col("sketch")).as("hv"),
           col("est"), col("h"))
         .groupBy("v")
@@ -140,7 +137,7 @@ object Centrality {
         .select(col("v"), col("sketch"), col("est2").as("est"),
           (col("prev_h") + (col("est2") - col("prev_est")) /
             lit(r.toDouble)).as("h"))
-        .localCheckpoint(true)
+        .localCheckpoint(true), false)
     }
     state.select(col("v").as("node"),
       Num.qround(col("h"), 6).as("harmonic_est"))

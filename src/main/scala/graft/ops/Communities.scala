@@ -25,23 +25,15 @@ import org.apache.spark.sql.functions._
   * aggregate, one per-node argmax — all shuffles carry fixed-width
   * integer rows, never corpus payloads. The argmax is an aggregate
   * (`max(struct(count, -label))`), NOT a window, so no partition-less
-  * WindowExec appears at any graph size. Label state is
-  * `localCheckpoint`ed per round (the X66 round discipline: flat
-  * lineage across supersteps). Synchronous LPA can oscillate on
-  * bipartite structures — callers pick a fixed round budget and the
-  * result is the deterministic round-R state, the honest contract for
-  * a replayable distributed pass (the classic async variant is
-  * order-dependent and unreproducible).
-  *
-  * CONVERGENCE short-circuit (VERDICT r11 #2): synchronous LPA is a
-  * deterministic function of the previous round's state, so if a round
-  * changes NO label the state is an exact fixpoint and every later
-  * round reproduces it — the loop stops early and the round-R result
-  * is unchanged. The fixed `rounds` budget remains the oscillation
-  * guard (bipartite 2-cycles never hit the fixpoint and still stop at
-  * R). The per-round change probe is one keyed join of two
-  * checkpointed fixed-width (v, label) states — the standard
-  * superstep convergence check, O(nodes) not O(corpus).
+  * WindowExec appears at any graph size. The rounds run on
+  * [[Rounds]]; the label state is checkpointed per round because the
+  * next vote join and the change probe both read it. Synchronous LPA
+  * can oscillate on bipartite structures, so callers pick a fixed
+  * round budget and get the deterministic round-R state (the async
+  * variant is order-dependent and unreproducible). A round that
+  * changes no label ([[Rounds.unchanged]]) is an exact fixpoint of
+  * this deterministic round function, so the loop stops there with
+  * the round-R result unchanged (VERDICT r11 #2).
   */
 object Communities {
 
@@ -65,11 +57,9 @@ object Communities {
     val nodes = e0.select(col("src").as("v"))
       .union(e0.select(col("dst").as("v"))).distinct()
       .localCheckpoint(true)
-    var l = nodes.select(col("v"), col("v").as("lbl"))
+    val own = nodes.select(col("v"), col("v").as("lbl"))
       .localCheckpoint(true)
-    var t = 1
-    var converged = false
-    while (t <= rounds && !converged) {
+    val l = Rounds.iterate("communities", own, rounds) { (l, t) =>
       onRound(t)
       val votes = nb.join(l.select(col("v").as("u"), col("lbl")), "u")
         .groupBy(col("v"), col("lbl"))
@@ -84,14 +74,7 @@ object Communities {
       val next = nodes.join(won, Seq("v"), "left")
         .select(col("v"), coalesce(col("w"), col("v")).as("lbl"))
         .localCheckpoint(true)
-      // empty-delta probe over two checkpointed (v, label) states:
-      // no changed label → exact fixpoint → later rounds are no-ops
-      converged = next
-        .join(l.select(col("v"), col("lbl").as("__prev")), "v")
-        .where(col("lbl") =!= col("__prev"))
-        .isEmpty
-      l = next
-      t += 1
+      (next, Rounds.unchanged(l, next, "v", "lbl"))
     }
     l.select(col("v"), col("lbl").as("community"))
   }

@@ -432,15 +432,9 @@ object Dedup {
     // id set at the end. At 100 TB near-dup rates the edge subgraph is
     // orders of magnitude smaller than the corpus.
     val edgeNodes = edges.select(col("src").as("id")).distinct()
-    // localCheckpoint each round: truncates lineage (the label plan
-    // references itself 3× per round — unchecked that's exponential)
-    // and materializes the iteration state, as a production CC job
-    // would checkpoint between supersteps.
-    var labels = edgeNodes.select(col("id"), col("id").as("label"))
+    val own = edgeNodes.select(col("id"), col("id").as("label"))
       .localCheckpoint(true)
-    var i = 0
-    var converged = false
-    while (i < iters && !converged) {
+    val labels = Rounds.iterate("dedup cc", own, iters) { (labels, _) =>
       val viaEdges = edges.join(labels.withColumnRenamed("id", "dst")
           .withColumnRenamed("label", "nlabel"), Seq("dst"))
         .groupBy(col("src").as("id"))
@@ -457,10 +451,7 @@ object Dedup {
           least(col("label"), coalesce(col("elabel"), col("label")),
             coalesce(col("llabel"), col("label"))).as("label"))
         .localCheckpoint(true)
-      converged = next.join(labels.withColumnRenamed("label", "old"),
-        Seq("id")).filter(col("label") =!= col("old")).isEmpty
-      labels = next
-      i += 1
+      (next, Rounds.unchanged(labels, next, "id", "label"))
     }
     ids.select(col(idCol).as("id"))
       .join(labels, Seq("id"), "left")

@@ -23,9 +23,9 @@ import org.apache.spark.sql.functions._
   * is deduplicated ONCE up front (distinct simple directed edges,
   * self-loops dropped — a self-loop lets a node certify itself as both
   * hub and authority, the classic HITS degenerate case) and
-  * `localCheckpoint`ed, as is each round's score state (consumed by
-  * the next round's join AND its normalizer — unchecked lineage would
-  * grow exponentially in `iters`).
+  * `localCheckpoint`ed. The rounds run on [[Rounds]]; each half-step's
+  * score state is checkpointed because the next half-step's join AND
+  * its normalizer consume it.
   *
   * Float discipline: per-node sums and the post-normalization scores
   * are qround(6)-canonicalized (fold-order-sensitive aggregates); the
@@ -112,14 +112,14 @@ object Hits {
           Num.qround(col("raw") / col("tot"), 6).as("s"))
     }
 
-    var hub = nodes.select(col("v"), lit(1.0 / n).as("s"))
+    val uniform = nodes.select(col("v"), lit(1.0 / n).as("s"))
       .localCheckpoint(true)
-    var auth = hub
-    for (_ <- 1 to iters) {
-      // auth(v) <- sum of hub over in-neighbours, then hub(u) <- sum
-      // of the NEW auth over out-neighbours (the classic ordering)
-      auth = halfStep(hub, "src", "dst").localCheckpoint(true)
-      hub = halfStep(auth, "dst", "src").localCheckpoint(true)
+    val (hub, auth) = Rounds.iterate("hits", (uniform, uniform), iters) {
+      case ((hub, _), _) =>
+        // auth(v) <- sum of hub over in-neighbours, then hub(u) <- sum
+        // of the NEW auth over out-neighbours (the classic ordering)
+        val auth = halfStep(hub, "src", "dst").localCheckpoint(true)
+        ((halfStep(auth, "dst", "src").localCheckpoint(true), auth), false)
     }
     nodes
       .join(hub.select(col("v"), col("s").as("hub")), "v")

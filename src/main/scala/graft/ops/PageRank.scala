@@ -21,12 +21,10 @@ import org.apache.spark.sql.functions._
   * constant-key broadcast HASH join (an equi-join — a 1-row
   * `crossJoin` would plan the BroadcastNestedLoopJoin the repo's plan
   * sweep bans), so each superstep is ONE job with no driver
-  * round-trip (the r10 verdict's PageRank note). Each round's rank
-  * state is `localCheckpoint`ed (it is consumed twice per round —
-  * contribution join and dangling anti-join — so unchecked lineage
-  * grows exponentially in `iters`; the same device as
-  * `Dedup.clusterKeepMinDistributed`), exactly as a production
-  * power-iteration job checkpoints between supersteps.
+  * round-trip (the r10 verdict's PageRank note). The rounds run on
+  * [[Rounds]]; each round's rank state is `localCheckpoint`ed because
+  * it is consumed twice per round (contribution join and dangling
+  * anti-join).
   *
   * Float discipline: each round's rank is qround(6)-canonicalized
   * (contribution sums are fold-order-sensitive aggregates — the
@@ -143,8 +141,7 @@ object PageRank {
     val e = e0.join(deg.select(col("v").as("src"), col("deg")), "src")
       .localCheckpoint(true)
     val t = teleport(nodes)
-    var r = t.r0.localCheckpoint(true)
-    for (_ <- 1 to iters) {
+    Rounds.iterate("pagerank", t.r0.localCheckpoint(true), iters) { (r, _) =>
       // dangling mass: 1-row aggregate off the checkpointed rank state,
       // qround(6)'d so both engines damp with the identical double;
       // broadcast to every node on a constant key (hash join, 1 row)
@@ -155,15 +152,14 @@ object PageRank {
         .select(e("dst").as("v"),
           (col("pr") / col("deg").cast("double")).as("c"))
         .groupBy("v").agg(sum("c").as("c"))
-      r = t.base.withColumn("__k", lit(0))
+      (t.base.withColumn("__k", lit(0))
         .join(broadcast(dm), "__k")
         .join(contrib, Seq("v"), "left")
         .select(t.base.columns.map(col) :+ Num.qround(
           t.restart + lit(damping) *
             (coalesce(col("c"), lit(0.0)) + t.dangling),
           6).as("pr"): _*)
-        .localCheckpoint(true)
+        .localCheckpoint(true), false)
     }
-    r
   }
 }

@@ -3,21 +3,22 @@ package graft.ops
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftshim.Locals
+
 /** Overlap INDEPENDENT eager Spark chains from driver threads (r20 —
-  * guide §2.6 "overlap independent jobs": Spark's scheduler happily
-  * runs several jobs at once inside one application; actions are only
-  * sequential because driver code calls them sequentially). The rank
-  * rows each run two iterative kernels (PageRank, HITS) whose
-  * per-round actions are tiny — run them on two driver threads and
-  * the wall is max(a, b) instead of a + b, with each kernel's own
-  * computation (row values, qround lanes, checkpoint contents)
-  * untouched. Results are whatever the thunks return; exceptions
-  * propagate via Await. */
+  * guide §2.6 "overlap independent jobs"): the rank rows run PageRank
+  * and HITS, whose per-round actions are tiny, on two threads, so the
+  * wall is max(a, b) instead of a + b with each kernel's computation
+  * untouched. Each thunk runs under the caller's Spark local
+  * properties and active session (a reused pool thread holds stale
+  * ones), and the first thunk to fail fails the call at once. */
 object Par {
   def two[A, B](a: => A, b: => B): (A, B) = {
     implicit val ec: ExecutionContext = ExecutionContext.global
-    val fa = Future(a)
-    val fb = Future(b)
-    (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf))
+    val spark = SparkSession.active
+    // captured here, on the caller's thread
+    val (ra, rb) = (Locals.captured(spark)(a), Locals.captured(spark)(b))
+    Await.result(Future(ra()).zip(Future(rb())), Duration.Inf)
   }
 }

@@ -256,13 +256,6 @@ object Scoring {
            sum(when(col("y") === 0.0, col("x")).otherwise(0L))
              .cast("long").as("cn"))
       .collect()
-    val np = cc.map(_.getLong(1)).sum.toDouble
-    val nn = cc.map(_.getLong(2)).sum.toDouble
-    val nb = cc.length.toDouble
-    val w = cc.map { r =>
-      r.getLong(0) -> (math.log((r.getLong(1) + 1.0) / (np + nb)) -
-        math.log((r.getLong(2) + 1.0) / (nn + nb)))
-    }.toMap
     // prior over the population the conditional counts were fit on:
     // labeled docs that actually contributed features (a zero-feature
     // doc adds nothing to cc, so it must add nothing to the prior)
@@ -273,10 +266,26 @@ object Scoring {
         sum(when(col("y") === 0.0, 1L).otherwise(0L)).cast("double")).head
     val nPos = if (prior.isNullAt(0)) 0.0 else prior.getDouble(0)
     val nNeg = if (prior.isNullAt(1)) 0.0 else prior.getDouble(1)
-    require(nPos > 0 && nNeg > 0,
+    nbModel(cc.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))),
+      nPos, nNeg,
       s"trainNaiveBayes: both classes must appear among labeled docs " +
         s"with features (n+=$nPos, n-=$nNeg) — the log prior is " +
         s"undefined otherwise")
+  }
+
+  /** The NB model from the occupied buckets' class counts (bucket, cp,
+    * cn) — add-1 log-ratio weights — and the log prior's per-class doc
+    * counts, which must both be positive (else `missingClass`). */
+  private def nbModel(counts: Iterable[(Long, Long, Long)], nPos: Double,
+      nNeg: Double, missingClass: => String): NbModel = {
+    val np = counts.iterator.map(_._2).sum.toDouble
+    val nn = counts.iterator.map(_._3).sum.toDouble
+    val nb = counts.size.toDouble
+    val w = counts.iterator.map { case (b, cp, cn) =>
+      b -> (math.log((cp + 1.0) / (np + nb)) -
+        math.log((cn + 1.0) / (nn + nb)))
+    }.toMap
+    require(nPos > 0 && nNeg > 0, missingClass)
     NbModel(w, math.log(nPos / nNeg))
   }
 
@@ -318,21 +327,13 @@ object Scoring {
       // train side of fold f = every OTHER fold's rows, re-aggregated
       // per bucket (long sums — same integers trainNaiveBayes collects)
       val train = cc.filter(_._2 != f.toLong)
-        .groupBy(_._1).view
-        .mapValues(rs => (rs.map(_._3).sum, rs.map(_._4).sum)).toMap
-      val np = train.valuesIterator.map(_._1).sum.toDouble
-      val nn = train.valuesIterator.map(_._2).sum.toDouble
-      val nb = train.size.toDouble
-      val w = train.map { case (b, (cp, cn)) =>
-        b -> (math.log((cp + 1.0) / (np + nb)) -
-          math.log((cn + 1.0) / (nn + nb)))
-      }
+        .groupBy(_._1).toSeq
+        .map { case (b, rs) => (b, rs.map(_._3).sum, rs.map(_._4).sum) }
       val (nPos, nNeg) = pr.view.filterKeys(_ != f.toLong).values
         .foldLeft((0L, 0L)) { case ((a, b), (p, n)) => (a + p, b + n) }
-      require(nPos > 0 && nNeg > 0,
+      f -> nbModel(train, nPos.toDouble, nNeg.toDouble,
         s"trainNaiveBayesFolds: both classes must appear among fold-$f " +
           s"train docs with features (n+=$nPos, n-=$nNeg)")
-      f -> NbModel(w, math.log(nPos.toDouble / nNeg.toDouble))
     }.toMap
   }
 

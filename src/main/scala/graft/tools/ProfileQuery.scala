@@ -1,8 +1,9 @@
 package graft.tools
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageCompleted, SparkListenerTaskEnd}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.graftshim.Bus.drain
 
 /** Per-query timing and execution profile for plan iteration (dev
@@ -12,7 +13,9 @@ import org.apache.spark.sql.graftshim.Bus.drain
   * second run is profiled — listener-derived job/stage/task counts,
   * summed task time and shuffle bytes, the numbers that separate "slow
   * because of real compute" from "slow because of orchestration"
-  * (guide §1: measure first; §2.2: count the exchanges).
+  * (guide §1: measure first; §2.2: count the exchanges). After each
+  * `[profile]` line a `[profile-jobs]` table lists the top 20 job
+  * descriptions / call sites and stage names by wall.
   *
   * Run: SPARK_GRAFT_SF_DIR=... sbt "runMain graft.tools.ProfileQuery q_a q_b"
   */
@@ -31,38 +34,35 @@ object ProfileQuery {
     val taskMs = new AtomicLong(0L)
     val shufR = new AtomicLong(0L)
     val shufW = new AtomicLong(0L)
-    // optional per-callsite breakdown (SPARK_GRAFT_PROFILE_JOBS=1):
-    // sums job wall + task time by the job's short call site — the
-    // map from wall seconds back to the operator line that paid them
-    val byType = sys.env.get("SPARK_GRAFT_PROFILE_JOBS").contains("1")
+    // per-job breakdown: sums job wall + task time by the job's
+    // description when one is set (the `Rounds` labels, e.g.
+    // "pagerank round 3"), else by its short call site — the map from
+    // wall seconds back to the round or operator line that paid them
     val jobStartNs = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
     val siteAgg = new java.util.concurrent.ConcurrentHashMap[String, (Long, Int)]()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
         jobs.incrementAndGet()
-        if (byType) {
-          val site = j.stageInfos.lastOption.map(_.name.takeWhile(_ != '+').trim)
-            .getOrElse("?")
-          jobStartNs.put(j.jobId, (site, System.nanoTime()))
+        val key = Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(j.stageInfos.lastOption
+            .map(_.name.takeWhile(_ != '+').trim).getOrElse("?"))
+        jobStartNs.put(j.jobId, (key, System.nanoTime()))
+      }
+      override def onJobEnd(j: SparkListenerJobEnd): Unit = {
+        val v = jobStartNs.remove(j.jobId)
+        if (v != null) {
+          val ms = (System.nanoTime() - v._2) / 1000000L
+          siteAgg.merge(v._1, (ms, 1),
+            (a, b) => (a._1 + b._1, a._2 + b._2))
         }
       }
-      override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-        if (byType) {
-          val v = jobStartNs.remove(j.jobId)
-          if (v != null) {
-            val ms = (System.nanoTime() - v._2) / 1000000L
-            siteAgg.merge(v._1, (ms, 1),
-              (a, b) => (a._1 + b._1, a._2 + b._2))
-          }
-        }
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
         stages.incrementAndGet()
-        if (byType) {
-          val info = s.stageInfo
-          val ms = info.taskMetrics.executorRunTime
-          siteAgg.merge("stage: " + info.name.takeWhile(_ != '+').trim,
-            (ms, 1), (a, b) => (a._1 + b._1, a._2 + b._2))
-        }
+        val info = s.stageInfo
+        val ms = info.taskMetrics.executorRunTime
+        siteAgg.merge("stage: " + info.name.takeWhile(_ != '+').trim,
+          (ms, 1), (a, b) => (a._1 + b._1, a._2 + b._2))
       }
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
         tasks.incrementAndGet()
@@ -93,12 +93,9 @@ object ProfileQuery {
       drain(spark.sparkContext)
       println(f"[time] $name%-32s best ${math.min(first, wall)}%6.2f s  (runs: $first%.2f, $wall%.2f)")
       println(f"[profile] $name%-34s wall ${wall}%7.2f s  jobs ${jobs.get()}%4d  stages ${stages.get()}%5d  tasks ${tasks.get()}%6d  taskTime ${taskMs.get() / 1000.0}%8.1f s  shufR ${shufR.get() / 1048576.0}%8.1f MiB  shufW ${shufW.get() / 1048576.0}%8.1f MiB")
-      if (byType) {
-        import scala.jdk.CollectionConverters._
-        siteAgg.asScala.toSeq.sortBy(-_._2._1).take(20).foreach {
-          case (site, (ms, n)) =>
-            println(f"[profile-jobs]   ${ms / 1000.0}%7.2f s  x$n%-4d $site")
-        }
+      siteAgg.asScala.toSeq.sortBy(-_._2._1).take(20).foreach {
+        case (site, (ms, n)) =>
+          println(f"[profile-jobs]   ${ms / 1000.0}%7.2f s  x$n%-4d $site")
       }
     }
     spark.stop()

@@ -80,6 +80,24 @@ class DedupSpec extends SparkSuite {
       4L -> 4L, 9L -> 9L))
   }
 
+  test("clusterKeepMin: the distributed path equals driver union-find") {
+    // chain 1-2-3-5, isolated 4 and 9, and the 12-node chain 20..31
+    // (diameter 11, pairs in mixed orientation) that pointer jumping
+    // collapses over several rounds
+    val ids = ((1L to 5L) ++ Seq(9L) ++ (20L to 31L)).toDF("doc_id")
+    val chain = (20L until 31L)
+      .map(i => if (i % 2 == 0) (i, i + 1) else (i + 1, i))
+    val pairs = (Seq((1L, 2L), (3L, 2L), (5L, 3L)) ++ chain.reverse)
+      .toDF("id_a", "id_b")
+    def clusters(localThreshold: Long): Map[Long, Long] =
+      Dedup.clusterKeepMin(ids, "doc_id", pairs,
+          localThreshold = localThreshold)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val unionFind = clusters(1000000L)
+    assert(clusters(0L) === unionFind)
+    assert(unionFind.values.toSet === Set(1L, 4L, 9L, 20L))
+  }
+
   test("keepCanonical keeps exactly one representative per cluster") {
     val df = docs(1L -> "a", 2L -> "b", 3L -> "c", 4L -> "d")
     val pairs = Seq((1L, 3L), (3L, 4L)).toDF("id_a", "id_b")
