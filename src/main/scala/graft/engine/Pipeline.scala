@@ -1,5 +1,11 @@
 package graft.engine
 
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.collection.immutable.ListMap
+import scala.util.Try
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,12 +29,37 @@ object Pipeline {
       ncesPath: Option[String] = None, // A4; loaded+cleaned, unjoined (ref :650-654)
       state: String = "WI")
 
-  /** Both dictionaries of a run, loaded and collected ONCE — every
-    * file's plan is then driver-local and costs no Spark jobs. */
+  /** Both dictionaries of a run, collected once per version of the two
+    * files — every file's plan is then driver-local and costs no Spark
+    * jobs, and a batch of states over the same templates (ref `:8`
+    * loads them once, then loops) reads them once. An entry is keyed by
+    * the path pair and re-read when either file's length or
+    * modification time changes; the new version replaces the old one,
+    * so the cache holds one entry per path pair. */
   private def loadDicts(spark: SparkSession, cfg: Config)
-      : Dictionary.DictRows =
-    Dictionary.collectDicts(Ingest.readTsv(spark, cfg.dict1Path),
-      Ingest.readTsv(spark, cfg.dict2Path))
+      : Dictionary.DictRows = {
+    val key = (cfg.dict1Path, cfg.dict2Path)
+    // A path that cannot be stat'ed (missing, a glob) is read uncached,
+    // so the reader reports it as before.
+    val version = Try(Seq(cfg.dict1Path, cfg.dict2Path).map { path =>
+      val p = new Path(path)
+      val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getFileStatus(p)
+      (st.getLen, st.getModificationTime)
+    }).toOption
+    version.flatMap(v => Option(dictCache.get(key)).collect {
+      case (`v`, dicts) => dicts
+    }).getOrElse {
+      val dicts = Dictionary.collectDicts(Ingest.readTsv(spark, cfg.dict1Path),
+        Ingest.readTsv(spark, cfg.dict2Path))
+      version.foreach(v => dictCache.put(key, (v, dicts)))
+      dicts
+    }
+  }
+
+  /** (dict1, dict2) path pair → ((length, mtime) of each, their rows). */
+  private val dictCache = new ConcurrentHashMap[(String, String),
+    (Seq[(Long, Long)], Dictionary.DictRows)]()
 
   /** Ingest one raw file and apply its dictionary plan (E1+E2). */
   private def ingestAndClean(spark: SparkSession, path: String,
@@ -81,48 +112,47 @@ object Pipeline {
     val breakfast0 = ingestAndClean(spark, cfg.breakfastPath, dicts)
     val lunch0 = ingestAndClean(spark, cfg.lunchPath, dicts)
 
-    // E3 step 1-2: conditional columns on each side (ref :800-825).
-    val lunch = lunch0
-      .withColumn("School Type-Original",
-        Derive.schoolTypeOriginal(col("`PUBLIC`"), col("`SCHOOL TYPE`")))
-      .withColumn("FR Lunch Meals",
-        Derive.frMeals(col("`Lunch Meals-Free`"), col("`Lunch Meals-Reduced`"),
-          col("`Lunch Meals-Free and Reduced`")))
-      .withColumn("FR Lunch ADP",
-        Derive.frAdp(col("`FR Lunch Meals`"),
-          col("`Operating Days-Lunch Only`"), col("`Operating Days`")))
-      .withColumn("Unique ID",
-        Derive.uniqueId(lit(cfg.state), col("`School ID`"),
-          col("`district id`")))
-      .withColumn("NCES ID", Derive.ncesId(col("`district id`")))
-      .withColumn("School_Year",
-        Derive.backfill(col("`School Year`"), "17-18"))
-      .withColumn("Target Area", lit(null).cast("string")) // ref :959-960
-      .withColumn("FR Enrollment",
-        Derive.frEnrollment(col("`Enrollment-Free`"),
-          col("`Enrollment-Reduced`"), col("`Enrollment-Free and Reduced`")))
-      .withColumn("FR Enrollment Percentage",
-        Derive.frEnrollmentPct(col("`CEP (Y/N)`"), col("`FR Enrollment`"),
-          col("`Enrollment-Total`"), col("`Enrollment-Free`"),
-          col("`Lunch Meals-Paid`")))
-      .withColumn("School Level-Standardized",
-        Derive.schoolLevelStandardized(col("`School Level-Original`")))
-      .withColumn("School Type-Standardized",
-        Derive.schoolTypeStandardized(col("`School Type-Original`")))
+    // E3 step 1-2: conditional columns on each side (ref :800-825), one
+    // projection per side: a field that depends on another derived field
+    // reuses that field's Column, so every expression resolves against
+    // the cleaned input.
+    val frLunchMeals = Derive.frMeals(col("`Lunch Meals-Free`"),
+      col("`Lunch Meals-Reduced`"), col("`Lunch Meals-Free and Reduced`"))
+    val frEnrollment = Derive.frEnrollment(col("`Enrollment-Free`"),
+      col("`Enrollment-Reduced`"), col("`Enrollment-Free and Reduced`"))
+    val schoolTypeOriginal =
+      Derive.schoolTypeOriginal(col("`PUBLIC`"), col("`SCHOOL TYPE`"))
+    val lunch = lunch0.withColumns(ListMap(
+      "School Type-Original" -> schoolTypeOriginal,
+      "FR Lunch Meals" -> frLunchMeals,
+      "FR Lunch ADP" -> Derive.frAdp(frLunchMeals,
+        col("`Operating Days-Lunch Only`"), col("`Operating Days`")),
+      "Unique ID" -> Derive.uniqueId(lit(cfg.state), col("`School ID`"),
+        col("`district id`")),
+      "NCES ID" -> Derive.ncesId(col("`district id`")),
+      "School_Year" -> Derive.backfill(col("`School Year`"), "17-18"),
+      "Target Area" -> lit(null).cast("string"), // ref :959-960
+      "FR Enrollment" -> frEnrollment,
+      "FR Enrollment Percentage" -> Derive.frEnrollmentPct(col("`CEP (Y/N)`"),
+        frEnrollment, col("`Enrollment-Total`"), col("`Enrollment-Free`"),
+        col("`Lunch Meals-Paid`")),
+      "School Level-Standardized" ->
+        Derive.schoolLevelStandardized(col("`School Level-Original`")),
+      "School Type-Standardized" ->
+        Derive.schoolTypeStandardized(schoolTypeOriginal)))
 
-    val breakfast = breakfast0
-      .withColumn("Breakfast Delivery Model from State Agency-Original",
+    val frBreakfastMeals = Derive.frMeals(col("`Breakfast Meals-Free`"),
+      col("`Breakfast Meals-Reduced`"),
+      col("`Breakfast Meals-Free and Reduced`"))
+    val breakfast = breakfast0.withColumns(ListMap(
+      "Breakfast Delivery Model from State Agency-Original" ->
         Derive.breakfastDeliveryModel(col("`TRADITIONAL_MODEL`"),
           col("`MID_MORNING_MODEL`"), col("`CLASSROOM_MODEL`"),
           col("`REDUCED_PRICE_MODEL`"), col("`GRAB_N_GO_MODEL`"),
-          col("`FREE_MODEL`")))
-      .withColumn("FR Breakfast Meals",
-        Derive.frMeals(col("`Breakfast Meals-Free`"),
-          col("`Breakfast Meals-Reduced`"),
-          col("`Breakfast Meals-Free and Reduced`")))
-      .withColumn("FR Breakfast ADP",
-        Derive.frAdp(col("`FR Breakfast Meals`"),
-          col("`Operating Days-Breakfast Only`"), col("`Operating Days`")))
+          col("`FREE_MODEL`")),
+      "FR Breakfast Meals" -> frBreakfastMeals,
+      "FR Breakfast ADP" -> Derive.frAdp(frBreakfastMeals,
+        col("`Operating Days-Breakfast Only`"), col("`Operating Days`"))))
 
     // E3 steps 3-5: three-part-key join + the final DISTINCT wide table
     // (ref :846-856, :1079).

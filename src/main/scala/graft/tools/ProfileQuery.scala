@@ -2,8 +2,11 @@ package graft.tools
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
-  SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted,
+  SparkListenerTaskEnd}
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd,
+  SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.graftshim.Bus.drain
 
 /** Per-query timing and execution profile for plan iteration (dev
@@ -15,7 +18,9 @@ import org.apache.spark.sql.graftshim.Bus.drain
   * because of real compute" from "slow because of orchestration"
   * (guide §1: measure first; §2.2: count the exchanges). After each
   * `[profile]` line a `[profile-jobs]` table lists the top 20 job
-  * descriptions / call sites and stage names by wall.
+  * descriptions / call sites and stages by wall: a job without a
+  * description is listed under its SQL execution's call site, and a
+  * stage under its job's label.
   *
   * Run: SPARK_GRAFT_SF_DIR=... sbt "runMain graft.tools.ProfileQuery q_a q_b"
   */
@@ -36,17 +41,34 @@ object ProfileQuery {
     val shufW = new AtomicLong(0L)
     // per-job breakdown: sums job wall + task time by the job's
     // description when one is set (the `Rounds` labels, e.g.
-    // "pagerank round 3"), else by its short call site — the map from
+    // "pagerank round 3"), else by the call site of the SQL execution
+    // it runs for (an AQE query stage's last stage is named after the
+    // AQE thread, not the operator line), else, for a job outside any
+    // SQL execution, by its last stage's short call site — the map from
     // wall seconds back to the round or operator line that paid them
     val jobStartNs = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
+    val sqlSites = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+    // a stage of a job keyed by description or SQL execution is keyed
+    // alike (an AQE stage's own name is the AQE thread's call site)
+    val stageSites = new java.util.concurrent.ConcurrentHashMap[Int, String]()
     val siteAgg = new java.util.concurrent.ConcurrentHashMap[String, (Long, Int)]()
     spark.sparkContext.addSparkListener(new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          sqlSites.put(s.executionId, s.description)
+        case s: SparkListenerSQLExecutionEnd => sqlSites.remove(s.executionId)
+        case _ =>
+      }
       override def onJobStart(j: SparkListenerJobStart): Unit = {
         jobs.incrementAndGet()
-        val key = Option(j.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(j.stageInfos.lastOption
-            .map(_.name.takeWhile(_ != '+').trim).getOrElse("?"))
+        def prop(k: String) =
+          Option(j.properties).flatMap(p => Option(p.getProperty(k)))
+        val label = prop("spark.job.description")
+          .orElse(prop("spark.sql.execution.id")
+            .flatMap(id => Option(sqlSites.get(id.toLong))))
+        label.foreach(l => j.stageIds.foreach(stageSites.putIfAbsent(_, l)))
+        val key = label.getOrElse(j.stageInfos.lastOption
+          .map(_.name.takeWhile(_ != '+').trim).getOrElse("?"))
         jobStartNs.put(j.jobId, (key, System.nanoTime()))
       }
       override def onJobEnd(j: SparkListenerJobEnd): Unit = {
@@ -61,7 +83,9 @@ object ProfileQuery {
         stages.incrementAndGet()
         val info = s.stageInfo
         val ms = info.taskMetrics.executorRunTime
-        siteAgg.merge("stage: " + info.name.takeWhile(_ != '+').trim,
+        val site = Option(stageSites.remove(info.stageId))
+          .getOrElse(info.name.takeWhile(_ != '+').trim)
+        siteAgg.merge("stage: " + site,
           (ms, 1), (a, b) => (a._1 + b._1, a._2 + b._2))
       }
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
@@ -89,6 +113,7 @@ object ProfileQuery {
       Seq(jobs, stages, tasks).foreach(_.set(0))
       Seq(taskMs, shufR, shufW).foreach(_.set(0L))
       siteAgg.clear()
+      stageSites.clear()
       val wall = run(name)
       drain(spark.sparkContext)
       println(f"[time] $name%-32s best ${math.min(first, wall)}%6.2f s  (runs: $first%.2f, $wall%.2f)")
