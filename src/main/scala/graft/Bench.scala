@@ -1,6 +1,7 @@
 package graft
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
+import graft.obs.Noop
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
@@ -75,21 +76,8 @@ object Bench {
     val cpus = Session.cpus
     val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
-    // Force FULL evaluation of every column: a noop-sink write consumes
-    // each row end-to-end, so Catalyst cannot prune computed columns or
-    // drop the top-level sort the way it can under count().
-    def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-    // warmup: initialize FS/codegen/parquet-footer caches so the first
-    // timed query doesn't absorb one-time session costs. TWO runs: a
-    // single run left residual JIT compilation in the session-start
-    // noise probe (~1.8x the mid/end probes on identical code),
-    // conflating JIT warmup with container drift — the index must
-    // measure the BOX, not the JIT.
-    SparkEntry.queries.get("q1_agg").foreach { fn =>
-      try run(fn) catch { case _: Throwable => () }
-      try run(fn) catch { case _: Throwable => () }
-    }
+    // the noise index must measure the BOX, not the JIT
+    Noop.warm(spark, sfDir)
     // A throwing query is RECORDED as failed — it must not silently
     // score ~0 s and "improve" the total; the gate can cross-check
     // n_failed against CORRECTNESS.
@@ -134,7 +122,8 @@ object Bench {
         prevBest: Option[Long] = None): R = {
       def timed(): (Long, Boolean) = {
         val t0 = System.nanoTime()
-        val ok = try { run(fn); true } catch { case e: Throwable =>
+        val ok = try { Noop.write(fn(spark, sfDir)); true }
+        catch { case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
           false
         }

@@ -15,15 +15,12 @@ object Session {
   val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
     .getOrElse(math.min(32, Runtime.getRuntime.availableProcessors()))
 
-  def local(cpus: Int = Session.cpus,
-      extra: Map[String, String] = Map.empty): SparkSession = {
-    val builder = SparkSession.builder()
+  def local(cpus: Int = Session.cpus): SparkSession =
+    SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-    extra.foreach { case (k, v) => builder.config(k, v) }
-    builder.getOrCreate()
-  }
+      .getOrCreate()
 }

@@ -3,7 +3,7 @@ package graft.tools
 import graft.functions.{HashFunctions, ShingleFunctions}
 import graft.ops.{Dedup, Similarity}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.Bus.drain
+import graft.obs.{Ledger, Noop}
 
 /** Scale-headroom probe: runs the hot operators on synthetic data 1-2
   * orders of magnitude past sf0.1 to verify the shuffle/partition
@@ -18,14 +18,16 @@ object Stress {
 
     // optional substring filter: `runMain graft.tools.Stress span`
     // runs only probes whose name contains "span" (plan definitions
-    // outside the timed blocks are lazy, so skipping costs nothing)
+    // outside the timed blocks are lazy and every lane writes its own
+    // input, so skipping costs nothing)
     def enabled(name: String): Boolean =
       args.isEmpty || name.contains(args(0))
 
-    def time[T](name: String)(f: => T): Unit = if (enabled(name)) {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"$name%-40s ${(System.nanoTime() - t0) / 1e9}%8.2f s  ($r)")
+    // one line a lane: its wall, the shuffle bytes its tasks wrote and
+    // its Spark jobs, from one ledger around the block
+    def time(name: String)(f: => Any): Unit = if (enabled(name)) {
+      val (r, l) = Ledger.measure(spark)(f)
+      println(f"$name%-40s ${l.wallS}%8.2f s  (shuffle ${l.shuffleWriteBytes / 1e9}%.2f GB written, ${l.jobs.size} jobs) ($r)")
     }
 
     // 50M-row aggregation (~80x sf0.1 lineitem)
@@ -78,27 +80,8 @@ object Stress {
     // is 5000x) — the LSH bucket paths only, which ARE the scale
     // story: signatures are one codegen'd pass, candidates come from
     // capped equi-join buckets (never all-pairs), the corpus never
-    // shuffles for ANN. Shuffle-write bytes are accounted per scenario
-    // via a task-metrics listener so the README can pin the claim.
-    val shuffleW = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = e.taskMetrics
-          if (m != null) shuffleW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      })
-    def timeShuffle(name: String)(f: => Any): Unit = if (enabled(name)) {
-      drain(spark.sparkContext)
-      val s0 = shuffleW.get
-      val t0 = System.nanoTime()
-      val r = f
-      val secs = (System.nanoTime() - t0) / 1e9
-      drain(spark.sparkContext)
-      val gb = (shuffleW.get - s0) / 1e9
-      println(f"$name%-40s $secs%8.2f s  (shuffle $gb%.2f GB written) ($r)")
-    }
+    // shuffles for ANN. Every lane's line carries its shuffle-write
+    // bytes, so the README can pin the claim.
     // 2% planted exact-duplicate pairs: rows 0..200k carry the same
     // vector as rows 5M..5.2M (content-keyed hash), the rest unique
     val contentId = when(col("id") < 200000L, col("id") + 5000000L)
@@ -107,17 +90,17 @@ object Stress {
       transform(sequence(lit(0), lit(63)),
         i => pmod(xxhash64(contentId * 64 + i), lit(1000)).cast("float")
           / 1000.0f - 0.5f).cast("array<float>").as("embedding"))
-    timeShuffle("embedding LSH dedup 10M x 64d") {
+    time("embedding LSH dedup 10M x 64d") {
       // 24-bit buckets keep random-collision candidates ~Poisson(0.6)
       // per bucket; the planted dups collide in all 4 tables
       Dedup.embeddingPairs(bigVecs, "id", "embedding", threshold = 0.9,
         planes = 24, tables = 4, bucketCap = 2000).count()
     }
-    timeShuffle("ANN LSH top-k 5 x 10M x 64d") {
+    time("ANN LSH top-k 5 x 10M x 64d") {
       Similarity.lshTopK(bigVecs, bigVecs.filter(col("id") < 5),
         "id", "embedding", "id", "embedding", k = 10).count()
     }
-    timeShuffle("ANN IVF top-k 5 x 10M x 64d (fused assign)") {
+    time("ANN IVF top-k 5 x 10M x 64d (fused assign)") {
       // trains on a 2048-row sample; the 10M-row centroid assignment
       // runs through the fused NearestCentroid codegen kernel
       val index = Similarity.fitIvf(bigVecs, "embedding", "id", nlist = 16)
@@ -128,27 +111,27 @@ object Stress {
     // float vs int8 brute force over the same 2M-row corpus slice:
     // the quantized scan reads 4x fewer vector bytes and dots ints
     val midVecs = bigVecs.filter(col("id") < 2000000L)
-    timeShuffle("ANN float brute force 5 x 2M x 64d") {
+    time("ANN float brute force 5 x 2M x 64d") {
       Similarity.bruteForceTopK(midVecs, midVecs.filter(col("id") < 5),
         "id", "embedding", "id", "embedding", k = 10).count()
     }
-    timeShuffle("ANN int8 brute force 5 x 2M x 64d") {
+    time("ANN int8 brute force 5 x 2M x 64d") {
       Similarity.int8TopK(midVecs, midVecs.filter(col("id") < 5),
         "id", "embedding", "id", "embedding", k = 10).count()
     }
     // per-row text kernels at 1M docs: both scan-bound, no shuffle
-    timeShuffle("repetition stats, 1M docs") {
+    time("repetition stats, 1M docs") {
       docs.select(graft.functions.RepetitionFunctions
           .repetitionStats(col("text")).as("r"))
         .agg(sum(element_at(col("r"), 1))).collect().head.getDouble(0)
     }
-    timeShuffle("chunker 64/16, 1M docs") {
+    time("chunker 64/16, 1M docs") {
       graft.ops.Chunker.chunk(docs, "id", "text", 64, 16).count()
     }
     // model-based scoring at 1M docs: the LM fit is one token-count
     // shuffle + a 64-row collect; scoring is a shuffle-free scan with
     // the model inlined as a literal map
-    timeShuffle("unigram-LM fit + score 1M docs") {
+    time("unigram-LM fit + score 1M docs") {
       val m = graft.ops.Scoring.fitUnigram(docs, col("text"), 64)
       docs.select(graft.ops.Scoring.crossEntropy(col("text"), m).as("x"))
         .agg(sum("x")).collect().head.getDouble(0).round
@@ -159,7 +142,7 @@ object Stress {
     // 1024-bucket weight vector. (The trainer derives its prior from
     // the labels that joined the feature rows, so the oversupplied
     // 1M-row label table is harmless.)
-    timeShuffle("hashed-NB fit 200k + score 1M docs") {
+    time("hashed-NB fit 200k + score 1M docs") {
       val labels = docs.select(col("id"),
         (col("id") % 2).cast("double").as("y"))
       val train = docs.filter(col("id") % 10 <= 1)
@@ -172,7 +155,7 @@ object Stress {
 
     // intra-doc span dedup: expression-only scan; the planted stutter
     // (every doc repeats its own first 10 tokens) must be excised
-    timeShuffle("span dedup (k=3), 1M docs") {
+    time("span dedup (k=3), 1M docs") {
       val stutter = docs.withColumn("text",
         concat_ws(" ", col("text"), substring_index(col("text"), " ", 10)))
       graft.ops.SpanDedup.clean(stutter, "id", col("text"), 3)
@@ -184,7 +167,7 @@ object Stress {
     // count; a chained-replace formulation would be a 1000-deep
     // expression tree). Merge list is constructively training-valid:
     // 676 char-pair merges + a 324-deep chain of grown symbols.
-    timeShuffle("BPE encode 1M docs, 1000 merges") {
+    time("BPE encode 1M docs, 1000 merges") {
       val letters = ('a' to 'z').map(_.toString)
       val pairMerges = for (a <- letters; b <- letters) yield (a, b)
       val chain = scala.collection.mutable.Buffer.empty[(String, String)]
@@ -204,7 +187,7 @@ object Stress {
     // two-pass distributed prefix sum (quantile buckets -> partitioned
     // window -> literal offsets) — no single-partition stage; the
     // returned max(cum) = Σ n_tokens double-checks the arithmetic
-    timeShuffle("token-budget cumsum 10M rows (two-pass)") {
+    time("token-budget cumsum 10M rows (two-pass)") {
       val rows = spark.range(0, 10000000L, 1, 64).select(
         col("id").as("doc_id"),
         (col("id") % 997 + 1).as("n_tokens"),
@@ -219,7 +202,7 @@ object Stress {
     // X52b: deterministic source-interleave schedule at 10M docs, 16
     // sources — per-source ranks from a partitioned window, global
     // position in closed form over driver-collected per-source counts
-    timeShuffle("interleave schedule 10M docs, 16 sources") {
+    time("interleave schedule 10M docs, 16 sources") {
       import org.apache.spark.sql.expressions.Window
       val d10 = spark.range(0, 10000000L, 1, 64).select(
         col("id").as("doc_id"),
@@ -244,9 +227,9 @@ object Stress {
     // X47: deterministic sharded write at 10M docs x 64 shards — one
     // fixed-cardinality repartition + within-partition sort, then a
     // partitioned parquet write
-    val shardDir = java.nio.file.Files
-      .createTempDirectory("graft-stress-shard")
-    timeShuffle("writeSharded 10M docs x 64 shards") {
+    time("writeSharded 10M docs x 64 shards") {
+      val shardDir = java.nio.file.Files
+        .createTempDirectory("graft-stress-shard")
       val d10 = spark.range(0, 10000000L, 1, 64).select(
         col("id").as("doc_id"),
         md5(col("id").cast("string")).as("text"))
@@ -256,7 +239,6 @@ object Stress {
 
     // the flagship dictionary-driven pipeline at ~75000x the fixture
     // size: 300k-row SBP/NSLP TSVs through ingest->clean->derive->join
-    val dir = java.nio.file.Files.createTempDirectory("graft-stress")
     val n = 300000L
     def idCols = Seq(
       concat(lit("A"), col("id").cast("string")).as("AGENCY_CODE"),
@@ -265,7 +247,7 @@ object Stress {
       lit("2017-10-01").as("claim date"),
       (col("id") % 900000 + 1).cast("string").as("district id"),
       (col("id") % 5000).cast("string").as("School ID"))
-    spark.range(0, n, 1, 32).select(idCols ++ Seq(
+    val sbp = spark.range(0, n, 1, 32).select(idCols ++ Seq(
         lit("Y").as("TRADITIONAL_MODEL"), lit("N").as("MID_MORNING_MODEL"),
         lit("N").as("CLASSROOM_MODEL"), lit("N").as("REDUCED_PRICE_MODEL"),
         lit("Y").as("GRAB_N_GO_MODEL"), lit("N").as("FREE_MODEL"),
@@ -274,9 +256,7 @@ object Stress {
         lit(null).cast("string").as("Breakfast Meals-Free and Reduced"),
         lit("18").as("Operating Days-Breakfast Only"),
         lit("22").as("Operating Days")): _*)
-      .write.mode("overwrite").option("sep", "\t").option("header", "true")
-      .csv(s"$dir/sbp")
-    spark.range(0, n, 1, 32).select(idCols ++ Seq(
+    val nslp = spark.range(0, n, 1, 32).select(idCols ++ Seq(
         lit("YES").as("PUBLIC"), lit("Regular").as("SCHOOL TYPE"),
         lit("High School").as("School Level-Original"),
         lit("N").as("CEP (Y/N)"),
@@ -291,13 +271,19 @@ object Stress {
         lit(null).cast("string").as("Enrollment-Free and Reduced"),
         (col("id") % 1000 + 100).cast("string").as("Enrollment-Total"),
         lit("17-18").as("School Year")): _*)
-      .write.mode("overwrite").option("sep", "\t").option("header", "true")
-      .csv(s"$dir/nslp")
-    time("clean pipeline, 300k-row state files") {
-      graft.engine.Pipeline.run(spark, graft.engine.Pipeline.Config(
-        dictPath("data_dictionary_template_1.txt"),
-        dictPath("data_dictionary_template_2.txt"),
-        breakfastPath = s"$dir/sbp", lunchPath = s"$dir/nslp")).count()
+    val cleanLane = "clean pipeline, 300k-row state files"
+    if (enabled(cleanLane)) {
+      val dir = java.nio.file.Files.createTempDirectory("graft-stress")
+      Seq("sbp" -> sbp, "nslp" -> nslp).foreach { case (name, df) =>
+        df.write.mode("overwrite").option("sep", "\t")
+          .option("header", "true").csv(s"$dir/$name")
+      }
+      time(cleanLane) {
+        graft.engine.Pipeline.run(spark, graft.engine.Pipeline.Config(
+          dictPath("data_dictionary_template_1.txt"),
+          dictPath("data_dictionary_template_2.txt"),
+          breakfastPath = s"$dir/sbp", lunchPath = s"$dir/nslp")).count()
+      }
     }
 
     // PDF p.29 wide-schema scenario: a 614-column dictionary-driven
@@ -318,9 +304,10 @@ object Stress {
       d2 = wideCols.slice(300, 600).zipWithIndex.map { case (c, i) =>
         c.toLowerCase -> Seq(s"Clean Col ${i + 300}")
       }.toMap)
-    var widePlan: graft.engine.CleanPlan = null
+    // built in the plan-build lane, or in the wide-clean lane when that
+    // lane runs alone
+    lazy val widePlan = graft.engine.Dictionary.planLocal(wideCols, wideDicts)
     time("wide plan build, 614-col dictionary (driver)") {
-      widePlan = graft.engine.Dictionary.planLocal(wideCols, wideDicts)
       s"drops=${widePlan.drops.size} renames=${widePlan.renames.size}"
     }
     val wideDf = spark.range(0, 200000L, 1, 32).select(
@@ -330,8 +317,7 @@ object Stress {
       // noop write: every surviving column is materialized end to end,
       // so the measurement covers analysis + codegen + evaluation of
       // the full-width projection (count() would prune it away)
-      widePlan.select(wideDf)
-        .write.format("noop").mode("overwrite").save()
+      Noop.write(widePlan.select(wideDf))
       s"kept=${widePlan(wideCols).size}"
     }
 
@@ -393,7 +379,7 @@ object Stress {
 
     // X55: HTML stripping over 1M docs wearing full-page markup —
     // pure per-row kernel scan, no shuffle
-    timeShuffle("strip html, 1M docs") {
+    time("strip html, 1M docs") {
       val dressed = docs.withColumn("text",
         concat(lit("<html><head><style>p{color:red}</style></head><body><p>"),
           col("text"),
@@ -409,7 +395,7 @@ object Stress {
     // shuffles only (md5, doc_id, pos) triples, text rejoins on
     // uniform (doc_id, pos) — the hot paragraph never concentrates
     // text in one partition
-    timeShuffle("paragraph dedup 1M docs, ~6M paras") {
+    time("paragraph dedup 1M docs, ~6M paras") {
       val lines = docs.select(col("id").as("doc_id"),
         posexplode(concat(
           when(col("id") % 10 === 0,
@@ -439,7 +425,7 @@ object Stress {
     // every window repeats); winner election shuffles 16-byte
     // (key, doc_id, pos) triples only, rebuild is the fused
     // SpanRebuild kernel
-    timeShuffle("substring dedup 1M docs, k=8") {
+    time("substring dedup 1M docs, k=8") {
       graft.ops.SubstringDedup.clean(docs, "id", col("text"), 8)
         .agg(sum("n_removed")).collect().head.getLong(0)
     }
@@ -447,7 +433,7 @@ object Stress {
     // X59: per-language LM fits for 16 languages in ONE grouped count
     // shuffle, then every doc scored under its own language's model in
     // a shuffle-free literal-map scan
-    timeShuffle("per-lang LM fit x16 + score, 1M docs") {
+    time("per-lang LM fit x16 + score, 1M docs") {
       val byLang = docs.withColumn("lang",
         concat(lit("l"), (col("id") % 16).cast("string")))
       val models = graft.ops.Scoring
@@ -459,7 +445,7 @@ object Stress {
 
     // X54: DSIR fit (one fixed-width bucket-count shuffle) + scoring
     // + hash-gated acceptance over 1M docs, target = 10% of corpus
-    timeShuffle("DSIR fit + resample, 1M docs") {
+    time("DSIR fit + resample, 1M docs") {
       val m = graft.ops.Dsir.fit(docs, col("text"),
         col("id") % 10 === 0, 1024)
       docs.select(
@@ -483,8 +469,8 @@ object Stress {
     def prMass(iters: Int): Long =
       (graft.ops.PageRank.run(prEdges, "src", "dst", iters, 0.85)
         .agg(sum("pr")).collect().head.getDouble(0) * 1e6).round
-    timeShuffle("pagerank 10M edges, 5 rounds") { prMass(5) }
-    timeShuffle("pagerank 10M edges, 10 rounds") { prMass(10) }
+    time("pagerank 10M edges, 5 rounds") { prMass(5) }
+    time("pagerank 10M edges, 10 rounds") { prMass(10) }
 
     // X72: seeded PageRank on the same 10M-edge / 1M-node graph with a
     // 1k-node seed whitelist (0.1% of nodes — the realistic curated-
@@ -492,7 +478,7 @@ object Stress {
     // the personalization adds no asymptotic cost: t ≈ the plain-PR
     // figure above, and returned mass still ≈ 1.0 (teleport+dangling
     // redistribution both seed-weighted).
-    timeShuffle("seeded pagerank 10M edges, 5 rounds") {
+    time("seeded pagerank 10M edges, 5 rounds") {
       val seeds = spark.range(0, 1000000L, 1000L).toDF("v")
       (graft.ops.PageRank.runSeeded(prEdges, "src", "dst", seeds, 5, 0.85)
         .agg(sum("pr")).collect().head.getDouble(0) * 1e6).round
@@ -507,8 +493,8 @@ object Stress {
     def lpaCommunities(rounds: Int): Long =
       graft.ops.Communities.labelPropagation(prEdges, "src", "dst", rounds)
         .agg(countDistinct(col("community"))).collect().head.getLong(0)
-    timeShuffle("label prop 10M edges, 4 rounds") { lpaCommunities(4) }
-    timeShuffle("label prop 10M edges, 8 rounds") { lpaCommunities(8) }
+    time("label prop 10M edges, 4 rounds") { lpaCommunities(4) }
+    time("label prop 10M edges, 8 rounds") { lpaCommunities(8) }
 
     // X80: triangle counting on the same 10M-edge / 1M-node graph —
     // the degree-ordered-orientation claim at scale: wedges are
@@ -516,7 +502,7 @@ object Stress {
     // hub nodes generate no wedge explosion and the join stays
     // O(Σ outdeg²) with outdeg ~ O(√E). Returned value = total
     // triangle incidences (Σ per-node counts = 3 × triangles).
-    timeShuffle("triangles 10M edges") {
+    time("triangles 10M edges") {
       graft.ops.Triangles.perNode(prEdges, "src", "dst")
         .agg(sum("n_triangles")).collect().head.getLong(0)
     }
@@ -527,7 +513,7 @@ object Stress {
     // and per-round state is localCheckpoint'ed so cost stays flat in
     // rounds. Returned value = sum(hub)·1e6 rounded: L1 normalization
     // conservation (≈1.0) doubles as the sanity check.
-    timeShuffle("hits 10M edges, 3 rounds") {
+    time("hits 10M edges, 3 rounds") {
       (graft.ops.Hits.run(prEdges, "src", "dst", 3)
         .agg(sum("hub")).collect().head.getDouble(0) * 1e6).round
     }
@@ -536,7 +522,7 @@ object Stress {
     // whitelist. Each round shuffles only (node, int) rows; state is
     // checkpointed per hop. Returned value = nodes reached within the
     // budget (data-dependent but deterministic).
-    timeShuffle("bfs 10M edges, 4 hops, 1k seeds") {
+    time("bfs 10M edges, 4 hops, 1k seeds") {
       val seeds = spark.range(0, 1000000L, 1000L).toDF("v")
       graft.ops.Bfs.hopDistance(prEdges, "src", "dst", seeds, 4)
         .filter(col("dist").isNotNull).count()
@@ -547,7 +533,7 @@ object Stress {
     // semi-joins + one keyed degree aggregate + an anti-join, all
     // fixed-width; survivors checkpointed. Returned value = nodes
     // peeled within 6 rounds.
-    timeShuffle("kcore 10M edges, k=21, 6 rounds") {
+    time("kcore 10M edges, k=21, 6 rounds") {
       graft.ops.KCore.onionLayers(prEdges, "src", "dst", 21, 6)
         .filter(col("layer").isNotNull).count()
     }
@@ -558,7 +544,7 @@ object Stress {
     // 10-round budget; LPA likewise stops at its fixpoint. Returned
     // value = rounds actually executed (the wasted-superstep count a
     // fixed-budget loop would have paid is 10 and 10).
-    timeShuffle("kcore 10M edges CONVERGED, 10-round budget") {
+    time("kcore 10M edges CONVERGED, 10-round budget") {
       var rounds = 0
       // 2-regular union of 1M disjoint-ish cycles via (i, i+1M mod 2M)
       val cyc = spark.range(0, 2000000L, 1, 32).select(
@@ -568,7 +554,7 @@ object Stress {
         .filter(col("layer").isNotNull).count()
       rounds
     }
-    timeShuffle("lpa 10M edges, 8-round budget, fixpoint exit") {
+    time("lpa 10M edges, 8-round budget, fixpoint exit") {
       var rounds = 0
       graft.ops.Communities.labelPropagation(prEdges, "src", "dst", 8,
           onRound = _ => rounds += 1)
@@ -590,7 +576,7 @@ object Stress {
     // ratio must sit near 10, not 100 (VERDICT r14 #4 — this operator
     // is new to the bench top-5, the winnow-pairs probe discipline).
     Seq(1000000L, 10000000L).foreach { n =>
-      timeShuffle(s"containment dedup ${n / 1000000}M docs, 2% quotes") {
+      time(s"containment dedup ${n / 1000000}M docs, 2% quotes") {
         def tok(i: Int) = concat(lit("ct"),
           pmod(xxhash64(col("id") * 64 + i), lit(n * 100L))
             .cast("string"))
@@ -613,7 +599,7 @@ object Stress {
     // side per bucket, so the candidate join stays near-linear (3
     // planes is the FIXTURE granularity, not the scale setting).
     // Returned value = mined pairs at margin > 1.05.
-    timeShuffle("bitext mine 1M x 64-dim, 16 planes") {
+    time("bitext mine 1M x 64-dim, 16 planes") {
       import org.apache.spark.sql.expressions.Window
       // components CENTERED on 0: all-positive vectors would collapse
       // the sign buckets into a handful of huge cells (caught at
@@ -661,7 +647,7 @@ object Stress {
     // each round shuffles exploded (v, hv) pairs + the bounded sketch
     // re-aggregation, nothing text-sized. Returned value = Σ ĥ rounded
     // (deterministic estimator, so the figure is reproducible).
-    timeShuffle("hyperball 10M edges, r=4, k=16") {
+    time("hyperball 10M edges, r=4, k=16") {
       graft.ops.Centrality.harmonicHyperball(prEdges, "src", "dst",
           radius = 4, k = 16)
         .agg(sum("harmonic_est")).collect().head.getDouble(0).round
@@ -674,7 +660,7 @@ object Stress {
     // planted duplicate pages must collapse (2 fingerprint groups —
     // the dressing differs by id%4); the en-marker prefix keeps the
     // lang gate honest. Returned value = surviving docs.
-    timeShuffle("crawl chain 500k warc.gz docs") {
+    time("crawl chain 500k warc.gz docs") {
       import graft.ops.Warc
       val cBody = when(col("id") % 50 === 0,
         lit("this page is a duplicated boilerplate crawl artifact that "
@@ -727,7 +713,7 @@ object Stress {
     // nodes — 100k components of diameter 100, the shape pointer
     // jumping exists for (⌈log₂ 100⌉ = 7 rounds). Returned value =
     // distinct canonical ids; exactly 100000 iff clustering is right.
-    timeShuffle("ccdist label-prop, 10M pairs") {
+    time("ccdist label-prop, 10M pairs") {
       val n = 10100000L
       val ccIds = spark.range(0, n, 1, 64).select(col("id"))
       val ccPairs = spark.range(0, n, 1, 64)
@@ -772,7 +758,7 @@ object Stress {
     // kernel (the HOF form measured 22 s at 5k sf0.1 docs — this is
     // 200x the doc count). Returned value = total fingerprints;
     // density ≈ 2/(w+1) of grams sanity-checks the selection.
-    timeShuffle("winnow fingerprints 1M docs, k=3 w=8") {
+    time("winnow fingerprints 1M docs, k=3 w=8") {
       graft.ops.Winnow.fingerprints(docs, "id", "text", 3, 8).count()
     }
 
@@ -785,7 +771,7 @@ object Stress {
     // Returned value = (fingerprints, pairs); the 10M/1M ratios of
     // both counts and time must sit near 10, not 100.
     Seq(1000000L, 10000000L).foreach { n =>
-      timeShuffle(s"winnow pairs ${n / 1000000}M docs, k=3 w=8 cap=100") {
+      time(s"winnow pairs ${n / 1000000}M docs, k=3 w=8 cap=100") {
         val dd = spark.range(0, n, 1, 64).select(col("id"),
           concat_ws(" ", (0 until 60).map(i =>
             concat(lit("tok"), (col("id") * 7 + i).cast("string"))): _*)
@@ -802,7 +788,7 @@ object Stress {
     // probes are a fixed 6-way fan-out, rejection one anti-join,
     // ranks a <=6-row-per-user window. Returned value = rows emitted
     // (3 per user with negatives available).
-    timeShuffle("negative sampling 1M users x 10M positives") {
+    time("negative sampling 1M users x 10M positives") {
       val pos = spark.range(0, 10000000L, 1, 64).select(
         (col("id") % 1000000L).as("u"),
         pmod(xxhash64(col("id")), lit(1000000L)).as("i"))
@@ -814,7 +800,7 @@ object Stress {
     // the bucketed two-pass device, pairs via rank-bucketization —
     // pair volume must be ~2M*3 (the method's own budget), never
     // same-key quadratic. Returned value = candidate pairs.
-    timeShuffle("sorted neighborhood 2M names, w=3") {
+    time("sorted neighborhood 2M names, w=3") {
       val names = spark.range(0, 2000000L, 1, 64).select(
         concat(lit("name"), lpad(pmod(xxhash64(col("id")),
           lit(10000000L)).cast("string"), 8, "0")).as("n"))
@@ -825,7 +811,7 @@ object Stress {
     // one keyed aggregate over a fixed 4-way fan-out — state is 1024
     // cells regardless of stream size. Returned value = matrix mass
     // (must equal 4 x 50M).
-    timeShuffle("count-min sketch 50M draws") {
+    time("count-min sketch 50M draws") {
       val ev = spark.range(0, 50000000L, 1, 64).select(
         pmod(xxhash64(col("id")), lit(1000000L)).cast("string").as("u"))
       val cells = ev.select(explode(array((0 until 4).map(j =>
@@ -966,18 +952,9 @@ object Stress {
         "q_tokenizer_compare", "q_unigram_encode",
         "q_ann_index_compact", "q_stream_ann_ingest",
         "q_dedup_index_compact")
-      def best2(name: String, dir: String): Double = {
-        def once(): Double = {
-          val t0 = System.nanoTime()
-          graft.SparkEntry.queries(name)(spark, dir)
-            .write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        math.min(once(), once())
-      }
-      // warmup
-      graft.SparkEntry.queries("q1_agg")(spark, sf01)
-        .write.format("noop").mode("overwrite").save()
+      def best2(name: String, dir: String): Double =
+        math.min(Noop.run(spark, name, dir).wallS, Noop.run(spark, name, dir).wallS)
+      Noop.warm(spark, sf01)
       println(f"${"query"}%-22s ${"sf0.1"}%8s ${"sf1"}%8s ${"ratio"}%7s")
       heavy.foreach { q =>
         val a = best2(q, sf01)
@@ -1007,17 +984,13 @@ object Stress {
           .localCheckpoint(true)
         val n = e.count()
         val cut = n - n / 20 // 95% base, 5% delta
-        val t0 = System.nanoTime()
-        graft.ops.AnnGraph.build(e.filter(col("id") < cut), dir)
-        val buildS = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        graft.ops.AnnGraph.ingest(e, col("id") >= cut, dir)
-        val ingestS = (System.nanoTime() - t1) / 1e9
-        (n - cut, buildS, ingestS)
+        val build = Ledger.measure(spark)(
+          graft.ops.AnnGraph.build(e.filter(col("id") < cut), dir))._2
+        val ingest = Ledger.measure(spark)(
+          graft.ops.AnnGraph.ingest(e, col("id") >= cut, dir))._2
+        (n - cut, build.wallS, ingest.wallS)
       }
-      // warmup
-      graft.SparkEntry.queries("q1_agg")(spark, sf01)
-        .write.format("noop").mode("overwrite").save()
+      Noop.warm(spark, sf01)
       val (d01, b01, i01) = lane(sf01)
       val (d1, b1, i1) = lane(sf1)
       println(f"${"lane"}%-12s ${"sf0.1"}%8s ${"sf1"}%8s ${"ratio"}%7s")
@@ -1034,17 +1007,9 @@ object Stress {
     // lane, and prints all raw attempts so lane luck is visible.
     if (enabled("als-retime")) {
       val sf1 = ensureSf1()
-      def runs(name: String, dir: String, n: Int): Seq[Double] =
-        (1 to n).map { _ =>
-          val t0 = System.nanoTime()
-          graft.SparkEntry.queries(name)(spark, dir)
-            .write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-      graft.SparkEntry.queries("q1_agg")(spark, sf01)
-        .write.format("noop").mode("overwrite").save() // warmup
-      val a = runs("q_als", sf01, 3)
-      val b = runs("q_als", sf1, 3)
+      Noop.warm(spark, sf01)
+      val a = Seq.fill(3)(Noop.run(spark, "q_als", sf01).wallS)
+      val b = Seq.fill(3)(Noop.run(spark, "q_als", sf1).wallS)
       println(f"[als-retime] sf0.1 attempts: ${a.map(x => f"$x%.2f").mkString(", ")}")
       println(f"[als-retime] sf1   attempts: ${b.map(x => f"$x%.2f").mkString(", ")}")
       println(f"[als-retime] best ratio: ${b.min / a.min}%.2f " +
