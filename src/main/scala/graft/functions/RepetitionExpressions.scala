@@ -59,7 +59,9 @@ object RepetitionStats {
     c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' ||
       c == '\r'
 
-  private def splitTokens(text: String): Array[String] = {
+  /** The whitespace tokens of `text` (Spark's `split(text, "\\s+")`
+    * minus empty tokens); SpanDedupStats tokenizes with it too. */
+  private[functions] def splitTokens(text: String): Array[String] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
     var i = 0
     val n = text.length

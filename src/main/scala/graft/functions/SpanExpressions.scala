@@ -60,29 +60,8 @@ object SpanDedupStats {
     StructField("n_removed", LongType, nullable = false),
     StructField("cleaned_text", StringType, nullable = false)))
 
-  /** Matches Java regex `\s` (the exact set Spark's split uses). */
-  @inline private def isWs(c: Char): Boolean =
-    c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' ||
-      c == '\r'
-
-  private[functions] def tokensOf(text: String): Array[String] =
-    splitTokens(text)
-
-  private def splitTokens(text: String): Array[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var i = 0
-    val n = text.length
-    while (i < n) {
-      while (i < n && isWs(text.charAt(i))) i += 1
-      val start = i
-      while (i < n && !isWs(text.charAt(i))) i += 1
-      if (i > start) out += text.substring(start, i)
-    }
-    out.toArray
-  }
-
   def compute(s: UTF8String, k: Int): InternalRow = {
-    val toks = splitTokens(s.toString)
+    val toks = RepetitionStats.splitTokens(s.toString)
     val n = toks.length
     var dups = 0L
     val removed = new Array[Boolean](n)
@@ -107,10 +86,17 @@ object SpanDedupStats {
         i += 1
       }
     }
+    rebuild(toks, removed, dups)
+  }
+
+  /** The output row: token count, duplicate windows, removed tokens
+    * and the text rebuilt from the tokens not marked `removed`. */
+  private[functions] def rebuild(toks: Array[String],
+      removed: Array[Boolean], nDupWindows: Long): InternalRow = {
     var nRemoved = 0L
     val cleaned = new java.lang.StringBuilder
     var p = 0
-    while (p < n) {
+    while (p < toks.length) {
       if (removed(p)) nRemoved += 1
       else {
         if (cleaned.length > 0) cleaned.append(' ')
@@ -118,8 +104,8 @@ object SpanDedupStats {
       }
       p += 1
     }
-    new GenericInternalRow(Array[Any](n.toLong, dups, nRemoved,
-      UTF8String.fromString(cleaned.toString)))
+    new GenericInternalRow(Array[Any](toks.length.toLong, nDupWindows,
+      nRemoved, UTF8String.fromString(cleaned.toString)))
   }
 }
 
@@ -160,7 +146,7 @@ object SpanRebuild {
   def compute(s: UTF8String,
       dups: org.apache.spark.sql.catalyst.util.ArrayData,
       k: Int): InternalRow = {
-    val toks = SpanDedupStats.tokensOf(s.toString)
+    val toks = RepetitionStats.splitTokens(s.toString)
     val n = toks.length
     val removed = new Array[Boolean](n)
     val nd = dups.numElements()
@@ -172,19 +158,7 @@ object SpanRebuild {
       while (j < end) { if (j >= 0) removed(j) = true; j += 1 }
       i += 1
     }
-    var nRemoved = 0L
-    val cleaned = new java.lang.StringBuilder
-    var p = 0
-    while (p < n) {
-      if (removed(p)) nRemoved += 1
-      else {
-        if (cleaned.length > 0) cleaned.append(' ')
-        cleaned.append(toks(p))
-      }
-      p += 1
-    }
-    new GenericInternalRow(Array[Any](n.toLong, nd.toLong, nRemoved,
-      UTF8String.fromString(cleaned.toString)))
+    SpanDedupStats.rebuild(toks, removed, nd.toLong)
   }
 }
 

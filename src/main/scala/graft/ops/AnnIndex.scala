@@ -234,12 +234,25 @@ object AnnIndex {
       } yield (qid, c, d16(qv, 16 * sub, loaded.codebooks(sub)(c)))
       broadcast(rows.toDF("qid", s"c$sub", s"d$sub"))
     }
-    val est = loaded.codes
-      .join(probes, Seq("list_id"))
-      .join(qd(0), col("c0") === col("k0") && qd(0)("qid") === col("pqid"))
-      .join(qd(1), col("c1") === col("k1") && qd(1)("qid") === col("pqid"))
-      .join(qd(2), col("c2") === col("k2") && qd(2)("qid") === col("pqid"))
-      .join(qd(3), col("c3") === col("k3") && qd(3)("qid") === col("pqid"))
+    adcTopK(loaded.codes, probes, qd, k)
+  }
+
+  /** ADC scoring and top-k over probed candidates: `codes` (vec_id,
+    * list_id, k0..k3) joined to `probes` (pqid, list_id), each
+    * sub-code scored from the per-query tables `qd` (qid, c<sub>,
+    * d<sub>); ranked as [[adcRank]]. */
+  private[graft] def adcTopK(codes: DataFrame, probes: DataFrame,
+      qd: Seq[DataFrame], k: Int): DataFrame =
+    adcRank(qd.indices.foldLeft(codes.join(probes, Seq("list_id"))) {
+      (acc, i) => acc.join(qd(i),
+        col(s"c$i") === col(s"k$i") && qd(i)("qid") === col("pqid"))
+    }, k)
+
+  /** Scored candidates (pqid, vec_id, d0..d3), self matches dropped,
+    * as (query_id, neighbor_id, rank, adist = d0 + d1 + d2 + d3):
+    * the k nearest per query by (adist, neighbor_id). */
+  private[graft] def adcRank(scored: DataFrame, k: Int): DataFrame = {
+    val est = scored
       .where(col("vec_id") =!= col("pqid"))
       .select(col("pqid").as("query_id"),
         col("vec_id").as("neighbor_id"),

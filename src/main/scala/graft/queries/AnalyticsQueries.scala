@@ -156,6 +156,26 @@ cents_${i + 1} AS MATERIALIZED (
              corpus AS MATERIALIZED (
                SELECT vec_id, embedding, list_id FROM assigned WHERE rn = 1)"""
 
+  /** [[sqlIvfCorpusCtes]] plus `corpusv` (vec_id, v = the embedding
+    * as doubles), the head of the IVF-PQ oracles. */
+  private val sqlIvfCorpusVCtes = s"""$sqlIvfCorpusCtes,
+             corpusv AS (
+               SELECT vec_id,
+                      list_transform(embedding, x -> CAST(x AS DOUBLE))
+                        AS v
+               FROM embeddings)"""
+
+  /** The IVF-PQ probe set: each of the 5 queries' nprobe = 4 nearest
+    * cells by dot product (ties cell ASC), as `probes` (pqid, list_id). */
+  private val sqlIvfProbesCtes = s"""probed AS (
+               SELECT q.vec_id AS pqid, c.c AS list_id,
+                      ROW_NUMBER() OVER (PARTITION BY q.vec_id
+                        ORDER BY ${sqlDotD("c.cv",
+                          "q.embedding")} DESC, c.c ASC) AS rn
+               FROM (SELECT * FROM embeddings WHERE vec_id < 5) q,
+                    cents_5 c),
+             probes AS (SELECT pqid, list_id FROM probed WHERE rn <= 4)"""
+
   val annIvf = QueryDef(
     "q_ann_ivf",
     Some(s"""WITH $sqlIvfCorpusCtes,
@@ -361,12 +381,7 @@ cents_${i + 1} AS MATERIALIZED (
     * both engines. */
   val annIvfPq = QueryDef(
     "q_ann_ivfpq",
-    Some(s"""WITH ${sqlIvfCorpusCtes},
-             corpusv AS (
-               SELECT vec_id,
-                      list_transform(embedding, x -> CAST(x AS DOUBLE))
-                        AS v
-               FROM embeddings),
+    Some(s"""WITH $sqlIvfCorpusVCtes,
              ${ClusterQueries.pqSlicesSql},
              ${ClusterQueries.pqInitsSql},
              ${ClusterQueries.pqRoundsSql},
@@ -380,14 +395,7 @@ cents_${i + 1} AS MATERIALIZED (
                JOIN codes_2 c2 USING (vec_id)
                JOIN codes_3 c3 USING (vec_id)
                JOIN corpus cp USING (vec_id)),
-             probed AS (
-               SELECT q.vec_id AS pqid, c.c AS list_id,
-                      ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                        ORDER BY ${sqlDotD("c.cv",
-                          "q.embedding")} DESC, c.c ASC) AS rn
-               FROM (SELECT * FROM embeddings WHERE vec_id < 5) q,
-                    cents_5 c),
-             probes AS (SELECT pqid, list_id FROM probed WHERE rn <= 4),
+             $sqlIvfProbesCtes,
              est AS (
                SELECT p.pqid, w.vec_id,
                       ((q0.d + q1.d) + q2.d) + q3.d AS adist
@@ -425,12 +433,7 @@ cents_${i + 1} AS MATERIALIZED (
     * running under r-prefixed CTE names over residual slices. */
   val annIvfAdc = QueryDef(
     "q_ann_ivfadc",
-    Some(s"""WITH ${sqlIvfCorpusCtes},
-             corpusv AS (
-               SELECT vec_id,
-                      list_transform(embedding, x -> CAST(x AS DOUBLE))
-                        AS v
-               FROM embeddings),
+    Some(s"""WITH $sqlIvfCorpusVCtes,
              corpusr AS MATERIALIZED (
                SELECT b.vec_id,
                       list_transform(range(1, 65),
@@ -451,14 +454,7 @@ cents_${i + 1} AS MATERIALIZED (
                JOIN rcodes_2 c2 USING (vec_id)
                JOIN rcodes_3 c3 USING (vec_id)
                JOIN corpus cp USING (vec_id)),
-             probed AS (
-               SELECT q.vec_id AS pqid, c.c AS list_id,
-                      ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                        ORDER BY ${sqlDotD("c.cv",
-                          "q.embedding")} DESC, c.c ASC) AS rn
-               FROM (SELECT * FROM embeddings WHERE vec_id < 5) q,
-                    cents_5 c),
-             probes AS (SELECT pqid, list_id FROM probed WHERE rn <= 4),
+             $sqlIvfProbesCtes,
              rq AS (
                SELECT q.vec_id AS qid, p.list_id,
                       list_transform(range(1, 65),
@@ -1807,9 +1803,11 @@ cents_${i + 1} AS MATERIALIZED (
         .orderBy("shard")
     })
 
-  val warcParse = QueryDef(
-    "q_warc_parse",
-    Some("""WITH m AS (
+  /** Each document as two WARC records (response = the text, metadata
+    * = lang and source, both at the doc's URI): the oracle of both
+    * WARC parse rows. */
+  private val warcRecordsSql =
+    """WITH m AS (
               SELECT doc_id, text,
                      'lang: ' || lang || chr(10) || 'source: ' || source
                        AS meta,
@@ -1825,7 +1823,17 @@ cents_${i + 1} AS MATERIALIZED (
             SELECT doc_id, CAST(1 AS INT), 'metadata', uri,
                    CAST(strlen(meta) AS BIGINT), md5(meta)
             FROM m
-            ORDER BY doc_id, rec_no"""),
+            ORDER BY doc_id, rec_no"""
+
+  /** A parsed record as an output row: the doc id (the URI's last path
+    * segment), record number, type, URI, length and payload md5. */
+  private def warcRow(r: Warc.WarcRecord, i: Int) =
+    (r.targetUri.substring(r.targetUri.lastIndexOf('/') + 1).toLong,
+      i, r.recType, r.targetUri, r.contentLength, Warc.md5Hex(r.payload))
+
+  val warcParse = QueryDef(
+    "q_warc_parse",
+    Some(warcRecordsSql),
     (s, d) => {
       import s.implicits._
       val uri = concat(lit("http://corpus.local/doc/"),
@@ -1837,12 +1845,7 @@ cents_${i + 1} AS MATERIALIZED (
         Warc.record("metadata", uri, meta)).cast("binary")
       Tables.documents(s, d).select(blob.as("warc")).as[Array[Byte]]
         .flatMap { b =>
-          Warc.parse(b).zipWithIndex.map { case (r, i) =>
-            (r.targetUri.substring(r.targetUri.lastIndexOf('/') + 1)
-               .toLong,
-             i, r.recType, r.targetUri, r.contentLength,
-             Warc.md5Hex(r.payload))
-          }
+          Warc.parse(b).zipWithIndex.map { case (r, i) => warcRow(r, i) }
         }
         .toDF("doc_id", "rec_no", "rec_type", "target_uri",
           "content_length", "payload_md5")
@@ -1865,23 +1868,7 @@ cents_${i + 1} AS MATERIALIZED (
     * Truncation/desync/FNAME-flagged members are planted in WarcSpec. */
   val warcParseGz = QueryDef(
     "q_warc_parse_gz",
-    Some("""WITH m AS (
-              SELECT doc_id, text,
-                     'lang: ' || lang || chr(10) || 'source: ' || source
-                       AS meta,
-                     'http://corpus.local/doc/' || CAST(doc_id AS VARCHAR)
-                       AS uri
-              FROM documents)
-            SELECT doc_id, CAST(0 AS INT) AS rec_no,
-                   'response' AS rec_type, uri AS target_uri,
-                   CAST(strlen(text) AS BIGINT) AS content_length,
-                   md5(text) AS payload_md5
-            FROM m
-            UNION ALL
-            SELECT doc_id, CAST(1 AS INT), 'metadata', uri,
-                   CAST(strlen(meta) AS BIGINT), md5(meta)
-            FROM m
-            ORDER BY doc_id, rec_no"""),
+    Some(warcRecordsSql),
     (s, d) => {
       import s.implicits._
       Tables.documents(s, d)
@@ -1897,12 +1884,7 @@ cents_${i + 1} AS MATERIALIZED (
               Warc.recordBytes("metadata", uri, meta.getBytes("UTF-8")))
         }
         .flatMap { b =>
-          Warc.parseGz(b).zipWithIndex.map { case (r, i) =>
-            (r.targetUri.substring(r.targetUri.lastIndexOf('/') + 1)
-               .toLong,
-             i, r.recType, r.targetUri, r.contentLength,
-             Warc.md5Hex(r.payload))
-          }
+          Warc.parseGz(b).zipWithIndex.map { case (r, i) => warcRow(r, i) }
         }
         .toDF("doc_id", "rec_no", "rec_type", "target_uri",
           "content_length", "payload_md5")
@@ -2151,6 +2133,24 @@ cents_${i + 1} AS MATERIALIZED (
         .orderBy(col("n_exact").desc, col("user_id"))
     })
 
+  /** Items in at least this many orders enter the itemset rows. */
+  private val ItemMin = 2
+
+  /** The (order, item) baskets, the order count `n`, the frequent
+    * items `ic` and the baskets `bf` cut to them: the head of both
+    * itemset oracles. */
+  private val basketsSql =
+    s"""WITH b AS (
+                SELECT DISTINCT l.l_orderkey AS o, l.l_partkey AS i
+                FROM lineitem l),
+              n AS (SELECT CAST(COUNT(DISTINCT o) AS BIGINT) AS n_orders
+                    FROM b),
+              ic AS (
+                SELECT i, CAST(COUNT(*) AS BIGINT) AS c
+                FROM b GROUP BY i HAVING COUNT(*) >= $ItemMin),
+              bf AS (
+                SELECT b.o, b.i FROM b JOIN ic ON b.i = ic.i)"""
+
   /** Frequent item-pair association rules (X157 — Agrawal & Srikant
     * 1994's Apriori at level 2, the market-basket support/confidence/
     * lift readout): baskets = orders, items = parts. The Apriori
@@ -2165,18 +2165,8 @@ cents_${i + 1} AS MATERIALIZED (
     * via TakeOrdered. */
   val itemsetPairs = QueryDef(
     "q_itemset_pairs", {
-      val minItem = 2
       val minPair = 2
-      Some(s"""WITH b AS (
-                SELECT DISTINCT l.l_orderkey AS o, l.l_partkey AS i
-                FROM lineitem l),
-              n AS (SELECT CAST(COUNT(DISTINCT o) AS BIGINT) AS n_orders
-                    FROM b),
-              ic AS (
-                SELECT i, CAST(COUNT(*) AS BIGINT) AS c
-                FROM b GROUP BY i HAVING COUNT(*) >= $minItem),
-              bf AS (
-                SELECT b.o, b.i FROM b JOIN ic ON b.i = ic.i),
+      Some(s"""$basketsSql,
               pc AS (
                 SELECT x.i AS a, y.i AS bb,
                        CAST(COUNT(*) AS BIGINT) AS c_ab
@@ -2200,14 +2190,13 @@ cents_${i + 1} AS MATERIALIZED (
               ORDER BY c_ab DESC, a, b LIMIT 50""")
     },
     (s, d) => {
-      val minItem = 2
       val minPair = 2
       val b = Tables.lineitem(s, d)
         .select(col("l_orderkey").as("o"), col("l_partkey").as("i"))
         .distinct()
       val nOrders = b.select("o").distinct().count()
       val ic = b.groupBy("i").agg(count(lit(1)).as("c"))
-        .filter(col("c") >= minItem)
+        .filter(col("c") >= ItemMin)
         .localCheckpoint(true) // feeds the gate + both metric joins
       val bf = b.join(ic.select("i"), Seq("i"), "left_semi")
       val pc = bf.as("x").join(bf.as("y"),
@@ -2246,18 +2235,8 @@ cents_${i + 1} AS MATERIALIZED (
     * (c_abc DESC, a, b, c) top-50. */
   val itemsetTriples = QueryDef(
     "q_itemset_triples", {
-      val minItem = 2
       val minTriple = 2
-      Some(s"""WITH b AS (
-                SELECT DISTINCT l.l_orderkey AS o, l.l_partkey AS i
-                FROM lineitem l),
-              n AS (SELECT CAST(COUNT(DISTINCT o) AS BIGINT) AS n_orders
-                    FROM b),
-              ic AS (
-                SELECT i, CAST(COUNT(*) AS BIGINT) AS c
-                FROM b GROUP BY i HAVING COUNT(*) >= $minItem),
-              bf AS (
-                SELECT b.o, b.i FROM b JOIN ic ON b.i = ic.i),
+      Some(s"""$basketsSql,
               pc AS (
                 SELECT x.i AS a, y.i AS bb,
                        CAST(COUNT(*) AS BIGINT) AS c_ab
@@ -2288,7 +2267,6 @@ cents_${i + 1} AS MATERIALIZED (
               ORDER BY tc.c_abc DESC, tc.a, tc.bb, tc.cc LIMIT 50""")
     },
     (s, d) => {
-      val minItem = 2
       val minTriple = 2
       // r20 NEGATIVE RESULT: repartition(o) ahead of the distinct (to
       // share one exchange with the three o-keyed self-join arms) was
@@ -2300,7 +2278,7 @@ cents_${i + 1} AS MATERIALIZED (
         .distinct()
       val nOrders = b.select("o").distinct().count()
       val ic = b.groupBy("i").agg(count(lit(1)).as("c"))
-        .filter(col("c") >= minItem)
+        .filter(col("c") >= ItemMin)
       val bf = b.join(ic.select("i"), Seq("i"), "left_semi")
         .localCheckpoint(true) // three self-join arms read it
       val pc = bf.as("x").join(bf.as("y"),
@@ -2743,12 +2721,7 @@ $name AS (
     * (full list universe). */
   val annIndexBuild = QueryDef(
     "q_ann_index_build",
-    Some(s"""WITH ${sqlIvfCorpusCtes},
-             corpusv AS (
-               SELECT vec_id,
-                      list_transform(embedding, x -> CAST(x AS DOUBLE))
-                        AS v
-               FROM embeddings),
+    Some(s"""WITH $sqlIvfCorpusVCtes,
              ${ClusterQueries.pqSlicesSql},
              ${ClusterQueries.pqInitsSql},
              ${ClusterQueries.pqRoundsSql},
@@ -2924,47 +2897,17 @@ $name AS (
       graft.ops.AnnIndex.build(emb, dir,
         codeEmb = emb.filter(col("vec_id") % 2 === 0),
         fitKey = s"annidxfits|$d")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-annstream")
-      val srcDir = tmp.resolve("src")
-      java.nio.file.Files.createDirectories(srcDir)
-      // stage a microbatch as ONE flat parquet file in the drop-folder
-      def stage(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-        val part = tmp.resolve(s"stage_$name")
-        df.coalesce(1).write.parquet(part.toString)
-        val f = java.nio.file.Files.list(part).iterator()
-        var staged = false
-        while (f.hasNext) {
-          val p = f.next()
-          if (p.getFileName.toString.endsWith(".parquet")) {
-            java.nio.file.Files.createSymbolicLink(
-              srcDir.resolve(s"$name.parquet"), p)
-            staged = true
-          }
-        }
-        require(staged, s"stage: no parquet part for $name")
-      }
+      val drop = new SimilarityQueries.DropFolder(s, "graft-annstream")
       def ingestBatch(batch: org.apache.spark.sql.DataFrame,
           batchId: Long): Unit = {
         val b = batch.select("vec_id", "embedding").localCheckpoint(true)
         if (b.head(1).nonEmpty) graft.ops.AnnIndex.ingest(b, dir)
       }
-      def runOnce(): Unit = {
-        val q = s.readStream
-          .schema(emb.schema)
-          .parquet(srcDir.toString)
-          .writeStream
-          .foreachBatch(ingestBatch _)
-          .option("checkpointLocation", tmp.resolve("ckpt").toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
       // arrival 1: half the odd vectors; arrival 2: the rest
-      stage(emb.filter(col("vec_id") % 4 === 1), "b0")
-      runOnce()
-      stage(emb.filter(col("vec_id") % 4 === 3), "b1")
-      runOnce()
+      drop.stage(emb.filter(col("vec_id") % 4 === 1), "b0")
+      drop.drain(emb.schema, ingestBatch)
+      drop.stage(emb.filter(col("vec_id") % 4 === 3), "b1")
+      drop.drain(emb.schema, ingestBatch)
       val loaded = graft.ops.AnnIndex.load(s, dir)
       val qRows = emb.filter(col("vec_id") < 5)
         .select(col("vec_id"), col("embedding").cast("array<double>"))

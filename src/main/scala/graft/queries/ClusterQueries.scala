@@ -609,15 +609,7 @@ corpusp AS MATERIALIZED (
       val frame = pqFrame(s, d)
       val qFrame = broadcast(frame.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("v").as("qv")))
-      val exd = frame.join(qFrame, col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"),
-          aggregate(zip_with(col("qv"), col("v"),
-            (x, y) => (x - y) * (x - y)), lit(0.0),
-            (acc, t) => acc + t).as("dx"))
-      val wX = org.apache.spark.sql.expressions.Window
-        .partitionBy("qid").orderBy(col("dx").asc, col("vec_id").asc)
-      val exr = exd.withColumn("rn", row_number().over(wX))
-        .filter(col("rn") <= 10).select("qid", "vec_id")
+      val exr = exactTop10(frame, qFrame)
       def hitsOf(approx: org.apache.spark.sql.DataFrame) =
         approx.join(exr,
             approx("query_id") === exr("qid") &&
@@ -687,6 +679,23 @@ corpusp AS MATERIALIZED (
 
   /** Per-query 4x4 ADC tables (qid, c$sub, d$sub), broadcast — same
     * 0.0-init fold as the SQL lane. */
+  /** The exact top-10 truth of the PQ recall rows: per query (qid, qv)
+    * of `qFrame`, the 10 `frame` vectors (vec_id, v) nearest by
+    * squared L2 (ties vec_id ASC), as (qid, vec_id). */
+  private def exactTop10(frame: org.apache.spark.sql.DataFrame,
+      qFrame: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val exd = frame.join(qFrame, col("vec_id") =!= col("qid"))
+      .select(col("qid"), col("vec_id"),
+        aggregate(zip_with(col("qv"), col("v"),
+          (x, y) => (x - y) * (x - y)), lit(0.0),
+          (acc, t) => acc + t).as("dx"))
+    val wX = org.apache.spark.sql.expressions.Window
+      .partitionBy("qid").orderBy(col("dx").asc, col("vec_id").asc)
+    exd.withColumn("rn", row_number().over(wX))
+      .filter(col("rn") <= 10).select("qid", "vec_id")
+  }
+
   private def pqQdTables(s: org.apache.spark.sql.SparkSession,
       qRows: Seq[(Long, Array[Double])],
       cents: IndexedSeq[Array[Array[Double]]])
@@ -785,15 +794,7 @@ corpusp AS MATERIALIZED (
         .filter(col("rn") <= 10).select("qid", "vec_id")
       val qFrame = broadcast(frame.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("v").as("qv")))
-      val exd = frame.join(qFrame, col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"),
-          aggregate(zip_with(col("qv"), col("v"),
-            (x, y) => (x - y) * (x - y)), lit(0.0),
-            (acc, t) => acc + t).as("dx"))
-      val wX = org.apache.spark.sql.expressions.Window
-        .partitionBy("qid").orderBy(col("dx").asc, col("vec_id").asc)
-      val exr = exd.withColumn("rn", row_number().over(wX))
-        .filter(col("rn") <= 10).select("qid", "vec_id")
+      val exr = exactTop10(frame, qFrame)
       val hits = approx.join(exr, Seq("qid", "vec_id"))
         .groupBy("qid").agg(count(lit(1)).as("n_hit"))
       qFrame.select(col("qid"))
@@ -830,22 +831,7 @@ corpusp AS MATERIALIZED (
     val probes = broadcast(qRows.flatMap { case (qid, qv) =>
       index.probeLists(qv, nprobe).map(l => (qid, l))
     }.toDF("pqid", "list_id"))
-    val est = codesw
-      .join(probes, Seq("list_id"))
-      .join(qd(0), col("c0") === col("k0") && qd(0)("qid") === col("pqid"))
-      .join(qd(1), col("c1") === col("k1") && qd(1)("qid") === col("pqid"))
-      .join(qd(2), col("c2") === col("k2") && qd(2)("qid") === col("pqid"))
-      .join(qd(3), col("c3") === col("k3") && qd(3)("qid") === col("pqid"))
-      .where(col("vec_id") =!= col("pqid"))
-      .select(col("pqid").as("query_id"),
-        col("vec_id").as("neighbor_id"),
-        (((col("d0") + col("d1")) + col("d2")) + col("d3")).as("adist"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("adist").asc, col("neighbor_id").asc)
-    est.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "adist")
+    graft.ops.AnnIndex.adcTopK(codesw, probes, qd, k)
   }
 
   /** The Spark lane of q_ann_ivfadc (X296 — TRUE IVFADC: PQ codebooks
@@ -912,16 +898,7 @@ corpusp AS MATERIALIZED (
         qd(2)("qid") === col("pqid") && col("ld2") === col("list_id"))
       .join(qd(3), col("c3") === col("k3") &&
         qd(3)("qid") === col("pqid") && col("ld3") === col("list_id"))
-      .where(col("vec_id") =!= col("pqid"))
-      .select(col("pqid").as("query_id"),
-        col("vec_id").as("neighbor_id"),
-        (((col("d0") + col("d1")) + col("d2")) + col("d3")).as("adist"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("adist").asc, col("neighbor_id").asc)
-    est.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "adist")
+    graft.ops.AnnIndex.adcRank(est, k)
   }
 
   /** DuckDB twin of [[Lloyd.sqDist]]'s 0.0-init zip-fold (the

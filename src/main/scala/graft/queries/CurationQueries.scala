@@ -4,6 +4,7 @@ import graft.{QueryDef, Tables}
 import graft.functions.{Num, SketchFunctions, Text}
 import graft.ops.{Bloom, Profile}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Corpus-curation operators: bloom-filter join pruning, bounded-memory
@@ -1437,20 +1438,7 @@ object CurationQueries {
               SELECT doc_id, text,
                      (lang = 'en' AND source = 'src0') AS t
               FROM documents),
-            tk AS (
-              SELECT doc_id,
-                     list_filter(string_split_regex(text, '\\s+'),
-                                 t -> len(t) > 0) AS toks
-              FROM base),
-            fl AS (
-              SELECT doc_id, unnest(toks) AS f FROM tk
-              UNION ALL
-              SELECT doc_id,
-                     unnest(CASE WHEN len(toks) >= 2 THEN
-                       list_transform(range(1, CAST(len(toks) AS INT)),
-                         i -> toks[i] || ' ' || toks[i+1])
-                       ELSE CAST([] AS VARCHAR[]) END) AS f
-              FROM tk),
+            ${TextQueries.hashedFeaturesSql("base")},
             fb AS (
               SELECT doc_id,
                      CAST('0x' || substring(md5('qc:' || f), 1, 8)
@@ -1794,6 +1782,24 @@ object CurationQueries {
   // a decimal 0.15 literal would be a DIFFERENT double.
   private[queries] val PrTeleport = 1.0 - PrDamping
 
+  /** The synthetic domain graph every domain-graph row reads: src =
+    * doc_id mod 50, dst = an md5 bucket of doc_id — a deterministic
+    * multigraph over 50 domain ids. */
+  private[queries] val domainEdgeSql =
+    """SELECT doc_id % 50 AS src,
+                     CAST('0x' || substring(md5('pr:'
+                         || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)
+                       % 50 AS dst
+              FROM documents"""
+
+  /** The Spark side of [[domainEdgeSql]], over any documents frame. */
+  private[queries] def domainEdges(docs: DataFrame): DataFrame =
+    docs.select(
+      (col("doc_id") % 50).as("src"),
+      (conv(substring(md5(concat(lit("pr:"),
+          col("doc_id").cast("string"))), 1, 8), 16, 10)
+        .cast("long") % 50).as("dst"))
+
   /** One unrolled power-iteration round as oracle CTEs (the X7/X42
     * Lloyd-unroll device): contributions keyed by dst, qround'd
     * dangling mass, teleport + damped update, qround'd rank. */
@@ -1819,27 +1825,11 @@ object CurationQueries {
                 LEFT JOIN c$t ON nodes.v = c$t.v)"""
   }
 
-  /** Domain-graph PageRank (X66 — the crawl-curation authority signal;
-    * Page et al. 1999, the Common Crawl domain-ranking recipe): a
-    * deterministic 50-node domain multigraph carved from documents
-    * (src = doc_id mod 50, dst = an md5 bucket), 5 damped power-
-    * iteration rounds from the uniform start. Per round: one shuffle
-    * keyed src (ranks→edges join), one keyed dst (contribution agg) —
-    * fixed-width (node, double) rows only; the whole computation is a
-    * single lazy plan (scalar node-count/dangling aggregates ride as
-    * broadcast 1-row cross joins, no driver actions between rounds).
-    * The oracle unrolls all 5 rounds as CTEs; each round's ranks are
-    * qround(6)-canonicalized so round t+1 starts from bit-identical
-    * doubles on both engines. */
-  val domainPagerank = QueryDef(
-    "q_domain_pagerank",
-    Some(s"""WITH e0 AS MATERIALIZED (
-              SELECT doc_id % 50 AS src,
-                     CAST('0x' || substring(md5('pr:'
-                         || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)
-                       % 50 AS dst
-              FROM documents),
-            nodes AS MATERIALIZED (
+  /** The rounds and readout of PageRank over an `e0` (src, dst) edge
+    * CTE: node ranks after [[PrIters]] rounds with each node's out
+    * degree. */
+  private[queries] val pagerankSql =
+    s"""nodes AS MATERIALIZED (
               SELECT DISTINCT v FROM (
                 SELECT src AS v FROM e0
                 UNION ALL SELECT dst AS v FROM e0)),
@@ -1858,22 +1848,59 @@ object CurationQueries {
             FROM nodes
               LEFT JOIN deg ON nodes.v = deg.src
               JOIN r$PrIters ON nodes.v = r$PrIters.v
-            ORDER BY node"""),
+            ORDER BY node"""
+
+  /** The Spark side of [[pagerankSql]]: (node, out_deg, pr). */
+  private[queries] def pagerank(edges: DataFrame): DataFrame = {
+    val pr = graft.ops.PageRank.run(edges, "src", "dst", PrIters, PrDamping)
+    val deg = edges.groupBy(col("src").as("v"))
+      .agg(count(lit(1)).as("deg"))
+    pr.join(deg, Seq("v"), "left")
+      .select(col("v").as("node"),
+        coalesce(col("deg"), lit(0L)).as("out_deg"), col("pr"))
+      .orderBy("node")
+  }
+
+  /** Domain-graph PageRank (X66 — the crawl-curation authority signal;
+    * Page et al. 1999, the Common Crawl domain-ranking recipe): a
+    * deterministic 50-node domain multigraph carved from documents
+    * (src = doc_id mod 50, dst = an md5 bucket), 5 damped power-
+    * iteration rounds from the uniform start. Per round: one shuffle
+    * keyed src (ranks→edges join), one keyed dst (contribution agg) —
+    * fixed-width (node, double) rows only; the whole computation is a
+    * single lazy plan (scalar node-count/dangling aggregates ride as
+    * broadcast 1-row cross joins, no driver actions between rounds).
+    * The oracle unrolls all 5 rounds as CTEs; each round's ranks are
+    * qround(6)-canonicalized so round t+1 starts from bit-identical
+    * doubles on both engines. */
+  val domainPagerank = QueryDef(
+    "q_domain_pagerank",
+    Some(s"""WITH e0 AS MATERIALIZED (
+              $domainEdgeSql),
+            $pagerankSql"""),
     (s, d) => {
-      val edges = Tables.documents(s, d).select(
-        (col("doc_id") % 50).as("src"),
-        (conv(substring(md5(concat(lit("pr:"),
-            col("doc_id").cast("string"))), 1, 8), 16, 10)
-          .cast("long") % 50).as("dst"))
-      val pr = graft.ops.PageRank.run(edges, "src", "dst",
-        PrIters, PrDamping)
-      val deg = edges.groupBy(col("src").as("v"))
-        .agg(count(lit(1)).as("deg"))
-      pr.join(deg, Seq("v"), "left")
-        .select(col("v").as("node"),
-          coalesce(col("deg"), lit(0L)).as("out_deg"), col("pr"))
-        .orderBy("node")
+      val edges = domainEdges(Tables.documents(s, d))
+      pagerank(edges)
     })
+
+  /** The recursive-CTE BFS both harmonic oracles replay: distinct
+    * edges `e`, `nodes`, and the radius-6 pair distances `md`
+    * (u, v, d). */
+  private val harmonicDistSql =
+    s"""e0 AS (
+              $domainEdgeSql),
+            e AS (SELECT DISTINCT src, dst FROM e0),
+            nodes AS (
+              SELECT DISTINCT v FROM (
+                SELECT src AS v FROM e
+                UNION ALL SELECT dst AS v FROM e)),
+            bfs(u, v, d) AS (
+              SELECT v, v, 0 FROM nodes
+              UNION
+              SELECT bfs.u, e.dst, bfs.d + 1
+              FROM bfs JOIN e ON bfs.v = e.src
+              WHERE bfs.d < 6),
+            md AS (SELECT u, v, MIN(d) AS d FROM bfs GROUP BY u, v)"""
 
   /** Domain harmonic centrality (X69 — the OTHER public Common Crawl
     * ranking signal next to PageRank, Boldi & Vigna 2014): radius-6
@@ -1888,24 +1915,7 @@ object CurationQueries {
     * canonicalization (fold-order-sensitive double sum). */
   val domainHarmonic = QueryDef(
     "q_domain_harmonic",
-    Some(s"""WITH RECURSIVE e0 AS (
-              SELECT doc_id % 50 AS src,
-                     CAST('0x' || substring(md5('pr:'
-                         || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)
-                       % 50 AS dst
-              FROM documents),
-            e AS (SELECT DISTINCT src, dst FROM e0),
-            nodes AS (
-              SELECT DISTINCT v FROM (
-                SELECT src AS v FROM e
-                UNION ALL SELECT dst AS v FROM e)),
-            bfs(u, v, d) AS (
-              SELECT v, v, 0 FROM nodes
-              UNION
-              SELECT bfs.u, e.dst, bfs.d + 1
-              FROM bfs JOIN e ON bfs.v = e.src
-              WHERE bfs.d < 6),
-            md AS (SELECT u, v, MIN(d) AS d FROM bfs GROUP BY u, v),
+    Some(s"""WITH RECURSIVE $harmonicDistSql,
             h AS (
               SELECT v AS node,
                      ${graft.functions.Num.qroundSql(
@@ -1916,11 +1926,7 @@ object CurationQueries {
             FROM nodes LEFT JOIN h ON nodes.v = h.node
             ORDER BY node"""),
     (s, d) => {
-      val edges = Tables.documents(s, d).select(
-        (col("doc_id") % 50).as("src"),
-        (conv(substring(md5(concat(lit("pr:"),
-            col("doc_id").cast("string"))), 1, 8), 16, 10)
-          .cast("long") % 50).as("dst"))
+      val edges = domainEdges(Tables.documents(s, d))
       graft.ops.Centrality.harmonic(edges, "src", "dst", radius = 6)
         .orderBy("node")
     })
@@ -1939,24 +1945,7 @@ object CurationQueries {
     * (CentralitySpec separately pins k > |V| ⟹ estimate ≡ exact). */
   val domainHarmonicHb = QueryDef(
     "q_domain_harmonic_hb",
-    Some(s"""WITH RECURSIVE e0 AS (
-              SELECT doc_id % 50 AS src,
-                     CAST('0x' || substring(md5('pr:'
-                         || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)
-                       % 50 AS dst
-              FROM documents),
-            e AS (SELECT DISTINCT src, dst FROM e0),
-            nodes AS (
-              SELECT DISTINCT v FROM (
-                SELECT src AS v FROM e
-                UNION ALL SELECT dst AS v FROM e)),
-            bfs(u, v, d) AS (
-              SELECT v, v, 0 FROM nodes
-              UNION
-              SELECT bfs.u, e.dst, bfs.d + 1
-              FROM bfs JOIN e ON bfs.v = e.src
-              WHERE bfs.d < 6),
-            md AS (SELECT u, v, MIN(d) AS d FROM bfs GROUP BY u, v),
+    Some(s"""WITH RECURSIVE $harmonicDistSql,
             balls AS (
               SELECT md.v, CAST(r.r AS INT) AS r,
                      CAST('0x' || substring(md5('hb:'
@@ -1988,11 +1977,7 @@ object CurationQueries {
                      AS harmonic_est
             FROM terms GROUP BY v ORDER BY node"""),
     (s, d) => {
-      val edges = Tables.documents(s, d).select(
-        (col("doc_id") % 50).as("src"),
-        (conv(substring(md5(concat(lit("pr:"),
-            col("doc_id").cast("string"))), 1, 8), 16, 10)
-          .cast("long") % 50).as("dst"))
+      val edges = domainEdges(Tables.documents(s, d))
       graft.ops.Centrality.harmonicHyperball(edges, "src", "dst",
           radius = 6, k = 16)
         .orderBy("node")

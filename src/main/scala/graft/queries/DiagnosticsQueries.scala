@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.functions.{Num, Text}
 import graft.ops.Bloom
@@ -993,16 +993,9 @@ object DiagnosticsQueries {
     * desc, path) via TakeOrdered. */
   val topPaths = QueryDef(
     "q_top_paths",
-    Some("""WITH g AS (
+    Some(s"""WITH g AS (
               SELECT user_id, event_id, ts, event_type,
-                     CASE WHEN epoch_us(ts) -
-                          LAG(epoch_us(ts)) OVER
-                            (PARTITION BY user_id ORDER BY ts, event_id)
-                          > 1800000000 THEN 1
-                          WHEN LAG(epoch_us(ts)) OVER
-                            (PARTITION BY user_id ORDER BY ts, event_id)
-                            IS NULL THEN 1
-                          ELSE 0 END AS new_session
+                     ${EventQueries.newSessionSql}
               FROM events),
             se AS (
               SELECT user_id, event_type, ts, event_id,
@@ -1760,18 +1753,7 @@ object DiagnosticsQueries {
     * classic twice-the-scan anti-pattern this operator replaces). */
   val cdcCompact = QueryDef(
     "q_cdc_compact",
-    Some("""WITH v AS (
-              SELECT user_id, event_id, event_type, value,
-                     CAST(ROW_NUMBER() OVER w AS BIGINT) AS rn,
-                     CAST(COUNT(*) OVER (PARTITION BY user_id) AS BIGINT)
-                       AS n_versions
-              FROM events
-              WINDOW w AS (PARTITION BY user_id
-                           ORDER BY ts DESC, event_id DESC))
-            SELECT user_id, event_id AS last_event_id,
-                   event_type AS last_type, value AS last_value,
-                   n_versions
-            FROM v WHERE rn = 1 ORDER BY user_id"""),
+    Some(EventQueries.cdcLatestSql),
     (s, d) => {
       val w = Window.partitionBy("user_id")
         .orderBy(col("ts").desc, col("event_id").desc)
@@ -1788,6 +1770,29 @@ object DiagnosticsQueries {
 
   // ------------------------------------------------------- kmv union
 
+  private val KmvK = 64
+
+  /** The per-type KMV sketches of the two KMV rows as CTEs: salted
+    * 60-bit user hashes `h`, distinct (event_type, h) `d`, and each
+    * type's KmvK smallest hashes `sk` (event_type, hs). */
+  private def kmvSketchSql(salt: String): String = {
+    val hash = s"""CAST('0x' || substring(md5('$salt'
+        || CAST(user_id AS VARCHAR)), 1, 15) AS BIGINT)"""
+    s"""h AS (
+                SELECT event_type, user_id, $hash AS h FROM events),
+              d AS (SELECT DISTINCT event_type, h FROM h),
+              sk AS (
+                SELECT event_type, list(h ORDER BY h)[1:$KmvK] AS hs
+                FROM d GROUP BY event_type)"""
+  }
+
+  /** The KMV estimate over a sketch `hs`: its size below KmvK, else
+    * (KmvK − 1) / (KmvK-th smallest hash / 2^60). */
+  private val kmvEstSql =
+    s"""CASE WHEN len(hs) < $KmvK THEN CAST(len(hs) AS DOUBLE)
+             ELSE ${KmvK - 1}.0 / (CAST(hs[$KmvK] AS DOUBLE)
+                                / 1152921504606846976.0) END"""
+
   /** KMV sketch merge-union (X130 — the associativity a 1000-executor
     * distinct-count rollup RELIES on: per-partition sketches must
     * merge to the same sketch a single pass would build. The gate
@@ -1800,23 +1805,12 @@ object DiagnosticsQueries {
     * portable 60-bit md5 hash keeps every value bit-exact. */
   val kmvUnion = QueryDef(
     "q_kmv_union", {
-      val K = 64
-      val hash = """CAST('0x' || substring(md5('kmvu:'
-        || CAST(user_id AS VARCHAR)), 1, 15) AS BIGINT)"""
-      val est = s"""CASE WHEN len(hs) < $K THEN CAST(len(hs) AS DOUBLE)
-             ELSE ${K - 1}.0 / (CAST(hs[$K] AS DOUBLE)
-                                / 1152921504606846976.0) END"""
-      Some(s"""WITH h AS (
-                SELECT event_type, user_id, $hash AS h FROM events),
-              d AS (SELECT DISTINCT event_type, h FROM h),
-              sk AS (
-                SELECT event_type, list(h ORDER BY h)[1:$K] AS hs
-                FROM d GROUP BY event_type),
+      Some(s"""WITH ${kmvSketchSql("kmvu:")},
               pt AS (
-                SELECT event_type AS scope, $est AS kmv_est FROM sk),
+                SELECT event_type AS scope, $kmvEstSql AS kmv_est FROM sk),
               du AS (SELECT DISTINCT h FROM h),
-              su AS (SELECT list(h ORDER BY h)[1:$K] AS hs FROM du),
-              un AS (SELECT '<union>' AS scope, $est AS kmv_est FROM su),
+              su AS (SELECT list(h ORDER BY h)[1:$KmvK] AS hs FROM du),
+              un AS (SELECT '<union>' AS scope, $kmvEstSql AS kmv_est FROM su),
               ex AS (
                 SELECT event_type AS scope,
                        CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_exact
@@ -1833,27 +1827,26 @@ object DiagnosticsQueries {
     },
     (s, d) => {
       import graft.functions.SketchFunctions
-      val K = 64
       val h = conv(substring(md5(concat(lit("kmvu:"),
         col("user_id").cast("string"))), 1, 15), 16, 10).cast("long")
       val ev = Tables.events(s, d).select(col("event_type"),
         col("user_id"), h.as("h"))
       val perType = ev.groupBy("event_type")
-        .agg(SketchFunctions.bottomK(col("h"), K).as("sketch"),
+        .agg(SketchFunctions.bottomK(col("h"), KmvK).as("sketch"),
           countDistinct(col("user_id")).as("n_exact"))
       // the MERGE path: per-type sketches explode back to hash rows
       // and re-reduce through the same bounded bottom-k aggregate —
       // 5×64 longs, the shape of an executor-level rollup
       val merged = perType
         .select(explode(col("sketch")).as("h"))
-        .agg(SketchFunctions.bottomK(col("h"), K).as("sketch"))
+        .agg(SketchFunctions.bottomK(col("h"), KmvK).as("sketch"))
       val unionExact = ev.agg(countDistinct(col("user_id")).as("n_exact"))
         .head().getLong(0) // bounded 1-long action for the union row
       val pt = perType.select(col("event_type").as("scope"),
         col("n_exact"),
-        SketchFunctions.kmvEstimate(col("sketch"), K).as("kmv_est"))
+        SketchFunctions.kmvEstimate(col("sketch"), KmvK).as("kmv_est"))
       val un = merged.select(
-        SketchFunctions.kmvEstimate(col("sketch"), K).as("kmv_est"))
+        SketchFunctions.kmvEstimate(col("sketch"), KmvK).as("kmv_est"))
         .select(lit("<union>").as("scope"), lit(unionExact).as("n_exact"),
           col("kmv_est"))
       pt.unionAll(un)
@@ -2420,26 +2413,12 @@ object DiagnosticsQueries {
 
   // ---------------------------------------------------- kaplan-meier
 
-  /** Kaplan–Meier survival curve (X139 — Kaplan & Meier 1958, the
-    * censoring-aware time-to-event estimator every churn/conversion
-    * lifetime readout uses: subjects without the event by observation
-    * end are CENSORED, not dropped — dropping them biases survival
-    * down). Subjects = users, origin = first event, event = first
-    * purchase, censor time = corpus max timestamp (one bounded
-    * action); day-resolution times are exact integer micros floors.
-    * The risk table is alphabet-of-days bounded; BOTH cumulative
-    * lanes (at-risk depletion, then the zero-flag + fixed-point
-    * log-survival) run through
-    * [[graft.ops.PrefixSum.runningTotalsAsc]] — the ln factors cross
-    * the integer-only prefix device as FLOOR(ln·10⁶ + 0.5) fixed-point
-    * longs (the device requires exact addition; a float cumsum would
-    * be fold-order-sensitive), and S = exp(Σ/10⁶) reconstructs
-    * element-wise, qround(6). A risk set fully consumed (d = n) pins
-    * survival to EXACTLY 0 from that time on via the flag lane — no
-    * ln(0) in either engine. */
-  val kaplanMeier = QueryDef(
-    "q_kaplan_meier",
-    Some("""WITH e2 AS (
+  /** The risk table Kaplan–Meier and Nelson–Aalen both read, as oracle
+    * CTEs up to `r`: subjects = users, origin = first event, event =
+    * first purchase, censored at the corpus max timestamp; per day t
+    * the events d, censorings c and the at-risk count n_risk. */
+  private val riskSetSql =
+    """WITH e2 AS (
               SELECT user_id, event_type, epoch_us(ts) AS us FROM events),
             mx AS (SELECT MAX(us) AS m FROM e2),
             o AS (SELECT user_id, MIN(us) AS o_us FROM e2 GROUP BY 1),
@@ -2467,7 +2446,56 @@ object DiagnosticsQueries {
               FROM g),
             r AS (
               SELECT t, d, c, nn.n_subj - (cum - (d + c)) AS n_risk
-              FROM w1 CROSS JOIN nn),
+              FROM w1 CROSS JOIN nn)"""
+
+  /** The Spark side of [[riskSetSql]]: (t, d, c, rm = d + c, cum,
+    * n_risk), after two bounded actions (the horizon and the subject
+    * count). */
+  private def riskSet(s: SparkSession, d: String): DataFrame = {
+    val e2 = Tables.events(s, d)
+      .select(col("user_id"), col("event_type"),
+        unix_micros(col("ts")).as("us"))
+    val o = e2.groupBy("user_id").agg(min("us").as("o_us"))
+    val p = e2.filter(col("event_type") === "purchase")
+      .groupBy("user_id").agg(min("us").as("p_us"))
+    val maxUs = e2.agg(max("us")).head().getLong(0) // bounded action
+    val dayUs = 86400000000L
+    val subj = o.join(p, Seq("user_id"), "left")
+      .select(col("user_id"),
+        when(col("p_us").isNotNull,
+          ((col("p_us") - col("o_us")) / dayUs).cast("long"))
+          .otherwise(((lit(maxUs) - col("o_us")) / dayUs).cast("long"))
+          .as("t"),
+        col("p_us").isNotNull.as("ev"))
+    val nSubj = subj.count() // bounded action
+    val g = subj.groupBy("t")
+      .agg(sum(when(col("ev"), 1L).otherwise(0L)).as("d"),
+        sum(when(col("ev"), 0L).otherwise(1L)).as("c"))
+      .withColumn("rm", col("d") + col("c"))
+    graft.ops.PrefixSum.runningTotalsAsc(g, Seq("rm"), "t", Seq("cum"))
+      .withColumn("n_risk", lit(nSubj) - (col("cum") - col("rm")))
+  }
+
+  /** Kaplan–Meier survival curve (X139 — Kaplan & Meier 1958, the
+    * censoring-aware time-to-event estimator every churn/conversion
+    * lifetime readout uses: subjects without the event by observation
+    * end are CENSORED, not dropped — dropping them biases survival
+    * down). Subjects = users, origin = first event, event = first
+    * purchase, censor time = corpus max timestamp (one bounded
+    * action); day-resolution times are exact integer micros floors.
+    * The risk table is alphabet-of-days bounded; BOTH cumulative
+    * lanes (at-risk depletion, then the zero-flag + fixed-point
+    * log-survival) run through
+    * [[graft.ops.PrefixSum.runningTotalsAsc]] — the ln factors cross
+    * the integer-only prefix device as FLOOR(ln·10⁶ + 0.5) fixed-point
+    * longs (the device requires exact addition; a float cumsum would
+    * be fold-order-sensitive), and S = exp(Σ/10⁶) reconstructs
+    * element-wise, qround(6). A risk set fully consumed (d = n) pins
+    * survival to EXACTLY 0 from that time on via the flag lane — no
+    * ln(0) in either engine. */
+  val kaplanMeier = QueryDef(
+    "q_kaplan_meier",
+    Some(s"""$riskSetSql,
             l AS (
               SELECT *,
                      CASE WHEN d = n_risk THEN CAST(1 AS BIGINT)
@@ -2491,31 +2519,7 @@ object DiagnosticsQueries {
                           * 1000000 + 0.5) / 1000000 END AS survival
             FROM w2 ORDER BY t_day"""),
     (s, d) => {
-      val e2 = Tables.events(s, d)
-        .select(col("user_id"), col("event_type"),
-          unix_micros(col("ts")).as("us"))
-      val o = e2.groupBy("user_id").agg(min("us").as("o_us"))
-      val p = e2.filter(col("event_type") === "purchase")
-        .groupBy("user_id").agg(min("us").as("p_us"))
-      val maxUs = e2.agg(max("us")).head().getLong(0) // bounded action
-      val dayUs = 86400000000L
-      val subj = o.join(p, Seq("user_id"), "left")
-        .select(col("user_id"),
-          when(col("p_us").isNotNull,
-            ((col("p_us") - col("o_us")) / dayUs).cast("long"))
-            .otherwise(((lit(maxUs) - col("o_us")) / dayUs).cast("long"))
-            .as("t"),
-          col("p_us").isNotNull.as("ev"))
-      val nSubj = subj.count() // bounded action
-      val g = subj.groupBy("t")
-        .agg(sum(when(col("ev"), 1L).otherwise(0L)).as("d"),
-          sum(when(col("ev"), 0L).otherwise(1L)).as("c"))
-        .withColumn("rm", col("d") + col("c"))
-      val w1 = graft.ops.PrefixSum.runningTotalsAsc(g, Seq("rm"), "t",
-        Seq("cum"))
-      val r = w1.withColumn("n_risk",
-        lit(nSubj) - (col("cum") - (col("d") + col("c"))))
-      val l = r
+      val l = riskSet(s, d)
         .withColumn("zf", when(col("d") === col("n_risk"), 1L)
           .otherwise(0L))
         .withColumn("li", when(col("d") === col("n_risk"), 0L)
@@ -2757,18 +2761,7 @@ object DiagnosticsQueries {
     * check IS stream/batch sketch parity. */
   val streamKmv = QueryDef(
     "q_stream_kmv", {
-      val K = 64
-      val hash = """CAST('0x' || substring(md5('kmvs:'
-        || CAST(user_id AS VARCHAR)), 1, 15) AS BIGINT)"""
-      val est = s"""CASE WHEN len(hs) < $K THEN CAST(len(hs) AS DOUBLE)
-             ELSE ${K - 1}.0 / (CAST(hs[$K] AS DOUBLE)
-                                / 1152921504606846976.0) END"""
-      Some(s"""WITH h AS (
-                SELECT event_type, user_id, $hash AS h FROM events),
-              d AS (SELECT DISTINCT event_type, h FROM h),
-              sk AS (
-                SELECT event_type, list(h ORDER BY h)[1:$K] AS hs
-                FROM d GROUP BY event_type),
+      Some(s"""WITH ${kmvSketchSql("kmvs:")},
               ex AS (
                 SELECT event_type,
                        CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_exact
@@ -2776,21 +2769,20 @@ object DiagnosticsQueries {
               SELECT ex.event_type, ex.n_exact, e.kmv_est,
                      ABS(e.kmv_est - CAST(ex.n_exact AS DOUBLE))
                        / CAST(ex.n_exact AS DOUBLE) <= 0.3 AS within_tol
-              FROM ex JOIN (SELECT event_type, $est AS kmv_est FROM sk) e
+              FROM ex JOIN (SELECT event_type, $kmvEstSql AS kmv_est FROM sk) e
                 USING (event_type)
               ORDER BY ex.event_type""")
     },
     (s, d) => {
       import graft.functions.SketchFunctions
       import graft.streaming.EventStream
-      val K = 64
       val src = EventStream.stageDir(s"$d/events.parquet")
       val h = conv(substring(md5(concat(lit("kmvs:"),
         col("user_id").cast("string"))), 1, 15), 16, 10).cast("long")
       val plan = EventStream.readEvents(s, src)
         .select(col("event_type"), h.as("h"))
         .groupBy("event_type")
-        .agg(SketchFunctions.bottomK(col("h"), K).as("sketch"))
+        .agg(SketchFunctions.bottomK(col("h"), KmvK).as("sketch"))
       val sk = EventStream.runAvailableNow(s, plan, "q_stream_kmv_sink",
         outputMode = "complete", statePartitions = 4)
       val exact = Tables.events(s, d).groupBy("event_type")
@@ -2799,7 +2791,7 @@ object DiagnosticsQueries {
         .join(broadcast(s.createDataFrame(sk.rdd, sk.schema)),
           "event_type")
         .select(col("event_type"), col("n_exact"),
-          SketchFunctions.kmvEstimate(col("sketch"), K).as("kmv_est"))
+          SketchFunctions.kmvEstimate(col("sketch"), KmvK).as("kmv_est"))
         .withColumn("within_tol",
           abs(col("kmv_est") - col("n_exact").cast("double")) /
             col("n_exact").cast("double") <= 0.3)
@@ -3578,35 +3570,7 @@ object DiagnosticsQueries {
     * every row hashes RAW. */
   val nelsonAalen = QueryDef(
     "q_nelson_aalen",
-    Some("""WITH e2 AS (
-              SELECT user_id, event_type, epoch_us(ts) AS us FROM events),
-            mx AS (SELECT MAX(us) AS m FROM e2),
-            o AS (SELECT user_id, MIN(us) AS o_us FROM e2 GROUP BY 1),
-            p AS (SELECT user_id, MIN(us) AS p_us FROM e2
-                  WHERE event_type = 'purchase' GROUP BY 1),
-            subj AS (
-              SELECT o.user_id,
-                     CASE WHEN p.p_us IS NOT NULL
-                          THEN (p.p_us - o.o_us) // 86400000000
-                          ELSE (mx.m - o.o_us) // 86400000000 END AS t,
-                     p.p_us IS NOT NULL AS ev
-              FROM o LEFT JOIN p USING (user_id) CROSS JOIN mx),
-            nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_subj FROM subj),
-            g AS (
-              SELECT t,
-                     CAST(SUM(CASE WHEN ev THEN 1 ELSE 0 END) AS BIGINT)
-                       AS d,
-                     CAST(SUM(CASE WHEN ev THEN 0 ELSE 1 END) AS BIGINT)
-                       AS c
-              FROM subj GROUP BY t),
-            w1 AS (
-              SELECT *, CAST(SUM(d + c) OVER (ORDER BY t
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                AS BIGINT) AS cum
-              FROM g),
-            r AS (
-              SELECT t, d, c, nn.n_subj - (cum - (d + c)) AS n_risk
-              FROM w1 CROSS JOIN nn),
+    Some(s"""$riskSetSql,
             l AS (
               SELECT *,
                      CAST(FLOOR(CAST(d AS DOUBLE) / CAST(n_risk AS DOUBLE)
@@ -3630,32 +3594,10 @@ object DiagnosticsQueries {
                      * 1000000 + 0.5) / 1000000 AS surv_fh
             FROM w2 ORDER BY t_day"""),
     (s, d) => {
-      val e2 = Tables.events(s, d)
-        .select(col("user_id"), col("event_type"),
-          unix_micros(col("ts")).as("us"))
-      val o = e2.groupBy("user_id").agg(min("us").as("o_us"))
-      val p = e2.filter(col("event_type") === "purchase")
-        .groupBy("user_id").agg(min("us").as("p_us"))
-      val maxUs = e2.agg(max("us")).head().getLong(0) // bounded action
-      val dayUs = 86400000000L
-      val subj = o.join(p, Seq("user_id"), "left")
-        .select(
-          when(col("p_us").isNotNull,
-            ((col("p_us") - col("o_us")) / dayUs).cast("long"))
-            .otherwise(((lit(maxUs) - col("o_us")) / dayUs).cast("long"))
-            .as("t"),
-          col("p_us").isNotNull.as("ev"))
-      val nSubj = subj.count() // bounded action
-      val g = subj.groupBy("t")
-        .agg(sum(when(col("ev"), 1L).otherwise(0L)).as("d"),
-          sum(when(col("ev"), 0L).otherwise(1L)).as("c"))
-        .withColumn("rm", col("d") + col("c"))
-      val w1 = graft.ops.PrefixSum.runningTotalsAsc(g, Seq("rm"), "t",
-        Seq("cum"))
-      val nRisk = lit(nSubj) - (col("cum") - col("rm"))
       val dD = col("d").cast("double")
-      val nrD = nRisk.cast("double")
-      val l = w1.select(col("t"), col("d"), col("c"), nRisk.as("n_risk"),
+      val nrD = col("n_risk").cast("double")
+      val l = riskSet(s, d).select(col("t"), col("d"), col("c"),
+        col("n_risk"),
         floor(dD / nrD * 1e9 + 0.5).cast("long").as("hi"),
         floor(dD / (nrD * nrD) * 1e9 + 0.5).cast("long").as("vi"))
       val w2 = graft.ops.PrefixSum.runningTotalsAsc(l, Seq("hi", "vi"),
@@ -4818,6 +4760,24 @@ object DiagnosticsQueries {
           "uniform_at_99")
     })
 
+  /** The candidate inclusion dependencies both sides test:
+    * (label, child column, child table, parent column, parent table). */
+  private val fkCands = Seq(
+    ("orders.o_custkey->customer.c_custkey",
+      "o_custkey", "orders", "c_custkey", "customer"),
+    ("lineitem.l_orderkey->orders.o_orderkey",
+      "l_orderkey", "lineitem", "o_orderkey", "orders"),
+    ("lineitem.l_partkey->part.p_partkey",
+      "l_partkey", "lineitem", "p_partkey", "part"),
+    ("lineitem.l_suppkey->supplier.s_suppkey",
+      "l_suppkey", "lineitem", "s_suppkey", "supplier"),
+    ("customer.c_nationkey->nation.n_nationkey",
+      "c_nationkey", "customer", "n_nationkey", "nation"),
+    ("orders.o_orderkey->customer.c_custkey",
+      "o_orderkey", "orders", "c_custkey", "customer"),
+    ("lineitem.l_linenumber->nation.n_nationkey",
+      "l_linenumber", "lineitem", "n_nationkey", "nation"))
+
   /** Inclusion-dependency discovery (X278 — the SINDY/Spider-style
     * profiling pass behind schema inference: WHICH column pairs could
     * be foreign keys? The discovery sibling of X120's riAudit, which
@@ -4832,22 +4792,7 @@ object DiagnosticsQueries {
     * raw). */
   val fkDiscovery = QueryDef(
     "q_fk_discovery", {
-      val cands = Seq(
-        ("orders.o_custkey->customer.c_custkey",
-          "o_custkey", "orders", "c_custkey", "customer"),
-        ("lineitem.l_orderkey->orders.o_orderkey",
-          "l_orderkey", "lineitem", "o_orderkey", "orders"),
-        ("lineitem.l_partkey->part.p_partkey",
-          "l_partkey", "lineitem", "p_partkey", "part"),
-        ("lineitem.l_suppkey->supplier.s_suppkey",
-          "l_suppkey", "lineitem", "s_suppkey", "supplier"),
-        ("customer.c_nationkey->nation.n_nationkey",
-          "c_nationkey", "customer", "n_nationkey", "nation"),
-        ("orders.o_orderkey->customer.c_custkey",
-          "o_orderkey", "orders", "c_custkey", "customer"),
-        ("lineitem.l_linenumber->nation.n_nationkey",
-          "l_linenumber", "lineitem", "n_nationkey", "nation"))
-      val lanes = cands.map { case (label, cc, ct, pc, pt) =>
+      val lanes = fkCands.map { case (label, cc, ct, pc, pt) =>
         s"""SELECT '$label' AS candidate,
                   (SELECT CAST(COUNT(DISTINCT $cc) AS BIGINT) FROM $ct)
                     AS n_distinct_child,
@@ -4871,22 +4816,7 @@ object DiagnosticsQueries {
         case "nation" => Tables.nation(s, d)
         case "part" => Tables.part(s, d)
       }
-      val cands = Seq(
-        ("orders.o_custkey->customer.c_custkey",
-          "o_custkey", "orders", "c_custkey", "customer"),
-        ("lineitem.l_orderkey->orders.o_orderkey",
-          "l_orderkey", "lineitem", "o_orderkey", "orders"),
-        ("lineitem.l_partkey->part.p_partkey",
-          "l_partkey", "lineitem", "p_partkey", "part"),
-        ("lineitem.l_suppkey->supplier.s_suppkey",
-          "l_suppkey", "lineitem", "s_suppkey", "supplier"),
-        ("customer.c_nationkey->nation.n_nationkey",
-          "c_nationkey", "customer", "n_nationkey", "nation"),
-        ("orders.o_orderkey->customer.c_custkey",
-          "o_orderkey", "orders", "c_custkey", "customer"),
-        ("lineitem.l_linenumber->nation.n_nationkey",
-          "l_linenumber", "lineitem", "n_nationkey", "nation"))
-      val rows = cands.map { case (label, cc, ct, pc, pt) =>
+      val rows = fkCands.map { case (label, cc, ct, pc, pt) =>
         val child = t(ct).select(col(cc).cast("long").as("v")).distinct()
           .localCheckpoint(true) // distinct-count + anti-join share
         val parent = t(pt).select(col(pc).cast("long").as("p"))

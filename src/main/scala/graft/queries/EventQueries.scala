@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.functions.Num
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -145,19 +146,25 @@ object EventQueries {
         col("n_events"), col("sum_value"))
       .orderBy("window_start", "event_type"))
 
-  /** Shared by q_sessionize and its streaming twin q_stream_session —
-    * one oracle text, so batch and stream are checked against the
-    * SAME definition. */
-  private val sessionizeSql = """WITH g AS (
-              SELECT event_id, user_id, ts,
-                     CASE WHEN epoch_us(ts) -
+  /** The session-start flag of every sessionization oracle: 1 when the
+    * user's previous event (by ts, event_id) is absent or more than
+    * 30 min earlier. */
+  private[queries] val newSessionSql =
+    """CASE WHEN epoch_us(ts) -
                           LAG(epoch_us(ts)) OVER
                             (PARTITION BY user_id ORDER BY ts, event_id)
                           > 1800000000 THEN 1
                           WHEN LAG(epoch_us(ts)) OVER
                             (PARTITION BY user_id ORDER BY ts, event_id)
                             IS NULL THEN 1
-                          ELSE 0 END AS new_session
+                          ELSE 0 END AS new_session"""
+
+  /** Shared by q_sessionize and its streaming twin q_stream_session —
+    * one oracle text, so batch and stream are checked against the
+    * SAME definition. */
+  private val sessionizeSql = s"""WITH g AS (
+              SELECT event_id, user_id, ts,
+                     $newSessionSql
               FROM events)
             SELECT event_id, user_id,
                    CAST(SUM(new_session) OVER
@@ -220,16 +227,9 @@ object EventQueries {
     * discipline). */
   val streamSessionWindow = QueryDef(
     "q_stream_session_window",
-    Some("""WITH g AS (
+    Some(s"""WITH g AS (
               SELECT event_id, user_id, ts,
-                     CASE WHEN epoch_us(ts) -
-                          LAG(epoch_us(ts)) OVER
-                            (PARTITION BY user_id ORDER BY ts, event_id)
-                          > 1800000000 THEN 1
-                          WHEN LAG(epoch_us(ts)) OVER
-                            (PARTITION BY user_id ORDER BY ts, event_id)
-                            IS NULL THEN 1
-                          ELSE 0 END AS new_session
+                     $newSessionSql
               FROM events),
             s AS (
               SELECT user_id, ts,
@@ -290,18 +290,12 @@ object EventQueries {
         .orderBy("event_id")
     })
 
-  /** Stream-stream FULL OUTER interval join (X165 — completes the
-    * outer family begun by X145: BOTH sides' unmatched rows null-pad
-    * at their own watermark-driven eviction points). The oracle is
-    * the two eviction contracts in batch SQL: inner pairs UNION ALL
-    * anti-joined clicks with `l_ts + 60min < W` UNION ALL anti-joined
-    * purchases with `r_ts < W` (a purchase's candidates satisfy
-    * `l_ts < r_ts`, so once `W > r_ts` every future candidate is
-    * late — probed); W = least of the two sides' max(ts) − 2 h. Rows
-    * newer than their bound are asserted ABSENT by the same hash. */
-  val streamIntervalFull = QueryDef(
-    "q_stream_interval_full",
-    Some("""WITH l AS (
+  /** The batch twin of the interval join's eviction contracts: clicks
+    * `l`, purchases `r`, the global watermark `wm` (least of the two
+    * sides' max(ts) − 2 h) and the inner `pairs`, emitted first; the
+    * outer oracles append their null-padded rows after it. */
+  private val intervalPairsSql =
+    """WITH l AS (
               SELECT event_id AS l_event_id, user_id, ts AS l_ts
               FROM events WHERE event_type = 'click'),
             r AS (
@@ -320,7 +314,20 @@ object EventQueries {
                AND r.r_ts > l.l_ts
                AND r.r_ts <= l.l_ts + INTERVAL 60 MINUTE)
             SELECT l_event_id, user_id, r_event_id, r_value FROM pairs
-            UNION ALL
+            UNION ALL"""
+
+  /** Stream-stream FULL OUTER interval join (X165 — completes the
+    * outer family begun by X145: BOTH sides' unmatched rows null-pad
+    * at their own watermark-driven eviction points). The oracle is
+    * the two eviction contracts in batch SQL: inner pairs UNION ALL
+    * anti-joined clicks with `l_ts + 60min < W` UNION ALL anti-joined
+    * purchases with `r_ts < W` (a purchase's candidates satisfy
+    * `l_ts < r_ts`, so once `W > r_ts` every future candidate is
+    * late — probed); W = least of the two sides' max(ts) − 2 h. Rows
+    * newer than their bound are asserted ABSENT by the same hash. */
+  val streamIntervalFull = QueryDef(
+    "q_stream_interval_full",
+    Some(s"""$intervalPairsSql
             SELECT l.l_event_id, l.user_id,
                    CAST(NULL AS BIGINT), CAST(NULL AS DOUBLE)
             FROM l CROSS JOIN wm
@@ -396,26 +403,7 @@ object EventQueries {
     * watermark passes). */
   val streamIntervalOuter = QueryDef(
     "q_stream_interval_outer",
-    Some("""WITH l AS (
-              SELECT event_id AS l_event_id, user_id, ts AS l_ts
-              FROM events WHERE event_type = 'click'),
-            r AS (
-              SELECT event_id AS r_event_id, user_id AS r_user_id,
-                     ts AS r_ts, value AS r_value
-              FROM events WHERE event_type = 'purchase'),
-            wm AS (
-              SELECT least((SELECT MAX(epoch_us(ts)) FROM events
-                            WHERE event_type = 'click'),
-                           (SELECT MAX(epoch_us(ts)) FROM events
-                            WHERE event_type = 'purchase'))
-                     - 7200000000 AS w),
-            pairs AS (
-              SELECT l.l_event_id, l.user_id, r.r_event_id, r.r_value
-              FROM l JOIN r ON l.user_id = r.r_user_id
-               AND r.r_ts > l.l_ts
-               AND r.r_ts <= l.l_ts + INTERVAL 60 MINUTE)
-            SELECT l_event_id, user_id, r_event_id, r_value FROM pairs
-            UNION ALL
+    Some(s"""$intervalPairsSql
             SELECT l.l_event_id, l.user_id,
                    CAST(NULL AS BIGINT) AS r_event_id,
                    CAST(NULL AS DOUBLE) AS r_value
@@ -635,17 +623,10 @@ object EventQueries {
         .orderBy("purchase_id")
     })
 
-  /** STREAMING CDC latest-wins compaction (X155 — the always-current
-    * state table a lakehouse keeps next to its change log; streaming
-    * twin of X129's q_cdc_compact): one streaming groupBy per key
-    * with `max_by` over the deterministic (ts, event_id) version
-    * struct plus a version count, complete mode — constant state per
-    * key (one winner row + one counter), no windows, no custom state.
-    * Bounded replay ends at exactly the batch compaction — the X129
-    * oracle verbatim. */
-  val streamCdc = QueryDef(
-    "q_stream_cdc",
-    Some("""WITH v AS (
+  /** Each user's newest event by (ts, event_id) plus its version
+    * count: the oracle of the batch and the streaming compaction. */
+  private[queries] val cdcLatestSql =
+    """WITH v AS (
               SELECT user_id, event_id, event_type, value,
                      CAST(ROW_NUMBER() OVER w AS BIGINT) AS rn,
                      CAST(COUNT(*) OVER (PARTITION BY user_id) AS BIGINT)
@@ -656,7 +637,19 @@ object EventQueries {
             SELECT user_id, event_id AS last_event_id,
                    event_type AS last_type, value AS last_value,
                    n_versions
-            FROM v WHERE rn = 1 ORDER BY user_id"""),
+            FROM v WHERE rn = 1 ORDER BY user_id"""
+
+  /** STREAMING CDC latest-wins compaction (X155 — the always-current
+    * state table a lakehouse keeps next to its change log; streaming
+    * twin of X129's q_cdc_compact): one streaming groupBy per key
+    * with `max_by` over the deterministic (ts, event_id) version
+    * struct plus a version count, complete mode — constant state per
+    * key (one winner row + one counter), no windows, no custom state.
+    * Bounded replay ends at exactly the batch compaction — the X129
+    * oracle verbatim. */
+  val streamCdc = QueryDef(
+    "q_stream_cdc",
+    Some(cdcLatestSql),
     (s, d) => {
       import graft.streaming.EventStream
       val src = EventStream.stageDir(s"$d/events.parquet")
@@ -674,14 +667,10 @@ object EventQueries {
         .orderBy("user_id")
     })
 
-  /** As-of join: each click matched to the user's latest
-    * at-or-before purchase (the point-in-time feature-join Spark has
-    * no operator for — see ops.AsOf). The right side is pre-aggregated
-    * to one row per (user, ts) so the match is deterministic; the
-    * DuckDB oracle is a native ASOF LEFT JOIN. */
-  val asofJoin = QueryDef(
-    "q_asof_join",
-    Some("""WITH l AS (SELECT event_id, user_id, ts, value AS click_value
+  /** Native DuckDB ASOF: each click's latest same-user purchase at or
+    * before it — the one oracle for both as-of rows. */
+  private val asofSql =
+    """WITH l AS (SELECT event_id, user_id, ts, value AS click_value
                        FROM events WHERE event_type = 'click'),
                  r AS (SELECT user_id, ts, MAX(value) AS purchase_value
                        FROM events WHERE event_type = 'purchase'
@@ -689,15 +678,31 @@ object EventQueries {
             SELECT l.event_id, l.user_id, l.click_value, r.purchase_value
             FROM l ASOF LEFT JOIN r
               ON l.user_id = r.user_id AND r.ts <= l.ts
-            ORDER BY l.event_id"""),
+            ORDER BY l.event_id"""
+
+  /** Clicks and the per-(user, ts) purchase maxima the as-of rows join. */
+  private def asofSides(s: SparkSession, d: String)
+      : (DataFrame, DataFrame) = {
+    val ev = Tables.events(s, d)
+    val clicks = ev.filter(col("event_type") === "click")
+      .select(col("event_id"), col("user_id"), col("ts"),
+        col("value").as("click_value"))
+    val purchases = ev.filter(col("event_type") === "purchase")
+      .groupBy("user_id", "ts")
+      .agg(max("value").as("purchase_value"))
+    (clicks, purchases)
+  }
+
+  /** As-of join: each click matched to the user's latest
+    * at-or-before purchase (the point-in-time feature-join Spark has
+    * no operator for — see ops.AsOf). The right side is pre-aggregated
+    * to one row per (user, ts) so the match is deterministic; the
+    * DuckDB oracle is a native ASOF LEFT JOIN. */
+  val asofJoin = QueryDef(
+    "q_asof_join",
+    Some(asofSql),
     (s, d) => {
-      val ev = Tables.events(s, d)
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"),
-          col("value").as("click_value"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .groupBy("user_id", "ts")
-        .agg(max("value").as("purchase_value"))
+      val (clicks, purchases) = asofSides(s, d)
       graft.ops.AsOf.asofJoin(clicks, purchases, Seq("user_id"),
           "ts", "ts", Seq("purchase_value"))
         .select("event_id", "user_id", "click_value", "purchase_value")
@@ -710,23 +715,9 @@ object EventQueries {
     * bucketed construction reproduces as-of semantics exactly. */
   val asofJoinBucketed = QueryDef(
     "q_asof_join_bucketed",
-    Some("""WITH l AS (SELECT event_id, user_id, ts, value AS click_value
-                       FROM events WHERE event_type = 'click'),
-                 r AS (SELECT user_id, ts, MAX(value) AS purchase_value
-                       FROM events WHERE event_type = 'purchase'
-                       GROUP BY user_id, ts)
-            SELECT l.event_id, l.user_id, l.click_value, r.purchase_value
-            FROM l ASOF LEFT JOIN r
-              ON l.user_id = r.user_id AND r.ts <= l.ts
-            ORDER BY l.event_id"""),
+    Some(asofSql),
     (s, d) => {
-      val ev = Tables.events(s, d)
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"),
-          col("value").as("click_value"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .groupBy("user_id", "ts")
-        .agg(max("value").as("purchase_value"))
+      val (clicks, purchases) = asofSides(s, d)
       graft.ops.AsOf.asofJoinBucketed(clicks, purchases, Seq("user_id"),
           "ts", "ts", Seq("purchase_value"), bucketMicros = 3600000000L)
         .select("event_id", "user_id", "click_value", "purchase_value")

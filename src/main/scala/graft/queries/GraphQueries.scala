@@ -2,6 +2,8 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.functions.Num
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Domain-graph operators beyond the global rankings (X66/X69):
@@ -15,23 +17,11 @@ import org.apache.spark.sql.functions._
   */
 object GraphQueries {
 
-  /** The shared synthetic domain-graph carve (same text as the
-    * q_domain_pagerank oracle): src = doc_id mod 50, dst = an md5
-    * bucket — a deterministic multigraph over 50 domain ids. */
-  private val edgeSql =
-    """SELECT doc_id % 50 AS src,
-                     CAST('0x' || substring(md5('pr:'
-                         || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)
-                       % 50 AS dst
-              FROM documents"""
+  /** The shared synthetic domain-graph carve of q_domain_pagerank. */
+  private val edgeSql = CurationQueries.domainEdgeSql
 
-  private def domainEdges(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame =
-    Tables.documents(s, d).select(
-      (col("doc_id") % 50).as("src"),
-      (conv(substring(md5(concat(lit("pr:"),
-          col("doc_id").cast("string"))), 1, 8), 16, 10)
-        .cast("long") % 50).as("dst"))
+  private def domainEdges(s: SparkSession, d: String): DataFrame =
+    CurationQueries.domainEdges(Tables.documents(s, d))
 
   // ------------------------------------------- X72 seeded PageRank
 
@@ -130,17 +120,11 @@ object GraphQueries {
               FROM nodes LEFT JOIN w$t ON nodes.v = w$t.v)"""
   }
 
-  /** Label-propagation community detection (X73 — Raghavan et al.
-    * 2007, the synchronous deterministic variant; see
-    * [[graft.ops.Communities]]): 4 rounds of "adopt the most frequent
-    * neighbour label, ties to the smallest" over the undirected
-    * distinct neighbour relation of the domain graph. Output is each
-    * node's community plus the community size. The oracle unrolls the
-    * 4 votes as CTEs — every step is integer counting, so the whole
-    * query hash-matches with no rounding anywhere. */
-  val domainCommunities = QueryDef(
-    "q_domain_communities",
-    Some(s"""WITH e0 AS ($edgeSql),
+  /** The domain graph's nodes, its undirected distinct neighbour
+    * relation `nb` and the unrolled votes l0..l<LpaRounds>, shared by
+    * the communities and modularity oracles. */
+  private val lpaCtesSql =
+    s"""WITH e0 AS ($edgeSql),
             nodes AS (
               SELECT DISTINCT v FROM (
                 SELECT src AS v FROM e0
@@ -152,7 +136,19 @@ object GraphQueries {
               WHERE v <> u),
             l0 AS (SELECT v, v AS lbl FROM nodes),
             ${(1 to LpaRounds).map(lpaRoundSql)
-              .mkString(",\n            ")},
+              .mkString(",\n            ")}"""
+
+  /** Label-propagation community detection (X73 — Raghavan et al.
+    * 2007, the synchronous deterministic variant; see
+    * [[graft.ops.Communities]]): 4 rounds of "adopt the most frequent
+    * neighbour label, ties to the smallest" over the undirected
+    * distinct neighbour relation of the domain graph. Output is each
+    * node's community plus the community size. The oracle unrolls the
+    * 4 votes as CTEs — every step is integer counting, so the whole
+    * query hash-matches with no rounding anywhere. */
+  val domainCommunities = QueryDef(
+    "q_domain_communities",
+    Some(s"""$lpaCtesSql,
             sz AS (
               SELECT lbl, CAST(COUNT(*) AS BIGINT) AS csize
               FROM l$LpaRounds GROUP BY lbl)
@@ -260,6 +256,21 @@ object GraphQueries {
             ${hitsHalfSql(s"h$t", s"a$t", "dst", "src")}"""
   }
 
+  /** The unrolled rounds and readout after the `e` and `nodes` CTEs,
+    * shared by the global and the seeded HITS oracles. */
+  private val hitsTailSql =
+    s"""nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM nodes),
+            h0 AS (SELECT nodes.v, 1.0 / nn.n AS s
+                   FROM nodes CROSS JOIN nn),
+            ${(1 to HitsRounds).map(hitsRoundSql)
+              .mkString(",\n            ")}
+            SELECT nodes.v AS node, h$HitsRounds.s AS hub,
+                   a$HitsRounds.s AS auth
+            FROM nodes
+              JOIN h$HitsRounds ON nodes.v = h$HitsRounds.v
+              JOIN a$HitsRounds ON nodes.v = a$HitsRounds.v
+            ORDER BY node"""
+
   /** HITS hubs and authorities (X90 — Kleinberg 1999; see
     * [[graft.ops.Hits]] for why curation wants the hub/authority
     * SPLIT next to PageRank's single score: authorities seed quality
@@ -279,17 +290,7 @@ object GraphQueries {
               SELECT DISTINCT v FROM (
                 SELECT src AS v FROM e0
                 UNION ALL SELECT dst AS v FROM e0)),
-            nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM nodes),
-            h0 AS (SELECT nodes.v, 1.0 / nn.n AS s
-                   FROM nodes CROSS JOIN nn),
-            ${(1 to HitsRounds).map(hitsRoundSql)
-              .mkString(",\n            ")}
-            SELECT nodes.v AS node, h$HitsRounds.s AS hub,
-                   a$HitsRounds.s AS auth
-            FROM nodes
-              JOIN h$HitsRounds ON nodes.v = h$HitsRounds.v
-              JOIN a$HitsRounds ON nodes.v = a$HitsRounds.v
-            ORDER BY node"""),
+            $hitsTailSql"""),
     (s, d) => {
       val edges = domainEdges(s, d)
       graft.ops.Hits.run(edges, "src", "dst", HitsRounds)
@@ -327,17 +328,7 @@ object GraphQueries {
               WHERE src <> dst
                 AND src IN (SELECT v FROM nodes)
                 AND dst IN (SELECT v FROM nodes)),
-            nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM nodes),
-            h0 AS (SELECT nodes.v, 1.0 / nn.n AS s
-                   FROM nodes CROSS JOIN nn),
-            ${(1 to HitsRounds).map(hitsRoundSql)
-              .mkString(",\n            ")}
-            SELECT nodes.v AS node, h$HitsRounds.s AS hub,
-                   a$HitsRounds.s AS auth
-            FROM nodes
-              JOIN h$HitsRounds ON nodes.v = h$HitsRounds.v
-              JOIN a$HitsRounds ON nodes.v = a$HitsRounds.v
-            ORDER BY node"""),
+            $hitsTailSql"""),
     (s, d) => {
       import s.implicits._
       val edges = domainEdges(s, d)
@@ -981,13 +972,10 @@ object GraphQueries {
             ORDER BY node"""),
     (s, d) => {
       val docs = Tables.documents(s, d)
-      def carve(f: org.apache.spark.sql.DataFrame) = f.select(
-        (col("doc_id") % 50).as("src"),
-        (conv(substring(md5(concat(lit("pr:"),
-            col("doc_id").cast("string"))), 1, 8), 16, 10)
-          .cast("long") % 50).as("dst"))
-      val oldEdges = carve(docs.filter(col("doc_id") % 10 =!= 7))
-      val newEdges = carve(docs.filter(col("doc_id") % 10 =!= 3))
+      val oldEdges = CurationQueries.domainEdges(
+        docs.filter(col("doc_id") % 10 =!= 7))
+      val newEdges = CurationQueries.domainEdges(
+        docs.filter(col("doc_id") % 10 =!= 3))
       val prOld = graft.ops.PageRank.run(oldEdges, "src", "dst",
           5, CurationQueries.PrDamping)
         .localCheckpoint(true) // warm start + the final delta join
@@ -1266,19 +1254,7 @@ object GraphQueries {
                          / (CAST(mm.m AS DOUBLE) * CAST(mm.m AS DOUBLE))
                        AS contribution
               FROM per_$tag p CROSS JOIN mm GROUP BY mm.m)"""
-      s"""WITH e0 AS ($edgeSql),
-            nodes AS (
-              SELECT DISTINCT v FROM (
-                SELECT src AS v FROM e0
-                UNION ALL SELECT dst AS v FROM e0)),
-            nb AS (
-              SELECT DISTINCT v, u FROM (
-                SELECT src AS v, dst AS u FROM e0
-                UNION ALL SELECT dst AS v, src AS u FROM e0)
-              WHERE v <> u),
-            l0 AS (SELECT v, v AS lbl FROM nodes),
-            ${(1 to LpaRounds).map(lpaRoundSql)
-              .mkString(",\n            ")},
+      s"""$lpaCtesSql,
             lab_lpa AS MATERIALIZED (
               SELECT v, lbl AS community FROM l$LpaRounds),
             lab_mod5 AS MATERIALIZED (
@@ -1344,45 +1320,16 @@ object GraphQueries {
         .orderBy("part", "community")
     })
 
-  /** DeepWalk-style random-walk co-occurrence statistics (X308 —
-    * Perozzi, Al-Rfou & Skiena KDD 2014: treat truncated random walks
-    * over the graph as sentences and learn skip-gram embeddings from
-    * them; by Levy & Goldberg NeurIPS 2014, skip-gram-with-negative-
-    * sampling factorizes the walk corpus's shifted PPMI matrix — so
-    * the PPMI co-occurrence table this query emits IS the embedding
-    * input, and the factorization step is X188's pinned power
-    * iteration, already shipped). Walks are hash-seeded, hence fully
-    * deterministic and SQL-replayable: at step t, walk (w, start)
-    * standing at node u takes out-edge rank md5(w, start, u, t) mod
-    * outdeg(u) over the DISTINCT-neighbor list sorted by dst — the
-    * uniform choice a seeded RNG would make, portable cross-engine.
-    * 2 walks × 50 starts × 4 steps over the shared X66 domain carve;
-    * window-2 skip-gram pairs; PPMI = ln(c_ab·total/(c_a·c_b)),
-    * marginals = pair-slot counts. At 100 TB: each step is ONE
-    * fixed-width (walk, cur) equi-join against the ranked adjacency
-    * list (W·n rows shuffle per step, never edges²); co-occurrence is
-    * one groupBy over walk-local pairs. */
-  val deepwalk = QueryDef(
-    "q_deepwalk", {
-      val steps = 4
-      val walks = 2
-      def pickSql(t: Int) =
-        s"""(CAST('0x' || substring(md5('dw:' || CAST(w AS VARCHAR)
-             || ':' || CAST(start AS VARCHAR) || ':'
-             || CAST(cur AS VARCHAR) || ':' || '$t'), 1, 8) AS BIGINT)
-             % odeg) + 1"""
-      val stepCtes = (1 to steps).map { t =>
-        val p = t - 1
-        s""",
-            s$t AS (
-              SELECT v.w, v.start, n.dst AS cur, $t AS pos
-              FROM (SELECT w, start, cur, ${pickSql(t)} AS pick
-                    FROM s$p
-                    JOIN od ON od.src = s$p.cur) v
-              JOIN nbrs n ON n.src = v.cur AND n.rn = v.pick)"""
-      }.mkString
-      Some(s"""WITH edges AS (SELECT DISTINCT src, dst FROM ($edgeSql) ee),
-              nbrs AS MATERIALIZED (
+  // ------------------------------- X308/X309 walk co-occurrence
+
+  private val WalkSteps = 4
+  private val WalkCount = 2
+
+  /** The ranked adjacency both walk oracles step over, read from an
+    * `edges` CTE: each source's distinct neighbours numbered by dst
+    * (rn), its out-degree and the start nodes. */
+  private val walkGraphSql =
+    """nbrs AS MATERIALIZED (
                 SELECT src, dst,
                        ROW_NUMBER() OVER (PARTITION BY src
                          ORDER BY dst) AS rn
@@ -1390,14 +1337,22 @@ object GraphQueries {
               od AS MATERIALIZED (
                 SELECT src, CAST(COUNT(*) AS BIGINT) AS odeg
                 FROM edges GROUP BY src),
-              starts AS (SELECT DISTINCT src AS node FROM edges),
-              s0 AS (
-                SELECT ww.w, node AS start, node AS cur, 0 AS pos
-                FROM starts
-                CROSS JOIN (SELECT unnest(range(0, $walks)) AS w) ww)
-              $stepCtes,
-              walkrows AS MATERIALIZED (
-                ${(0 to steps).map(t => s"SELECT * FROM s$t")
+              starts AS (SELECT DISTINCT src AS node FROM edges)"""
+
+  /** The uniform step's choice at step t: out-edge rank
+    * md5(w, start, cur, t) mod outdeg(cur), 1-based. */
+  private def walkPickSql(t: Int) =
+    s"""(CAST('0x' || substring(md5('dw:' || CAST(w AS VARCHAR)
+             || ':' || CAST(start AS VARCHAR) || ':'
+             || CAST(cur AS VARCHAR) || ':' || '$t'), 1, 8) AS BIGINT)
+             % odeg) + 1"""
+
+  /** The window-2 PPMI readout over steps s0..s<WalkSteps>, each
+    * holding (w, start, cur, pos): the tail of both walk oracles. */
+  private val walkPmiSql =
+    s"""walkrows AS MATERIALIZED (
+                ${(0 to WalkSteps).map(t =>
+                  s"SELECT w, start, cur, pos FROM s$t")
                   .mkString("\n UNION ALL\n")}),
               pairs AS (
                 SELECT LEAST(x.cur, y.cur) AS a,
@@ -1424,60 +1379,120 @@ object GraphQueries {
               JOIN marg ma ON ma.node = pc.a
               JOIN marg mb ON mb.node = pc.b
               CROSS JOIN tot
-              ORDER BY pc.c_ab DESC, pc.a, pc.b LIMIT 50""")
+              ORDER BY pc.c_ab DESC, pc.a, pc.b LIMIT 50"""
+
+  /** The Spark side of [[walkGraphSql]]: the distinct domain edges
+    * (checkpointed), the ranked neighbours, out-degrees and starts. */
+  private final case class WalkGraph(edges: DataFrame, nbrs: DataFrame,
+      od: DataFrame, starts: DataFrame)
+
+  private def walkGraph(s: SparkSession, d: String): WalkGraph = {
+    val edges = domainEdges(s, d).distinct().localCheckpoint(true)
+    WalkGraph(edges,
+      edges.withColumn("rn", row_number().over(
+        Window.partitionBy("src").orderBy("dst"))),
+      edges.groupBy("src").agg(count(lit(1)).as("odeg")),
+      edges.select(col("src").as("node")).distinct())
+  }
+
+  /** One uniform step of every walk (the [[walkPickSql]] choice at
+    * step t): (cur, pick, w, start, dst) with dst the chosen
+    * neighbour of cur. */
+  private def uniformStep(walk: DataFrame, g: WalkGraph, t: Int)
+      : DataFrame = {
+    val pick = (conv(substring(md5(concat(lit("dw:"),
+        col("w").cast("string"), lit(":"),
+        col("start").cast("string"), lit(":"),
+        col("cur").cast("string"), lit(":"), lit(t.toString))),
+      1, 8), 16, 10).cast("long") % col("odeg")) + 1
+    walk.join(g.od.withColumnRenamed("src", "cur"), "cur")
+      .select(col("w"), col("start"), col("cur"), pick.as("pick"))
+      .join(g.nbrs.select(col("src").as("cur"), col("dst"),
+        col("rn").as("pick")), Seq("cur", "pick"))
+  }
+
+  /** The Spark side of [[walkPmiSql]] over the per-step walk rows. */
+  private def walkPmi(rows: Iterable[DataFrame]): DataFrame = {
+    val walkrows = rows.reduce(_ unionByName _).localCheckpoint(true)
+    val x = walkrows.select(col("w"), col("start"),
+      col("cur").as("na"), col("pos").as("pa"))
+    val y = walkrows.select(col("w"), col("start"),
+      col("cur").as("nb"), col("pos").as("pb"))
+    val pairs = x.join(y, Seq("w", "start"))
+      .filter(col("pb") > col("pa") && col("pb") <= col("pa") + 2 &&
+        col("na") =!= col("nb"))
+      .select(least(col("na"), col("nb")).as("a"),
+        greatest(col("na"), col("nb")).as("b"))
+    val pc = pairs.groupBy("a", "b").agg(count(lit(1)).as("c_ab"))
+      .localCheckpoint(true) // ≤ n² alphabet-bounded pair table
+    val total = pc.agg(sum("c_ab")).head().getLong(0) // bounded action
+    val marg = pc.select(col("a").as("node"), col("c_ab").as("c"))
+      .unionByName(pc.select(col("b").as("node"), col("c_ab").as("c")))
+      .groupBy("node").agg(sum("c").as("c_n"))
+    pc.join(marg.select(col("node").as("a"), col("c_n").as("c_a")), "a")
+      .join(marg.select(col("node").as("b"), col("c_n").as("c_b")), "b")
+      .select(col("a"), col("b"), col("c_ab"), col("c_a"), col("c_b"),
+        Num.qround(log(col("c_ab").cast("double") *
+          lit(total).cast("double") /
+          (col("c_a").cast("double") * col("c_b").cast("double"))), 6)
+          .as("pmi"))
+      .orderBy(col("c_ab").desc, col("a"), col("b")).limit(50)
+  }
+
+  /** DeepWalk-style random-walk co-occurrence statistics (X308 —
+    * Perozzi, Al-Rfou & Skiena KDD 2014: treat truncated random walks
+    * over the graph as sentences and learn skip-gram embeddings from
+    * them; by Levy & Goldberg NeurIPS 2014, skip-gram-with-negative-
+    * sampling factorizes the walk corpus's shifted PPMI matrix — so
+    * the PPMI co-occurrence table this query emits IS the embedding
+    * input, and the factorization step is X188's pinned power
+    * iteration, already shipped). Walks are hash-seeded, hence fully
+    * deterministic and SQL-replayable: at step t, walk (w, start)
+    * standing at node u takes out-edge rank md5(w, start, u, t) mod
+    * outdeg(u) over the DISTINCT-neighbor list sorted by dst — the
+    * uniform choice a seeded RNG would make, portable cross-engine.
+    * 2 walks × 50 starts × 4 steps over the shared X66 domain carve;
+    * window-2 skip-gram pairs; PPMI = ln(c_ab·total/(c_a·c_b)),
+    * marginals = pair-slot counts. At 100 TB: each step is ONE
+    * fixed-width (walk, cur) equi-join against the ranked adjacency
+    * list (W·n rows shuffle per step, never edges²); co-occurrence is
+    * one groupBy over walk-local pairs. */
+  val deepwalk = QueryDef(
+    "q_deepwalk", {
+      val stepCtes = (1 to WalkSteps).map { t =>
+        val p = t - 1
+        s""",
+            s$t AS (
+              SELECT v.w, v.start, n.dst AS cur, $t AS pos
+              FROM (SELECT w, start, cur, ${walkPickSql(t)} AS pick
+                    FROM s$p
+                    JOIN od ON od.src = s$p.cur) v
+              JOIN nbrs n ON n.src = v.cur AND n.rn = v.pick)"""
+      }.mkString
+      Some(s"""WITH edges AS (SELECT DISTINCT src, dst FROM ($edgeSql) ee),
+              $walkGraphSql,
+              s0 AS (
+                SELECT ww.w, node AS start, node AS cur, 0 AS pos
+                FROM starts
+                CROSS JOIN (SELECT unnest(range(0, $WalkCount)) AS w) ww)
+              $stepCtes,
+              $walkPmiSql""")
     },
     (s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val steps = 4
-      val walks = 2
-      val edges = domainEdges(s, d).distinct().localCheckpoint(true)
-      val nbrs = edges.withColumn("rn", row_number().over(
-        Window.partitionBy("src").orderBy("dst")))
-      val od = edges.groupBy("src").agg(count(lit(1)).as("odeg"))
-      val starts = edges.select(col("src").as("node")).distinct()
-      var cur = starts.select(
-        explode(array((0 until walks).map(w => lit(w.toLong)): _*)).as("w"),
+      val g = walkGraph(s, d)
+      var cur = g.starts.select(
+        explode(array((0 until WalkCount).map(w => lit(w.toLong)): _*))
+          .as("w"),
         col("node").as("start"), col("node").as("cur"),
         lit(0).as("pos"))
       val rows = scala.collection.mutable.ArrayBuffer(cur)
-      for (t <- 1 to steps) {
-        val pick = (conv(substring(md5(concat(lit("dw:"),
-            col("w").cast("string"), lit(":"),
-            col("start").cast("string"), lit(":"),
-            col("cur").cast("string"), lit(":"), lit(t.toString))),
-          1, 8), 16, 10).cast("long") % col("odeg")) + 1
-        cur = cur.join(od.withColumnRenamed("src", "cur"), "cur")
-          .select(col("w"), col("start"), col("cur"), pick.as("pick"))
-          .join(nbrs.select(col("src").as("cur"), col("dst"),
-            col("rn").as("pick")), Seq("cur", "pick"))
+      for (t <- 1 to WalkSteps) {
+        cur = uniformStep(cur, g, t)
           .select(col("w"), col("start"), col("dst").as("cur"),
             lit(t).as("pos"))
         rows += cur
       }
-      val walkrows = rows.reduce(_ unionByName _).localCheckpoint(true)
-      val x = walkrows.select(col("w"), col("start"),
-        col("cur").as("na"), col("pos").as("pa"))
-      val y = walkrows.select(col("w"), col("start"),
-        col("cur").as("nb"), col("pos").as("pb"))
-      val pairs = x.join(y, Seq("w", "start"))
-        .filter(col("pb") > col("pa") && col("pb") <= col("pa") + 2 &&
-          col("na") =!= col("nb"))
-        .select(least(col("na"), col("nb")).as("a"),
-          greatest(col("na"), col("nb")).as("b"))
-      val pc = pairs.groupBy("a", "b").agg(count(lit(1)).as("c_ab"))
-        .localCheckpoint(true) // ≤ n² alphabet-bounded pair table
-      val total = pc.agg(sum("c_ab")).head().getLong(0) // bounded action
-      val marg = pc.select(col("a").as("node"), col("c_ab").as("c"))
-        .unionByName(pc.select(col("b").as("node"), col("c_ab").as("c")))
-        .groupBy("node").agg(sum("c").as("c_n"))
-      pc.join(marg.select(col("node").as("a"), col("c_n").as("c_a")), "a")
-        .join(marg.select(col("node").as("b"), col("c_n").as("c_b")), "b")
-        .select(col("a"), col("b"), col("c_ab"), col("c_a"), col("c_b"),
-          Num.qround(log(col("c_ab").cast("double") *
-            lit(total).cast("double") /
-            (col("c_a").cast("double") * col("c_b").cast("double"))), 6)
-            .as("pmi"))
-        .orderBy(col("c_ab").desc, col("a"), col("b")).limit(50)
+      walkPmi(rows)
     })
 
   /** node2vec biased second-order walks (X309 — Grover & Leskovec KDD
@@ -1499,19 +1514,12 @@ object GraphQueries {
     * as X308, so the two parameterizations are directly comparable. */
   val node2vec = QueryDef(
     "q_node2vec", {
-      val steps = 4
-      val walks = 2
       def hash24(t: Int) =
         s"""(CAST('0x' || substring(md5('n2v:' || CAST(w AS VARCHAR)
              || ':' || CAST(start AS VARCHAR) || ':'
              || CAST(cur AS VARCHAR) || ':' || '$t'), 1, 6) AS BIGINT)
              / 16777216.0)"""
-      def pickSql(t: Int) =
-        s"""(CAST('0x' || substring(md5('dw:' || CAST(w AS VARCHAR)
-             || ':' || CAST(start AS VARCHAR) || ':'
-             || CAST(cur AS VARCHAR) || ':' || '$t'), 1, 8) AS BIGINT)
-             % odeg) + 1"""
-      val biasedCtes = (2 to steps).map { t =>
+      val biasedCtes = (2 to WalkSteps).map { t =>
         val p = t - 1
         s""",
             cand$t AS (
@@ -1541,98 +1549,47 @@ object GraphQueries {
       }.mkString
       Some(s"""WITH edges AS MATERIALIZED (
                 SELECT DISTINCT src, dst FROM ($edgeSql) ee),
-              nbrs AS MATERIALIZED (
-                SELECT src, dst,
-                       ROW_NUMBER() OVER (PARTITION BY src
-                         ORDER BY dst) AS rn
-                FROM edges),
-              od AS MATERIALIZED (
-                SELECT src, CAST(COUNT(*) AS BIGINT) AS odeg
-                FROM edges GROUP BY src),
-              starts AS (SELECT DISTINCT src AS node FROM edges),
+              $walkGraphSql,
               s0 AS (
                 SELECT ww.w, node AS start, node AS prev, node AS cur,
                        0 AS pos
                 FROM starts
-                CROSS JOIN (SELECT unnest(range(0, $walks)) AS w) ww),
+                CROSS JOIN (SELECT unnest(range(0, $WalkCount)) AS w) ww),
               s1 AS (
                 SELECT v.w, v.start, v.cur AS prev, n.dst AS cur,
                        1 AS pos
-                FROM (SELECT w, start, cur, ${pickSql(1)} AS pick
+                FROM (SELECT w, start, cur, ${walkPickSql(1)} AS pick
                       FROM s0
                       JOIN od ON od.src = s0.cur) v
                 JOIN nbrs n ON n.src = v.cur AND n.rn = v.pick)
               $biasedCtes,
-              walkrows AS MATERIALIZED (
-                ${(0 to steps).map(t =>
-                  s"SELECT w, start, cur, pos FROM s$t")
-                  .mkString("\n UNION ALL\n")}),
-              pairs AS (
-                SELECT LEAST(x.cur, y.cur) AS a,
-                       GREATEST(x.cur, y.cur) AS b
-                FROM walkrows x JOIN walkrows y
-                  ON x.w = y.w AND x.start = y.start
-                  AND y.pos > x.pos AND y.pos <= x.pos + 2
-                WHERE x.cur <> y.cur),
-              pc AS MATERIALIZED (
-                SELECT a, b, CAST(COUNT(*) AS BIGINT) AS c_ab
-                FROM pairs GROUP BY 1, 2),
-              tot AS (SELECT CAST(SUM(c_ab) AS BIGINT) AS total FROM pc),
-              marg AS MATERIALIZED (
-                SELECT node, CAST(SUM(c) AS BIGINT) AS c_n FROM (
-                  SELECT a AS node, c_ab AS c FROM pc
-                  UNION ALL SELECT b, c_ab FROM pc) m GROUP BY 1)
-              SELECT pc.a, pc.b, pc.c_ab, ma.c_n AS c_a, mb.c_n AS c_b,
-                     ${Num.qroundSql(
-                       """LN(CAST(pc.c_ab AS DOUBLE)
-                          * CAST(tot.total AS DOUBLE)
-                          / (CAST(ma.c_n AS DOUBLE)
-                             * CAST(mb.c_n AS DOUBLE)))""", 6)} AS pmi
-              FROM pc
-              JOIN marg ma ON ma.node = pc.a
-              JOIN marg mb ON mb.node = pc.b
-              CROSS JOIN tot
-              ORDER BY pc.c_ab DESC, pc.a, pc.b LIMIT 50""")
+              $walkPmiSql""")
     },
     (s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val steps = 4
-      val walks = 2
-      val edges = domainEdges(s, d).distinct().localCheckpoint(true)
-      val nbrs = edges.withColumn("rn", row_number().over(
-        Window.partitionBy("src").orderBy("dst")))
-      val od = edges.groupBy("src").agg(count(lit(1)).as("odeg"))
-      val starts = edges.select(col("src").as("node")).distinct()
-      val s0 = starts.select(
-        explode(array((0 until walks).map(w => lit(w.toLong)): _*)).as("w"),
+      val g = walkGraph(s, d)
+      val s0 = g.starts.select(
+        explode(array((0 until WalkCount).map(w => lit(w.toLong)): _*))
+          .as("w"),
         col("node").as("start"), col("node").as("prev"),
         col("node").as("cur"), lit(0).as("pos"))
       // step 1: uniform (the X308 pick device)
-      val pick1 = (conv(substring(md5(concat(lit("dw:"),
-          col("w").cast("string"), lit(":"),
-          col("start").cast("string"), lit(":"),
-          col("cur").cast("string"), lit(":"), lit("1"))),
-        1, 8), 16, 10).cast("long") % col("odeg")) + 1
-      var walk = s0.join(od.withColumnRenamed("src", "cur"), "cur")
-        .select(col("w"), col("start"), col("cur"), pick1.as("pick"))
-        .join(nbrs.select(col("src").as("cur"), col("dst"),
-          col("rn").as("pick")), Seq("cur", "pick"))
+      var walk = uniformStep(s0, g, 1)
         .select(col("w"), col("start"), col("cur").as("prev"),
           col("dst").as("cur"), lit(1).as("pos"))
       val rows = scala.collection.mutable.ArrayBuffer(
         s0.select("w", "start", "cur", "pos"),
         walk.select("w", "start", "cur", "pos"))
       val wWalk = Window.partitionBy("w", "start")
-      for (t <- 2 to steps) {
+      for (t <- 2 to WalkSteps) {
         val h24 = conv(substring(md5(concat(lit("n2v:"),
             col("w").cast("string"), lit(":"),
             col("start").cast("string"), lit(":"),
             col("cur").cast("string"), lit(":"), lit(t.toString))),
           1, 6), 16, 10).cast("double") / lit(16777216.0)
         val cand = walk.select("w", "start", "prev", "cur")
-          .join(nbrs.select(col("src").as("cur"), col("dst"), col("rn")),
+          .join(g.nbrs.select(col("src").as("cur"), col("dst"), col("rn")),
             "cur")
-          .join(edges.select(col("src").as("prev"),
+          .join(g.edges.select(col("src").as("prev"),
               col("dst").as("dst"), lit(true).as("linked")),
             Seq("prev", "dst"), "left")
           .select(col("w"), col("start"), col("prev"), col("cur"),
@@ -1653,30 +1610,7 @@ object GraphQueries {
             col("dst").as("cur"), lit(t).as("pos"))
         rows += walk.select("w", "start", "cur", "pos")
       }
-      val walkrows = rows.reduce(_ unionByName _).localCheckpoint(true)
-      val x = walkrows.select(col("w"), col("start"),
-        col("cur").as("na"), col("pos").as("pa"))
-      val y = walkrows.select(col("w"), col("start"),
-        col("cur").as("nb"), col("pos").as("pb"))
-      val pairs = x.join(y, Seq("w", "start"))
-        .filter(col("pb") > col("pa") && col("pb") <= col("pa") + 2 &&
-          col("na") =!= col("nb"))
-        .select(least(col("na"), col("nb")).as("a"),
-          greatest(col("na"), col("nb")).as("b"))
-      val pc = pairs.groupBy("a", "b").agg(count(lit(1)).as("c_ab"))
-        .localCheckpoint(true)
-      val total = pc.agg(sum("c_ab")).head().getLong(0) // bounded action
-      val marg = pc.select(col("a").as("node"), col("c_ab").as("c"))
-        .unionByName(pc.select(col("b").as("node"), col("c_ab").as("c")))
-        .groupBy("node").agg(sum("c").as("c_n"))
-      pc.join(marg.select(col("node").as("a"), col("c_n").as("c_a")), "a")
-        .join(marg.select(col("node").as("b"), col("c_n").as("c_b")), "b")
-        .select(col("a"), col("b"), col("c_ab"), col("c_a"), col("c_b"),
-          Num.qround(log(col("c_ab").cast("double") *
-            lit(total).cast("double") /
-            (col("c_a").cast("double") * col("c_b").cast("double"))), 6)
-            .as("pmi"))
-        .orderBy(col("c_ab").desc, col("a"), col("b")).limit(50)
+      walkPmi(rows)
     })
 
   val all: Seq[QueryDef] =

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.functions.{Num, Text}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Round-13 index-based retrieval (SURVEY §2l X214): positional
@@ -89,6 +90,47 @@ object RetrievalQueries {
         .orderBy("doc_id")
     })
 
+  /** The popularity baseline both ranking evals score: relevance `rel`
+    * (custkey, partkey, rel = the customer's order count of the part),
+    * part popularity `pop` and the global top-10 `top10` (partkey,
+    * pos), ties partkey-ASC. */
+  private val popularitySql =
+    """WITH rel AS (
+             SELECT o.o_custkey AS custkey, l.l_partkey AS partkey,
+                    CAST(COUNT(*) AS BIGINT) AS rel
+             FROM lineitem l JOIN orders o
+               ON l.l_orderkey = o.o_orderkey
+             GROUP BY 1, 2),
+           pop AS (
+             SELECT partkey, CAST(SUM(rel) AS BIGINT) AS tot
+             FROM rel GROUP BY partkey),
+           top10 AS (
+             SELECT partkey,
+                    CAST(ROW_NUMBER() OVER
+                      (ORDER BY tot DESC, partkey ASC) AS BIGINT) AS pos
+             FROM pop ORDER BY tot DESC, partkey ASC LIMIT 10)"""
+
+  /** The Spark side of [[popularitySql]]: `rel` (checkpointed, it feeds
+    * the popularity fit and both metric lanes) and the top-10 ranking
+    * as a broadcast (partkey, pos) literal frame, after one bounded
+    * collect. */
+  private def popularity(s: SparkSession, d: String)
+      : (DataFrame, DataFrame) = {
+    val rel = Tables.lineitem(s, d)
+      .join(Tables.orders(s, d),
+        col("l_orderkey") === col("o_orderkey"))
+      .groupBy(col("o_custkey").as("custkey"),
+        col("l_partkey").as("partkey"))
+      .agg(count(lit(1)).as("rel"))
+      .localCheckpoint(true)
+    val top10 = rel.groupBy("partkey").agg(sum("rel").as("tot"))
+      .orderBy(col("tot").desc, col("partkey").asc).limit(10)
+      .collect().zipWithIndex
+      .map { case (r, i) => (r.getLong(0), (i + 1).toLong) }
+    import s.implicits._
+    (rel, broadcast(top10.toSeq.toDF("partkey", "pos")))
+  }
+
   /** NDCG@10 ranking evaluation (X227 — Järvelin & Kekäläinen 2002:
     * THE graded ranking metric, completing the eval family next to
     * X74's recall@k, X185's calibration and X186's RBO. Ranker under
@@ -104,20 +146,7 @@ object RetrievalQueries {
     * sharing no part with the top-10 get dcg = 0 exactly. */
   val ndcgEval = QueryDef(
     "q_ndcg",
-    Some(s"""WITH rel AS (
-             SELECT o.o_custkey AS custkey, l.l_partkey AS partkey,
-                    CAST(COUNT(*) AS BIGINT) AS rel
-             FROM lineitem l JOIN orders o
-               ON l.l_orderkey = o.o_orderkey
-             GROUP BY 1, 2),
-           pop AS (
-             SELECT partkey, CAST(SUM(rel) AS BIGINT) AS tot
-             FROM rel GROUP BY partkey),
-           top10 AS (
-             SELECT partkey,
-                    CAST(ROW_NUMBER() OVER
-                      (ORDER BY tot DESC, partkey ASC) AS BIGINT) AS pos
-             FROM pop ORDER BY tot DESC, partkey ASC LIMIT 10),
+    Some(s"""$popularitySql,
            dcg AS (
              SELECT r.custkey,
                     ${Num.qroundSql(
@@ -142,19 +171,7 @@ object RetrievalQueries {
            SELECT custkey, dcg, idcg, dcg / idcg AS ndcg
            FROM m ORDER BY custkey"""),
     (s, d) => {
-      val rel = Tables.lineitem(s, d)
-        .join(Tables.orders(s, d),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_custkey").as("custkey"),
-          col("l_partkey").as("partkey"))
-        .agg(count(lit(1)).as("rel"))
-        .localCheckpoint(true) // popularity fit + dcg + idcg lanes
-      val top10 = rel.groupBy("partkey").agg(sum("rel").as("tot"))
-        .orderBy(col("tot").desc, col("partkey").asc).limit(10)
-        .collect().zipWithIndex
-        .map { case (r, i) => (r.getLong(0), (i + 1).toLong) }
-      import s.implicits._
-      val topDf = broadcast(top10.toSeq.toDF("partkey", "pos"))
+      val (rel, topDf) = popularity(s, d)
       val dcg = rel.join(topDf, Seq("partkey"))
         .groupBy("custkey")
         .agg(Num.qround(sum(col("rel").cast("double") /
@@ -269,20 +286,7 @@ object RetrievalQueries {
     * the top-10 entirely keep rr = ap = 0 via the left join. */
   val mrrEval = QueryDef(
     "q_mrr",
-    Some(s"""WITH rel AS (
-             SELECT o.o_custkey AS custkey, l.l_partkey AS partkey,
-                    CAST(COUNT(*) AS BIGINT) AS rel
-             FROM lineitem l JOIN orders o
-               ON l.l_orderkey = o.o_orderkey
-             GROUP BY 1, 2),
-           pop AS (
-             SELECT partkey, CAST(SUM(rel) AS BIGINT) AS tot
-             FROM rel GROUP BY partkey),
-           top10 AS (
-             SELECT partkey,
-                    CAST(ROW_NUMBER() OVER
-                      (ORDER BY tot DESC, partkey ASC) AS BIGINT) AS pos
-             FROM pop ORDER BY tot DESC, partkey ASC LIMIT 10),
+    Some(s"""$popularitySql,
            nrel AS (
              SELECT custkey, CAST(COUNT(*) AS BIGINT) AS n_relevant
              FROM rel GROUP BY custkey),
@@ -311,19 +315,7 @@ object RetrievalQueries {
            FROM nrel n LEFT JOIN ha h ON h.custkey = n.custkey
            ORDER BY n.custkey"""),
     (s, d) => {
-      val rel = Tables.lineitem(s, d)
-        .join(Tables.orders(s, d),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_custkey").as("custkey"),
-          col("l_partkey").as("partkey"))
-        .agg(count(lit(1)).as("rel"))
-        .localCheckpoint(true) // popularity fit + hits + nrel lanes
-      val top10 = rel.groupBy("partkey").agg(sum("rel").as("tot"))
-        .orderBy(col("tot").desc, col("partkey").asc).limit(10)
-        .collect().zipWithIndex
-        .map { case (r, i) => (r.getLong(0), (i + 1).toLong) }
-      import s.implicits._
-      val topDf = broadcast(top10.toSeq.toDF("partkey", "pos"))
+      val (rel, topDf) = popularity(s, d)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("custkey").orderBy("pos")
       val ha = rel.join(topDf, Seq("partkey"))

@@ -3,7 +3,11 @@ package graft.queries
 import graft.{QueryDef, Tables}
 import graft.functions.Num
 import graft.ops.{Dedup, Similarity}
+import java.nio.file.{Files, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 
 /** Dedup + similarity-search operators (SURVEY §7 extensions) as
   * driver-checkable queries. Exact variants carry DuckDB oracles
@@ -1006,19 +1010,12 @@ ORDER BY id_a, id_b"""
         .orderBy("query_id", "rank")
     })
 
-  /** Near-dup clustering: MinHash-LSH pairs → connected components →
-    * canonical keep-set (one row per doc with its component's min id).
-    *
-    * FULLY oracle-checked: the pair source is the high-threshold
-    * banding (recall ≈ 1-3.5e-15 at τ=0.9, the q_dedup_minhash_ht
-    * argument), so DuckDB can independently recompute the exact pair
-    * set and resolve components with a recursive transitive closure —
-    * the pointer-jumping/union-find machinery is verified end to end,
-    * closure semantics included. The τ=0.4 pipeline stays exercised by
-    * q_dedup_minhash + the DedupSpec recall assertions. */
-  val dedupClusters = QueryDef(
-    "q_dedup_clusters",
-    Some(s"""${sqlShingleCte(3).replaceFirst("WITH ", "WITH RECURSIVE ")},
+  /** Exact near-dup clustering as oracle CTEs: 3-shingle Jaccard ≥ 0.9
+    * pairs (length-ratio prefiltered), their undirected transitive
+    * closure `reach`, and each clustered doc's min-id canonical in
+    * `canon` (doc_id, canonical_id). */
+  private val nearDupCanonSql =
+    s"""${sqlShingleCte(3).replaceFirst("WITH ", "WITH RECURSIVE ")},
           pairs AS MATERIALIZED (
             SELECT a.doc_id AS id_a, b.doc_id AS id_b
             FROM sh a JOIN sh b ON a.doc_id < b.doc_id
@@ -1033,16 +1030,34 @@ ORDER BY id_a, id_b"""
             SELECT r.src, u.b FROM reach r JOIN und u ON r.dst = u.a),
           canon AS (
             SELECT src AS doc_id, LEAST(src, MIN(dst)) AS canonical_id
-            FROM reach GROUP BY src)
+            FROM reach GROUP BY src)"""
+
+  /** The Spark side of [[nearDupCanonSql]]: MinHash LSH pairs (k = 3,
+    * 128 hashes, 32 bands, τ = 0.9) closed into min-id clusters,
+    * (doc_id, canonical_id) for every document. */
+  private def nearDupClusters(docs: DataFrame): DataFrame =
+    Dedup.clusterKeepMin(docs.select("doc_id"), "doc_id",
+      Dedup.minhashPairs(docs, "doc_id", "text",
+        shingleK = 3, numHashes = 128, bands = 32, threshold = 0.9))
+
+  /** Near-dup clustering: MinHash-LSH pairs → connected components →
+    * canonical keep-set (one row per doc with its component's min id).
+    *
+    * FULLY oracle-checked: the pair source is the high-threshold
+    * banding (recall ≈ 1-3.5e-15 at τ=0.9, the q_dedup_minhash_ht
+    * argument), so DuckDB can independently recompute the exact pair
+    * set and resolve components with a recursive transitive closure —
+    * the pointer-jumping/union-find machinery is verified end to end,
+    * closure semantics included. The τ=0.4 pipeline stays exercised by
+    * q_dedup_minhash + the DedupSpec recall assertions. */
+  val dedupClusters = QueryDef(
+    "q_dedup_clusters",
+    Some(s"""$nearDupCanonSql
           SELECT d.doc_id, COALESCE(c.canonical_id, d.doc_id) AS canonical_id
           FROM documents d LEFT JOIN canon c USING (doc_id)
           ORDER BY d.doc_id"""),
     (s, d) => {
-      val docs = Tables.documents(s, d)
-      val pairs = Dedup.minhashPairs(docs, "doc_id", "text",
-        shingleK = 3, numHashes = 128, bands = 32, threshold = 0.9)
-      Dedup.clusterKeepMin(docs.select("doc_id"), "doc_id", pairs)
-        .orderBy("doc_id")
+      nearDupClusters(Tables.documents(s, d)).orderBy("doc_id")
     })
 
   /** The from-scratch dedup clustering COMPARISON LANE shared by the
@@ -1203,6 +1218,42 @@ ORDER BY id_a, id_b"""
         .orderBy("doc_id")
     })
 
+  /** A drop folder under a fresh temp dir `tmp` that a file stream
+    * source replays: `stage` writes a batch as ONE flat parquet file in
+    * it (the file source lists one level), and `drain` runs every file
+    * not yet seen through `sink` under an AvailableNow trigger, one
+    * checkpoint across runs (the scheduled-catch-up pattern). */
+  private[queries] final class DropFolder(s: SparkSession, prefix: String) {
+    val tmp: Path = Files.createTempDirectory(prefix)
+    private val srcDir = Files.createDirectories(tmp.resolve("src"))
+
+    def stage(df: DataFrame, name: String): Unit = {
+      val part = tmp.resolve(s"stage_$name")
+      df.coalesce(1).write.parquet(part.toString)
+      val f = Files.list(part).iterator()
+      var staged = false
+      while (f.hasNext) {
+        val p = f.next()
+        if (p.getFileName.toString.endsWith(".parquet")) {
+          Files.createSymbolicLink(srcDir.resolve(s"$name.parquet"), p)
+          staged = true
+        }
+      }
+      require(staged, s"stage: no parquet part for $name")
+    }
+
+    def drain(schema: StructType, sink: (DataFrame, Long) => Unit): Unit =
+      s.readStream
+        .schema(schema)
+        .parquet(srcDir.toString)
+        .writeStream
+        .foreachBatch(sink)
+        .option("checkpointLocation", tmp.resolve("ckpt").toString)
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+  }
+
   /** STREAMING incremental near-dup cluster maintenance (X302 —
     * VERDICT r15 #6, the streaming twin of X295 in the X15/X43
     * discipline: the corpus ARRIVES — the old 90% in microbatch 0,
@@ -1241,29 +1292,9 @@ ORDER BY id_a, id_b"""
     (s, d) => {
       graft.streaming.StreamWarm.ensure(s) // one-time engine warm (r18)
       val docs = Tables.documents(s, d).localCheckpoint(true)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-incdedup")
-      val srcDir = tmp.resolve("src")
-      java.nio.file.Files.createDirectories(srcDir)
-      val idxDir = tmp.resolve("index").toString
+      val drop = new DropFolder(s, "graft-incdedup")
+      val idxDir = drop.tmp.resolve("index").toString
       graft.ops.DedupIndex.init(s, idxDir)
-      // stage a batch as ONE flat parquet file in the drop-folder
-      // (the file stream source lists one level)
-      def stage(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-        val part = tmp.resolve(s"stage_$name")
-        df.coalesce(1).write.parquet(part.toString)
-        val f = java.nio.file.Files.list(part).iterator()
-        var staged = false
-        while (f.hasNext) {
-          val p = f.next()
-          if (p.getFileName.toString.endsWith(".parquet")) {
-            java.nio.file.Files.createSymbolicLink(
-              srcDir.resolve(s"$name.parquet"), p)
-            staged = true
-          }
-        }
-        require(staged, s"stage: no parquet part for $name")
-      }
       // every batch is ONE index delta-ingest: delta-only shingling,
       // committed-index probe, contracted-closure maintenance, one
       // manifest swap (uncapped — the equivalence-lane precondition)
@@ -1275,22 +1306,12 @@ ORDER BY id_a, id_b"""
             shingleK = 3, numHashes = 128, bands = 32, threshold = 0.9,
             bucketCap = Int.MaxValue)
       }
-      def runOnce(): Unit = {
-        val q = s.readStream
-          .schema(graft.streaming.EventStream.documentSchema)
-          .parquet(srcDir.toString)
-          .writeStream
-          .foreachBatch(maintain _)
-          .option("checkpointLocation", tmp.resolve("ckpt").toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      val schema = graft.streaming.EventStream.documentSchema
       // arrival 1: the old corpus; arrival 2: the refresh
-      stage(docs.filter(col("doc_id") % 10 =!= 7), "b0")
-      runOnce()
-      stage(docs.filter(col("doc_id") % 10 === 7), "b1")
-      runOnce()
+      drop.stage(docs.filter(col("doc_id") % 10 =!= 7), "b0")
+      drop.drain(schema, maintain)
+      drop.stage(docs.filter(col("doc_id") % 10 === 7), "b1")
+      drop.drain(schema, maintain)
       // from-scratch lane the stream-maintained one must equal
       val recomputed = recomputedClusters(s, d)
       graft.ops.DedupIndex.clusters(s, idxDir)
@@ -1365,33 +1386,14 @@ ORDER BY id_a, id_b"""
     * q_dedup_clusters. */
   val dedupKeep = QueryDef(
     "q_dedup_keep",
-    Some(s"""${sqlShingleCte(3).replaceFirst("WITH ", "WITH RECURSIVE ")},
-          pairs AS MATERIALIZED (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b
-            FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-              AND len(a.shingles) * 10 >= len(b.shingles) * 9
-              AND len(b.shingles) * 10 >= len(a.shingles) * 9
-            WHERE ${sqlJaccard("a.shingles", "b.shingles")} >= 0.9),
-          und AS (SELECT id_a AS a, id_b AS b FROM pairs
-                  UNION SELECT id_b, id_a FROM pairs),
-          reach(src, dst) AS (
-            SELECT a, b FROM und
-            UNION
-            SELECT r.src, u.b FROM reach r JOIN und u ON r.dst = u.a),
-          canon AS (
-            SELECT src AS doc_id, LEAST(src, MIN(dst)) AS canonical_id
-            FROM reach GROUP BY src)
+    Some(s"""$nearDupCanonSql
           SELECT d.doc_id, d.source
           FROM documents d LEFT JOIN canon c USING (doc_id)
           WHERE COALESCE(c.canonical_id, d.doc_id) = d.doc_id
           ORDER BY d.doc_id"""),
     (s, d) => {
       val docs = Tables.documents(s, d)
-      val pairs = Dedup.minhashPairs(docs, "doc_id", "text",
-        shingleK = 3, numHashes = 128, bands = 32, threshold = 0.9)
-      val clusters = Dedup.clusterKeepMin(docs.select("doc_id"), "doc_id",
-        pairs)
-      Dedup.keepCanonical(docs, "doc_id", clusters)
+      Dedup.keepCanonical(docs, "doc_id", nearDupClusters(docs))
         .select("doc_id", "source")
         .orderBy("doc_id")
     })
@@ -1423,11 +1425,7 @@ ORDER BY id_a, id_b"""
              FROM cs GROUP BY 1 ORDER BY bucket""")
     },
     (s, d) => {
-      val docs = Tables.documents(s, d)
-      val pairs = Dedup.minhashPairs(docs, "doc_id", "text",
-        shingleK = 3, numHashes = 128, bands = 32, threshold = 0.9)
-      val clusters = Dedup.clusterKeepMin(docs.select("doc_id"),
-        "doc_id", pairs)
+      val clusters = nearDupClusters(Tables.documents(s, d))
       val cs = clusters.groupBy("canonical_id")
         .agg(count(lit(1)).as("csize"))
       val bucket = (0 to 20).foldRight(lit(21): org.apache.spark.sql
@@ -1454,22 +1452,7 @@ ORDER BY id_a, id_b"""
     * DedupSpec asserts it anyway. */
   val leakageSplit = QueryDef(
     "q_leakage_split",
-    Some(s"""${sqlShingleCte(3).replaceFirst("WITH ", "WITH RECURSIVE ")},
-          pairs AS MATERIALIZED (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b
-            FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-              AND len(a.shingles) * 10 >= len(b.shingles) * 9
-              AND len(b.shingles) * 10 >= len(a.shingles) * 9
-            WHERE ${sqlJaccard("a.shingles", "b.shingles")} >= 0.9),
-          und AS (SELECT id_a AS a, id_b AS b FROM pairs
-                  UNION SELECT id_b, id_a FROM pairs),
-          reach(src, dst) AS (
-            SELECT a, b FROM und
-            UNION
-            SELECT r.src, u.b FROM reach r JOIN und u ON r.dst = u.a),
-          canon AS (
-            SELECT src AS doc_id, LEAST(src, MIN(dst)) AS canonical_id
-            FROM reach GROUP BY src),
+    Some(s"""$nearDupCanonSql,
           spl AS (
             SELECT d.doc_id,
                    COALESCE(c.canonical_id, d.doc_id) AS canonical_id
@@ -1486,11 +1469,7 @@ ORDER BY id_a, id_b"""
                       ELSE 'test' END AS split
           FROM u ORDER BY doc_id"""),
     (s, d) => {
-      val docs = Tables.documents(s, d)
-      val pairs = Dedup.minhashPairs(docs, "doc_id", "text",
-        shingleK = 3, numHashes = 128, bands = 32, threshold = 0.9)
-      val clustered = Dedup.clusterKeepMin(
-        docs.select("doc_id"), "doc_id", pairs)
+      val clustered = nearDupClusters(Tables.documents(s, d))
       val ub = graft.ops.Sampling.hashBucket(col("canonical_id"), "split:")
       clustered.select(col("doc_id"), col("canonical_id"),
           when(ub < 3435973836L, "train")
@@ -1687,6 +1666,31 @@ ORDER BY id_a, id_b"""
 
   // ------------------------------ X91 blocked fuzzy join (edit dist)
 
+  /** The fuzzy joins' candidate pairs: distinct part names `names`
+    * (name, n, blk = last word) and the head of the output row, over
+    * `names a JOIN names b` on the block with a.name < b.name. */
+  private val partNamesSql =
+    """WITH names AS (
+              SELECT p_name AS name, CAST(COUNT(*) AS BIGINT) AS n,
+                     string_split(p_name, ' ')[-1] AS blk
+              FROM part GROUP BY p_name)
+            SELECT a.name AS name_a, b.name AS name_b,
+                   a.n AS n_a, b.n AS n_b,"""
+
+  /** The Spark side of [[partNamesSql]]: same-block name pairs
+    * (blk, name_a, n_a, name_b, n_b) with name_a < name_b. */
+  private def namePairs(s: SparkSession, d: String): DataFrame = {
+    val names = Tables.part(s, d)
+      .groupBy(col("p_name").as("name"))
+      .agg(count(lit(1)).as("n"))
+      .withColumn("blk", element_at(split(col("name"), " "), -1))
+    val a = names.select(col("name").as("name_a"), col("n").as("n_a"),
+      col("blk"))
+    val b = names.select(col("name").as("name_b"), col("n").as("n_b"),
+      col("blk"))
+    a.join(b, Seq("blk")).where(col("name_a") < col("name_b"))
+  }
+
   /** Blocked fuzzy self-join (X91 — the record-linkage primitive next
     * to the set-similarity family X2–X4: entity resolution over dirty
     * catalogs/author names matches by EDIT distance, which shingle
@@ -1701,29 +1705,15 @@ ORDER BY id_a, id_b"""
     * both engines — integer-exact, no float discipline needed. */
   val fuzzyJoin = QueryDef(
     "q_fuzzy_join",
-    Some("""WITH names AS (
-              SELECT p_name AS name, CAST(COUNT(*) AS BIGINT) AS n,
-                     string_split(p_name, ' ')[-1] AS blk
-              FROM part GROUP BY p_name)
-            SELECT a.name AS name_a, b.name AS name_b,
-                   a.n AS n_a, b.n AS n_b,
+    Some(s"""$partNamesSql
                    CAST(levenshtein(a.name, b.name) AS INT) AS dist
             FROM names a JOIN names b
               ON a.blk = b.blk AND a.name < b.name
             WHERE levenshtein(a.name, b.name) <= 2
             ORDER BY name_a, name_b"""),
     (s, d) => {
-      val names = Tables.part(s, d)
-        .groupBy(col("p_name").as("name"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("blk", element_at(split(col("name"), " "), -1))
-      val a = names.select(col("name").as("name_a"), col("n").as("n_a"),
-        col("blk"))
-      val b = names.select(col("name").as("name_b"), col("n").as("n_b"),
-        col("blk"))
-      a.join(b, Seq("blk"))
-        .where(col("name_a") < col("name_b") &&
-          levenshtein(col("name_a"), col("name_b")) <= 2)
+      namePairs(s, d)
+        .where(levenshtein(col("name_a"), col("name_b")) <= 2)
         .select(col("name_a"), col("name_b"), col("n_a"), col("n_b"),
           levenshtein(col("name_a"), col("name_b")).as("dist"))
         .orderBy("name_a", "name_b")
@@ -1741,12 +1731,7 @@ ORDER BY id_a, id_b"""
     * hash UNROUNDED and the ≥ τ verdict set is cross-engine exact. */
   val fuzzyJoinJw = QueryDef(
     "q_fuzzy_join_jw",
-    Some("""WITH names AS (
-              SELECT p_name AS name, CAST(COUNT(*) AS BIGINT) AS n,
-                     string_split(p_name, ' ')[-1] AS blk
-              FROM part GROUP BY p_name)
-            SELECT a.name AS name_a, b.name AS name_b,
-                   a.n AS n_a, b.n AS n_b,
+    Some(s"""$partNamesSql
                    jaro_winkler_similarity(a.name, b.name) AS jw
             FROM names a JOIN names b
               ON a.blk = b.blk AND a.name < b.name
@@ -1754,17 +1739,8 @@ ORDER BY id_a, id_b"""
             ORDER BY name_a, name_b"""),
     (s, d) => {
       import graft.functions.StringSim
-      val names = Tables.part(s, d)
-        .groupBy(col("p_name").as("name"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("blk", element_at(split(col("name"), " "), -1))
-      val a = names.select(col("name").as("name_a"), col("n").as("n_a"),
-        col("blk"))
-      val b = names.select(col("name").as("name_b"), col("n").as("n_b"),
-        col("blk"))
-      a.join(b, Seq("blk"))
-        .where(col("name_a") < col("name_b") &&
-          StringSim.jaroWinkler(col("name_a"), col("name_b")) >= 0.93)
+      namePairs(s, d)
+        .where(StringSim.jaroWinkler(col("name_a"), col("name_b")) >= 0.93)
         .select(col("name_a"), col("name_b"), col("n_a"), col("n_b"),
           StringSim.jaroWinkler(col("name_a"), col("name_b")).as("jw"))
         .orderBy("name_a", "name_b")
@@ -2494,12 +2470,7 @@ ORDER BY id_a, id_b"""
     * integer lanes — hash raw. */
   val fuzzyJoinDl = QueryDef(
     "q_fuzzy_join_dl",
-    Some("""WITH names AS (
-              SELECT p_name AS name, CAST(COUNT(*) AS BIGINT) AS n,
-                     string_split(p_name, ' ')[-1] AS blk
-              FROM part GROUP BY p_name)
-            SELECT a.name AS name_a, b.name AS name_b,
-                   a.n AS n_a, b.n AS n_b,
+    Some(s"""$partNamesSql
                    CAST(damerau_levenshtein(a.name, b.name) AS INT)
                      AS dist_dl,
                    CAST(levenshtein(a.name, b.name) AS INT) AS dist_lev
@@ -2509,18 +2480,9 @@ ORDER BY id_a, id_b"""
             ORDER BY name_a, name_b"""),
     (s, d) => {
       import graft.functions.StringKernels
-      val names = Tables.part(s, d)
-        .groupBy(col("p_name").as("name"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("blk", element_at(split(col("name"), " "), -1))
-      val a = names.select(col("name").as("name_a"), col("n").as("n_a"),
-        col("blk"))
-      val b = names.select(col("name").as("name_b"), col("n").as("n_b"),
-        col("blk"))
-      a.join(b, Seq("blk"))
-        .where(col("name_a") < col("name_b") &&
-          StringKernels.damerauLevenshtein(col("name_a"),
-            col("name_b")) <= 2)
+      namePairs(s, d)
+        .where(StringKernels.damerauLevenshtein(col("name_a"),
+          col("name_b")) <= 2)
         .select(col("name_a"), col("name_b"), col("n_a"), col("n_b"),
           StringKernels.damerauLevenshtein(col("name_a"), col("name_b"))
             .as("dist_dl"),
@@ -3062,6 +3024,34 @@ ORDER BY id_a, id_b"""
         ORDER BY query_id"""
   }
 
+  /** A lane's recall readout as CTEs prefixed `p`: its top-10 `res`
+    * from the visited set `seenCte`, the visited count `ns` and the
+    * hits against the `truth` CTE (qid, node). */
+  private def laneReadoutSql(p: String, seenCte: String, truth: String)
+      : String =
+    s"""${p}res AS (
+              SELECT qid, node FROM (
+                SELECT qid, node,
+                       ROW_NUMBER() OVER (PARTITION BY qid
+                         ORDER BY cos DESC, node) AS rn
+                FROM $seenCte) ${p}rr WHERE rn <= 10),
+            ${p}ns AS (
+              SELECT qid, CAST(COUNT(*) AS BIGINT) AS n_scored
+              FROM $seenCte GROUP BY 1),
+            ${p}hits AS (
+              SELECT r.qid, CAST(COUNT(*) AS BIGINT) AS h
+              FROM ${p}res r JOIN $truth t
+                ON t.qid = r.qid AND t.node = r.node GROUP BY 1)"""
+
+  /** A lane's output rows, (key = label, query_id, n_scored, hits,
+    * recall@10), from its `<p>ns` and `<p>hits` CTEs. */
+  private def laneRowsSql(key: String, label: String, p: String): String =
+    s"""SELECT $label AS $key, ns.qid AS query_id, ns.n_scored,
+                   COALESCE(h.h, CAST(0 AS BIGINT)) AS hits,
+                   CAST(COALESCE(h.h, CAST(0 AS BIGINT)) AS DOUBLE)
+                     / 10.0 AS recall
+            FROM ${p}ns ns LEFT JOIN ${p}hits h ON h.qid = ns.qid"""
+
   /** Walk key of a scored frame: (lane, qid) when it carries a `lane`
     * column, else (qid) — an unlaned walk plans with no lane at all. */
   private def walkKeys(df: org.apache.spark.sql.DataFrame): Seq[String] =
@@ -3386,30 +3376,11 @@ ORDER BY id_a, id_b"""
           entrySql = "(SELECT node FROM entryn)", beam = b, hops = 5,
           pfx = s"b${b}_")
       }.mkString(",\n")
-      val readouts = beams.map { b =>
-        val p = s"b${b}_"
-        s"""${p}res AS (
-              SELECT qid, node FROM (
-                SELECT qid, node, ROW_NUMBER() OVER (PARTITION BY qid
-                  ORDER BY cos DESC, node) AS rn
-                FROM ${p}seen5) ${p}rr WHERE rn <= 10),
-            ${p}ns AS (
-              SELECT qid, CAST(COUNT(*) AS BIGINT) AS n_scored
-              FROM ${p}seen5 GROUP BY 1),
-            ${p}hits AS (
-              SELECT r.qid, CAST(COUNT(*) AS BIGINT) AS h
-              FROM ${p}res r JOIN btruth t
-                ON t.qid = r.qid AND t.node = r.node GROUP BY 1)"""
-      }.mkString(",\n")
-      val lanes = beams.map { b =>
-        val p = s"b${b}_"
-        s"""SELECT CAST($b AS INT) AS beam, ns.qid AS query_id,
-                   ns.n_scored,
-                   COALESCE(h.h, CAST(0 AS BIGINT)) AS hits,
-                   CAST(COALESCE(h.h, CAST(0 AS BIGINT)) AS DOUBLE)
-                     / 10.0 AS recall
-            FROM ${p}ns ns LEFT JOIN ${p}hits h ON h.qid = ns.qid"""
-      }.mkString("\nUNION ALL\n")
+      val readouts = beams.map(b =>
+        laneReadoutSql(s"b${b}_", s"b${b}_seen5", "btruth")).mkString(",\n")
+      val lanes = beams.map(b =>
+        laneRowsSql("beam", s"CAST($b AS INT)", s"b${b}_"))
+        .mkString("\nUNION ALL\n")
       Some(s"""WITH ${descentChainSql(16, 5, 37)},
               ${descentPruneSql(5)},
               ug AS MATERIALIZED (
@@ -3491,30 +3462,11 @@ ORDER BY id_a, id_b"""
           beam = 8, hops = 5, pfx = s"m${sN}_",
           entrySetSql = s"(SELECT node FROM es$sN)")
       }.mkString(",\n")
-      val readouts = sizes.map { sN =>
-        val p = s"m${sN}_"
-        s"""${p}res AS (
-              SELECT qid, node FROM (
-                SELECT qid, node, ROW_NUMBER() OVER (PARTITION BY qid
-                  ORDER BY cos DESC, node) AS rn
-                FROM ${p}seen5) ${p}rr WHERE rn <= 10),
-            ${p}ns AS (
-              SELECT qid, CAST(COUNT(*) AS BIGINT) AS n_scored
-              FROM ${p}seen5 GROUP BY 1),
-            ${p}hits AS (
-              SELECT r.qid, CAST(COUNT(*) AS BIGINT) AS h
-              FROM ${p}res r JOIN mtruth t
-                ON t.qid = r.qid AND t.node = r.node GROUP BY 1)"""
-      }.mkString(",\n")
-      val lanes = sizes.map { sN =>
-        val p = s"m${sN}_"
-        s"""SELECT CAST($sN AS INT) AS n_entries, ns.qid AS query_id,
-                   ns.n_scored,
-                   COALESCE(h.h, CAST(0 AS BIGINT)) AS hits,
-                   CAST(COALESCE(h.h, CAST(0 AS BIGINT)) AS DOUBLE)
-                     / 10.0 AS recall
-            FROM ${p}ns ns LEFT JOIN ${p}hits h ON h.qid = ns.qid"""
-      }.mkString("\nUNION ALL\n")
+      val readouts = sizes.map(sN =>
+        laneReadoutSql(s"m${sN}_", s"m${sN}_seen5", "mtruth")).mkString(",\n")
+      val lanes = sizes.map(sN =>
+        laneRowsSql("n_entries", s"CAST($sN AS INT)", s"m${sN}_"))
+        .mkString("\nUNION ALL\n")
       Some(s"""WITH ${descentChainSql(16, 5, 37)},
               ${descentPruneSql(5)},
               ug AS MATERIALIZED (
@@ -3639,12 +3591,6 @@ ORDER BY id_a, id_b"""
               SELECT r.qid, CAST(COUNT(*) AS BIGINT) AS h
               FROM ${p}res r JOIN ptruth t
                 ON t.qid = r.qid AND t.node = r.node GROUP BY 1)"""
-      def laneSel(p: String, name: String) =
-        s"""SELECT '$name' AS variant, ns.qid AS query_id, ns.n_scored,
-                   COALESCE(h.h, CAST(0 AS BIGINT)) AS hits,
-                   CAST(COALESCE(h.h, CAST(0 AS BIGINT)) AS DOUBLE)
-                     / 10.0 AS recall
-            FROM ${p}ns ns LEFT JOIN ${p}hits h ON h.qid = ns.qid"""
       Some(s"""WITH ${descentChainSql(16, 5, 37)},
               ${descentPruneSql(5)},
               ug AS MATERIALIZED (
@@ -3668,8 +3614,8 @@ ORDER BY id_a, id_b"""
                 WHERE rn <= 10),
               ${readout("p_", s"seen$hops")},
               ${readout("d_", s"e_seen$hops")}
-              SELECT * FROM (${laneSel("p_", "post")}
-                UNION ALL ${laneSel("d_", "dual")}) u
+              SELECT * FROM (${laneRowsSql("variant", "'post'", "p_")}
+                UNION ALL ${laneRowsSql("variant", "'dual'", "d_")}) u
               ORDER BY variant, query_id""")
     },
     (s, d) => {
@@ -3796,26 +3742,6 @@ ORDER BY id_a, id_b"""
                     ORDER BY cos DESC, node) AS rn
                   FROM ${p}seen$t) ${p}r$t WHERE rn <= $beam)"""
         }.mkString
-      def readout(p: String, seenCte: String) =
-        s"""${p}res AS (
-              SELECT qid, node FROM (
-                SELECT qid, node,
-                       ROW_NUMBER() OVER (PARTITION BY qid
-                         ORDER BY cos DESC, node) AS rn
-                FROM $seenCte) ${p}rr WHERE rn <= 10),
-            ${p}ns AS (
-              SELECT qid, CAST(COUNT(*) AS BIGINT) AS n_scored
-              FROM $seenCte GROUP BY 1),
-            ${p}hits AS (
-              SELECT r.qid, CAST(COUNT(*) AS BIGINT) AS h
-              FROM ${p}res r JOIN ltruth t
-                ON t.qid = r.qid AND t.node = r.node GROUP BY 1)"""
-      def laneSel(p: String, name: String) =
-        s"""SELECT '$name' AS variant, ns.qid AS query_id, ns.n_scored,
-                   COALESCE(h.h, CAST(0 AS BIGINT)) AS hits,
-                   CAST(COALESCE(h.h, CAST(0 AS BIGINT)) AS DOUBLE)
-                     / 10.0 AS recall
-            FROM ${p}ns ns LEFT JOIN ${p}hits h ON h.qid = ns.qid"""
       Some(s"""WITH ${descentChainSql(16, 5, 37)},
               ${descentPruneSql(5)},
               ug AS MATERIALIZED (
@@ -3869,12 +3795,12 @@ ORDER BY id_a, id_b"""
                            ORDER BY $cosQN DESC, c.id) AS rn
                   FROM m4_qs q JOIN e c ON c.id <> q.qid) lt
                 WHERE rn <= 10),
-              ${readout("m4r_", "m4_seen5")},
-              ${readout("xcr_", "xc_seen3")},
-              ${readout("xlr_", "xl_seen3")}
-              SELECT * FROM (${laneSel("xlr_", "layered")}
-                UNION ALL ${laneSel("m4r_", "multi4")}
-                UNION ALL ${laneSel("xcr_", "multi4ext")}) u
+              ${laneReadoutSql("m4r_", "m4_seen5", "ltruth")},
+              ${laneReadoutSql("xcr_", "xc_seen3", "ltruth")},
+              ${laneReadoutSql("xlr_", "xl_seen3", "ltruth")}
+              SELECT * FROM (${laneRowsSql("variant", "'layered'", "xlr_")}
+                UNION ALL ${laneRowsSql("variant", "'multi4'", "m4r_")}
+                UNION ALL ${laneRowsSql("variant", "'multi4ext'", "xcr_")}) u
               ORDER BY variant, query_id""")
     },
     (s, d) => {

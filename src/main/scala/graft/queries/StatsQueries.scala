@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.functions.Num
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -379,6 +379,34 @@ object StatsQueries {
 
   // --------------------------------------------- forecast-error eval
 
+  /** Daily event counts per type for the day-of-week forecasters:
+    * (event_type, xday = days since the first event day, dow = ISO
+    * weekday, x = count), as the `d0` and `daily` CTEs. */
+  private val dowDailySql =
+    """WITH d0 AS (
+                SELECT MIN(CAST(ts AS DATE)) AS first_day FROM events),
+              daily AS (
+                SELECT event_type,
+                       CAST(CAST(ts AS DATE) - d0.first_day AS BIGINT)
+                         AS xday,
+                       CAST(isodow(ts) AS INT) AS dow,
+                       CAST(COUNT(*) AS BIGINT) AS x
+                FROM events CROSS JOIN d0 GROUP BY 1, 2, 3)"""
+
+  /** The Spark side of [[dowDailySql]], checkpointed, after one
+    * bounded action (the first day). */
+  private def dowDaily(s: SparkSession, d: String): DataFrame = {
+    val ev0 = Tables.events(s, d)
+    val d0 = ev0.agg(min(col("ts").cast("date"))).head().getDate(0)
+    val dowIso = (pmod(dayofweek(col("ts")) + lit(5), lit(7)) + 1)
+      .cast("int")
+    ev0.groupBy(col("event_type"),
+        datediff(col("ts").cast("date"), lit(d0)).cast("long").as("xday"),
+        dowIso.as("dow"))
+      .agg(count(lit(1)).as("x"))
+      .localCheckpoint()
+  }
+
   /** Seasonal-baseline forecast evaluation (X174 — sMAPE + MASE,
     * Hyndman & Koehler 2006: before any forecaster ships, its error
     * must beat the seasonal-naive yardstick — MASE < 1 — and sMAPE
@@ -395,15 +423,7 @@ object StatsQueries {
       val smapeTerm = "CASE WHEN CAST(e.x AS DOUBLE) + f.fc = 0.0 " +
         "THEN 0.0 ELSE 2.0 * ABS(CAST(e.x AS DOUBLE) - f.fc) / " +
         "(CAST(e.x AS DOUBLE) + f.fc) END"
-      Some(s"""WITH d0 AS (
-                SELECT MIN(CAST(ts AS DATE)) AS first_day FROM events),
-              daily AS (
-                SELECT event_type,
-                       CAST(CAST(ts AS DATE) - d0.first_day AS BIGINT)
-                         AS xday,
-                       CAST(isodow(ts) AS INT) AS dow,
-                       CAST(COUNT(*) AS BIGINT) AS x
-                FROM events CROSS JOIN d0 GROUP BY 1, 2, 3),
+      Some(s"""$dowDailySql,
               f AS (
                 SELECT event_type, dow,
                        ${Num.qroundSql("AVG(CAST(x AS DOUBLE))", 6)} AS fc
@@ -436,16 +456,7 @@ object StatsQueries {
               ORDER BY event_type""")
     },
     (s, d) => {
-      val ev0 = Tables.events(s, d)
-      val d0 = ev0.agg(min(col("ts").cast("date"))).head().getDate(0)
-      val dowIso = (pmod(dayofweek(col("ts")) + lit(5), lit(7)) + 1)
-        .cast("int")
-      val daily = ev0
-        .groupBy(col("event_type"),
-          datediff(col("ts").cast("date"), lit(d0)).cast("long").as("xday"),
-          dowIso.as("dow"))
-        .agg(count(lit(1)).as("x"))
-        .localCheckpoint() // consumed 3× (fit, eval, lag-7 pairs)
+      val daily = dowDaily(s, d) // consumed 3× (fit, eval, lag-7 pairs)
       val f = daily.filter(col("xday") < 21)
         .groupBy("event_type", "dow")
         .agg(Num.qround(avg(col("x").cast("double")), 6).as("fc"))
@@ -696,15 +707,7 @@ object StatsQueries {
   val conformal = QueryDef(
     "q_conformal", {
       val kSql = "LEAST(n_cal, CAST(CEIL((n_cal + 1) * 0.75) AS BIGINT))"
-      Some(s"""WITH d0 AS (
-                SELECT MIN(CAST(ts AS DATE)) AS first_day FROM events),
-              daily AS (
-                SELECT event_type,
-                       CAST(CAST(ts AS DATE) - d0.first_day AS BIGINT)
-                         AS xday,
-                       CAST(isodow(ts) AS INT) AS dow,
-                       CAST(COUNT(*) AS BIGINT) AS x
-                FROM events CROSS JOIN d0 GROUP BY 1, 2, 3),
+      Some(s"""$dowDailySql,
               f AS (
                 SELECT event_type, dow,
                        ${Num.qroundSql("AVG(CAST(x AS DOUBLE))", 6)} AS fc
@@ -745,17 +748,7 @@ object StatsQueries {
               ORDER BY r.event_type, r.xday""")
     },
     (s, d) => {
-      val ev0 = Tables.events(s, d)
-      val d0 = ev0.agg(min(col("ts").cast("date"))).head().getDate(0)
-      val dowIso = (pmod(dayofweek(col("ts")) + lit(5), lit(7)) + 1)
-        .cast("int")
-      val daily = ev0
-        .groupBy(col("event_type"),
-          datediff(col("ts").cast("date"), lit(d0)).cast("long")
-            .as("xday"),
-          dowIso.as("dow"))
-        .agg(count(lit(1)).as("x"))
-        .localCheckpoint() // consumed 3x (fit, calibration, eval)
+      val daily = dowDaily(s, d) // consumed 3x (fit, calibration, eval)
       val f = daily.filter(col("xday") < 14)
         .groupBy("event_type", "dow")
         .agg(Num.qround(avg(col("x").cast("double")), 6).as("fc"))

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.functions.{Num, Text}
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators over `documents` (SURVEY §7 extensions:
@@ -466,6 +466,42 @@ object TextQueries {
         "doc_id", "text", size = 64, overlap = 16)
       .orderBy("doc_id", "chunk_id"))
 
+  /** Each document relined (the fixture's filler words ` a `, ` the `,
+    * ` row `, ` key `, ` value `, ` data ` become line breaks) as the
+    * non-empty lines `ls`: the `t` CTE of the line-level oracles. */
+  private val linesSql =
+    """t AS (
+              SELECT doc_id,
+                     list_filter(string_split(regexp_replace(text,
+                       ' a | the | row | key | value | data ',
+                       chr(10), 'g'), chr(10)),
+                       l -> len(l) > 0) AS ls
+              FROM documents)"""
+
+  /** [[linesSql]] plus one row per line: `e` numbers them 1-based
+    * (pos), `e2` holds (doc_id, pos, line, h = md5(line)). */
+  private val lineRowsSql = s"""$linesSql,
+            e AS (
+              SELECT doc_id,
+                     unnest(range(1, CAST(len(ls) AS INT) + 1)) AS pos,
+                     ls
+              FROM t),
+            e2 AS (
+              SELECT doc_id, pos, ls[pos] AS line, md5(ls[pos]) AS h
+              FROM e)"""
+
+  /** The Spark side of [[linesSql]]: (doc_id, ls). */
+  private def docLines(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d).select(col("doc_id"),
+      Text.lines(regexp_replace(col("text"),
+        " a | the | row | key | value | data ", "\n")).as("ls"))
+
+  /** The Spark side of [[lineRowsSql]]: (doc_id, pos, line, h). */
+  private def lineRows(s: SparkSession, d: String): DataFrame =
+    docLines(s, d)
+      .select(col("doc_id"), posexplode(col("ls")).as(Seq("pos", "line")))
+      .withColumn("h", md5(col("line")))
+
   /** Duplicate-line metrics (the other half of the Gopher repetition
     * battery — X25 covers tokens/n-grams). The fixture corpus is
     * single-line, so the query re-lines it deterministically (six
@@ -477,13 +513,7 @@ object TextQueries {
     * element — same trap as q_text_repetition's composed formulation). */
   val dupLines = QueryDef(
     "q_dup_lines",
-    Some("""WITH t AS (
-              SELECT doc_id,
-                     list_filter(string_split(regexp_replace(text,
-                       ' a | the | row | key | value | data ',
-                       chr(10), 'g'), chr(10)),
-                       l -> len(l) > 0) AS ls
-              FROM documents),
+    Some(s"""WITH $linesSql,
             c AS (
               SELECT doc_id, ls,
                      list_transform(ls,
@@ -504,10 +534,7 @@ object TextQueries {
                      AS dup_line_char_frac
             FROM c ORDER BY doc_id"""),
     (s, d) => {
-      val relined = regexp_replace(col("text"),
-        " a | the | row | key | value | data ", "\n")
-      Tables.documents(s, d)
-        .select(col("doc_id"), Text.lines(relined).as("ls"))
+      docLines(s, d)
         .select(col("doc_id"), col("ls"),
           transform(col("ls"),
             l => size(filter(col("ls"), x => x === l))).as("cs"))
@@ -566,6 +593,23 @@ ${x}w$k AS (SELECT freq, replace(seq, '|' || m.l || '||' || m.r || '|',
                FROM wc),
              ${(1 to 3).map(bpeRoundSql).mkString(",")}"""
 
+  /** The subword trainers' word table: each lowercase word with its
+    * corpus frequency and its '|c|'-bracketed symbol sequence `seq`.
+    * Persisted: every merge round reads it (pair count + re-encode),
+    * and without the persist each round's job would re-tokenize the
+    * whole corpus — at 100 TB the corpus scan happens once and the
+    * per-round work is bounded by the vocabulary. */
+  private def wordSymbols(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d)
+      .select(explode(Text.tokens(col("text"))).as("word"))
+      .filter(col("word").rlike("^[a-z]+$"))
+      .groupBy("word").agg(count(lit(1)).as("freq"))
+      .withColumn("seq", concat_ws("",
+        transform(regexp_extract_all(col("word"), lit("."), lit(0)),
+          c => concat(lit("|"), c, lit("|")))))
+      .select("word", "freq", "seq")
+      .persist()
+
   /** Shared Spark-side training: word-frequency table with '|sym|'
     * sequences, 3 merge rounds applied. Returns the encoded (freq, seq)
     * frame — the Spark twin of the oracle's w3 — plus the chosen merges.
@@ -577,20 +621,7 @@ ${x}w$k AS (SELECT freq, replace(seq, '|' || m.l || '||' || m.r || '|',
   private def bpeTrain(s: org.apache.spark.sql.SparkSession, d: String,
       rounds: Int = 3)
       : (org.apache.spark.sql.DataFrame, Seq[(Int, String, String, Long)]) = {
-    // The word-frequency table is persisted ONCE: every merge round
-    // reads it (pair count + re-encode), and without the persist each
-    // round's job would re-tokenize the whole corpus — at 100 TB the
-    // corpus scan happens once and the per-round work is bounded by
-    // the vocabulary, which is the only defensible training shape.
-    val base = Tables.documents(s, d)
-      .select(explode(Text.tokens(col("text"))).as("word"))
-      .filter(col("word").rlike("^[a-z]+$"))
-      .groupBy("word").agg(count(lit(1)).as("freq"))
-      .withColumn("seq", concat_ws("",
-        transform(regexp_extract_all(col("word"), lit("."), lit(0)),
-          c => concat(lit("|"), c, lit("|")))))
-      .select("word", "freq", "seq")
-      .persist()
+    val base = wordSymbols(s, d)
     // tokenizer-family shared fit (VERDICT r17 #4): the chosen merges
     // are a deterministic driver-sized artifact of (sf dir, rounds) —
     // pinned argmax tie-breaks, exact-integer counts — so an eval
@@ -782,15 +813,7 @@ wpw$k AS MATERIALIZED (
       d: String, rounds: Int = 3)
       : (org.apache.spark.sql.DataFrame,
          Seq[(Int, String, String, Long, Double)]) = {
-    val base = Tables.documents(s, d)
-      .select(explode(Text.tokens(col("text"))).as("word"))
-      .filter(col("word").rlike("^[a-z]+$"))
-      .groupBy("word").agg(count(lit(1)).as("freq"))
-      .withColumn("seq", concat_ws("",
-        transform(regexp_extract_all(col("word"), lit("."), lit(0)),
-          c => concat(lit("|"), c, lit("|")))))
-      .select("word", "freq", "seq")
-      .persist()
+    val base = wordSymbols(s, d)
     // shared fit (VERDICT r17 #4): deterministic driver-sized merges,
     // trained once per (sf dir, rounds) — see bpeTrain
     val merges = graft.ops.FitCache.memo(s"wpmerges|$d|$rounds") {
@@ -2011,6 +2034,32 @@ tt$x AS (SELECT CAST(SUM(freq) AS BIGINT) AS t FROM words$x)"""
         .orderBy("doc_id")
     })
 
+  /** The head of both bigram oracles: tokens `tk0`, one row per token
+    * position `tok` (doc_id, p, tok) and the token counts `cnt`. */
+  private val tokCountsSql =
+    s"""WITH tk0 AS (
+               SELECT doc_id, $sqlToks AS toks FROM documents),
+             pos AS (
+               SELECT doc_id,
+                      unnest(range(1, CAST(len(toks) AS INT) + 1)) AS p,
+                      toks
+               FROM tk0),
+             tok AS (SELECT doc_id, p, toks[p] AS tok FROM pos),
+             cnt AS (
+               SELECT tok, CAST(COUNT(*) AS BIGINT) AS c
+               FROM tok GROUP BY tok)"""
+
+  /** Adjacent class pairs `pr` (doc_id, ca, cb) over a `cls` CTE of
+    * (doc_id, p, cid) and their counts `pc`. */
+  private val classPairsSql =
+    """pr AS (
+               SELECT a.doc_id, a.cid AS ca, b.cid AS cb
+               FROM cls a JOIN cls b
+                 ON a.doc_id = b.doc_id AND b.p = a.p + 1),
+             pc AS (
+               SELECT ca, cb, CAST(COUNT(*) AS BIGINT) AS c
+               FROM pr GROUP BY ca, cb)"""
+
   /** Bigram-LM conditional cross-entropy (X44's depth step: CCNet's
     * actual filter is an n-gram model, not a unigram one). Tokens are
     * first mapped onto the unigram model's bounded CLASS alphabet
@@ -2022,17 +2071,7 @@ tt$x AS (SELECT CAST(SUM(freq) AS BIGINT) AS t FROM words$x)"""
     * totals, and add-1 conditionals, then re-scores; qround(6). */
   val lmBigram = QueryDef(
     "q_lm_bigram",
-    Some(s"""WITH tk0 AS (
-               SELECT doc_id, $sqlToks AS toks FROM documents),
-             pos AS (
-               SELECT doc_id,
-                      unnest(range(1, CAST(len(toks) AS INT) + 1)) AS p,
-                      toks
-               FROM tk0),
-             tok AS (SELECT doc_id, p, toks[p] AS tok FROM pos),
-             cnt AS (
-               SELECT tok, CAST(COUNT(*) AS BIGINT) AS c
-               FROM tok GROUP BY tok),
+    Some(s"""$tokCountsSql,
              top AS (
                SELECT tok, rn - 1 AS cid FROM (
                  SELECT tok, c,
@@ -2043,13 +2082,7 @@ tt$x AS (SELECT CAST(SUM(freq) AS BIGINT) AS t FROM words$x)"""
                SELECT t.doc_id, t.p,
                       COALESCE(tp.cid, (SELECT k FROM kk) - 1) AS cid
                FROM tok t LEFT JOIN top tp USING (tok)),
-             pr AS (
-               SELECT a.doc_id, a.cid AS ca, b.cid AS cb
-               FROM cls a JOIN cls b
-                 ON a.doc_id = b.doc_id AND b.p = a.p + 1),
-             pc AS (
-               SELECT ca, cb, CAST(COUNT(*) AS BIGINT) AS c
-               FROM pr GROUP BY ca, cb),
+             $classPairsSql,
              lt AS (
                SELECT ca, CAST(SUM(c) AS BIGINT) AS t
                FROM pc GROUP BY ca),
@@ -2080,6 +2113,25 @@ tt$x AS (SELECT CAST(SUM(freq) AS BIGINT) AS t FROM words$x)"""
         .orderBy("doc_id")
     })
 
+  /** The hashed-classifier feature stream as CTEs: whitespace tokens
+    * `tk` of each `src` row's text, and `fl` = (doc_id, f) over every
+    * unigram and adjacent-token bigram f. */
+  private[queries] def hashedFeaturesSql(src: String): String =
+    s"""tk AS (
+              SELECT doc_id,
+                     list_filter(string_split_regex(text, '\\s+'),
+                                 t -> len(t) > 0) AS toks
+              FROM $src),
+            fl AS (
+              SELECT doc_id, unnest(toks) AS f FROM tk
+              UNION ALL
+              SELECT doc_id,
+                     unnest(CASE WHEN len(toks) >= 2 THEN
+                       list_transform(range(1, CAST(len(toks) AS INT)),
+                         i -> toks[i] || ' ' || toks[i+1])
+                       ELSE CAST([] AS VARCHAR[]) END) AS f
+              FROM tk)"""
+
   /** Hashed-linear quality classifier (X: the fastText device —
     * "looks like curated text" models in GPT-3/LLaMA-style pipelines),
     * trained as multinomial Naive Bayes over unigram+bigram features
@@ -2101,20 +2153,7 @@ tt$x AS (SELECT CAST(SUM(freq) AS BIGINT) AS t FROM words$x)"""
               SELECT doc_id, text,
                      CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS y
               FROM documents),
-            tk AS (
-              SELECT doc_id,
-                     list_filter(string_split_regex(text, '\\s+'),
-                                 t -> len(t) > 0) AS toks
-              FROM base),
-            fl AS (
-              SELECT doc_id, unnest(toks) AS f FROM tk
-              UNION ALL
-              SELECT doc_id,
-                     unnest(CASE WHEN len(toks) >= 2 THEN
-                       list_transform(range(1, CAST(len(toks) AS INT)),
-                         i -> toks[i] || ' ' || toks[i+1])
-                       ELSE CAST([] AS VARCHAR[]) END) AS f
-              FROM tk),
+            ${hashedFeaturesSql("base")},
             ft AS (
               SELECT doc_id,
                      CAST('0x' || substring(md5('qc:' || f), 1, 8)
@@ -2484,13 +2523,7 @@ tt$x AS (SELECT CAST(SUM(freq) AS BIGINT) AS t FROM words$x)"""
     * between projections (interpreted-HOF re-evaluation trap). */
   val lineClean = QueryDef(
     "q_line_clean",
-    Some("""WITH t AS (
-              SELECT doc_id,
-                     list_filter(string_split(regexp_replace(text,
-                       ' a | the | row | key | value | data ',
-                       chr(10), 'g'), chr(10)),
-                       l -> len(l) > 0) AS ls
-              FROM documents),
+    Some(s"""WITH $linesSql,
             k AS (
               SELECT doc_id, ls,
                      list_filter(ls,
@@ -2512,10 +2545,7 @@ tt$x AS (SELECT CAST(SUM(freq) AS BIGINT) AS t FROM words$x)"""
                    (len(kept) >= 2) AS doc_kept
             FROM k ORDER BY doc_id"""),
     (s, d) => {
-      val relined = regexp_replace(col("text"),
-        " a | the | row | key | value | data ", "\n")
-      Tables.documents(s, d)
-        .select(col("doc_id"), Text.lines(relined).as("ls"))
+      docLines(s, d)
         .select(col("doc_id"), col("ls"),
           Text.keptLines(col("ls"), 3, 15, "slow").as("kept"))
         .select(col("doc_id"),
@@ -2541,21 +2571,7 @@ tt$x AS (SELECT CAST(SUM(freq) AS BIGINT) AS t FROM words$x)"""
     * byte-for-byte. */
   val boilerplateLines = QueryDef(
     "q_boilerplate_lines",
-    Some("""WITH t AS (
-              SELECT doc_id,
-                     list_filter(string_split(regexp_replace(text,
-                       ' a | the | row | key | value | data ',
-                       chr(10), 'g'), chr(10)),
-                       l -> len(l) > 0) AS ls
-              FROM documents),
-            e AS (
-              SELECT doc_id,
-                     unnest(range(1, CAST(len(ls) AS INT) + 1)) AS pos,
-                     ls
-              FROM t),
-            e2 AS (
-              SELECT doc_id, pos, ls[pos] AS line, md5(ls[pos]) AS h
-              FROM e),
+    Some(s"""WITH $lineRowsSql,
             lc AS (
               SELECT h, COUNT(DISTINCT doc_id) AS df FROM e2 GROUP BY h),
             b AS (SELECT h FROM lc WHERE df >= 20),
@@ -2572,12 +2588,7 @@ tt$x AS (SELECT CAST(SUM(freq) AS BIGINT) AS t FROM words$x)"""
                      chr(10)), '') AS cleaned_text
             FROM m GROUP BY doc_id ORDER BY doc_id"""),
     (s, d) => {
-      val relined = regexp_replace(col("text"),
-        " a | the | row | key | value | data ", "\n")
-      val e = Tables.documents(s, d)
-        .select(col("doc_id"), Text.lines(relined).as("ls"))
-        .select(col("doc_id"), posexplode(col("ls")).as(Seq("pos", "line")))
-        .withColumn("h", md5(col("line")))
+      val e = lineRows(s, d)
       val boiler = e.select("doc_id", "h").distinct()
         .groupBy("h").agg(count(lit(1)).as("df"))
         .filter(col("df") >= 20)
@@ -2734,19 +2745,13 @@ tt$x AS (SELECT CAST(SUM(freq) AS BIGINT) AS t FROM words$x)"""
         .orderBy("doc_id")
     })
 
-  /** Streaming curation chain (X62): the X55→X53 kernels — planted
-    * markup → `StripHtml` → `SpanDedupStats` — running INSIDE a
-    * Structured Streaming plan (file source, AvailableNow replay,
-    * append sink). The point is compatibility: graft's custom codegen
-    * expressions are ordinary Catalyst citizens, so the same curation
-    * chain that batch-cleans a corpus cleans documents AS THEY ARRIVE
-    * from a crawl, stateless and embarrassingly parallel; after
-    * bounded replay the sink equals the batch chain, which is what
-    * the oracle replays (strip chain + span CTEs over each stripped
-    * document). */
-  val streamCurate = QueryDef(
-    "q_stream_curate",
-    Some("""WITH p AS (
+  /** The planted-markup fixture (the q_unicode_nfc device: the corpus
+    * is plain text, so each document is dressed by doc_id % 4 as a
+    * full page with style and script blocks, an entity-bearing line,
+    * an anchor with entities, or left plain) as the opening `WITH p`
+    * CTE. */
+  private val plantedSql =
+    """WITH p AS (
               SELECT doc_id,
                      CASE WHEN doc_id % 4 = 0 THEN
                        '<html><head><style>p { color: red; }</style>'
@@ -2758,10 +2763,13 @@ tt$x AS (SELECT CAST(SUM(freq) AS BIGINT) AS t FROM words$x)"""
                        '<a href="http://x.y">' || text
                        || '</a> &nbsp;&quot;quoted&quot;'
                      ELSE text END AS planted
-              FROM documents),
-            s AS (
-              SELECT doc_id,
-                     trim(regexp_replace(
+              FROM documents)"""
+
+  /** The [[graft.functions.StripHtml]] chain over `planted`, verbatim:
+    * blocks, then tags, then entities (&amp; last), then whitespace
+    * collapse. */
+  private val stripSql =
+    """trim(regexp_replace(
                        replace(replace(replace(replace(replace(replace(
                          replace(
                            regexp_replace(
@@ -2772,19 +2780,32 @@ tt$x AS (SELECT CAST(SUM(freq) AS BIGINT) AS t FROM words$x)"""
                          '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
                          '&#39;', ''''), '&apos;', ''''), '&nbsp;', ' '),
                          '&amp;', '&'),
-                       '\s+', ' ', 'g')) AS stripped
-              FROM p),
-            t2 AS (
-              SELECT doc_id,
-                     list_filter(string_split(stripped, ' '),
-                       x -> len(x) > 0) AS toks
-              FROM s),
-            w AS (
+                       '\s+', ' ', 'g')) AS stripped"""
+
+  /** The Spark side of [[plantedSql]]. */
+  private def plantedHtml: Column =
+    when(col("doc_id") % 4 === 0,
+        concat(
+          lit("<html><head><style>p { color: red; }</style></head><body><p>"),
+          col("text"),
+          lit("</p><script>var x = 1 < 2;</script></body></html>")))
+      .when(col("doc_id") % 4 === 1,
+        concat(lit("Tom &amp; Jerry &lt;3 "), col("text"), lit(" <br/>")))
+      .when(col("doc_id") % 4 === 2,
+        concat(lit("<a href=\"http://x.y\">"), col("text"),
+          lit("</a> &nbsp;&quot;quoted&quot;")))
+      .otherwise(col("text"))
+
+  /** The [[graft.functions.SpanDedupStats]] replay (k = 3) over the
+    * `toks` of CTE `src`: window strings `w`, duplicate window starts
+    * `d`, removed positions `r`, kept positions `k`. */
+  private def spanCtesSql(src: String): String =
+    s"""w AS (
               SELECT doc_id, toks,
                      list_transform(
                        range(1, greatest(len(toks) - 2, 0) + 1),
                        i -> array_to_string(toks[i:i+2], ' ')) AS wins
-              FROM t2),
+              FROM $src),
             d AS (
               SELECT doc_id, toks,
                      list_filter(range(1, len(wins) + 1),
@@ -2800,7 +2821,31 @@ tt$x AS (SELECT CAST(SUM(freq) AS BIGINT) AS t FROM words$x)"""
               SELECT doc_id, toks, n_dup_windows,
                      list_filter(range(1, len(toks) + 1),
                        p -> NOT list_contains(removed, p)) AS kept
-              FROM r)
+              FROM r)"""
+
+  /** Streaming curation chain (X62): the X55→X53 kernels — planted
+    * markup → `StripHtml` → `SpanDedupStats` — running INSIDE a
+    * Structured Streaming plan (file source, AvailableNow replay,
+    * append sink). The point is compatibility: graft's custom codegen
+    * expressions are ordinary Catalyst citizens, so the same curation
+    * chain that batch-cleans a corpus cleans documents AS THEY ARRIVE
+    * from a crawl, stateless and embarrassingly parallel; after
+    * bounded replay the sink equals the batch chain, which is what
+    * the oracle replays (strip chain + span CTEs over each stripped
+    * document). */
+  val streamCurate = QueryDef(
+    "q_stream_curate",
+    Some(s"""$plantedSql,
+            s AS (
+              SELECT doc_id,
+                     $stripSql
+              FROM p),
+            t2 AS (
+              SELECT doc_id,
+                     list_filter(string_split(stripped, ' '),
+                       x -> len(x) > 0) AS toks
+              FROM s),
+            ${spanCtesSql("t2")}
             SELECT doc_id,
                    CAST(len(toks) AS BIGINT) AS n_tokens,
                    n_dup_windows,
@@ -2812,19 +2857,8 @@ tt$x AS (SELECT CAST(SUM(freq) AS BIGINT) AS t FROM words$x)"""
       import graft.streaming.EventStream
       val src = EventStream.stageDir(s"$d/documents.parquet")
       val docs = EventStream.readDocuments(s, src)
-      val planted = when(col("doc_id") % 4 === 0,
-          concat(
-            lit("<html><head><style>p { color: red; }</style></head><body><p>"),
-            col("text"),
-            lit("</p><script>var x = 1 < 2;</script></body></html>")))
-        .when(col("doc_id") % 4 === 1,
-          concat(lit("Tom &amp; Jerry &lt;3 "), col("text"), lit(" <br/>")))
-        .when(col("doc_id") % 4 === 2,
-          concat(lit("<a href=\"http://x.y\">"), col("text"),
-            lit("</a> &nbsp;&quot;quoted&quot;")))
-        .otherwise(col("text"))
       val chain = docs
-        .select(col("doc_id"), planted.as("planted"))
+        .select(col("doc_id"), plantedHtml.as("planted"))
         .select(col("doc_id"),
           graft.functions.HtmlFunctions.stripHtml(col("planted"))
             .as("stripped"))
@@ -2858,21 +2892,7 @@ tt$x AS (SELECT CAST(SUM(freq) AS BIGINT) AS t FROM words$x)"""
     * two-phase form is the 100 TB-safe plan. */
   val paragraphDedup = QueryDef(
     "q_paragraph_dedup",
-    Some("""WITH t AS (
-              SELECT doc_id,
-                     list_filter(string_split(regexp_replace(text,
-                       ' a | the | row | key | value | data ',
-                       chr(10), 'g'), chr(10)),
-                       l -> len(l) > 0) AS ls
-              FROM documents),
-            e AS (
-              SELECT doc_id,
-                     unnest(range(1, CAST(len(ls) AS INT) + 1)) AS pos,
-                     ls
-              FROM t),
-            e2 AS (
-              SELECT doc_id, pos, ls[pos] AS line, md5(ls[pos]) AS h
-              FROM e),
+    Some(s"""WITH $lineRowsSql,
             r AS (
               SELECT doc_id, pos, line,
                      row_number() OVER (PARTITION BY h
@@ -2887,12 +2907,7 @@ tt$x AS (SELECT CAST(SUM(freq) AS BIGINT) AS t FROM words$x)"""
                      chr(10)), '') AS cleaned_text
             FROM r GROUP BY doc_id ORDER BY doc_id"""),
     (s, d) => {
-      val relined = regexp_replace(col("text"),
-        " a | the | row | key | value | data ", "\n")
-      val e = Tables.documents(s, d)
-        .select(col("doc_id"), Text.lines(relined).as("ls"))
-        .select(col("doc_id"), posexplode(col("ls")).as(Seq("pos", "line")))
-        .withColumn("h", md5(col("line")))
+      val e = lineRows(s, d)
       // phase 1: global first occurrence per hash — only (h, doc_id,
       // pos) triples shuffle; min(struct) is the windowless winner
       val winners = e.select(col("h"), col("doc_id"), col("pos"))
@@ -2927,33 +2942,10 @@ tt$x AS (SELECT CAST(SUM(freq) AS BIGINT) AS t FROM words$x)"""
     * CONTENT deleted, `a<br>b` spaced, `&amp;lt;` single-decoded). */
   val stripHtml = QueryDef(
     "q_strip_html",
-    Some("""WITH p AS (
-              SELECT doc_id,
-                     CASE WHEN doc_id % 4 = 0 THEN
-                       '<html><head><style>p { color: red; }</style>'
-                       || '</head><body><p>' || text
-                       || '</p><script>var x = 1 < 2;</script></body></html>'
-                     WHEN doc_id % 4 = 1 THEN
-                       'Tom &amp; Jerry &lt;3 ' || text || ' <br/>'
-                     WHEN doc_id % 4 = 2 THEN
-                       '<a href="http://x.y">' || text
-                       || '</a> &nbsp;&quot;quoted&quot;'
-                     ELSE text END AS planted
-              FROM documents),
+    Some(s"""$plantedSql,
             s AS (
               SELECT doc_id, planted,
-                     trim(regexp_replace(
-                       replace(replace(replace(replace(replace(replace(
-                         replace(
-                           regexp_replace(
-                             regexp_replace(planted,
-                               '(?is)<script[^>]*>.*?</script>|<style[^>]*>.*?</style>',
-                               '', 'g'),
-                             '<[^>]*>', ' ', 'g'),
-                         '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
-                         '&#39;', ''''), '&apos;', ''''), '&nbsp;', ' '),
-                         '&amp;', '&'),
-                       '\s+', ' ', 'g')) AS stripped
+                     $stripSql
               FROM p)
             SELECT doc_id, stripped,
                    (stripped != planted) AS changed,
@@ -2961,19 +2953,8 @@ tt$x AS (SELECT CAST(SUM(freq) AS BIGINT) AS t FROM words$x)"""
                    CAST(len(stripped) AS BIGINT) AS n_chars_after
             FROM s ORDER BY doc_id"""),
     (s, d) => {
-      val planted = when(col("doc_id") % 4 === 0,
-          concat(
-            lit("<html><head><style>p { color: red; }</style></head><body><p>"),
-            col("text"),
-            lit("</p><script>var x = 1 < 2;</script></body></html>")))
-        .when(col("doc_id") % 4 === 1,
-          concat(lit("Tom &amp; Jerry &lt;3 "), col("text"), lit(" <br/>")))
-        .when(col("doc_id") % 4 === 2,
-          concat(lit("<a href=\"http://x.y\">"), col("text"),
-            lit("</a> &nbsp;&quot;quoted&quot;")))
-        .otherwise(col("text"))
       Tables.documents(s, d)
-        .select(col("doc_id"), planted.as("planted"))
+        .select(col("doc_id"), plantedHtml.as("planted"))
         .select(col("doc_id"), col("planted"),
           graft.functions.HtmlFunctions.stripHtml(col("planted"))
             .as("stripped"))
@@ -3005,28 +2986,7 @@ tt$x AS (SELECT CAST(SUM(freq) AS BIGINT) AS t FROM words$x)"""
     "q_dedup_spans",
     Some(s"""WITH t AS (
                SELECT doc_id, $sqlToks AS toks FROM documents),
-             w AS (
-               SELECT doc_id, toks,
-                      list_transform(
-                        range(1, greatest(len(toks) - 2, 0) + 1),
-                        i -> array_to_string(toks[i:i+2], ' ')) AS wins
-               FROM t),
-             d AS (
-               SELECT doc_id, toks,
-                      list_filter(range(1, len(wins) + 1),
-                        i -> list_position(wins, wins[i]) < i) AS dups
-               FROM w),
-             r AS (
-               SELECT doc_id, toks,
-                      CAST(len(dups) AS BIGINT) AS n_dup_windows,
-                      flatten(list_transform(dups,
-                        i -> [i, i + 1, i + 2])) AS removed
-               FROM d),
-             k AS (
-               SELECT doc_id, toks, n_dup_windows,
-                      list_filter(range(1, len(toks) + 1),
-                        p -> NOT list_contains(removed, p)) AS kept
-               FROM r)
+             ${spanCtesSql("t")}
              SELECT doc_id,
                     CAST(len(toks) AS BIGINT) AS n_tokens,
                     n_dup_windows,
@@ -3998,17 +3958,7 @@ tt$x AS (SELECT CAST(SUM(freq) AS BIGINT) AS t FROM words$x)"""
     "q_lm_kneser_ney", {
       val p = """((pc.c - 0.75) / lt.t +
                  ((0.75 * nr.n1r) / lt.t) * (nl.n1l / (SELECT tt FROM tot)))"""
-      Some(s"""WITH tk0 AS (
-               SELECT doc_id, $sqlToks AS toks FROM documents),
-             pos AS (
-               SELECT doc_id,
-                      unnest(range(1, CAST(len(toks) AS INT) + 1)) AS p,
-                      toks
-               FROM tk0),
-             tok AS (SELECT doc_id, p, toks[p] AS tok FROM pos),
-             cnt AS (
-               SELECT tok, CAST(COUNT(*) AS BIGINT) AS c
-               FROM tok GROUP BY tok),
+      Some(s"""$tokCountsSql,
              top AS (
                SELECT tok, rn - 1 AS cid FROM (
                  SELECT tok, c,
@@ -4017,13 +3967,7 @@ tt$x AS (SELECT CAST(SUM(freq) AS BIGINT) AS t FROM words$x)"""
              cls AS (
                SELECT t.doc_id, t.p, COALESCE(tp.cid, 24) AS cid
                FROM tok t LEFT JOIN top tp USING (tok)),
-             pr AS (
-               SELECT a.doc_id, a.cid AS ca, b.cid AS cb
-               FROM cls a JOIN cls b
-                 ON a.doc_id = b.doc_id AND b.p = a.p + 1),
-             pc AS (
-               SELECT ca, cb, CAST(COUNT(*) AS BIGINT) AS c
-               FROM pr GROUP BY ca, cb),
+             $classPairsSql,
              lt AS (
                SELECT ca, CAST(SUM(c) AS DOUBLE) AS t
                FROM pc GROUP BY ca),
@@ -4367,20 +4311,7 @@ tt$x AS (SELECT CAST(SUM(freq) AS BIGINT) AS t FROM words$x)"""
                        CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS y,
                        $foldSql AS fold
                 FROM documents),
-              tk AS (
-                SELECT doc_id,
-                       list_filter(string_split_regex(text, '\\s+'),
-                                   t -> len(t) > 0) AS toks
-                FROM documents),
-              fl AS (
-                SELECT doc_id, unnest(toks) AS f FROM tk
-                UNION ALL
-                SELECT doc_id,
-                       unnest(CASE WHEN len(toks) >= 2 THEN
-                         list_transform(range(1, CAST(len(toks) AS INT)),
-                           i -> toks[i] || ' ' || toks[i+1])
-                         ELSE CAST([] AS VARCHAR[]) END) AS f
-                FROM tk),
+              ${hashedFeaturesSql("documents")},
               ft AS MATERIALIZED (
                 SELECT doc_id,
                        CAST('0x' || substring(md5('qc:' || f), 1, 8)

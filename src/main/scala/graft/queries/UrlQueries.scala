@@ -322,28 +322,7 @@ object UrlQueries {
               SELECT s.domain AS src, d.domain AS dst
               FROM urlc s JOIN urlc d ON s.doc_id = d.doc_id
               WHERE s.side = 's' AND d.side = 'd'),
-            nodes AS MATERIALIZED (
-              SELECT DISTINCT v FROM (
-                SELECT src AS v FROM e0
-                UNION ALL SELECT dst AS v FROM e0)),
-            nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM nodes),
-            deg AS MATERIALIZED (
-              SELECT src, CAST(COUNT(*) AS BIGINT) AS deg
-              FROM e0 GROUP BY src),
-            e AS MATERIALIZED (
-              SELECT e0.src, e0.dst, deg.deg
-              FROM e0 JOIN deg USING (src)),
-            r0 AS (SELECT v, 1.0 / nn.n AS pr FROM nodes CROSS JOIN nn),
-            ${(1 to CurationQueries.PrIters)
-              .map(CurationQueries.prRoundSql).mkString(",\n            ")}
-            SELECT nodes.v AS node,
-                   COALESCE(deg.deg, 0) AS out_deg,
-                   r${CurationQueries.PrIters}.pr AS pr
-            FROM nodes
-              LEFT JOIN deg ON nodes.v = deg.src
-              JOIN r${CurationQueries.PrIters}
-                ON nodes.v = r${CurationQueries.PrIters}.v
-            ORDER BY node"""),
+            ${CurationQueries.pagerankSql}"""),
     (s, d) => {
       val docId = col("doc_id")
       val links = Tables.documents(s, d).select(
@@ -359,14 +338,7 @@ object UrlQueries {
         Url.registrableDomain(col("src_url")).as("src"),
         Url.registrableDomain(col("dst_url")).as("dst"))
         .localCheckpoint(true)
-      val pr = graft.ops.PageRank.run(edges, "src", "dst",
-        CurationQueries.PrIters, CurationQueries.PrDamping)
-      val deg = edges.groupBy(col("src").as("v"))
-        .agg(count(lit(1)).as("deg"))
-      pr.join(deg, Seq("v"), "left")
-        .select(col("v").as("node"),
-          coalesce(col("deg"), lit(0L)).as("out_deg"), col("pr"))
-        .orderBy("node")
+      CurationQueries.pagerank(edges)
     })
 
   val all: Seq[QueryDef] = Seq(urlCanonicalize, urlDedup, urlDomainGraph)

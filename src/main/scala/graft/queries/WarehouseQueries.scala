@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.functions.Num
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,6 +21,52 @@ object WarehouseQueries {
 
   // ------------------------------------------------------ SCD Type 2
 
+  /** The SCD2 interval oracle CTEs: events `e` (user_id, event_type,
+    * us, event_id), type changes `c` numbered per user (version), and
+    * the intervals as CTE `name` (user_id, version, event_type,
+    * valid_from_us, valid_to_us). */
+  private def scd2Sql(name: String): String =
+    s"""WITH e AS (
+             SELECT user_id, event_type, epoch_us(ts) AS us, event_id
+             FROM events),
+           o AS (
+             SELECT user_id, event_type, us, event_id,
+                    lag(event_type) OVER
+                      (PARTITION BY user_id ORDER BY us, event_id)
+                      AS prev
+             FROM e),
+           c AS (
+             SELECT user_id, event_type, us AS valid_from_us,
+                    row_number() OVER
+                      (PARTITION BY user_id ORDER BY us, event_id)
+                      AS version
+             FROM o WHERE prev IS NULL OR prev <> event_type),
+           $name AS (
+             SELECT user_id, version, event_type, valid_from_us,
+                    lead(valid_from_us) OVER
+                      (PARTITION BY user_id ORDER BY version)
+                      AS valid_to_us
+             FROM c)"""
+
+  /** The events the SCD2 rows read: (user_id, event_type, us, event_id). */
+  private def scd2Events(s: SparkSession, d: String): DataFrame =
+    Tables.events(s, d).select(col("user_id"),
+      col("event_type"), unix_micros(col("ts")).as("us"),
+      col("event_id"))
+
+  /** The Spark side of [[scd2Sql]] over [[scd2Events]]: (user_id,
+    * event_type, valid_from_us, version, valid_to_us). */
+  private def scd2(e: DataFrame): DataFrame = {
+    val w = Window.partitionBy("user_id").orderBy("us", "event_id")
+    val wv = Window.partitionBy("user_id").orderBy("version")
+    e.withColumn("prev", lag("event_type", 1).over(w))
+      .filter(col("prev").isNull || col("prev") =!= col("event_type"))
+      .select(col("user_id"), col("event_type"),
+        col("us").as("valid_from_us"),
+        row_number().over(w).as("version"))
+      .withColumn("valid_to_us", lead("valid_from_us", 1).over(wv))
+  }
+
   /** Slowly-changing-dimension Type 2 build (X210 — Kimball's SCD2:
     * turn a change-event stream into validity intervals
     * [valid_from, valid_to) with a version counter and an is_current
@@ -37,46 +84,14 @@ object WarehouseQueries {
     * emitted as epoch micros (exact integer lane). */
   val scd2Build = QueryDef(
     "q_scd2_build",
-    Some("""WITH e AS (
-             SELECT user_id, event_type, epoch_us(ts) AS us, event_id
-             FROM events),
-           o AS (
-             SELECT user_id, event_type, us, event_id,
-                    lag(event_type) OVER
-                      (PARTITION BY user_id ORDER BY us, event_id)
-                      AS prev
-             FROM e),
-           c AS (
-             SELECT user_id, event_type, us AS valid_from_us,
-                    row_number() OVER
-                      (PARTITION BY user_id ORDER BY us, event_id)
-                      AS version
-             FROM o WHERE prev IS NULL OR prev <> event_type),
-           f AS (
-             SELECT user_id, version, event_type, valid_from_us,
-                    lead(valid_from_us) OVER
-                      (PARTITION BY user_id ORDER BY version)
-                      AS valid_to_us
-             FROM c)
+    Some(s"""${scd2Sql("f")}
            SELECT user_id, version, event_type, valid_from_us,
                   valid_to_us,
                   CASE WHEN valid_to_us IS NULL THEN 1 ELSE 0 END
                     AS is_current
            FROM f ORDER BY user_id, version"""),
     (s, d) => {
-      val w = Window.partitionBy("user_id").orderBy("us", "event_id")
-      val e = Tables.events(s, d).select(col("user_id"),
-        col("event_type"), unix_micros(col("ts")).as("us"),
-        col("event_id"))
-      val changes = e
-        .withColumn("prev", lag("event_type", 1).over(w))
-        .filter(col("prev").isNull || col("prev") =!= col("event_type"))
-        .select(col("user_id"), col("event_type"),
-          col("us").as("valid_from_us"),
-          row_number().over(w).as("version"))
-      val wv = Window.partitionBy("user_id").orderBy("version")
-      changes
-        .withColumn("valid_to_us", lead("valid_from_us", 1).over(wv))
+      scd2(scd2Events(s, d))
         .select(col("user_id"), col("version"), col("event_type"),
           col("valid_from_us"), col("valid_to_us"),
           when(col("valid_to_us").isNull, 1).otherwise(0)
@@ -101,27 +116,7 @@ object WarehouseQueries {
     * oracle. */
   val scd2Pit = QueryDef(
     "q_scd2_pit",
-    Some("""WITH e AS (
-             SELECT user_id, event_type, epoch_us(ts) AS us, event_id
-             FROM events),
-           o AS (
-             SELECT user_id, event_type, us, event_id,
-                    lag(event_type) OVER
-                      (PARTITION BY user_id ORDER BY us, event_id)
-                      AS prev
-             FROM e),
-           c AS (
-             SELECT user_id, event_type, us AS valid_from_us,
-                    row_number() OVER
-                      (PARTITION BY user_id ORDER BY us, event_id)
-                      AS version
-             FROM o WHERE prev IS NULL OR prev <> event_type),
-           dim AS (
-             SELECT user_id, version, event_type, valid_from_us,
-                    lead(valid_from_us) OVER
-                      (PARTITION BY user_id ORDER BY version)
-                      AS valid_to_us
-             FROM c),
+    Some(s"""${scd2Sql("dim")},
            probe AS (
              SELECT event_id, user_id, event_type, us FROM e
              WHERE event_id % 17 = 0)
@@ -135,18 +130,8 @@ object WarehouseQueries {
             AND (d.valid_to_us IS NULL OR p.us < d.valid_to_us)
            ORDER BY p.event_id"""),
     (s, d) => {
-      val w = Window.partitionBy("user_id").orderBy("us", "event_id")
-      val e = Tables.events(s, d).select(col("user_id"),
-        col("event_type"), unix_micros(col("ts")).as("us"),
-        col("event_id"))
-      val wv = Window.partitionBy("user_id").orderBy("version")
-      val dim = e
-        .withColumn("prev", lag("event_type", 1).over(w))
-        .filter(col("prev").isNull || col("prev") =!= col("event_type"))
-        .select(col("user_id"), col("event_type"),
-          col("us").as("valid_from_us"),
-          row_number().over(w).as("version"))
-        .withColumn("valid_to_us", lead("valid_from_us", 1).over(wv))
+      val e = scd2Events(s, d)
+      val dim = scd2(e)
         .select(col("user_id").as("d_user"), col("version"),
           col("event_type").as("dim_type"), col("valid_from_us"),
           col("valid_to_us"))
@@ -173,27 +158,7 @@ object WarehouseQueries {
     * windows/dedup. */
   val streamScd2 = QueryDef(
     "q_stream_scd2",
-    Some("""WITH e AS (
-             SELECT user_id, event_type, epoch_us(ts) AS us, event_id
-             FROM events),
-           o AS (
-             SELECT user_id, event_type, us, event_id,
-                    lag(event_type) OVER
-                      (PARTITION BY user_id ORDER BY us, event_id)
-                      AS prev
-             FROM e),
-           c AS (
-             SELECT user_id, event_type, us AS valid_from_us,
-                    row_number() OVER
-                      (PARTITION BY user_id ORDER BY us, event_id)
-                      AS version
-             FROM o WHERE prev IS NULL OR prev <> event_type),
-           f AS (
-             SELECT user_id, version, event_type, valid_from_us,
-                    lead(valid_from_us) OVER
-                      (PARTITION BY user_id ORDER BY version)
-                      AS valid_to_us
-             FROM c)
+    Some(s"""${scd2Sql("f")}
            SELECT user_id, version, event_type, valid_from_us,
                   valid_to_us
            FROM f WHERE valid_to_us IS NOT NULL
@@ -209,6 +174,50 @@ object WarehouseQueries {
     })
 
   // ---------------------------------------------------- HyperLogLog
+
+  /** The HLL family's salted 48-bit user hash (the first 12 hex digits
+    * of md5('graft-hll:' || user_id)) and bias constant α for m = 256
+    * registers, as SQL text and as Spark values. */
+  private val hllHashSql = "CAST('0x' || substring(md5('graft-hll:' || " +
+    "CAST(user_id AS VARCHAR)), 1, 12) AS BIGINT)"
+  private val HllAlphaSql = "(0.7213 / (1.0 + 1.079 / 256.0))"
+  private def hllHash: Column = conv(substring(md5(concat(lit("graft-hll:"),
+    col("user_id").cast("string"))), 1, 12), 16, 10).cast("long")
+  private val HllAlpha = 0.7213 / (1.0 + 1.079 / 256.0)
+
+  /** The register pass of the batch HLL oracles: hashes `k`, register
+    * index and remainder `r`, and per (event_type, idx) the register
+    * value mj in `regs`. */
+  private val hllRegsSql =
+    s"""WITH k AS (
+               SELECT event_type, $hllHashSql AS h FROM events),
+             r AS (
+               SELECT event_type, h >> 40 AS idx,
+                      h & ((1::BIGINT << 40) - 1) AS rem
+               FROM k),
+             regs AS (
+               SELECT event_type, idx,
+                      MAX(CASE WHEN rem = 0 THEN 41
+                          ELSE 41 - length(bin(rem)) END) AS mj
+               FROM r GROUP BY 1, 2)"""
+
+  /** The Spark side of [[hllRegsSql]] over (event_type, user_id) rows:
+    * (event_type, idx, mj). */
+  private def hllRegisters(e: DataFrame): DataFrame =
+    e.select(col("event_type"),
+        shiftright(hllHash, 40).as("idx"),
+        hllHash.bitwiseAND(lit((1L << 40) - 1)).as("rem"))
+      .groupBy("event_type", "idx")
+      .agg(max(when(col("rem") === 0, 41)
+        .otherwise(lit(41) - length(bin(col("rem"))))).as("mj"))
+
+  /** The estimate from raw = α·m²/Σ2^-M and the empty-register count:
+    * linear counting m·ln(m/zeros) when raw ≤ 2.5·m and a register is
+    * empty, else raw; qround(6). */
+  private def hllEstimate(raw: Column, zeros: Column): Column =
+    Num.qround(when(raw <= 640.0 && zeros > 0,
+      lit(256.0) * log(lit(256.0) / zeros.cast("double")))
+      .otherwise(raw), 6)
 
   /** HyperLogLog distinct-user estimate per event type (X211 —
     * Flajolet et al. 2007, the register sketch behind every
@@ -232,20 +241,7 @@ object WarehouseQueries {
     * approximation error measurable (the X74 recall discipline). */
   val hllDistinct = QueryDef(
     "q_hll_distinct", {
-      val h = "CAST('0x' || substring(md5('graft-hll:' || " +
-        "CAST(user_id AS VARCHAR)), 1, 12) AS BIGINT)"
-      val alpha = "(0.7213 / (1.0 + 1.079 / 256.0))"
-      Some(s"""WITH k AS (
-               SELECT event_type, $h AS h FROM events),
-             r AS (
-               SELECT event_type, h >> 40 AS idx,
-                      h & ((1::BIGINT << 40) - 1) AS rem
-               FROM k),
-             regs AS (
-               SELECT event_type, idx,
-                      MAX(CASE WHEN rem = 0 THEN 41
-                          ELSE 41 - length(bin(rem)) END) AS mj
-               FROM r GROUP BY 1, 2),
+      Some(s"""$hllRegsSql,
              agg AS (
                SELECT event_type,
                       CAST(COUNT(*) AS BIGINT) AS registers_hit,
@@ -255,7 +251,7 @@ object WarehouseQueries {
              est AS (
                SELECT event_type, registers_hit,
                       256 - registers_hit AS zeros,
-                      $alpha * 65536.0 /
+                      $HllAlphaSql * 65536.0 /
                         (sp + CAST(256 - registers_hit AS DOUBLE))
                         AS raw
                FROM agg),
@@ -282,17 +278,9 @@ object WarehouseQueries {
              ORDER BY event_type""")
     },
     (s, d) => {
-      val alpha = 0.7213 / (1.0 + 1.079 / 256.0)
       val e = Tables.events(s, d).select(col("event_type"),
         col("user_id"))
-      val h = conv(substring(md5(concat(lit("graft-hll:"),
-        col("user_id").cast("string"))), 1, 12), 16, 10).cast("long")
-      val r = e.select(col("event_type"),
-        shiftright(h, 40).as("idx"),
-        h.bitwiseAND(lit((1L << 40) - 1)).as("rem"))
-      val regs = r.groupBy("event_type", "idx")
-        .agg(max(when(col("rem") === 0, 41)
-          .otherwise(lit(41) - length(bin(col("rem"))))).as("mj"))
+      val regs = hllRegisters(e)
       val agg = regs.groupBy("event_type")
         .agg(count(lit(1)).as("registers_hit"),
           sum(lit(1.0) / expr(
@@ -300,12 +288,9 @@ object WarehouseQueries {
             .as("sp"))
       val est = agg
         .withColumn("zeros", lit(256) - col("registers_hit"))
-        .withColumn("raw", lit(alpha) * 65536.0 /
+        .withColumn("raw", lit(HllAlpha) * 65536.0 /
           (col("sp") + col("zeros").cast("double")))
-        .withColumn("est", Num.qround(
-          when(col("raw") <= 640.0 && col("zeros") > 0,
-            lit(256.0) * log(lit(256.0) / col("zeros").cast("double")))
-            .otherwise(col("raw")), 6))
+        .withColumn("est", hllEstimate(col("raw"), col("zeros")))
       val ex = e.groupBy("event_type")
         .agg(count(lit(1)).as("n_rows"),
           countDistinct("user_id").as("exact_distinct"))
@@ -337,12 +322,9 @@ object WarehouseQueries {
     (s, d) => {
       import graft.functions.SketchFunctions
       import graft.streaming.EventStream
-      val alpha = 0.7213 / (1.0 + 1.079 / 256.0)
       val src = EventStream.stageDir(s"$d/events.parquet")
-      val h = conv(substring(md5(concat(lit("graft-hll:"),
-        col("user_id").cast("string"))), 1, 12), 16, 10).cast("long")
       val plan = EventStream.readEvents(s, src)
-        .select(col("event_type"), h.as("h"))
+        .select(col("event_type"), hllHash.as("h"))
         .groupBy("event_type")
         .agg(SketchFunctions.hllRegisters(col("h")).as("regs"))
       val sk = EventStream.runAvailableNow(s, plan, "q_stream_hll_sink",
@@ -355,11 +337,8 @@ object WarehouseQueries {
       val est0 = regs
         .withColumn("zeros", zeros)
         .withColumn("registers_hit", lit(256L) - col("zeros"))
-        .withColumn("raw", lit(alpha) * 65536.0 / sumpow)
-        .withColumn("est", Num.qround(
-          when(col("raw") <= 640.0 && col("zeros") > 0,
-            lit(256.0) * log(lit(256.0) / col("zeros").cast("double")))
-            .otherwise(col("raw")), 6))
+        .withColumn("raw", lit(HllAlpha) * 65536.0 / sumpow)
+        .withColumn("est", hllEstimate(col("raw"), col("zeros")))
       val ex = Tables.events(s, d).groupBy("event_type")
         .agg(count(lit(1)).as("n_rows"),
           countDistinct("user_id").as("exact_distinct"))
@@ -385,13 +364,10 @@ object WarehouseQueries {
     * (X74). */
   val streamHllWindow = QueryDef(
     "q_stream_hll_window", {
-      val h = "CAST('0x' || substring(md5('graft-hll:' || " +
-        "CAST(user_id AS VARCHAR)), 1, 12) AS BIGINT)"
-      val alpha = "(0.7213 / (1.0 + 1.079 / 256.0))"
       Some(s"""WITH k AS (
                SELECT event_type,
                       epoch_us(ts) // 3600000000 AS hr,
-                      $h AS h
+                      $hllHashSql AS h
                FROM events),
              r AS (
                SELECT event_type, hr, h >> 40 AS idx,
@@ -410,7 +386,7 @@ object WarehouseQueries {
                FROM regs GROUP BY 1, 2),
              est AS (
                SELECT event_type, hr, zeros,
-                      $alpha * 65536.0 /
+                      $HllAlphaSql * 65536.0 /
                         (sp + CAST(zeros AS DOUBLE)) AS raw
                FROM agg),
              fin AS (
@@ -438,13 +414,10 @@ object WarehouseQueries {
     (s, d) => {
       import graft.functions.SketchFunctions
       import graft.streaming.EventStream
-      val alpha = 0.7213 / (1.0 + 1.079 / 256.0)
       val src = EventStream.stageDir(s"$d/events.parquet")
-      val h = conv(substring(md5(concat(lit("graft-hll:"),
-        col("user_id").cast("string"))), 1, 12), 16, 10).cast("long")
       val plan = EventStream.readEvents(s, src)
         .select(window(col("ts"), "1 hour").as("win"),
-          col("event_type"), h.as("h"))
+          col("event_type"), hllHash.as("h"))
         .groupBy("win", "event_type")
         .agg(SketchFunctions.hllRegisters(col("h")).as("regs"))
       val sk = EventStream.runAvailableNow(s, plan,
@@ -459,11 +432,8 @@ object WarehouseQueries {
       val zeros = size(filter(col("regs"), m => m === 0)).cast("long")
       val est0 = regs
         .withColumn("zeros", zeros)
-        .withColumn("raw", lit(alpha) * 65536.0 / sumpow)
-        .withColumn("est", Num.qround(
-          when(col("raw") <= 640.0 && col("zeros") > 0,
-            lit(256.0) * log(lit(256.0) / col("zeros").cast("double")))
-            .otherwise(col("raw")), 6))
+        .withColumn("raw", lit(HllAlpha) * 65536.0 / sumpow)
+        .withColumn("est", hllEstimate(col("raw"), col("zeros")))
       val ex = Tables.events(s, d)
         .groupBy(col("event_type"),
           expr("unix_micros(ts) div 3600000000").as("hr"))
@@ -855,28 +825,15 @@ object WarehouseQueries {
     * error measurable (X74 discipline). */
   val hllAlgebra = QueryDef(
     "q_hll_algebra", {
-      val h = "CAST('0x' || substring(md5('graft-hll:' || " +
-        "CAST(user_id AS VARCHAR)), 1, 12) AS BIGINT)"
-      val alpha = "(0.7213 / (1.0 + 1.079 / 256.0))"
       def estFrom(spCol: String, zerosCol: String) =
         Num.qroundSql(
-          s"""CASE WHEN $alpha * 65536.0 /
+          s"""CASE WHEN $HllAlphaSql * 65536.0 /
                 ($spCol + CAST($zerosCol AS DOUBLE)) <= 640.0
                 AND $zerosCol > 0
               THEN 256.0 * ln(256.0 / CAST($zerosCol AS DOUBLE))
-              ELSE $alpha * 65536.0 /
+              ELSE $HllAlphaSql * 65536.0 /
                 ($spCol + CAST($zerosCol AS DOUBLE)) END""", 6)
-      Some(s"""WITH k AS (
-               SELECT event_type, $h AS h FROM events),
-             r AS (
-               SELECT event_type, h >> 40 AS idx,
-                      h & ((1::BIGINT << 40) - 1) AS rem
-               FROM k),
-             regs AS (
-               SELECT event_type, idx,
-                      MAX(CASE WHEN rem = 0 THEN 41
-                          ELSE 41 - length(bin(rem)) END) AS mj
-               FROM r GROUP BY 1, 2),
+      Some(s"""$hllRegsSql,
              single AS (
                SELECT event_type,
                       SUM(1.0 / CAST((1::BIGINT << mj) AS DOUBLE))
@@ -940,24 +897,12 @@ object WarehouseQueries {
              ORDER BY u.type_a, u.type_b""")
     },
     (s, d) => {
-      val alpha = 0.7213 / (1.0 + 1.079 / 256.0)
-      def estFrom(sp: org.apache.spark.sql.Column,
-          zeros: org.apache.spark.sql.Column) = {
-        val raw = lit(alpha) * 65536.0 / (sp + zeros.cast("double"))
-        Num.qround(when(raw <= 640.0 && zeros > 0,
-          lit(256.0) * log(lit(256.0) / zeros.cast("double")))
-          .otherwise(raw), 6)
-      }
+      def estFrom(sp: Column, zeros: Column) =
+        hllEstimate(lit(HllAlpha) * 65536.0 / (sp + zeros.cast("double")),
+          zeros)
       val e = Tables.events(s, d).select(col("event_type"),
         col("user_id"))
-      val h = conv(substring(md5(concat(lit("graft-hll:"),
-        col("user_id").cast("string"))), 1, 12), 16, 10).cast("long")
-      val r = e.select(col("event_type"),
-        shiftright(h, 40).as("idx"),
-        h.bitwiseAND(lit((1L << 40) - 1)).as("rem"))
-      val regs = r.groupBy("event_type", "idx")
-        .agg(max(when(col("rem") === 0, 41)
-          .otherwise(lit(41) - length(bin(col("rem"))))).as("mj"))
+      val regs = hllRegisters(e)
         .localCheckpoint(true) // singles + the pair merge
       val pw = lit(1.0) / expr(
         "CAST(shiftleft(CAST(1 AS BIGINT), CAST(mj AS INT)) AS DOUBLE)")
@@ -1187,9 +1132,6 @@ object WarehouseQueries {
     * 256-row-per-group sketches. */
   val ivmHll = QueryDef(
     "q_ivm_hll", {
-      val h = "CAST('0x' || substring(md5('graft-hll:' || " +
-        "CAST(user_id AS VARCHAR)), 1, 12) AS BIGINT)"
-      val alpha = "(0.7213 / (1.0 + 1.079 / 256.0))"
       def estSql(src: String, tag: String) = s"""
             agg_$tag AS (
               SELECT event_type,
@@ -1199,18 +1141,18 @@ object WarehouseQueries {
             fin_$tag AS (
               SELECT event_type, registers_hit,
                      ${Num.qroundSql(
-                       s"""CASE WHEN $alpha * 65536.0 /
+                       s"""CASE WHEN $HllAlphaSql * 65536.0 /
                              (sp + CAST(256 - registers_hit AS DOUBLE))
                                <= 640.0
                              AND 256 - registers_hit > 0
                            THEN 256.0 * ln(256.0 /
                              CAST(256 - registers_hit AS DOUBLE))
-                           ELSE $alpha * 65536.0 /
+                           ELSE $HllAlphaSql * 65536.0 /
                              (sp + CAST(256 - registers_hit AS DOUBLE))
                            END""", 6)} AS est
               FROM agg_$tag)"""
       Some(s"""WITH k AS (
-              SELECT event_id, event_type, $h AS h FROM events),
+              SELECT event_id, event_type, $hllHashSql AS h FROM events),
             rho AS (
               SELECT event_id, event_type, h >> 40 AS idx,
                      CASE WHEN h & ((1::BIGINT << 40) - 1) = 0 THEN 41
@@ -1246,13 +1188,10 @@ object WarehouseQueries {
             ORDER BY m.event_type""")
     },
     (s, d) => {
-      val alpha = 0.7213 / (1.0 + 1.079 / 256.0)
-      val h = conv(substring(md5(concat(lit("graft-hll:"),
-        col("user_id").cast("string"))), 1, 12), 16, 10).cast("long")
       val rho = Tables.events(s, d)
         .select(col("event_id"), col("event_type"),
-          shiftright(h, 40).as("idx"),
-          h.bitwiseAND(lit((1L << 40) - 1)).as("rem"))
+          shiftright(hllHash, 40).as("idx"),
+          hllHash.bitwiseAND(lit((1L << 40) - 1)).as("rem"))
         .select(col("event_id"), col("event_type"), col("idx"),
           when(col("rem") === 0, 41)
             .otherwise(lit(41) - length(bin(col("rem")))).as("rho"))
@@ -1271,13 +1210,10 @@ object WarehouseQueries {
             "CAST(shiftleft(CAST(1 AS BIGINT), CAST(mj AS INT)) AS DOUBLE)"))
             .as("sp"))
         .withColumn("zeros", lit(256) - col("registers_hit"))
-        .withColumn("raw", lit(alpha) * 65536.0 /
+        .withColumn("raw", lit(HllAlpha) * 65536.0 /
           (col("sp") + col("zeros").cast("double")))
         .select(col("event_type"), col("registers_hit"),
-          Num.qround(
-            when(col("raw") <= 640.0 && col("zeros") > 0,
-              lit(256.0) * log(lit(256.0) / col("zeros").cast("double")))
-              .otherwise(col("raw")), 6).as("est"))
+          hllEstimate(col("raw"), col("zeros")).as("est"))
       val em = estimate(rm).select(col("event_type"),
         col("registers_hit").as("hit_merged"),
         col("est").as("est_merged"))

@@ -78,6 +78,19 @@ class TextSpec extends SparkSuite {
     assert(r(2) === (2L * 5).toDouble / 9.0)
   }
 
+  test("repetition metrics: tabs, mixed whitespace runs and leading or " +
+      "trailing whitespace split like single spaces") {
+    // tokens a b a b a as in the crafted document above; the two
+    // n-gram fractions divide by the raw text's length
+    val text = " \ta b\t\ta b \n\u000B a\r\n"
+    val r = one(text)
+      .select(RepetitionFunctions.repetitionStats(col("text")).as("r"))
+      .collect().head.getSeq[java.lang.Double](0)
+    assert(r(0) === 3.0 / 5.0)
+    assert(r(1) === (2L * 3).toDouble / text.length)
+    assert(r(2) === (2L * 5).toDouble / text.length)
+  }
+
   test("repetition metrics: NULL slots for short/empty documents") {
     val rows = Seq("", "   ", "one", "one two").toDF("text")
       .select(RepetitionFunctions.repetitionStats(col("text")).as("r"))

@@ -47,6 +47,17 @@ class SpanDedupSpec extends SparkSuite {
     assert(rows.map(_._5).toSeq === Seq("", "solo", "two words"))
   }
 
+  test("tabs, mixed whitespace runs and leading or trailing whitespace " +
+      "split like single spaces") {
+    val rows = run(Seq("\ta b\t\tc \n\u000B a b c\r\n", "", " \t\n"))
+    assert(rows(0)._2 === 6)
+    assert(rows(0)._3 === 1)
+    assert(rows(0)._4 === 3)
+    assert(rows(0)._5 === "a b c")
+    assert(rows.tail.map(r => (r._2, r._5)).toSeq ===
+      Seq((0L, ""), (0L, "")))
+  }
+
   test("window size parameter respected (k=2)") {
     // "a b a b": 2-gram windows [ab, ba, ab] — window 3 dups window 1,
     // removing positions 3,4

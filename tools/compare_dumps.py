@@ -5,11 +5,17 @@ Checks that oracle_sql.json and expected.json are byte-equal, that
 both dumps hold the same query dirs, and that each query's rows are
 equal after selfcheck's canonical sort (columns by name, rows by all
 columns, exact values, floats included). Prints one DIFF line per
-difference, then the totals; exits 1 if anything differs.
+difference, then the totals; exits 1 if anything differs. When
+oracle_sql.json differs, one `DIFF oracle_sql.json: <query>` line names
+each query whose oracle SQL changed, was added or was removed; a change
+is tagged `whitespace-only` when the two texts are equal after
+collapsing whitespace runs. The file still counts as one difference,
+whitespace-only changes included.
 
 Run: python3 tools/compare_dumps.py PARENT_OUT_DIR CHANGE_OUT_DIR
 """
 import filecmp
+import json
 import os
 import sys
 
@@ -24,6 +30,24 @@ def query_dirs(out_dir):
             if os.path.isdir(os.path.join(out_dir, d))}
 
 
+def oracle_diffs(fa, fb):
+    """One line per query whose oracle SQL differs between two files."""
+    with open(fa) as f:
+        a = json.load(f)
+    with open(fb) as f:
+        b = json.load(f)
+    out = []
+    for name in sorted(a.keys() | b.keys()):
+        if name not in b:
+            out.append(f"{name}: removed")
+        elif name not in a:
+            out.append(f"{name}: added")
+        elif a[name] != b[name]:
+            same_ws = a[name].split() == b[name].split()
+            out.append(f"{name}: {'whitespace-only' if same_ws else 'changed'}")
+    return out
+
+
 def rows(con, query_dir):
     res = con.execute(
         f"SELECT * FROM '{os.path.join(query_dir, '*.parquet')}'").fetchall()
@@ -35,12 +59,16 @@ def main():
     n_same = n_diff = 0
     for f in ("oracle_sql.json", "expected.json"):
         fa, fb = os.path.join(a, f), os.path.join(b, f)
-        if (os.path.exists(fa) and os.path.exists(fb)
-                and filecmp.cmp(fa, fb, shallow=False)):
+        both = os.path.exists(fa) and os.path.exists(fb)
+        if both and filecmp.cmp(fa, fb, shallow=False):
             n_same += 1
-        else:
+            continue
+        n_diff += 1
+        named = oracle_diffs(fa, fb) if both and f == "oracle_sql.json" else []
+        for line in named:
+            print(f"DIFF {f}: {line}")
+        if not named:
             print(f"DIFF {f}")
-            n_diff += 1
     da, db = query_dirs(a), query_dirs(b)
     for name in sorted(da ^ db):
         print(f"DIFF {name}: only in {a if name in da else b}")
